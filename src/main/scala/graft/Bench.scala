@@ -1,6 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
+  /** `s` as a JSON string literal. */
+  def jsonString(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -47,65 +56,56 @@ object Bench {
     } catch { case _: Throwable => }
     // deterministic order so per-query timings are comparable across rounds
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    def pass(): Seq[(String, Double)] = ordered.map { case (name, fn) =>
+    // a query that throws is recorded as failed, never as a timing
+    def pass(): Seq[(String, Either[String, Double])] = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> (try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+               catch { case NonFatal(e) => Left(e.toString) })
     }
     // Two full passes, per-query MINIMUM: a one-off contention spike
     // (CI neighbors, page-cache misses) inflates one pass, not both.
     // The memoized cross-query intermediates are dropped between
     // passes so pass 2 re-pays the real pipeline cost — min-of-2
-    // removes noise without hiding work behind a cache.
+    // removes noise without hiding work behind a cache. A query that
+    // failed in either pass counts as failed.
     val p1 = pass()
     ops.Queries.clearMemo()
     ops.ExtQueries.clearMemo()
     val p2 = pass()
-    val results = p1.zip(p2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val results = p1.zip(p2).map {
+      case ((n, Right(a)), (_, Right(b))) => n -> Right(math.min(a, b))
+      case ((n, Left(e)), _) => n -> Left(e)
+      case (_, failed) => failed
+    }
+    val qs = results.map {
+      case (k, Right(v)) => s"\"" + k + "\":" + v
+      case (k, Left(e)) => s"\"" + k + "\":{\"failed\":" + jsonString(e) + "}"
+    }.mkString("{", ",", "}")
+    val timed = results.collect { case (_, Right(v)) => v }
+    val total = timed.sum
+    val nFailed = results.length - timed.length
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     println(line)
-    // The driver's BENCH_r{N}.json keeps only a truncated TAIL of the
-    // full line above (~9 KB for 222 queries vs a ~4 KB tail window),
-    // so two rounds of PERF comparisons ran on `parsed: null`
-    // sidecars. Reporting-contract fix (r18 verdict item 1), additions
-    // only — the full contract line above is byte-identical to r17:
-    //  1. the COMPLETE map is written to a file (SPARK_GRAFT_BENCH_OUT
-    //     or GRAFT_BENCH_SIDECAR override the path; else
-    //     ./BENCH_FULL.json), and
-    //  2. a SHORT schema-compatible totals line is printed LAST, small
-    //     enough to survive any tail capture. Its `queries` map keeps
-    //     the slowest queries that fit a fixed byte budget — a summary,
-    //     never the measurement of record (that is the full line and
-    //     the sidecar file; budget chosen so the whole line stays
-    //     well under the observed ~4 KB window).
+    // The driver keeps only a ~2,000-char TAIL of stdout, which the
+    // full line above (~9 KB for 222 queries) overruns. So the
+    // complete map is also written to a file (SPARK_GRAFT_BENCH_OUT or
+    // GRAFT_BENCH_SIDECAR override the path; else
+    // ./BENCH_FULL_c{cpus}.json, so runs at different core counts keep
+    // separate maps), and a totals-only line is printed LAST.
     // Anchored path and an IOException-only catch: swallowing
     // Throwable here could mask an OOM/interrupt and leave a silently
     // STALE sidecar behind.
     val sidecar = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        sys.env.getOrElse("GRAFT_BENCH_SIDECAR", "BENCH_FULL.json")))
+        sys.env.getOrElse("GRAFT_BENCH_SIDECAR", s"BENCH_FULL_c$cpus.json")))
     try java.nio.file.Files.writeString(sidecar, line + "\n")
     catch {
       case e: java.io.IOException =>
         System.err.println(s"[bench] sidecar write failed ($sidecar): $e")
     }
-    val budget = 2500 // bytes for the short line's queries map
-    val slowestFirst = results.sortBy(-_._2)
-    val kept = new StringBuilder
-    var n = 0
-    slowestFirst.foreach { case (k, v) =>
-      val entry = (if (n == 0) "" else ",") +
-        "\"" + k + "\":" + f"$v%.3f"
-      if (kept.length + entry.length <= budget) { kept.append(entry); n += 1 }
-    }
-    println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":{${kept.result()}},"sf":"$sfDir",""" +
-      s""""n_queries":${results.length},"queries_shown":$n,""" +
-      s""""full":"$sidecar"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
+      s""""n_queries":${results.length},"n_failed":$nFailed,"full":"$sidecar"}""")
     spark.stop()
   }
 }

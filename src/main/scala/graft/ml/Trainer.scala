@@ -2,13 +2,26 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
-import org.apache.spark.ml.feature.{IndexToString, StringIndexer, StringIndexerModel}
+import org.apache.spark.ml.classification.{GraftModelBridge, LogisticRegressionModel}
+import org.apache.spark.ml.feature.{IndexToString, StringIndexerModel}
+import org.apache.spark.ml.linalg.Vector
 
-/** Distributed supervised text classifier — the JVM replacement for the
-  * C++ fastText dependency (`utils/merchcat_utils.py:30-54`): word
-  * n-grams hashed into a bucket space feeding a multinomial softmax,
-  * trained with distributed L-BFGS instead of per-node SGD threads.
+/** Supervised text classifier — the JVM replacement for the C++
+  * fastText dependency (`utils/merchcat_utils.py:30-54`): word n-grams
+  * hashed into a bucket space feeding a multinomial softmax. Like
+  * fastText, which trains on one node from one flat file, the fit is
+  * ONE Spark task over the (stratified, hence bounded) training sample:
+  * featurize, count labels and run L-BFGS in memory ([[SoftmaxFit]]),
+  * shipping back only the label order and the classes × features
+  * coefficients. Spark's distributed `LogisticRegression` minimizes the
+  * same objective but pays a job, a coefficient broadcast and a dense
+  * gradient round trip per L-BFGS step, which at these sample sizes
+  * costs far more than the arithmetic. The result is a regular
+  * `LogisticRegressionModel` + `StringIndexerModel` pair, equal to
+  * Spark's fit to rounding (MlSpec's parity spec). The task also runs
+  * whatever narrow work the input frame still has after its last
+  * shuffle; the sampling and split shuffles upstream of a training
+  * sample keep the heavy part (cleaning) parallel.
   * Same capability surface (params mirror `02_merchcat_ml.py:64-83`);
   * accuracy is asserted against thresholds, not bit-parity with the
   * C++ implementation (SURVEY §7.4).
@@ -39,58 +52,33 @@ object Trainer {
       "charPrefixLen" -> charPrefixLen.toString)
   }
 
+  private val Tol = 1e-4
+
   def train(trainIn: DataFrame, labelCol: String, textCol: String,
             params: Params = Params()): Model = {
-    // two passes follow (indexer fit, featurize) — don't re-run the
-    // upstream lineage (cleaning chain, split window) for each
-    val train = trainIn.persist()
-    try trainImpl(train, labelCol, textCol, params)
-    finally train.unpersist()
-  }
-
-  private def trainImpl(train: DataFrame, labelCol: String, textCol: String,
-                        params: Params): Model = {
-    val indexer = new StringIndexer()
+    val numFeatures = params.numFeatures
+    val maxIter = params.epoch * 2 // epochs → L-BFGS iterations budget
+    val regParam = params.regParam
+    val fit = Featurize.addFeatures(
+        trainIn.select(col(labelCol).cast("string").as("__label"), col(textCol)),
+        textCol, "__features", params)
+      .select("__label", "__features")
+      .coalesce(1)
+      .rdd
+      .mapPartitions(rows => SoftmaxFit.fit(
+        rows.map(r => (r.getString(0), r.getAs[Vector](1))),
+        numFeatures, maxIter, regParam, Tol).iterator)
+      .collect().headOption.getOrElse(throw new IllegalArgumentException(
+        s"no training rows with a non-null $labelCol"))
+    val indexer = new StringIndexerModel(fit.labels)
       .setInputCol(labelCol).setOutputCol("__label_idx")
       .setHandleInvalid("skip")
-      .fit(train)
-    // L-BFGS tree-aggregates the instance RDD once per iteration, so
-    // per-task overhead multiplies by maxIter: for small/medium training
-    // samples (the post-stratification case), fewer fat partitions beat
-    // many thin ones. Cap at default parallelism; never increase.
-    // partition count read from the executed plan — `train.rdd` would
-    // materialize an RDD conversion of the persisted frame just to ask.
-    // KNOWN BEHAVIOR, kept deliberately (r19 measurement): under AQE
-    // this probe reads 0 before execution, so every fit coalesces to
-    // ONE task. Raising it to defaultParallelism/4-way fits was A/B'd
-    // (interleaved min-of-3 over the 7 model queries at 32 cores) and
-    // REGRESSED 13.8 s → 17.6 s: the multinomial gradient is a dense
-    // numFeatures × numClasses vector PER PARTITION PER ITERATION
-    // (~1.3 MB at 2^15 × 5), so an N-way fit ships N× that per L-BFGS
-    // step while the map-side work at bounded training sizes (this
-    // surface trains on ≤ 5000-row samples by design) is microseconds
-    // per row — merge traffic dominates and single-task wins.
-    val trainParts =
-      train.queryExecution.executedPlan.outputPartitioning.numPartitions
-    val nPart = math.max(1, math.min(
-      trainParts,
-      train.sparkSession.sparkContext.defaultParallelism / 4))
-    val featurized = Featurize.addFeatures(
-      indexer.transform(train), textCol, "__features", params)
-      .coalesce(nPart)
-      .persist()
-    val lr = new LogisticRegression()
-      .setFamily("multinomial")
-      .setFeaturesCol("__features")
-      .setLabelCol("__label_idx")
-      .setMaxIter(params.epoch * 2) // epochs → L-BFGS iterations budget
-      .setRegParam(params.regParam)
-      .setElasticNetParam(0.0)
-      // TF counts share a scale; skipping standardization avoids the
-      // dense per-feature std pass over the full hash space
-      .setStandardization(false)
-      .setTol(1e-4)
-    val lrModel = try lr.fit(featurized) finally featurized.unpersist()
+    // the training summary's predictions: lazy, never computed here
+    val summaryFrame = Featurize.addFeatures(
+      indexer.transform(trainIn), textCol, "__features", params)
+    val lrModel = GraftModelBridge.multinomialModel(fit.coefficients,
+      fit.intercepts, fit.objectiveHistory, summaryFrame, "__features",
+      "__label_idx", maxIter, regParam, Tol)
     new Model(lrModel, indexer, params)
   }
 

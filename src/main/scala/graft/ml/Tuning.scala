@@ -9,9 +9,10 @@ import scala.collection.concurrent.TrieMap
   * a search-space abstraction, parallel trials, per-trial tracking,
   * best-run selection. The reference runs Hyperopt TPE with
   * `SparkTrials(parallelism=20)`, shipping each trial to an executor;
-  * here trials are whole Spark jobs submitted concurrently from the
-  * driver (Spark's scheduler interleaves them across the cluster),
-  * which is the idiomatic JVM equivalent. Random search stands in for
+  * here each trial's fit is one Spark task ([[Trainer]]), and trials
+  * are submitted concurrently from the driver (Spark's scheduler
+  * spreads those tasks across the cluster), which is the idiomatic JVM
+  * equivalent. Random search stands in for
   * TPE — the search-space + parallelism + selection contract is the
   * capability being reproduced, not the TPE estimator itself.
   */

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Min-of-N bench over a NAMED SUBSET of the declared queries, with
   * the exact Bench session conf and methodology (same warmup, same
@@ -49,24 +50,32 @@ object MiniBench {
     val qmap = graft.SparkEntry.queries
     val names = args.toSeq
     names.foreach(n => require(qmap.contains(n), s"unknown query $n"))
-    def pass(): Seq[(String, Double)] = names.map { n =>
+    // a query that throws is recorded as failed, never as a timing
+    def pass(): Seq[(String, Either[String, Double])] = names.map { n =>
       val t0 = System.nanoTime()
-      try { qmap(n)(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      n -> (System.nanoTime() - t0) / 1e9
+      n -> (try { qmap(n)(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+            catch { case NonFatal(e) => Left(e.toString) })
     }
+    def show(r: Either[String, Double]): String =
+      r.fold(e => s"""{"failed":${graft.Bench.jsonString(e)}}""", v => f"$v%.2f")
     val all = (0 until passes).map { i =>
       if (i > 0) { graft.ops.Queries.clearMemo(); graft.ops.ExtQueries.clearMemo() }
       pass()
     }
+    // min over the passes; failed if any pass failed
     val mins = names.zipWithIndex.map { case (n, j) =>
-      n -> all.map(_(j)._2).min }
+      val runs = all.map(_(j)._2)
+      n -> runs.collectFirst { case l @ Left(_) => l }
+        .getOrElse(Right(runs.map(_.toOption.get).min))
+    }
     println("== min-of-" + passes + " ==")
-    mins.foreach { case (n, v) => println(f"   $v%8.2fs  $n") }
+    mins.foreach { case (n, r) => println(s"   ${show(r)}  $n") }
     all.zipWithIndex.foreach { case (p, i) =>
-      println(s"-- pass $i: " + p.map { case (n, v) => f"$n=$v%.2f" }
+      println(s"-- pass $i: " + p.map { case (n, r) => s"$n=${show(r)}" }
         .mkString(" "))
     }
-    println(f"total(min)=${mins.map(_._2).sum}%.2f")
+    println(f"total(min)=${mins.flatMap(_._2.toOption).sum}%.2f" +
+      s" failed=${mins.count(_._2.isLeft)}")
     spark.stop()
   }
 }

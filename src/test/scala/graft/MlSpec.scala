@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.ml.classification.LogisticRegression
+import org.apache.spark.ml.feature.StringIndexer
 import graft.ml._
 
 /** ML sanity (SURVEY §5.5): the classifier must actually learn a
@@ -53,11 +55,11 @@ class MlSpec extends AnyFunSuite {
 
   /** The ML floor guard (q_ml_eval_summary is the bench's most
     * expensive query every round): featurize→fit→score must ship only
-    * BOUNDED data to the driver — gradient aggregates O(features ×
-    * classes), indexer labels, the 1-row summary — never anything
-    * row-scale. Detector: sum per-task result bytes via a listener at two
-    * corpus sizes 16× apart; bounded driver traffic stays ~flat, a
-    * row-scale collect would grow ~16×. */
+    * BOUNDED data to the driver — the fit's one O(features × classes)
+    * coefficient set with its label order, the 1-row summary — never
+    * anything row-scale. Detector: sum per-task result bytes via a
+    * listener at two corpus sizes 16× apart; bounded driver traffic
+    * stays ~flat, a row-scale collect would grow ~16×. */
   test("train→score driver-result bytes stay flat as the corpus scales 16x") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     def measure(n: Int): Long = {
@@ -85,6 +87,88 @@ class MlSpec extends AnyFunSuite {
     assert(big < small * 4,
       s"driver-result bytes grew ${big.toDouble / small}x over a 16x corpus " +
         s"($small -> $big) — something in featurize/fit/score collects row-scale data")
+  }
+
+  /** The parity reference: Spark's `StringIndexer` and distributed
+    * `LogisticRegression`, configured with the objective Trainer's
+    * one-task fit reproduces. */
+  private def sparkFit(train: DataFrame, labelCol: String, textCol: String,
+                       p: Trainer.Params): Model = {
+    val indexer = new StringIndexer().setInputCol(labelCol)
+      .setOutputCol("__label_idx").setHandleInvalid("skip").fit(train)
+    val lr = new LogisticRegression().setFamily("multinomial")
+      .setFeaturesCol("__features").setLabelCol("__label_idx")
+      .setMaxIter(p.epoch * 2).setRegParam(p.regParam).setElasticNetParam(0.0)
+      .setStandardization(false).setTol(1e-4)
+      .fit(Featurize.addFeatures(indexer.transform(train), textCol, "__features", p))
+    new Model(lr, indexer, p)
+  }
+
+  private def assertSparkParity(train: DataFrame, heldout: DataFrame,
+                                labelCol: String, textCol: String,
+                                p: Trainer.Params): Unit = {
+    val ours = Trainer.train(train, labelCol, textCol, p)
+    val ref = sparkFit(train, labelCol, textCol, p)
+    assert(ours.indexer.labelsArray.toSeq.map(_.toSeq) ==
+      ref.indexer.labelsArray.toSeq.map(_.toSeq))
+    val (a, b) = (ours.lrModel, ref.lrModel)
+    assert(a.numClasses == b.numClasses)
+    def maxDiff(x: Array[Double], y: Array[Double]): Double = {
+      assert(x.length == y.length)
+      x.zip(y).map { case (u, v) => if (u == v) 0.0 else math.abs(u - v) }
+        .foldLeft(0.0)(math.max)
+    }
+    val dCoef = maxDiff(a.coefficientMatrix.toArray, b.coefficientMatrix.toArray)
+    val dIntercept = maxDiff(a.interceptVector.toArray, b.interceptVector.toArray)
+    info(s"${a.numClasses} classes: max |Δcoef| $dCoef, max |Δintercept| $dIntercept")
+    assert(dCoef <= 1e-9 && dIntercept <= 1e-9,
+      s"max |Δcoef| $dCoef, max |Δintercept| $dIntercept")
+    val (ha, hb) = (a.summary.objectiveHistory, b.summary.objectiveHistory)
+    assert(ha.length == hb.length, s"${ha.toSeq} vs ${hb.toSeq}")
+    ha.zip(hb).foreach { case (u, v) =>
+      assert(math.abs(u - v) <= 1e-9 * math.abs(v), s"${ha.toSeq} vs ${hb.toSeq}")
+    }
+    def predicted(m: Model) = m.predict(heldout, textCol, "pr")
+      .select(textCol, "pr").collect().map(r => (r.getString(0), r.getString(1)))
+      .sorted.toSeq
+    assert(predicted(ours) == predicted(ref))
+  }
+
+  test("one-task fit equals Spark's LogisticRegression: word grams, null labels") {
+    val nullLabels = data.where(col("id") < 5)
+      .withColumn("merchant", lit(null).cast("string"))
+    assertSparkParity(trainDf.unionByName(nullLabels), testDf, "merchant",
+      "narrative", Trainer.Params(epoch = 5, wordNgrams = 2, numFeatures = 1 << 14))
+  }
+
+  test("one-task fit equals Spark's LogisticRegression: char grams (LangId)") {
+    val langs = graft.ext.LangFixture.df(spark)
+    assertSparkParity(langs.where(col("split") === "train"),
+      langs.where(col("split") === "heldout"), "lang", "text", LangId.defaultParams)
+  }
+
+  test("one-task fit equals Spark's LogisticRegression: two tied classes") {
+    import spark.implicits._
+    // QualityFilter's shape: keep/drop over text, equal class counts (the
+    // label order falls to the alphabetical tie-break), 10 % flipped;
+    // unregularized, the case where Spark re-centers the coefficients
+    val rng = new scala.util.Random(7)
+    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
+    val docs = (0 until 200).map { i =>
+      val keep = (i % 2 == 0) != (i % 20 == 1 || i % 20 == 2)
+      val marker = if (i % 2 == 0) "wellformed cited prose" else "boilerplate scraped clutter"
+      (i, if (keep) "keep" else "drop",
+        s"${Seq.fill(6)(words(rng.nextInt(words.size))).mkString(" ")} $marker")
+    }.toDF("i", "__q", "text")
+    assertSparkParity(docs.where(col("i") < 160), docs.where(col("i") >= 160),
+      "__q", "text",
+      Trainer.Params(epoch = 3, wordNgrams = 2, numFeatures = 1 << 14, regParam = 0.0))
+  }
+
+  test("one-task fit equals Spark's LogisticRegression: a single label") {
+    assertSparkParity(trainDf.where(col("merchant") === "tesco"), testDf,
+      "merchant", "narrative",
+      Trainer.Params(epoch = 3, wordNgrams = 1, numFeatures = 1 << 12))
   }
 
   test("quality classifier learns curated-vs-raw and composes into curation") {
