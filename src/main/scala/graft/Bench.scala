@@ -31,8 +31,8 @@ object Bench {
       // read (measured 3.4–3.9 s → 0.8 s per full-layout read at
       // sf0.1). Parameterised: an object-store deployment where each
       // listStatus is a remote call sets this low (e.g. 32) via env;
-      // the serve/maintain paths themselves list only their probed
-      // dirs (Dedup.readPrunedIntPartitions) and don't depend on it.
+      // the serve/maintain paths list the layout one level deep
+      // (graft.ext.PartitionedIndex.read) and don't depend on it.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         sys.env.getOrElse("SPARK_GRAFT_LIST_PARALLEL_THRESHOLD", "8192"))
       .config("spark.sql.extensions", "graft.GraftExtensions")

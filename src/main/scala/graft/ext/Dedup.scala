@@ -1167,179 +1167,23 @@ object Dedup {
     * dirs. Bodies never enter the index — it is (id, lanes, band)
     * rows only. `numHashes`/`bands`/`prefixChars` are layout
     * constants persisted IN the index (a `_graft_band_layout` marker,
-    * invisible to parquet readers — the MinHash twin of
-    * [[writeHashIndex]]'s `_graft_hash_layout`): serving and
-    * maintenance read them back, so a caller can never band or
+    * invisible to parquet readers; see [[PartitionedIndex]]): serving
+    * and maintenance read them back, so a caller can never band or
     * prefix a probe differently than the rows on disk — the silent-
     * corruption class (new rows banded under different constants than
     * stored rows) is unrepresentable. */
   def writeBandIndex(corpus: DataFrame, textCol: String, idCol: String,
                      outDir: String, numHashes: Int = 4, bands: Int = 2,
-                     prefixChars: Int = 1): Unit = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes=$numHashes not divisible by bands=$bands")
-    require(prefixChars >= 1 && prefixChars <= 8,
-      s"prefixChars=$prefixChars")
-    // repartition on pfx before the partitioned write: each prefix
-    // lands wholly in one task, so every dir gets ONE file instead of
-    // up to tasks×dirs — at cluster scale the build tracks dirs, not
-    // writers×dirs, in object-store metadata (measured file-count-
-    // bound before this: BENCH_R15B_SCALE.json)
-    JobLabel(corpus.sparkSession, "writeBandIndex: build+write layout") {
-      bandIndexRows(corpus, textCol, idCol, numHashes, bands, prefixChars)
-        .repartition(layoutWriteParallelism(corpus.sparkSession,
-          1L << (4 * prefixChars)), col("pfx"))
-        .write.mode("overwrite").partitionBy("pfx").parquet(outDir)
-    }
-    writeBandLayout(outDir, numHashes, bands, prefixChars,
-      corpus.sparkSession)
-  }
+                     prefixChars: Int = 1): Unit =
+    writeBandIndexFromSignatures(
+      minhashSignatures(corpus, textCol, idCol, numHashes),
+      idCol, outDir, numHashes, bands, prefixChars)
 
-  /** Write-task count for a partitioned-layout write: the stage is
-    * FILE-count-bound, not byte-bound (one parquet open/close per
-    * dir dominates), so it wants core-count parallelism regardless
-    * of `spark.sql.shuffle.partitions` — under a streaming sink's
-    * 8-partition regime a 1024-dir layout write ran 8 writers ×
-    * 128 sequential file opens (measured 14–16 s at sf0.1 vs 2.6 s
-    * at 32 writers). Scale-adaptive (`defaultParallelism` = total
-    * cores on a cluster), capped at the dir count so a small layout
-    * never schedules empty writers, and EXPLICIT so AQE cannot
-    * coalesce the exchange back into a handful of straggler
-    * writers. Hash-partitioning on the dir column keeps the one-
-    * file-per-dir invariant at any task count. */
-  private[graft] def layoutWriteParallelism(
-      s: org.apache.spark.sql.SparkSession, nDirs: Long): Int =
-    math.max(1L, math.min(nDirs,
-      s.sparkContext.defaultParallelism.toLong)).toInt
-
-  /** Read only the `part=<v>` dirs of a partitioned layout that a
-    * probe can touch — listing ONE directory level instead of
-    * discovering every leaf file of the whole layout. A serve
-    * against a billion-row index must not pay a full-layout file
-    * listing to read 60 dirs (measured at sf0.1: 2.7 s → explicit
-    * dirs 0.2–0.4 s for a 1024-dir layout); at 100 TB the full
-    * listing is the difference between O(index) and O(batch)
-    * metadata work per trigger. Partition values must be INTS
-    * (hash/IVF layouts): int dir values infer the same partition
-    * type whether the read lists all dirs or a subset, so the
-    * pruned read is plan-equivalent to `full.where(isin)`. Callers
-    * keep their `isin` filter — semantics unchanged, the explicit
-    * path list only narrows WHERE the listing looks. Falls back to
-    * the full-layout read when no wanted dir exists (schema-
-    * preserving empty result). */
-  /** The `FileSystem` owning `dir`, resolved through `Path` (NOT
-    * `FileSystem.get(new URI(dir))`, which throws `URISyntaxException`
-    * on unescaped paths — spaces, `%` — that every `read.parquet`
-    * call handles fine). */
-  private def fsFor(s: org.apache.spark.sql.SparkSession,
-                    dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** ONE-level listing of a partitioned layout's `partCol=` dirs,
-    * filtered to the values `keep` accepts — the snapshot taken per
-    * serve/maintenance call (fresh every call: other writers'
-    * changes are visible; nothing is cached across batches). */
-  private def listPartDirs(fs: org.apache.hadoop.fs.FileSystem,
-                           indexDir: String, partCol: String,
-                           keep: String => Boolean): IndexedSeq[String] = {
-    val pfx = partCol + "="
-    fs.listStatus(new org.apache.hadoop.fs.Path(indexDir))
-      .iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(pfx))
-      .filter(n => keep(n.drop(pfx.length)))
-      .map(n => s"$indexDir/$n")
-      .toIndexedSeq
-  }
-
-  private[graft] def readPrunedIntPartitions(
-      s: org.apache.spark.sql.SparkSession, indexDir: String,
-      partCol: String, wanted: Array[Int]): DataFrame = {
-    val want = wanted.toSet
-    val dirs = listPartDirs(fsFor(s, indexDir), indexDir, partCol,
-      v => v.toIntOption.exists(want.contains))
-    if (dirs.isEmpty) s.read.parquet(indexDir)
-    else s.read.option("basePath", indexDir).parquet(dirs: _*)
-  }
-
-  /** [[readPrunedIntPartitions]] for STRING partition values (the
-    * band index's hex `pfx=` dirs). String values need one extra
-    * guard ints do not: partition-type INFERENCE over a pruned
-    * subset is not stable — an all-numeric subset of hex dirs would
-    * infer INT ("07" → 7) where the full layout infers STRING — so
-    * the read pins the schema explicitly: the data schema comes from
-    * ONE leaf file's footer (no partition column there) and the
-    * partition column is appended as StringType. Same fallback
-    * behavior as the int twin. */
-  private[graft] def readPrunedStringPartitions(
-      s: org.apache.spark.sql.SparkSession, indexDir: String,
-      partCol: String, wanted: Array[String]): DataFrame = {
-    val fs = fsFor(s, indexDir)
-    val want = wanted.toSet
-    val dirs = listPartDirs(fs, indexDir, partCol, want.contains)
-    readStringPartitionDirs(s, fs, indexDir, partCol, dirs)
-  }
-
-  /** Full-layout read with the partition column PINNED to StringType
-    * — the locate-scan twin of [[readPrunedStringPartitions]]. The
-    * inference-typed `s.read.parquet(indexDir)` is a silent-corruption
-    * hazard for hex layouts: when every POPULATED prefix dir happens
-    * to be numeric-parseable (no a–f digit), inference yields INT and
-    * a later union with string-typed builder rows coerces '07' to
-    * '7', so the touched-dir set misses the real dir and stale rows
-    * (including deleted ids) stay live. Pinning the schema makes that
-    * class unrepresentable, and the explicit one-level listing means
-    * a maintenance batch never pays the whole layout's leaf-file
-    * discovery machinery (the snapshot is re-listed per call, so
-    * other writers' changes stay visible). */
-  private[graft] def readAllStringPartitions(
-      s: org.apache.spark.sql.SparkSession, indexDir: String,
-      partCol: String): DataFrame = {
-    val fs = fsFor(s, indexDir)
-    val dirs = listPartDirs(fs, indexDir, partCol, _ => true)
-    readStringPartitionDirs(s, fs, indexDir, partCol, dirs)
-  }
-
-  /** Shared tail of the string-typed partition reads: probe EVERY
-    * candidate dir (not just the first — an interrupted swap can
-    * leave one empty dir, which must not silently demote the read to
-    * a full-layout inference scan) for one `.parquet` leaf whose
-    * footer pins the data schema, then read the dirs with the
-    * partition column appended as StringType. */
-  private def readStringPartitionDirs(
-      s: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, indexDir: String,
-      partCol: String, dirs: IndexedSeq[String]): DataFrame = {
-    val leaf = dirs.iterator.flatMap { d =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(d))
-        .find(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
-    }.nextOption()
-    leaf match {
-      case None => s.read.parquet(indexDir)
-      case Some(f) =>
-        val dataSchema = s.read.parquet(f).schema
-        s.read.schema(dataSchema.add(partCol,
-            org.apache.spark.sql.types.StringType, nullable = true))
-          .option("basePath", indexDir).parquet(dirs: _*)
-    }
-  }
-
-  private val BandLayoutMarker = "_graft_band_layout"
-
-  private def writeBandLayout(dir: String, numHashes: Int, bands: Int,
-                              prefixChars: Int,
-                              s: org.apache.spark.sql.SparkSession): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/$BandLayoutMarker"), true)
-    try out.write(
-      s"numHashes=$numHashes\nbands=$bands\nprefixChars=$prefixChars\n"
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** The band family of [[PartitionedIndex]]: hex `pfx=` dirs, pinned
+    * to StringType. */
+  private[graft] val BandIndex = PartitionedIndex.Family[String](
+    "Band", "pfx", PartitionedIndex.StringKey, "_graft_band_layout",
+    persists = "banding", dirNoun = "dirs")
 
   /** The `(numHashes, bands, prefixChars)` layout constants persisted
     * in a [[writeBandIndex]] marker — public so maintenance and
@@ -1348,46 +1192,16 @@ object Dedup {
     * [[writeBandIndex]] layout. */
   def bandIndexLayout(indexDir: String,
                       s: org.apache.spark.sql.SparkSession): (Int, Int, Int) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), s.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/$BandLayoutMarker")
-    require(fs.exists(p), {
-      // distinguish "pre-marker index" (band partition dirs present,
-      // marker absent) from "not an index at all" — old layouts are
-      // rebuildable, and the message should say which case this is
-      val dirP = new org.apache.hadoop.fs.Path(indexDir)
-      val preMarker = fs.exists(dirP) &&
-        fs.listStatus(dirP).exists(_.getPath.getName.startsWith("pfx="))
-      if (preMarker)
-        s"$indexDir has pfx= partition dirs but no $BandLayoutMarker " +
-          "marker — a pre-marker writeBandIndex layout; rebuild it with " +
-          "writeBandIndex (indexes are rebuildable) to persist the banding"
-      else
-        s"$indexDir is not a writeBandIndex layout (no $BandLayoutMarker marker)"
-    })
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val kv = text.linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim.toInt }
-      .toMap
+    val kv = PartitionedIndex.markerInts(
+      PartitionedIndex.readMarker(s, indexDir, BandIndex))
     (kv("numHashes"), kv("bands"), kv("prefixChars"))
   }
 
-  private def bandIndexRows(corpus: DataFrame, textCol: String,
-                            idCol: String, numHashes: Int, bands: Int,
-                            prefixChars: Int): DataFrame =
-    bandIndexRowsFromSignatures(
-      minhashSignatures(corpus, textCol, idCol, numHashes),
-      idCol, numHashes, bands, prefixChars)
-
-  /** [[bandIndexRows]] over an already-computed [[minhashSignatures]]
-    * frame (id, m0..m{n-1}) — the seam that lets a caller who has the
-    * corpus signatures materialized (ingest-time signing, a memoized
-    * fixture pass) band and prefix them without re-shingling the
-    * corpus. Value-identical to [[bandIndexRows]] by construction:
-    * everything downstream of the signature frame is the same
-    * deterministic column arithmetic. */
+  /** The band index rows of a [[minhashSignatures]] frame (id,
+    * m0..m{n-1}): one row per (doc, band) with its `pfx` home — the
+    * seam that lets a caller who has the corpus signatures
+    * materialized (ingest-time signing, a memoized fixture pass) band
+    * and prefix them without re-shingling the corpus. */
   private[graft] def bandIndexRowsFromSignatures(
       sigs: DataFrame, idCol: String, numHashes: Int, bands: Int,
       prefixChars: Int): DataFrame =
@@ -1410,14 +1224,10 @@ object Dedup {
       s"numHashes=$numHashes not divisible by bands=$bands")
     require(prefixChars >= 1 && prefixChars <= 8,
       s"prefixChars=$prefixChars")
-    JobLabel(sigs.sparkSession, "writeBandIndex: build+write layout") {
-      bandIndexRowsFromSignatures(sigs, idCol, numHashes, bands, prefixChars)
-        .repartition(layoutWriteParallelism(sigs.sparkSession,
-          1L << (4 * prefixChars)), col("pfx"))
-        .write.mode("overwrite").partitionBy("pfx").parquet(outDir)
-    }
-    writeBandLayout(outDir, numHashes, bands, prefixChars,
-      sigs.sparkSession)
+    PartitionedIndex.write(
+      bandIndexRowsFromSignatures(sigs, idCol, numHashes, bands, prefixChars),
+      BandIndex, outDir, 1L << (4 * prefixChars),
+      s"numHashes=$numHashes\nbands=$bands\nprefixChars=$prefixChars\n")
   }
 
   /** [[minhashMatches]] served from a [[writeBandIndex]] layout: the
@@ -1437,12 +1247,10 @@ object Dedup {
 
   /** [[minhashMatchesIndexed]] plus its narrowing EVIDENCE — the
     * probed prefixes and the layout's total — from the serve's own
-    * internal probe collect. A serving layer that wants to LOG its
-    * per-batch narrowing (the streaming gate sinks) previously called
-    * [[probeBandPrefixes]] first and the serve second, re-tokenizing
-    * and re-signing every arrival for a number the serve had already
-    * computed; this returns both from one pass. Matches frame is
-    * identical to [[minhashMatchesIndexed]]. */
+    * internal probe collect, so a serving layer that LOGS its
+    * per-batch narrowing (the streaming gate sinks) pays no second
+    * tokenize+sign pass for it. Matches frame is identical to
+    * [[minhashMatchesIndexed]]. */
   def minhashMatchesIndexedWithEvidence(
       indexDir: String, arrivals: DataFrame, idCol: String,
       textCol: String,
@@ -1461,15 +1269,11 @@ object Dedup {
     val probePfx = arr.select(
         substring(col("band_key"), 1, prefixLen).as("pfx"))
       .distinct().collect().map(_.getString(0)).sorted
-    // list + read ONLY the probed prefix dirs (explicit string-typed
-    // partition schema — see readPrunedStringPartitions): a batch
-    // against a billion-document band index must not pay a
+    // list + read ONLY the probed prefix dirs (PartitionedIndex.read):
+    // a batch against a billion-document band index must not pay a
     // full-layout file listing to open bands × |batch| dirs
-    val stored = readPrunedStringPartitions(s, indexDir, "pfx", probePfx)
-    require(stored.columns.contains("pfx"),
-      s"$indexDir is not a writeBandIndex layout (no pfx partition)")
-    val idx = stored
-      .where(col("pfx").isin(probePfx.toIndexedSeq.map(_.asInstanceOf[Any]): _*))
+    val idx = PartitionedIndex.read(s, indexDir, BandIndex, probePfx.toSet)
+      .where(col("pfx").isin(probePfx.toIndexedSeq: _*))
       .withColumn("__rsig",
         array((0 until numHashes).map(i => col(s"m$i")): _*))
       .select(col(idCol).as("neighbor_id"), col("__rsig"),
@@ -1485,127 +1289,33 @@ object Dedup {
           (x, y) => x === y), b => b)).cast("double") / numHashes, 6))
       .where(col("est_jaccard") >= minJaccard)
       .select(col(idCol), col("neighbor_id"), col("est_jaccard"))
+    // 16^prefixChars as a Long: prefixChars may be 8, where an Int
+    // saturates and "touched < n_prefix" narrowing gates would pass
     (matches, probePfx, 1L << (4 * prefixLen))
-  }
-
-  /** The narrowing evidence for a [[minhashMatchesIndexed]] call: the
-    * distinct band-key prefixes the arrival batch's band probes can
-    * touch (at most 16^prefixChars values — driver-bounded) plus the
-    * layout's total prefix count.
-    * [[graft.streaming.ScoreStream.indexedBandGateSink]] logs the
-    * pair per micro-batch so each trigger can PROVE it pruned the
-    * index scan instead of trusting the plan. */
-  def probeBandPrefixes(indexDir: String, arrivals: DataFrame,
-                        idCol: String,
-                        textCol: String): (Array[String], Long) = {
-    val s = arrivals.sparkSession
-    val (numHashes, bands, prefixLen) = bandIndexLayout(indexDir, s)
-    val rows = numHashes / bands
-    val probed = arrivals
-      .select(col(idCol), Featurize.tokensCol(col(textCol)).as("__t"))
-      .select(col(idCol), Featurize.ngramsCol(col("__t"), 3).as("__sh"))
-      .where(size(col("__sh")) > 0)
-      .withColumn("__asig", minhashSignature(col("__sh"), numHashes))
-      .select(explode(bandKeys(col("__asig"), bands, rows)).as("band_key"))
-      .select(substring(col("band_key"), 1, prefixLen).as("pfx"))
-      .distinct().collect().map(_.getString(0)).sorted
-    // 16^prefixChars as a Long: prefixChars may be 8, where
-    // math.pow(16, 8).toInt saturates at Int.MaxValue and the
-    // "touched < n_prefix" narrowing gates would trivially pass.
-    (probed, 1L << (4 * prefixLen))
   }
 
   /** Apply a CDC change batch to a [[writeBandIndex]] layout IN
     * PLACE, rewriting ONLY the prefix dirs the changed documents'
     * band rows live in (old rows and new rows both count — an update
-    * whose text moves its band keys touches both homes). Same
-    * crash-safety shape as [[graft.ext.Similarity.updateIvfIndex]]:
-    * the temp layout fully materializes before any live dir moves, a
-    * prefix emptied by deletes stays deleted. Returns the touched
-    * prefixes (bounded at 16^prefixChars). The banding constants come
-    * from the index's OWN layout marker — a maintainer cannot band
-    * new rows differently than the stored rows. */
+    * whose text moves its band keys touches both homes) through
+    * [[PartitionedIndex.update]]'s crash-safe rewrite and swap.
+    * Returns the touched prefixes (bounded at 16^prefixChars). The
+    * banding constants come from the index's OWN layout marker — a
+    * maintainer cannot band new rows differently than the stored
+    * rows. */
   def updateBandIndex(indexDir: String, changes: DataFrame,
                       textCol: String, idCol: String,
                       seqCol: String = "seq",
                       opCol: String = "op"): Array[String] = {
-    val s = changes.sparkSession
-    val (numHashes, bands, prefixChars) = bandIndexLayout(indexDir, s)
-    val latest = graft.etl.Merge.latestChanges(changes, idCol, seqCol)
-    val touchedIds = latest.select(col(idCol)).distinct()
-    val upserts = latest.where(col(opCol) =!= lit("d"))
-      .select(col(idCol), col(textCol))
-    val newRows = bandIndexRows(upserts, textCol, idCol, numHashes,
-      bands, prefixChars)
-    // old homes (column-pruned index scan against the broadcast
-    // touched-id set) and new homes in ONE distinct+collect — the
-    // two separate driver round trips per micro-batch folded into
-    // one. The scan pins pfx to StringType (readAllStringPartitions):
-    // inference over hex dirs is unstable, and an INT-inferred pfx
-    // would union-coerce '07' to '7' here — the touched set would
-    // miss the real dir and stale rows would stay live, silently.
-    val touched = JobLabel(s, "updateBandIndex: locate touched dirs") {
-      readAllStringPartitions(s, indexDir, "pfx")
-        .select(col(idCol), col("pfx"))
-        .join(broadcast(touchedIds), Seq(idCol))
-        .select("pfx")
-        .unionByName(newRows.select("pfx"))
-        .distinct().collect().map(_.getString(0)).sorted
+    val (numHashes, bands, prefixChars) =
+      bandIndexLayout(indexDir, changes.sparkSession)
+    PartitionedIndex.update(indexDir, BandIndex, changes, idCol, seqCol,
+        opCol, 1L << (4 * prefixChars)) { upserts =>
+      bandIndexRowsFromSignatures(
+        minhashSignatures(upserts.select(col(idCol), col(textCol)), textCol,
+          idCol, numHashes),
+        idCol, numHashes, bands, prefixChars)
     }
-    if (touched.isEmpty) return touched
-    val touchedAny = touched.toIndexedSeq.map(_.asInstanceOf[Any])
-    // survivors live only in the touched dirs — list+read exactly
-    // those (explicit string partition schema) instead of
-    // discovering the whole layout's files to then prune at the scan
-    val survivors = readPrunedStringPartitions(s, indexDir, "pfx", touched)
-      .where(col("pfx").isin(touchedAny: _*))
-      .join(broadcast(touchedIds), Seq(idCol), "left_anti")
-    val tmpDir = s"$indexDir.upd-${java.util.UUID.randomUUID().toString.take(8)}"
-    JobLabel(s, "updateBandIndex: rewrite touched dirs") {
-      survivors.unionByName(
-          newRows.select(survivors.columns.toIndexedSeq.map(col): _*))
-        // one file per rewritten dir; explicit core-count parallelism —
-        // the write is file-count-bound (see layoutWriteParallelism)
-        .repartition(layoutWriteParallelism(s, 1L << (4 * prefixChars)),
-          col("pfx"))
-        .write.mode("overwrite").partitionBy("pfx").parquet(tmpDir)
-    }
-    swapPrefixDirs(s, indexDir, tmpDir, touched.toIndexedSeq.map(p => s"pfx=$p"))
-    touched
-  }
-
-  /** Install the fresh prefix dirs a CDC update wrote under `tmpDir`
-    * over their live homes in `indexDir`, with a recovery copy alive
-    * at every step: each live dir is renamed ASIDE into `tmpDir`
-    * (never deleted first), then its replacement renames in, and
-    * `tmpDir` — which now holds every displaced old dir — is deleted
-    * ONLY after every prefix has landed. If any rename throws, or the
-    * process dies mid-loop, `tmpDir` survives holding both the
-    * not-yet-installed fresh dirs and the displaced old dirs, so no
-    * prefix's data has a single remaining copy at any point. The one
-    * residual window is a crash BETWEEN the aside-rename and the
-    * install-rename of a single prefix: that prefix is then absent
-    * from the live layout until the operator is re-run or the aside
-    * copy (`$tmpDir/aside-<dir>`) is restored by hand — absent, not
-    * lost. A prefix emptied by deletes (no fresh dir) is renamed
-    * aside and simply never replaced, so it stays deleted on success
-    * and recoverable on failure. */
-  private[graft] def swapPrefixDirs(s: org.apache.spark.sql.SparkSession,
-                                    indexDir: String, tmpDir: String,
-                                    dirs: Seq[String]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmpDir), s.sparkContext.hadoopConfiguration)
-    dirs.foreach { d =>
-      val live = new org.apache.hadoop.fs.Path(s"$indexDir/$d")
-      val fresh = new org.apache.hadoop.fs.Path(s"$tmpDir/$d")
-      val aside = new org.apache.hadoop.fs.Path(s"$tmpDir/aside-$d")
-      if (fs.exists(live)) fs.rename(live, aside)
-      if (fs.exists(fresh)) fs.rename(fresh, live)
-      ()
-    }
-    // All prefixes landed — only now is the recovery copy redundant.
-    fs.delete(new org.apache.hadoop.fs.Path(tmpDir), true)
-    ()
   }
 
   /** Perceptual near-duplicate VIDEO pairs — temporal voting over
@@ -1932,71 +1642,32 @@ object Dedup {
     * upstream of this writer; the index is `(id, hash, band)` rows
     * only. `bands`/`nPrefix` are layout constants persisted IN the
     * index (a `_graft_hash_layout` marker, invisible to parquet
-    * readers): serve and maintenance read them back, so a caller can
-    * never probe with a different banding than the one on disk — the
-    * mismatch class (which silently under-recalls whenever the wrong
-    * value happens to divide the right one) is unrepresentable. */
+    * readers; see [[PartitionedIndex]]): serve and maintenance read
+    * them back, so a caller can never probe with a different banding
+    * than the one on disk — the mismatch class (which silently
+    * under-recalls whenever the wrong value happens to divide the
+    * right one) is unrepresentable. */
   def writeHashIndex(hashes: DataFrame, idCol: String, hashCol: String,
                      outDir: String, bands: Int = 4,
-                     nPrefix: Int = 16): Unit = {
-    // one file per prefix dir (see writeBandIndex): without the pfx
-    // repartition this writes up to tasks×nPrefix part files and the
-    // build is file-count-bound, not data-bound; explicit core-count
-    // parallelism because the file-open cost, not the bytes, is the
-    // stage (see layoutWriteParallelism)
-    JobLabel(hashes.sparkSession, "writeHashIndex: build+write layout") {
-      hashIndexRows(hashes, idCol, hashCol, bands, nPrefix)
-        .repartition(layoutWriteParallelism(hashes.sparkSession,
-          nPrefix.toLong), col("pfx"))
-        .write.mode("overwrite").partitionBy("pfx").parquet(outDir)
-    }
-    writeHashLayout(outDir, bands, nPrefix, hashes.sparkSession)
-  }
+                     nPrefix: Int = 16): Unit =
+    PartitionedIndex.write(hashIndexRows(hashes, idCol, hashCol, bands, nPrefix),
+      HashIndex, outDir, nPrefix.toLong, s"bands=$bands\nnPrefix=$nPrefix\n")
 
-  private val HashLayoutMarker = "_graft_hash_layout"
-
-  private def writeHashLayout(dir: String, bands: Int, nPrefix: Int,
-                              s: org.apache.spark.sql.SparkSession): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/$HashLayoutMarker"), true)
-    try out.write(s"bands=$bands\nnPrefix=$nPrefix\n".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readHashLayout(dir: String,
-                             s: org.apache.spark.sql.SparkSession): (Int, Int) = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$HashLayoutMarker")
-    require(fs.exists(p), {
-      val dirP = new org.apache.hadoop.fs.Path(dir)
-      val preMarker = fs.exists(dirP) &&
-        fs.listStatus(dirP).exists(_.getPath.getName.startsWith("pfx="))
-      if (preMarker)
-        s"$dir has pfx= partition dirs but no $HashLayoutMarker marker — " +
-          "a pre-marker writeHashIndex layout; rebuild it with " +
-          "writeHashIndex (indexes are rebuildable) to persist the banding"
-      else
-        s"$dir is not a writeHashIndex layout (no $HashLayoutMarker marker)"
-    })
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val kv = text.linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim.toInt }
-      .toMap
-    (kv("bands"), kv("nPrefix"))
-  }
+  /** The hash family of [[PartitionedIndex]]: int `pfx=` dirs. */
+  private[graft] val HashIndex = PartitionedIndex.Family[Int](
+    "Hash", "pfx", PartitionedIndex.IntKey, "_graft_hash_layout",
+    persists = "banding", dirNoun = "dirs")
 
   /** The `(bands, nPrefix)` layout constants persisted in a
     * [[writeHashIndex]] marker — public so maintenance and serving
     * layers can LOG their narrowing against the layout's total (the
     * streaming maintenance sink records touched/nPrefix per batch). */
   def hashIndexLayout(indexDir: String,
-                      s: org.apache.spark.sql.SparkSession): (Int, Int) =
-    readHashLayout(indexDir, s)
+                      s: org.apache.spark.sql.SparkSession): (Int, Int) = {
+    val kv = PartitionedIndex.markerInts(
+      PartitionedIndex.readMarker(s, indexDir, HashIndex))
+    (kv("bands"), kv("nPrefix"))
+  }
 
   private[graft] def hashIndexRows(hashes: DataFrame, idCol: String,
                             hashCol: String, bands: Int,
@@ -2039,14 +1710,12 @@ object Dedup {
   /** [[hashMatchesIndexed]] plus its narrowing EVIDENCE — the probed
     * prefixes and the layout's `nPrefix` — from the serve's own
     * internal probe collect (see
-    * [[minhashMatchesIndexedWithEvidence]]: the gate sinks previously
-    * paid a second full probe pass just to log the number the serve
-    * had already computed). */
+    * [[minhashMatchesIndexedWithEvidence]]). */
   def hashMatchesIndexedWithEvidence(
       indexDir: String, arrivals: DataFrame, idCol: String,
       hashCol: String, maxHamming: Int = 3): (DataFrame, Array[Int], Int) = {
     val s = arrivals.sparkSession
-    val (bands, nPrefix) = readHashLayout(indexDir, s)
+    val (bands, nPrefix) = hashIndexLayout(indexDir, s)
     require(maxHamming >= 0 && maxHamming <= bands - 1,
       s"maxHamming=$maxHamming exceeds the pigeonhole guarantee of " +
         s"bands - 1 = ${bands - 1} (the index at $indexDir was built " +
@@ -2054,15 +1723,14 @@ object Dedup {
     val bandBits = 64 / bands
     val mask = (1L << bandBits) - 1
     val arr = arrivalBandProbes(arrivals, idCol, hashCol, bands)
-    val probePfx = collectProbePrefixes(arr, nPrefix)
-    // list + read ONLY the probed prefix dirs (readPrunedIntPartitions)
+    val probePfx = arr.select(pmod(xxhash64(col("__bi"), col("__bv")), lit(nPrefix))
+        .cast("int").as("pfx"))
+      .distinct().collect().map(_.getInt(0)).sorted // bounded by nPrefix
+    // list + read ONLY the probed prefix dirs (PartitionedIndex.read)
     // — a batch against a billion-image index must not pay a full-
     // layout file listing to open ≤ 4·|batch| dirs
-    val stored = readPrunedIntPartitions(s, indexDir, "pfx", probePfx)
-    require(stored.columns.contains("pfx"),
-      s"$indexDir is not a writeHashIndex layout (no pfx partition)")
-    val idx = stored
-      .where(col("pfx").isin(probePfx.toIndexedSeq.map(Int.box): _*))
+    val idx = PartitionedIndex.read(s, indexDir, HashIndex, probePfx.toSet)
+      .where(col("pfx").isin(probePfx.toIndexedSeq: _*))
       .withColumn("__rhash", when(
         pmod(xxhash64(col("band_idx"), col("band_val")), lit(nPrefix))
           .cast("int") =!= col("pfx"),
@@ -2078,8 +1746,7 @@ object Dedup {
   }
 
   /** An arrival hash frame exploded to its `(id, hash, band_idx,
-    * band_val)` probes under the given band count — the shared head
-    * of [[hashMatchesIndexed]] and [[probePrefixes]]. */
+    * band_val)` probes under the given band count. */
   private def arrivalBandProbes(arrivals: DataFrame, idCol: String,
                                 hashCol: String, bands: Int): DataFrame = {
     val bandBits = 64 / bands
@@ -2093,77 +1760,25 @@ object Dedup {
           .as(Seq("__bi", "__bv")))
   }
 
-  private def collectProbePrefixes(arr: DataFrame, nPrefix: Int): Array[Int] =
-    arr.select(pmod(xxhash64(col("__bi"), col("__bv")), lit(nPrefix))
-        .cast("int").as("pfx"))
-      .distinct().collect().map(_.getInt(0)).sorted // bounded by nPrefix
-
-  /** The distinct prefix dirs of a [[writeHashIndex]] layout an
-    * arrival hash set can touch — at most `nPrefix` ints, driver-
-    * bounded by construction, computed under the index's OWN layout
-    * marker so the answer is exactly the partition filter
-    * [[hashMatchesIndexed]] will push. Public so serving layers can
-    * gate on — and LOG — how much of the index a batch reads: the
-    * streaming gate ([[graft.streaming.ScoreStream
-    * .indexedHashGateSink]]) records it per micro-batch. */
-  def probePrefixes(indexDir: String, arrivals: DataFrame,
-                    idCol: String, hashCol: String): (Array[Int], Int) = {
-    val (bands, nPrefix) = readHashLayout(indexDir, arrivals.sparkSession)
-    (collectProbePrefixes(
-      arrivalBandProbes(arrivals, idCol, hashCol, bands), nPrefix), nPrefix)
-  }
-
   /** Apply a CDC change batch of `(id, hash, seq, op)` rows to a
     * [[writeHashIndex]] layout IN PLACE, rewriting ONLY the prefix
     * dirs the changed hashes' band rows live in (old homes and new
     * homes both count — an update whose hash moves its bands touches
-    * both). Upstream decodes the changed payloads; history is never
-    * re-read, never re-decoded. Same crash-safety shape as
-    * [[updateBandIndex]]: the temp layout fully materializes before
-    * any live dir moves, a prefix emptied by deletes stays deleted.
-    * `bands`/`nPrefix` come from the index's layout marker, so an
-    * update can never band its new rows differently than the history.
-    * Returns the touched prefixes (bounded at `nPrefix`). */
+    * both) through [[PartitionedIndex.update]]'s crash-safe rewrite
+    * and swap. Upstream decodes the changed payloads; history is never
+    * re-read, never re-decoded. `bands`/`nPrefix` come from the
+    * index's layout marker, so an update can never band its new rows
+    * differently than the history. Returns the touched prefixes
+    * (bounded at `nPrefix`). */
   def updateHashIndex(indexDir: String, changes: DataFrame,
                       idCol: String, hashCol: String,
                       seqCol: String = "seq",
                       opCol: String = "op"): Array[Int] = {
-    val s = changes.sparkSession
-    val (bands, nPrefix) = readHashLayout(indexDir, s)
-    val latest = graft.etl.Merge.latestChanges(changes, idCol, seqCol)
-    val touchedIds = latest.select(col(idCol)).distinct()
-    val upserts = latest.where(col(opCol) =!= lit("d"))
-      .select(col(idCol), col(hashCol))
-    val newRows = hashIndexRows(upserts, idCol, hashCol, bands, nPrefix)
-    // old homes and new homes in ONE distinct+collect (see
-    // updateBandIndex) — one driver round trip per micro-batch
-    val touched = JobLabel(s, "updateHashIndex: locate touched dirs") {
-      s.read.parquet(indexDir)
-        .select(col(idCol), col("pfx"))
-        .join(broadcast(touchedIds), Seq(idCol))
-        .select("pfx")
-        .unionByName(newRows.select("pfx"))
-        .distinct().collect().map(_.getInt(0)).sorted
+    val (bands, nPrefix) = hashIndexLayout(indexDir, changes.sparkSession)
+    PartitionedIndex.update(indexDir, HashIndex, changes, idCol, seqCol,
+        opCol, nPrefix.toLong) {
+      hashIndexRows(_, idCol, hashCol, bands, nPrefix)
     }
-    if (touched.isEmpty) return touched
-    val touchedAny = touched.toIndexedSeq.map(Int.box)
-    // survivors live only in the touched dirs — list+read exactly
-    // those (readPrunedIntPartitions) instead of discovering the
-    // whole layout's files to then prune at the scan
-    val survivors = readPrunedIntPartitions(s, indexDir, "pfx", touched)
-      .where(col("pfx").isin(touchedAny: _*))
-      .join(broadcast(touchedIds), Seq(idCol), "left_anti")
-    val tmpDir = s"$indexDir.upd-${java.util.UUID.randomUUID().toString.take(8)}"
-    JobLabel(s, "updateHashIndex: rewrite touched dirs") {
-      survivors.unionByName(
-          newRows.select(survivors.columns.toIndexedSeq.map(col): _*))
-        // one file per rewritten dir; explicit core-count parallelism —
-        // the write is file-count-bound (see layoutWriteParallelism)
-        .repartition(layoutWriteParallelism(s, nPrefix.toLong), col("pfx"))
-        .write.mode("overwrite").partitionBy("pfx").parquet(tmpDir)
-    }
-    swapPrefixDirs(s, indexDir, tmpDir, touched.toIndexedSeq.map(p => s"pfx=$p"))
-    touched
   }
 
   /** Cross-document EXACT substring dedup — the Lee et al. 2021

@@ -667,40 +667,23 @@ object Similarity {
     * production vector index: at 100 TB the win is not arithmetic but
     * IO — a `nprobe/nCells` fraction of the index FILES is read at
     * all. Rewrite cost is one cell exchange, paid once per index
-    * build. */
+    * build. The centroids are persisted IN the layout (a
+    * `_graft_ivf_layout` marker, one line per centroid, shortest-
+    * round-trip `Double.toString` — parses back to the identical
+    * bits; see [[PartitionedIndex]]): they ARE the index's layout
+    * constants, and a maintainer assigning new rows under different
+    * centroids than the stored rows silently corrupts cells. */
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    cents: Array[Array[Double]], outDir: String): Unit = {
-    // repartition on cell first: one file per cell dir instead of up
-    // to tasks×cells (same file-count audit as Dedup.writeHashIndex);
-    // explicit core-count parallelism — the write is file-count-bound
-    // (see Dedup.layoutWriteParallelism)
-    JobLabel(corpus.sparkSession, "writeIvfIndex: build+write layout") {
-      assignCells(corpus, vecCol, cents)
-        .select(col(idCol), col(vecCol), col("cell"))
-        .repartition(Dedup.layoutWriteParallelism(corpus.sparkSession,
-          cents.length.toLong), col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(outDir)
-    }
-    writeIvfLayout(outDir, cents, corpus.sparkSession)
-  }
+                    cents: Array[Array[Double]], outDir: String): Unit =
+    PartitionedIndex.write(
+      assignCells(corpus, vecCol, cents).select(col(idCol), col(vecCol), col("cell")),
+      IvfIndex, outDir, cents.length.toLong,
+      cents.map(_.mkString(",")).mkString("\n"))
 
-  private val IvfLayoutMarker = "_graft_ivf_layout"
-
-  /** Persist the centroids IN the layout (one line per centroid,
-    * shortest-round-trip `Double.toString` — parses back to the
-    * identical bits), the vector twin of `Dedup`'s band/hash layout
-    * markers: the centroids ARE the index's layout constants, and a
-    * maintainer assigning new rows under different centroids than
-    * the stored rows silently corrupts cells. */
-  private def writeIvfLayout(dir: String, cents: Array[Array[Double]],
-                             s: org.apache.spark.sql.SparkSession): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), s.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/$IvfLayoutMarker"), true)
-    try out.write(cents.map(_.mkString(",")).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+  /** The IVF family of [[PartitionedIndex]]: int `cell=` dirs. */
+  private[graft] val IvfIndex = PartitionedIndex.Family[Int](
+    "Ivf", "cell", PartitionedIndex.IntKey, "_graft_ivf_layout",
+    persists = "centroids", dirNoun = "cells")
 
   /** The centroids persisted in a [[writeIvfIndex]] marker — the
     * EXACT doubles the build assigned cells with (bit-identical
@@ -709,29 +692,10 @@ object Similarity {
     * these instead of accepting centroids, so an unattended
     * maintainer can never drift from the on-disk assignment. */
   def ivfIndexCentroids(indexDir: String,
-                        s: org.apache.spark.sql.SparkSession): Array[Array[Double]] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), s.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/$IvfLayoutMarker")
-    require(fs.exists(p), {
-      // distinguish "pre-marker index" (cell= partition dirs present,
-      // marker absent) from "not an index at all"
-      val dirP = new org.apache.hadoop.fs.Path(indexDir)
-      val preMarker = fs.exists(dirP) &&
-        fs.listStatus(dirP).exists(_.getPath.getName.startsWith("cell="))
-      if (preMarker)
-        s"$indexDir has cell= partition dirs but no $IvfLayoutMarker " +
-          "marker — a pre-marker writeIvfIndex layout; rebuild it with " +
-          "writeIvfIndex (indexes are rebuildable) to persist the centroids"
-      else
-        s"$indexDir is not a writeIvfIndex layout (no $IvfLayoutMarker marker)"
-    })
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    text.linesIterator.filter(_.nonEmpty)
+                        s: org.apache.spark.sql.SparkSession): Array[Array[Double]] =
+    PartitionedIndex.readMarker(s, indexDir, IvfIndex)
+      .linesIterator.filter(_.nonEmpty)
       .map(_.split(",").map(_.toDouble)).toArray
-  }
 
   /** The distinct probe-cell union of a query set — bounded at
     * `nCells` ints (driver-data class of the centroids). Public so
@@ -759,10 +723,9 @@ object Similarity {
 
   /** [[ivfPartitionedTopK]] plus its narrowing EVIDENCE — the probed
     * cell set (the serve's own internal collect) and the layout's
-    * cell count. The streaming gate sinks previously called
-    * [[probeCellSet]] first and the serve second, paying the
-    * assignment pass twice for a number the serve had already
-    * computed (see `Dedup.minhashMatchesIndexedWithEvidence`). */
+    * cell count, so a serving layer that LOGS its narrowing pays no
+    * second assignment pass for it (see
+    * `Dedup.minhashMatchesIndexedWithEvidence`). */
   def ivfPartitionedTopKWithEvidence(
       indexDir: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, cents: Array[Array[Double]],
@@ -774,12 +737,11 @@ object Similarity {
       .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
     val cellSet = probed.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted
-    // list + read ONLY the probed cell dirs (Dedup.
-    // readPrunedIntPartitions): a query batch against a billion-row
-    // layout must not pay a full-layout file listing to open nprobe
-    // cells
-    val indexed = Dedup.readPrunedIntPartitions(s, indexDir, "cell", cellSet)
-      .where(col("cell").isin(cellSet.toIndexedSeq.map(_.asInstanceOf[Any]): _*))
+    // list + read ONLY the probed cell dirs (PartitionedIndex.read): a
+    // query batch against a billion-row layout must not pay a
+    // full-layout file listing to open nprobe cells
+    val indexed = PartitionedIndex.read(s, indexDir, IvfIndex, cellSet.toSet)
+      .where(col("cell").isin(cellSet.toIndexedSeq: _*))
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("cell"))
       .withColumn("__cn", sqrt(nDot(s, col("cv"), col("cv"))))
     val w = Window.partitionBy(col("query_id"))
@@ -797,23 +759,16 @@ object Similarity {
   /** Incremental maintenance of a [[writeIvfIndex]] layout under a CDC
     * change set — the weekly operation of a LIVING vector corpus,
     * where the 100 TB anti-pattern is rebuilding the whole index for
-    * an upsert batch. Composes [[graft.etl.Merge.latestChanges]]
-    * (latest-`seqCol` change per key wins) with cell-local rewrite:
-    *
-    *  1. LOCATE: one column-pruned scan of the index projecting only
-    *     `(id, cell)` against the broadcast touched-id set finds the
-    *     cells that currently HOLD a touched id (an updated vector may
-    *     move cells, so its old cell must rewrite too; a delete's cell
-    *     is only discoverable here). No vector bytes are read.
-    *  2. ASSIGN: upserted vectors take their cells from the broadcast
-    *     centroid literals — the same [[assignCells]] the build used.
-    *  3. REWRITE: only the union of old+new cells re-materializes —
-    *     survivors (touched cells minus touched ids) plus the freshly
-    *     assigned upserts land in a sibling temp layout, and each
-    *     touched `cell=K/` directory is swapped in whole (a cell
-    *     emptied by deletes is removed). Untouched cells' files are
-    *     never opened for write — byte-identical before and after,
-    *     which `q_sim_ivf_update` gates on checksums.
+    * an upsert batch. [[PartitionedIndex.update]] with the IVF rows:
+    * the cells that currently HOLD a touched id (an updated vector may
+    * move cells, so its old cell must rewrite too; a delete's cell is
+    * only discoverable there) are located by a column-pruned
+    * `(id, cell)` scan — no vector bytes are read; upserted vectors
+    * take their cells from the same [[assignCells]] the build used;
+    * only the union of old+new cells re-materializes and swaps in
+    * whole (a cell emptied by deletes is removed). Untouched cells'
+    * files are never opened for write — byte-identical before and
+    * after, which `q_sim_ivf_update` gates on checksums.
     *
     * Serving ([[ivfPartitionedTopK]]) over the updated layout is
     * hash-exact with a full rebuild from the CDC-applied corpus — the
@@ -822,58 +777,21 @@ object Similarity {
   def updateIvfIndex(indexDir: String, changes: DataFrame, idCol: String,
                      vecCol: String, cents: Array[Array[Double]],
                      seqCol: String = "seq", opCol: String = "op"): Array[Int] = {
-    val s = changes.sparkSession
     // the layout's own marker is the source of truth: assigning new
     // rows under DIFFERENT centroids than the stored rows corrupts
     // cells silently (the mismatch class the band/hash markers close)
-    val stored = ivfIndexCentroids(indexDir, s)
+    val stored = ivfIndexCentroids(indexDir, changes.sparkSession)
     require(stored.length == cents.length &&
         stored.indices.forall(i =>
           java.util.Arrays.equals(stored(i), cents(i))),
-      s"caller centroids differ from the $IvfLayoutMarker marker at " +
+      s"caller centroids differ from the ${IvfIndex.marker} marker at " +
         s"$indexDir — maintain with ivfIndexCentroids(indexDir) or " +
         "rebuild the index")
-    val latest = graft.etl.Merge.latestChanges(changes, idCol, seqCol)
-    val touchedIds = latest.select(col(idCol)).distinct()
-    val upserts = latest.where(col(opCol) =!= lit("d"))
-      .select(col(idCol), col(vecCol))
-    val newAssigned = assignCells(upserts, vecCol, cents)
-      .select(col(idCol), col(vecCol), col("cell"))
-    // old cells and new cells in ONE distinct+collect (see
-    // Dedup.updateBandIndex) — one driver round trip per micro-batch
-    val touched = JobLabel(s, "updateIvfIndex: locate touched cells") {
-      s.read.parquet(indexDir)
-        .select(col(idCol), col("cell"))
-        .join(broadcast(touchedIds), Seq(idCol))
-        .select("cell")
-        .unionByName(newAssigned.select("cell"))
-        .distinct().collect().map(_.getInt(0)).sorted
+    PartitionedIndex.update(indexDir, IvfIndex, changes, idCol, seqCol,
+        opCol, cents.length.toLong) { upserts =>
+      assignCells(upserts.select(col(idCol), col(vecCol)), vecCol, cents)
+        .select(col(idCol), col(vecCol), col("cell"))
     }
-    if (touched.isEmpty) return touched
-    val touchedAny = touched.toIndexedSeq.map(_.asInstanceOf[Any])
-    // survivors live only in the touched cells — list+read exactly
-    // those dirs instead of discovering the whole layout's files
-    val survivors = Dedup.readPrunedIntPartitions(s, indexDir, "cell", touched)
-      .where(col("cell").isin(touchedAny: _*))
-      .join(broadcast(touchedIds), Seq(idCol), "left_anti")
-      .select(col(idCol), col(vecCol), col("cell"))
-    val tmpDir = s"$indexDir.upd-${java.util.UUID.randomUUID().toString.take(8)}"
-    // temp layout fully materializes BEFORE any index file moves — a
-    // failure mid-write leaves the live index untouched
-    JobLabel(s, "updateIvfIndex: rewrite touched cells") {
-      survivors.unionByName(newAssigned)
-        // one file per rewritten dir; explicit core-count parallelism —
-        // the write is file-count-bound (see Dedup.layoutWriteParallelism)
-        .repartition(Dedup.layoutWriteParallelism(s, cents.length.toLong),
-          col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(tmpDir)
-    }
-    // crash-safe swap (see Dedup.swapPrefixDirs): live dirs rename
-    // ASIDE into tmpDir before replacements install; tmpDir — holding
-    // every displaced dir — is deleted only after all cells land
-    Dedup.swapPrefixDirs(s, indexDir, tmpDir,
-      touched.toIndexedSeq.map(k => s"cell=$k"))
-    touched
   }
 
   /** Exact re-rank (refine) of a quantized shortlist — the second

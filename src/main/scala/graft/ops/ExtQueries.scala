@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.ext.{Dedup, Multimodal, Selection, Similarity, TextStats, Tokenizer, UnicodeFixture}
+import graft.ext.{Dedup, Multimodal, PartitionedIndex, Selection, Similarity, TextStats, Tokenizer, UnicodeFixture}
 import graft.ml.Featurize
 import Tables._
 
@@ -6424,11 +6424,10 @@ object ExtQueries {
     val postSigs = docSignatures(s, dir).where(col("doc_id") >= 10)
       .unionByName(Dedup.minhashSignatures(changedRows, "text", "doc_id", 4))
       .localCheckpoint()
-    // pinned-string read (see updateBandIndex's locate scan): an
-    // all-numeric hex dir set would infer an INT pfx here and the
-    // gate's diff against the string-typed builder rows would
-    // misreport
-    val maintained = Dedup.readAllStringPartitions(s, idir, "pfx")
+    // pinned-string read (PartitionedIndex.read): an all-numeric hex
+    // dir set would infer an INT pfx here and the gate's diff against
+    // the string-typed builder rows would misreport
+    val maintained = PartitionedIndex.read(s, idir, Dedup.BandIndex)
     val rebuilt = Dedup.bandIndexRowsFromSignatures(postSigs, "doc_id",
         numHashes = 4, bands = 2, prefixChars = 2)
       .select(maintained.columns.map(col).toIndexedSeq: _*)
@@ -6692,9 +6691,7 @@ object ExtQueries {
     // gate: the serve narrows the index scan to the arrival batch's
     // band prefixes — a pipeline that reads the whole index is wrong.
     // The narrowing evidence comes from the serve's OWN probe collect
-    // (hashMatchesIndexedWithEvidence): the old separate
-    // probePrefixes call re-banded the batch a second time for a
-    // number the serve had already computed.
+    // (hashMatchesIndexedWithEvidence).
     val (matches, probed, nPrefix) = Dedup.hashMatchesIndexedWithEvidence(
       idir, arrHashes, "doc_id", "dhash")
     require(probed.length > 0 && probed.length <= nPrefix / 4,

@@ -437,9 +437,7 @@ object ScoreStream {
       .foreachBatch { (df: DataFrame, id: Long) =>
         val batch = df.localCheckpoint()
         // the serve's OWN probe collect doubles as the narrowing
-        // evidence — the old separate probePrefixes call re-banded
-        // every arrival a second time for a number the serve had
-        // already computed
+        // evidence
         val (matches, probed, nPrefix) =
           graft.ext.JobLabel(batch.sparkSession,
             "serve: collect hash probe prefixes") {
@@ -449,26 +447,23 @@ object ScoreStream {
         graft.ext.JobLabel(batch.sparkSession, "serve: hash match + write") {
           matches.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         }
-        writeProbeLog(batch.sparkSession, outDir, id, probed.length,
-          nPrefix.toLong)
+        writeBatchLog(batch.sparkSession, outDir, "_probe", id,
+          s""""probed":${probed.length},"n_prefix":$nPrefix""")
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-  /** The per-batch narrowing record both indexed gate sinks write:
-    * `outDir/_probe/batch-<id>.json` with the probed-prefix count and
-    * the layout's total — overwritten on replay, so the evidence
-    * stays exactly-once alongside the batch output. */
-  private def writeProbeLog(spark: org.apache.spark.sql.SparkSession,
-                            outDir: String, batchId: Long,
-                            probed: Int, nPrefix: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/_probe/batch-$batchId.json")
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"batch":$batchId,"probed":$probed,"n_prefix":$nPrefix}"""
-        .getBytes("UTF-8"))
+  /** The per-batch record every indexed sink writes:
+    * `dir/<kind>/batch-<id>.json` holding `{"batch":<id>,<fields>}`
+    * (`_probe`: the probed-dir count and the layout's total; `_maint`:
+    * the touched-dir count and the total) — overwritten on replay, so
+    * the evidence stays exactly-once alongside the batch output. */
+  private def writeBatchLog(spark: org.apache.spark.sql.SparkSession,
+                            dir: String, kind: String, batchId: Long,
+                            fields: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$kind/batch-$batchId.json")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(s"""{"batch":$batchId,$fields}""".getBytes("UTF-8"))
     finally out.close()
   }
 
@@ -508,7 +503,8 @@ object ScoreStream {
         graft.ext.JobLabel(batch.sparkSession, "serve: band match + write") {
           matches.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
         }
-        writeProbeLog(batch.sparkSession, outDir, id, probed.length, nPrefix)
+        writeBatchLog(batch.sparkSession, outDir, "_probe", id,
+          s""""probed":${probed.length},"n_prefix":$nPrefix""")
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -520,18 +516,19 @@ object ScoreStream {
     * micro-batch of `(id, text, seq, op)` change rows applies via
     * [[graft.ext.Dedup.updateBandIndex]], which rewrites ONLY the
     * prefix dirs the batch's documents band into (old homes and new
-    * homes both) through the crash-safe aside-rename swap — history
-    * is never re-read, never re-shingled. Batch order is CDC log
-    * order (in-order source); within a batch latest-`seq` wins
-    * (Merge's contract). A batch REPLAYED after a crash re-applies
-    * the same upserts/deletes onto the already-updated layout:
-    * upsert rows rewrite identically and deletes of absent ids are
-    * no-ops, so the maintained index is exactly-once in effect. The
-    * banding constants come from the index's OWN `_graft_band_layout`
-    * marker (written by `writeBandIndex`, read per batch by
-    * `updateBandIndex`) — this sink cannot band new rows differently
-    * than the stored rows, the same defense the hash twin gets from
-    * `hashIndexLayout`. The per-batch narrowing evidence lands in
+    * homes both) through [[graft.ext.PartitionedIndex]]'s crash-safe
+    * aside-rename swap — history is never re-read, never
+    * re-shingled. The three maintain sinks (band, hash, IVF) share
+    * one body ([[indexMaintainSink]]) and one contract: batch order
+    * is CDC log order (in-order source); within a batch latest-`seq`
+    * wins (Merge's contract). A batch REPLAYED after a crash
+    * re-applies the same upserts/deletes onto the already-updated
+    * layout: upsert rows rewrite identically and deletes of absent
+    * ids are no-ops, so the maintained index is exactly-once in
+    * effect. The layout constants come from the index's OWN marker
+    * (here `_graft_band_layout`, read per batch by `updateBandIndex`)
+    * — a sink cannot band or assign new rows differently than the
+    * stored rows. The per-batch narrowing evidence lands in
     * `logDir/_maint/batch-<id>.json` (`{"batch":B,"touched":K,
     * "n_prefix":N}`, overwritten on replay) so callers can PROVE
     * each trigger rewrote a slice, not the index. */
@@ -540,49 +537,38 @@ object ScoreStream {
                             logDir: String, checkpoint: String,
                             seqCol: String = "seq",
                             opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val touched = graft.ext.Dedup.updateBandIndex(
-          indexDir, batch, textCol, idCol, seqCol, opCol)
-        val (_, _, prefixChars) = graft.ext.Dedup.bandIndexLayout(
-          indexDir, batch.sparkSession)
-        writeMaintLog(batch.sparkSession, logDir, id, touched.length,
-          1L << (4 * prefixChars)) // 16^prefixChars, Int-overflow-proof
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    indexMaintainSink(changes, logDir, checkpoint) { batch =>
+      val touched = graft.ext.Dedup.updateBandIndex(
+        indexDir, batch, textCol, idCol, seqCol, opCol)
+      val (_, _, prefixChars) = graft.ext.Dedup.bandIndexLayout(
+        indexDir, batch.sparkSession)
+      (touched.length, 1L << (4 * prefixChars)) // 16^prefixChars, Int-overflow-proof
+    }
 
   /** Streaming MAINTENANCE of a stored [[graft.ext.Dedup
-    * .writeHashIndex]] layout from a CDC stream of MEDIA payloads —
-    * the perceptual twin of [[bandIndexMaintainSink]]. Each
-    * micro-batch of `(id, payload, seq, op)` change rows DECODES
-    * ONCE inside its batch ([[graft.ext.Multimodal.imageDHashes]] —
-    * delete rows carry no payload and decode to null, which
+    * .writeHashIndex]] layout from a CDC stream of MEDIA payloads,
+    * under the [[bandIndexMaintainSink]] contract. Each micro-batch
+    * of `(id, payload, seq, op)` change rows DECODES ONCE inside its
+    * batch ([[graft.ext.Multimodal.imageDHashes]] — delete rows carry
+    * no payload and decode to null, which
     * [[graft.ext.Dedup.updateHashIndex]] ignores for upserts), then
     * rewrites only the touched prefix dirs under the index's OWN
-    * layout marker; history is never re-read, never re-DECODED.
-    * Same replay-idempotence and `_maint/batch-<id>.json` narrowing
-    * log as the band twin. */
+    * `_graft_hash_layout` marker; history is never re-read, never
+    * re-DECODED. */
   def hashIndexMaintainSink(changes: DataFrame, indexDir: String,
                             idCol: String, payloadCol: String,
                             logDir: String, checkpoint: String,
                             seqCol: String = "seq",
                             opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val hashed = graft.ext.Multimodal.imageDHashes(batch, payloadCol)
-          .drop(payloadCol)
-        val touched = graft.ext.Dedup.updateHashIndex(
-          indexDir, hashed, idCol, "dhash", seqCol, opCol)
-        val (_, nPrefix) = graft.ext.Dedup.hashIndexLayout(
-          indexDir, batch.sparkSession)
-        writeMaintLog(batch.sparkSession, logDir, id, touched.length,
-          nPrefix)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    indexMaintainSink(changes, logDir, checkpoint) { batch =>
+      val hashed = graft.ext.Multimodal.imageDHashes(batch, payloadCol)
+        .drop(payloadCol)
+      val touched = graft.ext.Dedup.updateHashIndex(
+        indexDir, hashed, idCol, "dhash", seqCol, opCol)
+      val (_, nPrefix) = graft.ext.Dedup.hashIndexLayout(
+        indexDir, batch.sparkSession)
+      (touched.length, nPrefix.toLong)
+    }
 
   /** Streaming ANN serving from a STORED [[graft.ext.Similarity
     * .writeIvfIndex]] layout — the vector member of the indexed
@@ -615,62 +601,52 @@ object ScoreStream {
           graft.ext.Similarity.ivfPartitionedTopKWithEvidence(
             indexDir, batch, idCol, vecCol, k, cents, nprobe)
         topk.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        writeProbeLog(s, outDir, id, probed.length, nCells.toLong)
+        writeBatchLog(s, outDir, "_probe", id,
+          s""""probed":${probed.length},"n_prefix":$nCells""")
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
   /** Streaming MAINTENANCE of a stored [[graft.ext.Similarity
-    * .writeIvfIndex]] layout from a CDC stream of embedding vectors —
-    * the third and last stored-index family to get the maintenance
-    * sink, after the band (text) and hash (media) twins. Each
-    * micro-batch of `(id, vector, seq, op)` change rows applies via
+    * .writeIvfIndex]] layout from a CDC stream of embedding vectors,
+    * under the [[bandIndexMaintainSink]] contract. Each micro-batch
+    * of `(id, vector, seq, op)` change rows applies via
     * [[graft.ext.Similarity.updateIvfIndex]]'s cell-local rewrite:
     * only the union of the touched ids' OLD cells (one column-pruned
     * scan, no vector bytes) and the upserts' NEW cells
-    * re-materializes, installed through the crash-safe aside-rename
-    * swap — untouched cells' files are never opened. The centroids
-    * come from the index's OWN `_graft_ivf_layout` marker, never
-    * from a caller: an unattended maintainer can never assign new
-    * vectors under different centroids than the stored rows. Same
-    * replay-idempotence argument as the band twin (latest-`seq` wins
-    * within a batch; re-applied upserts rewrite identically, deletes
-    * of absent ids are no-ops) and the same
-    * `logDir/_maint/batch-<id>.json` narrowing log, with `n_prefix`
-    * carrying the layout's cell count. */
+    * re-materializes — untouched cells' files are never opened. The
+    * centroids come from the index's OWN `_graft_ivf_layout` marker,
+    * never from a caller; the `_maint` log's `n_prefix` carries the
+    * layout's cell count. */
   def ivfIndexMaintainSink(changes: DataFrame, indexDir: String,
                            idCol: String, vecCol: String,
                            logDir: String, checkpoint: String,
                            seqCol: String = "seq",
                            opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
+    indexMaintainSink(changes, logDir, checkpoint) { batch =>
+      val cents = graft.ext.Similarity.ivfIndexCentroids(
+        indexDir, batch.sparkSession)
+      val touched = graft.ext.Similarity.updateIvfIndex(
+        indexDir, batch, idCol, vecCol, cents, seqCol, opCol)
+      (touched.length, cents.length.toLong)
+    }
+
+  /** The foreachBatch body the three maintain sinks share: `apply`
+    * maintains the index from one micro-batch and returns its touched
+    * dir count and the layout's total, logged to
+    * `logDir/_maint/batch-<id>.json`. */
+  private def indexMaintainSink(changes: DataFrame, logDir: String,
+                                checkpoint: String)(
+      apply: DataFrame => (Int, Long)): org.apache.spark.sql.streaming.StreamingQuery =
     changes.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val cents = graft.ext.Similarity.ivfIndexCentroids(
-          indexDir, batch.sparkSession)
-        val touched = graft.ext.Similarity.updateIvfIndex(
-          indexDir, batch, idCol, vecCol, cents, seqCol, opCol)
-        writeMaintLog(batch.sparkSession, logDir, id, touched.length,
-          cents.length)
+        val (touched, nDirs) = apply(batch)
+        writeBatchLog(batch.sparkSession, logDir, "_maint", id,
+          s""""touched":$touched,"n_prefix":$nDirs""")
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-
-  /** The per-batch maintenance record [[bandIndexMaintainSink]]
-    * writes: `logDir/_maint/batch-<id>.json` with the touched-prefix
-    * count and the layout's total — overwritten on replay. */
-  private def writeMaintLog(spark: org.apache.spark.sql.SparkSession,
-                            logDir: String, batchId: Long,
-                            touched: Int, nPrefix: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(logDir), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$logDir/_maint/batch-$batchId.json")
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"batch":$batchId,"touched":$touched,"n_prefix":$nPrefix}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** ONE arrival stream served against ALL THREE stored index
     * families — the composed end of the indexed-serving story
@@ -766,28 +742,12 @@ object ScoreStream {
             .foreach(_.write.mode("overwrite")
               .parquet(s"$outDir/batch_id=$id"))
         }
-        writeFamilyProbeLog(s, outDir, id, fams.toSeq)
+        writeBatchLog(s, outDir, "_probe", id, fams.map { case (f, probed, np) =>
+          s""""$f":{"probed":$probed,"n_prefix":$np}"""
+        }.mkString("\"families\":{", ",", "}"))
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-
-  /** The per-batch, per-family narrowing record [[indexedAllGateSink]]
-    * writes — one JSON object per batch keyed by family, overwritten
-    * on replay like [[writeProbeLog]]. */
-  private def writeFamilyProbeLog(spark: org.apache.spark.sql.SparkSession,
-                                  outDir: String, batchId: Long,
-                                  fams: Seq[(String, Int, Long)]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/_probe/batch-$batchId.json")
-    val body = fams.map { case (f, probed, np) =>
-      s""""$f":{"probed":$probed,"n_prefix":$np}"""
-    }.mkString(",")
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"batch":$batchId,"families":{$body}}""".getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Streaming perceptual VIDEO gate: arriving GVID payloads decode
     * INSIDE their micro-batch ([[graft.ext.Multimodal

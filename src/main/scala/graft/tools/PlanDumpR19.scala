@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, Selection}
+import graft.ext.{Dedup, PartitionedIndex, Selection}
 
 /** Round-19 optimization evidence: formatted explains of the operator
   * plans this round changed, dumped to `<outDir>/<name>_<tag>.txt`.
@@ -85,7 +85,7 @@ object PlanDumpR19 {
         .join(broadcast(touchedIds), Seq("doc_id"))
         .select("pfx"))
     dump("q_stream_band_cdc__locate_scan", "after",
-      Dedup.readAllStringPartitions(s, bdir, "pfx")
+      PartitionedIndex.read(s, bdir, Dedup.BandIndex)
         .select(col("doc_id"), col("pfx"))
         .join(broadcast(touchedIds), Seq("doc_id"))
         .select("pfx"))

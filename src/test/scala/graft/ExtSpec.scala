@@ -1367,14 +1367,20 @@ class ExtSpec extends AnyFunSuite {
     // the hazard is real: inference turns these dirs into INTs
     assert(spark.read.parquet(dir).schema("pfx").dataType ==
       org.apache.spark.sql.types.IntegerType)
-    val all = Dedup.readAllStringPartitions(spark, dir, "pfx")
+    val all = PartitionedIndex.read(spark, dir, Dedup.BandIndex)
     assert(all.schema("pfx").dataType == org.apache.spark.sql.types.StringType)
     assert(all.select("pfx").distinct().collect().map(_.getString(0)).sorted
       .toSeq == Seq("07", "12"))
-    val pruned = Dedup.readPrunedStringPartitions(spark, dir, "pfx",
-      Array("07"))
+    val pruned = PartitionedIndex.read(spark, dir, Dedup.BandIndex,
+      Set("07"))
     assert(pruned.select("pfx").collect().map(_.getString(0)).toSeq ==
       Seq("07", "07"))
+    // a wanted value with no dir on disk: an empty frame, still pinned
+    // (never an inference-typed full-layout read)
+    val absent = PartitionedIndex.read(spark, dir, Dedup.BandIndex,
+      Set("ff"))
+    assert(absent.count() == 0)
+    assert(absent.schema("pfx").dataType == org.apache.spark.sql.types.StringType)
   }
 
   test("updateBandIndex locate scan survives an all-numeric prefix layout") {
@@ -1402,7 +1408,7 @@ class ExtSpec extends AnyFunSuite {
       org.apache.spark.sql.types.IntegerType) // inference really trips here
     val del = Seq((2L, "", 1L, "d")).toDF("doc_id", "text", "seq", "op")
     Dedup.updateBandIndex(dir, del, "text", "doc_id")
-    val after = Dedup.readAllStringPartitions(spark, dir, "pfx")
+    val after = PartitionedIndex.read(spark, dir, Dedup.BandIndex)
     assert(after.where(col("doc_id") === 2L).count() == 0,
       "deleted id survived: the locate scan missed its all-numeric home dir")
     assert(after.where(col("doc_id") === 1L).count() > 0)
@@ -1476,7 +1482,7 @@ class ExtSpec extends AnyFunSuite {
     put(idx, "pfx=9", "keep9")  // untouched: not in the dir list
     put(tmp, "pfx=0", "new0")
     put(tmp, "pfx=2", "new2")   // brand-new prefix, no live dir
-    Dedup.swapPrefixDirs(spark, idx.toString, tmp.toString,
+    PartitionedIndex.swapPrefixDirs(spark, idx.toString, tmp.toString,
       Seq("pfx=0", "pfx=1", "pfx=2"))
     def body(name: String): String = {
       val src = scala.io.Source.fromFile(
@@ -1490,6 +1496,45 @@ class ExtSpec extends AnyFunSuite {
     assert(body("pfx=9") == "keep9")
     assert(!tmp.exists(), "tmp dir must be deleted after a full swap")
     ()
+  }
+
+  test("swapPrefixDirs: a rename that returns false raises and keeps the aside copy") {
+    val root = java.nio.file.Files.createTempDirectory("graft_swapfail")
+    val idx = new java.io.File(root.toFile, "idx")
+    val tmp = new java.io.File(root.toFile, "idx.upd-test")
+    def put(dir: java.io.File, name: String, body: String): Unit = {
+      val d = new java.io.File(dir, name); assert(d.mkdirs())
+      val w = new java.io.FileWriter(new java.io.File(d, "part-0"))
+      try w.write(body) finally w.close()
+    }
+    def body(dir: java.io.File, name: String): String = {
+      val src = scala.io.Source.fromFile(
+        new java.io.File(new java.io.File(dir, name), "part-0"))
+      try src.mkString finally src.close()
+    }
+    put(idx, "pfx=0", "old0")
+    put(idx, "pfx=1", "old1")
+    put(tmp, "pfx=0", "new0")
+    put(tmp, "pfx=1", "new1")
+    // the install-rename of pfx=1 reports failure without throwing,
+    // the way object-store and HDFS clients do
+    spark.sparkContext.hadoopConfiguration.set("fs.renamefail.impl",
+      classOf[RenameFailFileSystem].getName)
+    RenameFailFileSystem.failDest = Some(new java.io.File(idx, "pfx=1").getPath)
+    val ex = try intercept[java.io.IOException] {
+      PartitionedIndex.swapPrefixDirs(spark, s"renamefail://$idx",
+        s"renamefail://$tmp", Seq("pfx=0", "pfx=1"))
+    } finally RenameFailFileSystem.failDest = None
+    assert(ex.getMessage.contains("pfx=1"), ex.getMessage)
+    // tmp survives with the displaced old rows and the uninstalled fresh dir
+    assert(body(tmp, "aside-pfx=1") == "old1")
+    assert(body(tmp, "pfx=1") == "new1")
+    assert(!new java.io.File(idx, "pfx=1").exists())
+    // renaming the aside copy back restores the layout
+    assert(new java.io.File(tmp, "aside-pfx=1")
+      .renameTo(new java.io.File(idx, "pfx=1")))
+    assert(body(idx, "pfx=0") == "new0")
+    assert(body(idx, "pfx=1") == "old1")
   }
 
   test("scratch-dir wipe deletes symlinks without following them") {
@@ -3142,4 +3187,20 @@ class ExtSpec extends AnyFunSuite {
     // v1-era merge consumer reads the v4 merge section unchanged
     assert(Tokenizer.loadMerges(v4path) == preMerges)
   }
+}
+
+/** A local filesystem under the `renamefail://` scheme whose `rename`
+  * returns `false` (without throwing) when its destination is
+  * `failDest` — the silent-failure mode of HDFS and object-store
+  * clients, injected into the crash-safe prefix-dir swap. */
+class RenameFailFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("renamefail:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (RenameFailFileSystem.failDest.contains(dst.toUri.getPath)) false
+    else super.rename(src, dst)
+}
+
+object RenameFailFileSystem {
+  @volatile var failDest: Option[String] = None
 }

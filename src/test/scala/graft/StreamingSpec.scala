@@ -625,6 +625,98 @@ class StreamingSpec extends AnyFunSuite {
       "restarted IVF maintenance diverged from an uninterrupted rebuild")
   }
 
+  test("index build, maintain sink and serve run under a path with a space") {
+    // Every layout, marker, swap and batch-log path resolves its
+    // filesystem through Path, so a dir name `read.parquet` accepts
+    // (here: a space) must work end to end for each family.
+    import spark.implicits._
+    val D = graft.ext.Dedup
+    val M = graft.ext.Multimodal
+    val S = graft.ext.Similarity
+    val base = java.nio.file.Files.createTempDirectory("graft idx space").toString
+    assert(base.contains(" "))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    /** One change batch through `sink`; returns its `_maint` log. */
+    def maintain(family: String, batch: org.apache.spark.sql.DataFrame)(
+        sink: (org.apache.spark.sql.DataFrame, String, String) =>
+          org.apache.spark.sql.streaming.StreamingQuery): String = {
+      val src = s"$base/$family src"
+      batch.coalesce(1).write.mode("overwrite").parquet(src)
+      val q = sink(spark.readStream.schema(batch.schema).parquet(src),
+        s"$base/$family log", s"$base/$family chk")
+      try q.awaitTermination() finally q.stop()
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+        s"$base/$family log/_maint/batch-0.json")), "UTF-8")
+    }
+
+    // band
+    val docs = graft.ops.Tables.documents(spark, sfDir)
+      .select("doc_id", "text").limit(30).localCheckpoint()
+    val bdir = s"$base/band idx"
+    D.writeBandIndex(docs, "text", "doc_id", bdir, prefixChars = 2)
+    val bChanges = docs.where(col("doc_id") < 3)
+      .select(col("doc_id"), concat(col("text"), lit(" spaced update")).as("text"),
+        lit(1L).as("seq"), lit("u").as("op"))
+      .unionByName(docs.where(col("doc_id") === 3L)
+        .select(col("doc_id"), lit("").as("text"), lit(1L).as("seq"), lit("d").as("op")))
+      .localCheckpoint()
+    val bLog = maintain("band", bChanges)(
+      ScoreStream.bandIndexMaintainSink(_, bdir, "text", "doc_id", _, _))
+    assert(bLog.startsWith("""{"batch":0,"touched":"""), bLog)
+    val bArr = bChanges.where(col("op") =!= "d").select("doc_id", "text")
+    val bPost = graft.etl.Merge.applyCdc(docs, bChanges, "doc_id")
+    val bServed = rows(D.minhashMatchesIndexed(bdir, bArr, "doc_id", "text"))
+    assert(bServed.nonEmpty)
+    assert(bServed == rows(D.minhashMatches(bArr, bPost, "doc_id", "text")))
+
+    // hash
+    val media = (0L until 20L).map { id =>
+      (id, M.ImageFixture.png(M.ImageFixture.pixels(id, perturbed = false)))
+    }.toDF("doc_id", "payload").localCheckpoint()
+    val hdir = s"$base/hash idx"
+    D.writeHashIndex(M.imageDHashes(media, "payload").drop("payload"),
+      "doc_id", "dhash", hdir, bands = 4, nPrefix = 16)
+    val hChanges = ((0L until 2L).map { id =>
+      (id, M.ImageFixture.png(M.ImageFixture.pixels(id, perturbed = true)), 1L, "u")
+    } :+ ((2L, null.asInstanceOf[Array[Byte]], 1L, "d")))
+      .toDF("doc_id", "payload", "seq", "op").localCheckpoint()
+    val hLog = maintain("hash", hChanges)(
+      ScoreStream.hashIndexMaintainSink(_, hdir, "doc_id", "payload", _, _))
+    assert(hLog.startsWith("""{"batch":0,"touched":"""), hLog)
+    val hArr = M.imageDHashes(hChanges.where(col("op") =!= "d"), "payload")
+      .select("doc_id", "dhash")
+    val hPost = M.imageDHashes(
+      graft.etl.Merge.applyCdc(media, hChanges, "doc_id"), "payload")
+      .select("doc_id", "dhash")
+    val hServed = rows(D.hashMatchesIndexed(hdir, hArr, "doc_id", "dhash"))
+    assert(hServed.nonEmpty)
+    assert(hServed == rows(D.hashMatches(hArr, hPost, "doc_id", "dhash")))
+
+    // ivf
+    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding").limit(200).localCheckpoint()
+    val cents = S.kmeansCentroids(e, "vec_id", "embedding", 8, iters = 1)
+    val idir = s"$base/ivf idx"
+    S.writeIvfIndex(e, "vec_id", "embedding", cents, idir)
+    val iChanges = e.where(col("vec_id") < 3)
+      .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
+        lit(1L).as("seq"), lit("u").as("op"))
+      .unionByName(e.where(col("vec_id") === 3L)
+        .select(col("vec_id"), col("embedding"), lit(1L).as("seq"), lit("d").as("op")))
+      .localCheckpoint()
+    val iLog = maintain("ivf", iChanges)(
+      ScoreStream.ivfIndexMaintainSink(_, idir, "vec_id", "embedding", _, _))
+    assert(iLog.startsWith("""{"batch":0,"touched":"""), iLog)
+    val iArr = iChanges.where(col("op") =!= "d").select("vec_id", "embedding")
+    val iPost = graft.etl.Merge.applyCdc(e, iChanges, "vec_id")
+    val iServed = rows(S.ivfPartitionedTopK(idir, iArr, "vec_id", "embedding",
+      5, S.ivfIndexCentroids(idir, spark), 2))
+    assert(iServed.nonEmpty)
+    assert(iServed == rows(S.ivfTopKWith(iArr, iPost, "vec_id", "embedding",
+      5, cents, 2)))
+  }
+
   test("transformWithState accumulates running totals across micro-batches") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
