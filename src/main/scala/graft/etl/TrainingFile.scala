@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Single-flat-file training-set writer
   * (`utils/fasttext_utils.py:9-64`): DataFrame → one text file, one
@@ -13,8 +13,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * is only ever applied AFTER stratified downsampling (the reference
   * does the same: sample → coalesce) — the funneled data is the
   * bounded training sample, not the raw table. Part-file discovery and
-  * the stable-name copy use the Hadoop FileSystem API in place of
-  * `dbutils.fs` (`utils/fasttext_utils.py:18-21,41,63`).
+  * the stable-name rename use the Hadoop FileSystem of the output path
+  * in place of `dbutils.fs` (`utils/fasttext_utils.py:18-21,41,63`).
   */
 class TrainingFile(
     val dataframeLocation: String,
@@ -24,22 +24,24 @@ class TrainingFile(
 
   private def data: DataFrame = spark.read.parquet(dataframeLocation)
 
-  private def fs: FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
-  /** Write `df[fasttextColumn]` as a single text file at a stable path. */
+  /** Write `df[fasttextColumn]` as a single text file at a stable path:
+    * the one part file is renamed into place (replacing an existing
+    * file) and its temp dir deleted. */
   private def writeSingle(df: DataFrame, resultPath: String): String = {
     val uniqueName = java.util.UUID.randomUUID().toString.replace("-", "")
-    val tmpDir = s"$outputLocation/$uniqueName"
-    df.select(fasttextColumn).coalesce(1).write.mode("overwrite").text(tmpDir)
-    val part = fs.listStatus(new Path(tmpDir))
+    val tmpDir = new Path(s"$outputLocation/$uniqueName")
+    df.select(fasttextColumn).coalesce(1).write.mode("overwrite").text(tmpDir.toString)
+    val fs = tmpDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(tmpDir)
       .map(_.getPath)
       .find(_.getName.startsWith("part"))
       .getOrElse(sys.error(s"no part file under $tmpDir"))
     val dest = new Path(resultPath)
     fs.mkdirs(dest.getParent)
-    org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, dest, false, true,
-      spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dest)) fs.delete(dest, false)
+    if (!fs.rename(part, dest))
+      throw new java.io.IOException(s"rename $part -> $dest returned false")
+    fs.delete(tmpDir, true)
     resultPath
   }
 
@@ -79,8 +81,8 @@ object TrainingFile {
   /** List training files under `dir/final`, newest first — replaces the
     * `dbutils.fs.ls` resolution (`02_merchcat_ml.py:17,24-25`). */
   def listTrainingFiles(dir: String)(implicit spark: SparkSession): Seq[String] = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val p = new Path(s"$dir/final")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).sortBy(-_.getModificationTime).map(_.getPath.toString).toSeq
   }

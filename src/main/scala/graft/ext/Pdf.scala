@@ -1235,10 +1235,10 @@ object Pdf {
       * while the spread's exchange plus the 32-partition frame it
       * leaves behind cost more — q_doc_pipeline reads the attached
       * frame's descendant checkpoint in five downstream passes and
-      * regressed 1.28→2.05 s with the spread; the interleaved A/B
-      * (tools/ProfileDocAB) measured warm full-pipeline 1.1 s
-      * without the spread vs 1.8-2.0 s with it, and the PDF door
-      * itself identical (±0.05 s) either way. The CID/xref builders
+      * regressed 1.28→2.05 s with the spread; an interleaved A/B
+      * measured warm full-pipeline 1.1 s without the spread vs
+      * 1.8-2.0 s with it, and the PDF door itself identical (±0.05 s)
+      * either way (recorded in plans/r19/README.md). The CID/xref builders
       * below keep their spread: their per-row work is an order of
       * magnitude heavier and measured 3-4× faster spread wide. */
     def withPayloads(df: DataFrame, idCol: String,

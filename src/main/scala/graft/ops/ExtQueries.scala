@@ -835,6 +835,21 @@ object ExtQueries {
     served.orderBy("query_id", "rank")
   }
 
+  /** Waits for every future, then rethrows the first failure (in `fs`
+    * order) with the other failures added as suppressed: when one
+    * concurrent build fails, the others are not left writing detached
+    * behind the error. */
+  private[graft] def awaitAll(fs: Seq[scala.concurrent.Future[Any]]): Unit = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    val failures = fs.flatMap(f =>
+      scala.util.Try(Await.result(f, Duration.Inf)).failed.toOption)
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
   /** ONE mixed-modality arrival stream served against ALL THREE
     * stored index families in a single sink
     * ([[graft.streaming.ScoreStream.indexedAllGateSink]]): text
@@ -874,8 +889,7 @@ object ExtQueries {
     // ingest artifact (sign-once / decode-once / centroids), so the
     // three ingest passes overlap too.
     locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
+      import scala.concurrent.Future
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val builds = Seq(
@@ -894,7 +908,7 @@ object ExtQueries {
             emb.select(col("vec_id").as("doc_id"), col("embedding")),
             "doc_id", "embedding", ivfCents(s, dir), vdir)
         }(ec))
-      try builds.foreach(Await.result(_, Duration.Inf))
+      try awaitAll(builds)
       finally { pool.shutdown(); () }
     }
     val refHashes = baseImageHashes(s, dir)

@@ -881,7 +881,7 @@ object Queries {
 
   /** S3+S4+S5 driver-grounded: fastText-format lines → the
     * single-flat-file TrainingFile sink (coalesce funnel + part-file
-    * copy) → file listing → read back with spark.read.text → per-label
+    * rename) → file listing → read back with spark.read.text → per-label
     * line count and an order-independent content checksum. The oracle
     * derives the same aggregate straight from the parquet table, so any
     * loss in the write→list→read round trip shows up as a mismatch. */

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Memory-pressure sidecar: the heaviest shuffle shapes run at the
   * 10× replica with execution memory deliberately CONSTRICTED, so the
@@ -59,15 +58,8 @@ object BenchPressure {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_scale10")
     val heap = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.memory.fraction", "0.2")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cores = 8, conf = Map(
+      "spark.sql.shuffle.partitions" -> "16", "spark.memory.fraction" -> "0.2"))
     val listener = new SpillListener
     spark.sparkContext.addSparkListener(listener)
     val queries = Seq("q_dedup_apply", "q_curation_pipeline",

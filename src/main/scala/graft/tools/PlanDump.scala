@@ -1,21 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the raw material for PLANS.md: formatted explains of
   * the flagship operators, AQE off, written to /tmp/plans_raw.txt. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(cores = 4,
+      conf = Map("spark.sql.adaptive.enabled" -> "false"))
     val targets: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
       "q_scan_project" -> graft.ops.Queries.scanProject(spark, dir),
       "exactDedup (no orderBy)" -> graft.ext.Dedup.exactDedup(

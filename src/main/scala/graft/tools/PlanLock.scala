@@ -101,13 +101,7 @@ object PlanLock {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(cores = 4)
     val lines = compute(spark, dir).map { case (n, fp) => s"$n\t${fp.tsv}" }
     val header = "# query\texchanges\tbroadcasts\tbhj\tsmj\tbnlj\twscg\tpython\trddscan" +
       "\n# recorded by: sbt \"runMain graft.tools.PlanLock\" (AQE off, cold memos, sf0.001)"

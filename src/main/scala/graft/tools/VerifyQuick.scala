@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Sub-minute smoke of the correctness contract: the fixture-drift
   * canary (hard fail, unlike Verify's warn-and-continue — a drifted
@@ -24,14 +24,7 @@ object VerifyQuick {
     // extra args override the smoke list — a targeted dev-loop smoke
     // of specific queries: runMain graft.tools.VerifyQuick <dir> q_a q_b
     val names = if (args.length > 1) args.drop(1).toSeq else smokeQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val t0 = System.nanoTime()
     val drift = graft.ops.FixtureCheck.problems(spark, sfDir)
     require(drift.isEmpty,

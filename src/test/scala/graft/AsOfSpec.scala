@@ -1,20 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.ops.AsOf
 
 /** As-of join semantics on planted rows: inclusive match at equal ts,
   * latest-prior otherwise, null when no prior right row, tie-break by
   * the designated column. */
-class AsOfSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AsOfSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-design evidence: bucketed tables co-locate a join — the plan
@@ -9,14 +8,7 @@ import org.apache.spark.sql.functions._
   * exchange, while the unbucketed equivalent must contain one. This is
   * the storage-level strategy for repeated large-table joins at 100 TB
   * (bucket once, join shuffle-free forever). */
-class BucketingSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketingSpec extends AnyFunSuite with SparkTestSession {
 
   test("bucketed join plans without a shuffle; unbucketed shuffles") {
     // suites share one JVM session (getOrCreate) — builder configs are

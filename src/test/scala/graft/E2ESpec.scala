@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, TextStats}
 
@@ -11,14 +10,7 @@ import graft.ext.{Dedup, TextStats}
   * temperature sample → split → train → evaluate → export, using only
   * the library's public operators — the composition a reference user
   * switching to this engine would actually run. */
-class E2ESpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class E2ESpec extends AnyFunSuite with SparkTestSession {
 
   test("LLM corpus pipeline: normalize → dedup → filter → sample → train → export") {
     import spark.implicits._

@@ -1,20 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.etl._
 
 /** Entry-point-A pipeline properties over the documents fixture:
   * split disjoint/complete, sample-size bounds, training-file format. */
-class EtlSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EtlSpec extends AnyFunSuite with SparkTestSession {
 
   lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
@@ -430,7 +422,6 @@ class EtlSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("tf").toString
     val labeled = Etl.cleanAndLabel(docs, cfg)
     labeled.write.mode("overwrite").parquet(s"$tmp/labeled")
-    implicit val s: SparkSession = spark
     val tf = new TrainingFile(s"$tmp/labeled", s"$tmp/out", "lang", "fasttext")
     val path = tf.generateTrainingFile(sampleRate = 0.5, minCount = 10)
     val lines = spark.read.text(path)
@@ -440,6 +431,15 @@ class EtlSpec extends AnyFunSuite {
     val fixedLines = spark.read.text(fixed).count()
     assert(fixedLines == 5L * 5) // 5 langs × 5 rows
     assert(TrainingFile.listTrainingFiles(s"$tmp/out").size == 2)
+    // each write renames its part file into final/ and removes its temp dir
+    assert(new java.io.File(s"$tmp/out").list().toSeq == Seq("final"))
+    // a repeated write to the same name replaces the file in place
+    val rows = spark.read.parquet(s"$tmp/labeled").count()
+    val all = tf.writeAllTo("all.txt")
+    assert(tf.writeAllTo("all.txt") == all)
+    assert(spark.read.text(all).count() == rows)
+    assert(TrainingFile.listTrainingFiles(s"$tmp/out").size == 3)
+    assert(new java.io.File(s"$tmp/out").list().toSeq == Seq("final"))
   }
 
   test("expectations: split routes exactly, nulls violate, enforce honors tolerance") {

@@ -1,20 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext._
 
 /** LLM-pipeline extension operators: dedup finds planted duplicates,
   * IVF recall vs brute-force truth, multimodal batch decode. */
-class ExtSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._
 
@@ -1535,6 +1527,26 @@ class ExtSpec extends AnyFunSuite {
       .renameTo(new java.io.File(idx, "pfx=1")))
     assert(body(idx, "pfx=0") == "new0")
     assert(body(idx, "pfx=1") == "old1")
+  }
+
+  test("concurrent index builds: a failure surfaces only after every build has finished") {
+    import scala.concurrent.{ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val first = new IllegalStateException("build 0 failed")
+    val later = new IllegalStateException("build 1 failed")
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    try {
+      val builds = Seq(
+        Future { throw first },
+        Future { Thread.sleep(500); slowDone.set(true); throw later },
+        Future { 42 })
+      val ex = intercept[IllegalStateException](
+        graft.ops.ExtQueries.awaitAll(builds))
+      assert(slowDone.get(), "error surfaced while a build was still running")
+      assert(ex eq first)
+      assert(ex.getSuppressed.toSeq == Seq(later))
+    } finally pool.shutdown()
   }
 
   test("scratch-dir wipe deletes symlinks without following them") {

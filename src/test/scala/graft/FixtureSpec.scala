@@ -1,21 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Fixture-drift gate: `sbt test` goes red the session a regenerated
   * fixture changes shape (round 8's TIMESTAMP_NTZ surprise, made
   * permanent). The canary itself tolerates the timestamp variants
   * [[graft.ops.Tables.normalizeTs]] handles; anything else throws with
   * the table/column named. */
-class FixtureSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FixtureSpec extends AnyFunSuite with SparkTestSession {
 
   test("all fixture tables match the pinned physical schemas") {
     for (sf <- Seq("sf0.001", "sf0.01"))

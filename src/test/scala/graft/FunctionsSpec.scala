@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 
@@ -9,14 +9,7 @@ import graft.ext.Similarity
   * bit-identical values to the interpreted HOF fold, and codegen'd
   * execution (the expression must live inside a WholeStageCodegen
   * stage, not force a fallback). */
-class FunctionsSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FunctionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("dot_product resolves in SQL after registration") {
     GraftFunctions.register(spark)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ml.{Featurize, LangId, Trainer}
 import graft.ext.{LangFixture, UnicodeFixture}
@@ -10,14 +9,7 @@ import graft.ext.{LangFixture, UnicodeFixture}
   * contract, held-out generalization across en/fr/de/es/pt, routed
   * scoring (non-Latin scripts never reach the Latin model), artifact
   * round trip with char params, and the pure-transform plan shape. */
-class LangIdSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LangIdSpec extends AnyFunSuite with SparkTestSession {
 
   lazy val model: LangId.LangIdModel = LangId.train(
     LangFixture.df(spark).where(col("split") === "train"), "text", "lang")

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.StringIndexer
@@ -10,14 +10,7 @@ import graft.ml._
 /** ML sanity (SURVEY §5.5): the classifier must actually learn a
   * separable task; evaluator contract; save/load/registry round trip;
   * parallel tuning selects a best run. */
-class MlSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MlSpec extends AnyFunSuite with SparkTestSession {
 
   /** Separable synthetic set: each class has a distinctive vocabulary
     * (stand-in for merchant narratives: brand tokens + shared noise). */

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.tools.PlanLock
 
 /** Plan-shape regression lock (see [[graft.tools.PlanLock]]): every
@@ -14,14 +13,7 @@ import graft.tools.PlanLock
   * improvement can also be a semantics change. The timing bench can't
   * catch either: at sf0.1 an extra shuffle is noise, at 100 TB it is
   * the bottleneck. */
-class PlanLockSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanLockSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 

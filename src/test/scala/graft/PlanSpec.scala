@@ -9,14 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * two-phase aggregation, window group-limit for top-k, and zero
   * Python/interpreted-UDF nodes anywhere in the driver surface. AQE is
   * disabled inside the audit so final plans are visible directly. */
-class PlanSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 

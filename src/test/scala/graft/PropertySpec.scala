@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -10,14 +9,7 @@ import graft.ext.{Dedup, Multimodal, TextStats}
 /** Algebraic invariants over generated inputs — each property runs as
   * ONE Spark job over a generated batch (never a job per sample), with
   * fixed scalacheck seeds so failures reproduce. */
-class PropertySpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PropertySpec extends AnyFunSuite with SparkTestSession {
 
   private def sample[A](g: Gen[A], seed: Long): A =
     g.pureApply(Gen.Parameters.default, Seed(seed))

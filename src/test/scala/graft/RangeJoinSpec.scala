@@ -1,21 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.RangeJoin
 
 /** Point-in-interval bucketized range join: brute-force equivalence
   * (closed bounds, multi-bucket intervals, negative domain), no
   * duplicate pairs, and the loud over-span guard. */
-class RangeJoinSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RangeJoinSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._
 

@@ -1,19 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sketch aggregates: estimates must land within their advertised
   * tolerance of the exact answers. */
-class SketchSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SketchSpec extends AnyFunSuite with SparkTestSession {
 
   lazy val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
 

@@ -1,19 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Source/sink surface: parquet (primary), csv, json, text round trips
   * with explicit schemas; registered-UDF scoring (U2). */
-class SourcesSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SourcesSpec extends AnyFunSuite with SparkTestSession {
 
   lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

@@ -1,21 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.ScoreStream
 
 /** Structured-Streaming execution of the windowed scoring aggregate:
   * the stream over the events fixture must produce exactly the batch
   * result; stateful sessionization emits plausible sessions. */
-class StreamingSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   lazy val sfDir = "/root/testdata/sf0.001"
 

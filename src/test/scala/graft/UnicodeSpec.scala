@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, TextStats, UnicodeFixture}
 
@@ -10,14 +9,7 @@ import graft.ext.{Dedup, TextStats, UnicodeFixture}
   * contracts — codepoint (not UTF-16-unit) counting, script ID,
   * case-mapping behavior the oracles deliberately avoid, NFC/NFD
   * byte distinction, and byte-exact parquet/JSON round trips. */
-class UnicodeSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UnicodeSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._
 
