@@ -2,11 +2,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 object Bench {
-  /** `s` as a JSON string literal. */
+  /** `s` as an ASCII-only JSON string literal: control and non-ASCII
+    * chars are written as JSON unicode escapes, one per UTF-16 unit (a
+    * surrogate pair is two), so the line survives a stdout whose
+    * encoding cannot print them. */
   def jsonString(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c if c < ' ' || c >= '\u007f' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }.mkString("\"", "", "\"")
 
@@ -35,14 +38,13 @@ object Bench {
 
   /** `n` timed passes over `queries`: each query is timed from its call
     * until its `count()` returns, and a query that throws is recorded as
-    * failed, never as a timing. The memoized cross-query intermediates
-    * are dropped between passes so every pass re-pays the real pipeline
-    * cost. */
+    * failed, never as a timing. The shared artifacts are dropped
+    * between passes so every pass re-pays the real pipeline cost. */
   def passes(spark: SparkSession, sfDir: String,
              queries: Seq[(String, (SparkSession, String) => DataFrame)],
              n: Int): Seq[Seq[(String, Result)]] =
     (0 until n).map { i =>
-      if (i > 0) { ops.Queries.clearMemo(); ops.ExtQueries.clearMemo() }
+      if (i > 0) ops.Artifacts.clear()
       queries.map { case (name, fn) =>
         val t0 = System.nanoTime()
         name -> (try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
@@ -67,7 +69,7 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Two full passes, per-query MINIMUM: a one-off contention spike
     // (CI neighbors, page-cache misses) inflates one pass, not both.
-    // Memos are dropped between the passes, so min-of-2 removes noise
+    // Artifacts are dropped between the passes, so min-of-2 removes noise
     // without hiding work behind a cache.
     val results = minOf(passes(spark, sfDir, ordered, 2))
     val qs = results.map {

@@ -23,12 +23,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * substring dedup, brute ANN, text stats, mixture budgeting.
   *
   * Heavy set: the COST-HEAD queries whose construction runs jobs or
-  * reads memoized intermediates (PageRank builds, k-means centroid
+  * reads shared artifacts (PageRank builds, k-means centroid
   * fits, index writes, model training). Their final plans are still
-  * deterministic given a cold memo — `compute` clears the cross-query
-  * memos first — and they are exactly the plans worth locking hardest:
-  * an extra exchange in q_curation_pipeline costs more at 100 TB than
-  * in every cheap query combined. Their fingerprints carry the
+  * deterministic from a cold registry — `compute` clears
+  * [[graft.ops.Artifacts]] first — and they are exactly the plans
+  * worth locking hardest: an extra exchange in q_curation_pipeline
+  * costs more at 100 TB than in every cheap query combined. Their fingerprints carry the
   * `rddscan` count (localCheckpoint/persisted-intermediate scans are
   * BY DESIGN here — a checkpoint silently disappearing, which would
   * re-derive the whole construction per consumer, drifts the count
@@ -84,12 +84,11 @@ object PlanLock {
 
   /** Fingerprints of every locked query, AQE off (runtime re-plans
     * would make node counts depend on data volume, not source). The
-    * cross-query memos are cleared first so the heavy constructions
+    * shared artifacts are cleared first so the heavy constructions
     * fingerprint from a COLD state — session history (which suite or
-    * bench warmed a memo) must never change a recorded shape. */
+    * bench warmed an artifact) must never change a recorded shape. */
   def compute(spark: SparkSession, dir: String): Seq[(String, Fingerprint)] = {
-    graft.ops.Queries.clearMemo()
-    graft.ops.ExtQueries.clearMemo()
+    graft.ops.Artifacts.clear()
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try all.map { name =>

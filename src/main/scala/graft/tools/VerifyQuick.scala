@@ -36,7 +36,7 @@ object VerifyQuick {
       require(n > 0, s"$name returned 0 rows")
       println(f"[verifyQuick] $name%-18s rows=$n%-7d ${(System.nanoTime() - t) / 1e9}%5.2f s")
     }
-    println(f"[verifyQuick] OK — ${names.size} queries green in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    println(f"[verifyQuick] OK - ${names.size} queries green in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     spark.stop()
   }
 }

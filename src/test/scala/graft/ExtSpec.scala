@@ -1549,6 +1549,28 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     } finally pool.shutdown()
   }
 
+  test("memoized signatures and image hashes equal their fresh recomputation") {
+    import org.apache.spark.sql.DataFrame
+    val dir = "/root/testdata/sf0.001"
+    graft.ops.Artifacts.clear()
+    graft.SparkEntry.queries("q_stream_all_indexed")(spark, dir).count()
+    def sameMultiset(a: DataFrame, b: DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val documents = spark.read.parquet(s"$dir/documents.parquet")
+    val sigs = graft.ops.Artifacts.only[DataFrame]("doc_signatures")
+    assert(sigs.isDefined)
+    assert(sameMultiset(sigs.get, Dedup.minhashSignatures(
+      documents.select("doc_id", "text"), "text", "doc_id", 4)))
+    val hashes = graft.ops.Artifacts.only[DataFrame]("base_image_hashes")
+    assert(hashes.isDefined)
+    assert(sameMultiset(hashes.get, Multimodal.imageDHashes(
+      Multimodal.ImageFixture.withPayloads(
+        documents.select(col("doc_id"),
+          col("doc_id").as("__seed"), lit(false).as("__pert")),
+        "__seed", "__pert").select("doc_id", "payload"), "payload")
+      .select("doc_id", "dhash")))
+  }
+
   test("scratch-dir wipe deletes symlinks without following them") {
     val fixture = java.nio.file.Files.createTempDirectory("graft_fix")
     val precious = fixture.resolve("part-0000.parquet")
