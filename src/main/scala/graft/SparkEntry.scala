@@ -16,10 +16,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Queries.mlEvalSummary(spark, "/root/testdata/sf0.001")
 
+  /** Every query, declared once: its name, its body and its static
+    * DuckDB oracle, if it has one. */
+  def registry: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =
+    ops.Queries.registry ++ ops.ExtQueries.registry
+
   /** One entry per implemented operator from SURVEY.md §2 plus the
     * LLM-pipeline extension surface. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Queries.all ++ ops.ExtQueries.all
+    registry.map { case (name, q, _) => name -> q }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
@@ -27,5 +32,6 @@ object SparkEntry {
     * data-derived literals and appear once their query has run in this
     * process (Verify runs every query before dumping this map). */
   def oracleSql: Map[String, String] =
-    ops.Queries.oracles ++ ops.ExtQueries.oracles ++ ops.ExtQueries.dynamicOracles
+    registry.collect { case (name, _, Some(sql)) => name -> sql }.toMap ++
+      ops.ExtQueries.dynamicOracles
 }

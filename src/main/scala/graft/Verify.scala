@@ -2,7 +2,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB compare, and failures.json
+  * (`{query: message}`, `{}` when every query ran). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -24,22 +25,28 @@ object Verify {
         ps.foreach(p => System.err.println(s"[verify] DRIFT: $p"))
         System.err.println("[verify] ===============================")
     }
-    SparkEntry.queries
+    val failures = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
       }
     }
     // every control char escaped (Bench.jsonString): a tab or CR in
     // builder-authored SQL would otherwise make the driver's json.load
     // fail and silently zero the round's correctness
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def jsonObject(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${Bench.jsonString(k)}: ${Bench.jsonString(v)}" }
+        .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObject(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"),
+      jsonObject(failures.toSeq.sorted))
     spark.stop()
   }
 }

@@ -227,8 +227,8 @@ object ExtQueries {
     * 1024-dir hash layout, 5.7 s → 1.2 s on the 256-dir band layout
     * at sf0.1); on a real index the gate reads each side once from
     * cold storage instead of twice. */
-  private def requireSameRows(a: DataFrame, b: DataFrame,
-                              msg: => String): Unit = {
+  private[graft] def requireSameRows(a: DataFrame, b: DataFrame,
+                                     msg: => String): Unit = {
     val names = a.columns.toIndexedSeq
     val diff = a.withColumn("__w", lit(1L))
       .unionByName(b.select(names.map(col): _*).withColumn("__w", lit(-1L)))
@@ -236,6 +236,69 @@ object ExtQueries {
       .where(col("__d") =!= 0L)
     graft.ext.JobLabel(a.sparkSession, "gate: one-pass multiset diff") {
       require(diff.isEmpty, msg)
+    }
+  }
+
+  /** Per-batch narrowing gate over an indexed sink's batch log
+    * ([[graft.streaming.ScoreStream.readBatchLogs]] of `kind` under
+    * `dir`): raise unless at least two `batches` ran and every family
+    * record of every batch reached only a slice of its layout.
+    * `limits(family)` is the layout's dir count and the most dirs one
+    * batch may reach ([[strictSubsetOf]], [[quarterOf]]);
+    * `describe(family, count, total)` words the failure. Returns the
+    * families the log holds. */
+  private[graft] def requireNarrowed(s: SparkSession, dir: String,
+                                     kind: String, batches: String,
+                                     limits: String => (Long, Long))(
+      describe: (String, Long, Long) => String): Set[String] = {
+    val logs = graft.streaming.ScoreStream.readBatchLogs(s, dir, kind)
+    require(logs.length >= 2, s"expected >= 2 $batches, saw ${logs.length}")
+    for (log <- logs; (fam, (count, total)) <- log.families) {
+      val (n, most) = limits(fam)
+      require(total == n && count > 0 && count <= most,
+        s"batch ${log.batch} ${describe(fam, count, total)}")
+    }
+    logs.flatMap(_.families.keys).toSet
+  }
+
+  /** [[requireNarrowed]] limits: a proper subset of `n` dirs. */
+  private[graft] def strictSubsetOf(n: Long): (Long, Long) = (n, n - 1)
+
+  /** [[requireNarrowed]] limits: at most a quarter of `n` dirs. */
+  private[graft] def quarterOf(n: Long): (Long, Long) = (n, n / 4)
+
+  /** Byte-identity gate for in-place index maintenance: md5 every file
+    * under each `<partCol>=` dir of `indexDir`, run `update` (it
+    * returns the partition values it rewrote), then raise unless it
+    * touched some dirs but not all — a gate over no untouched dir
+    * proves nothing — and every dir it did not touch holds the same
+    * files with the same bytes after as before. `gate` and
+    * `noun`/`nouns` word the failures. */
+  private[graft] def requireUntouchedDirsSame(indexDir: String,
+                                              partCol: String, gate: String,
+                                              noun: String, nouns: String)(
+      update: => Seq[Any]): Unit = {
+    def checksums(): Map[String, Map[String, String]] =
+      new java.io.File(indexDir).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith(s"$partCol="))
+        .map { d =>
+          val files = d.listFiles().filter(_.isFile).map { f =>
+            val digest = java.security.MessageDigest.getInstance("MD5")
+              .digest(java.nio.file.Files.readAllBytes(f.toPath))
+            f.getName -> digest.map("%02x".format(_)).mkString
+          }.toMap
+          d.getName.stripPrefix(s"$partCol=") -> files
+        }.toMap
+    val before = checksums()
+    val touched = update
+    val after = checksums()
+    val untouched = before.keySet -- touched.map(_.toString)
+    require(touched.nonEmpty && untouched.nonEmpty,
+      s"$gate gate is vacuous: touched=${touched.length} " +
+        s"of ${before.size} $nouns")
+    untouched.foreach { k =>
+      require(before(k) == after.getOrElse(k, Map.empty),
+        s"untouched $noun $k was rewritten: ${before(k)} -> ${after.get(k)}")
     }
   }
 
@@ -635,22 +698,6 @@ object ExtQueries {
     del.unionByName(upd).unionByName(ins)
   }
 
-  /** md5 of every file under each cell dir of an IVF layout, keyed by
-    * cell — the byte-identity evidence the update gate compares. */
-  private def cellChecksums(indexDir: String): Map[Int, Map[String, String]] = {
-    val root = new java.io.File(indexDir)
-    root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      .map { d =>
-        val cell = d.getName.stripPrefix("cell=").toInt
-        val files = d.listFiles().filter(_.isFile).map { f =>
-          val digest = java.security.MessageDigest.getInstance("MD5")
-            .digest(java.nio.file.Files.readAllBytes(f.toPath))
-          f.getName -> digest.map("%02x".format(_)).mkString
-        }.toMap
-        cell -> files
-      }.toMap
-  }
-
   /** Incremental IVF maintenance under CDC
     * ([[Similarity.updateIvfIndex]]): build the partitioned index,
     * apply the deterministic change set, then THROW unless (a) some
@@ -665,17 +712,9 @@ object ExtQueries {
     val cents = ivfCents(s, dir)
     val idir = scratchDir("ivfupd", dir)
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, idir)
-    val before = cellChecksums(idir)
-    val touched = Similarity.updateIvfIndex(
-      idir, ivfUpdateChanges(emb), "vec_id", "embedding", cents)
-    val after = cellChecksums(idir)
-    val untouched = before.keySet.filterNot(touched.contains)
-    require(touched.nonEmpty && untouched.nonEmpty,
-      s"IVF update gate is vacuous: touched=${touched.length} " +
-        s"of ${before.size} cells")
-    untouched.foreach { k =>
-      require(before(k) == after.getOrElse(k, Map.empty),
-        s"untouched cell $k was rewritten: ${before(k)} -> ${after.get(k)}")
+    requireUntouchedDirsSame(idir, "cell", "IVF update", "cell", "cells") {
+      Similarity.updateIvfIndex(
+        idir, ivfUpdateChanges(emb), "vec_id", "embedding", cents).toSeq
     }
     val updated = graft.etl.Merge.applyCdc(emb, ivfUpdateChanges(emb), "vec_id")
     Similarity.ivfPartitionedTopK(idir,
@@ -715,17 +754,9 @@ object ExtQueries {
       stream, idir, "vec_id", "embedding", s"$base/out", s"$base/chk")
     q.awaitTermination()
     // gates (a)+(b): multiple triggers, each rewriting a strict slice
-    val logs = new java.io.File(s"$base/out/_maint").listFiles()
-      .filter(_.getName.endsWith(".json")).toSeq
-    require(logs.length >= 2,
-      s"expected >= 2 maintenance micro-batches, saw ${logs.length}")
-    logs.foreach { f =>
-      val src = scala.io.Source.fromFile(f)
-      val j = try src.mkString finally src.close()
-      val touched = "\"touched\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      val np = "\"n_prefix\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      require(np == 16 && touched > 0 && touched < np,
-        s"batch ${f.getName} rewrote $touched of $np cells — no narrowing")
+    requireNarrowed(s, s"$base/out", "_maint", "maintenance micro-batches",
+        _ => strictSubsetOf(16)) { (_, touched, np) =>
+      s"rewrote $touched of $np cells — no narrowing"
     }
     // gate (c): maintained layout == from-scratch rebuild of the
     // CDC-applied corpus, row for row (distributed one-pass multiset
@@ -778,27 +809,16 @@ object ExtQueries {
       nprobe = 2)
     q.awaitTermination()
     // gates (a)+(b): multiple triggers, each opening a strict subset
-    val logs = new java.io.File(s"$base/out/_probe").listFiles()
-      .filter(_.getName.endsWith(".json")).toSeq
-    require(logs.length >= 2,
-      s"expected >= 2 serving micro-batches, saw ${logs.length}")
-    logs.foreach { f =>
-      val src = scala.io.Source.fromFile(f)
-      val j = try src.mkString finally src.close()
-      val probed = "\"probed\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      val np = "\"n_prefix\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      require(np == 16 && probed > 0 && probed < np,
-        s"batch ${f.getName} probed $probed of $np cells — no narrowing")
+    requireNarrowed(s, s"$base/out", "_probe", "serving micro-batches",
+        _ => strictSubsetOf(16)) { (_, probed, np) =>
+      s"probed $probed of $np cells — no narrowing"
     }
     val served = s.read.parquet(s"$base/out")
       .select("query_id", "neighbor_id", "cosine", "rank")
     // gate (c): stream == one-shot batch serve, pinned in-query
     val fresh = Similarity.ivfPartitionedTopK(idir, queries,
       "vec_id", "embedding", 5, cents, nprobe = 2)
-    val key = (df: DataFrame) => df.orderBy("query_id", "rank")
-      .collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "streaming indexed IVF serving diverged from the batch serve")
     served.orderBy("query_id", "rank")
   }
@@ -922,27 +942,10 @@ object ExtQueries {
     q.awaitTermination()
     // gates (a)+(b)+(c): multiple triggers; every family narrowed in
     // every batch it appeared in; all three families were served
-    val logs = new java.io.File(s"$base/out/_probe").listFiles()
-      .filter(_.getName.endsWith(".json")).toSeq
-    require(logs.length >= 2,
-      s"expected >= 2 serving micro-batches, saw ${logs.length}")
-    val famRe =
-      "\"(band|hash|ivf)\":\\{\"probed\":(\\d+),\"n_prefix\":(\\d+)\\}".r
-    var seen = Set.empty[String]
-    logs.foreach { f =>
-      val src = scala.io.Source.fromFile(f)
-      val j = try src.mkString finally src.close()
-      famRe.findAllMatchIn(j).foreach { m =>
-        val (fam, probed, np) =
-          (m.group(1), m.group(2).toInt, m.group(3).toLong)
-        seen += fam
-        fam match {
-          case "ivf" => require(np == 16 && probed > 0 && probed < np,
-            s"batch ${f.getName} $fam probed $probed of $np — no narrowing")
-          case _ => require(np == 256 && probed > 0 && probed <= np / 4,
-            s"batch ${f.getName} $fam probed $probed of $np — no narrowing")
-        }
-      }
+    val seen = requireNarrowed(s, s"$base/out", "_probe",
+        "serving micro-batches", Map("band" -> quarterOf(256),
+          "hash" -> quarterOf(256), "ivf" -> strictSubsetOf(16))) {
+      (fam, probed, np) => s"$fam probed $probed of $np — no narrowing"
     }
     require(seen == Set("band", "hash", "ivf"),
       s"families served across batches: $seen — expected all three")
@@ -963,12 +966,7 @@ object ExtQueries {
       .select(lit("ivf").as("family"), col("query_id").as("doc_id"),
         col("neighbor_id"), col("cosine").as("metric"))
     val fresh = freshBand.unionByName(freshHash).unionByName(freshIvf)
-    val key = (df: DataFrame) =>
-      df.orderBy("family", "doc_id", "neighbor_id", "metric")
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "all-indexed streaming serve diverged from the one-shot serves")
     served.orderBy("family", "doc_id", "neighbor_id", "metric")
   }
@@ -5725,29 +5723,24 @@ object ExtQueries {
       |SELECT domain, doc_id, quota_rank FROM r WHERE quota_rank <= 15
       |ORDER BY domain, doc_id""".stripMargin
 
-  /** [[streamNeardupQ]]'s oracle: the same 4-lane MinHash on both
+  /** The two-sided MinHash oracle body: `head` is a `WITH` clause
+    * ending in the arrival CTE `arr0(id, text)`, and `ref(doc_id,
+    * text)` is the reference side. The same 4-lane MinHash on both
     * sides (the [[dedupMinhashSigSql]] lane arithmetic), candidate
     * iff band (m0,m1) or band (m2,m3) agrees, estimate = agreeing
     * lanes / 4 — one row per qualifying pair, matching the
     * first-band exact-once emission. */
-  val streamNeardupSql = {
+  private def minhashPairsSql(head: String, ref: String): String = {
     def lanes(pfx: String) = (0 until 4).map(i =>
       s"  list_min(list_transform(sh, x -> substr(md5(x), ${i * 8 + 1}, 8))) AS $pfx$i")
       .mkString(",\n")
-    s"""WITH arr0 AS (
-       |  SELECT doc_id + 700000 AS id, text FROM documents WHERE doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 710000, text || ' extra appended words here'
-       |  FROM documents WHERE doc_id >= 10 AND doc_id < 15
-       |  UNION ALL
-       |  SELECT doc_id + 720000, reverse(text)
-       |  FROM documents WHERE doc_id >= 15 AND doc_id < 20),
+    s"""$head,
        |ta AS (SELECT id, $toksSql AS toks FROM arr0),
        |sa AS (SELECT id, $shinglesSql AS sh FROM ta),
        |ma AS (SELECT id,
        |${lanes("a")}
        |FROM sa WHERE len(sh) > 0),
-       |tr AS (SELECT doc_id AS neighbor_id, $toksSql AS toks FROM documents),
+       |tr AS (SELECT doc_id AS neighbor_id, $toksSql AS toks FROM $ref),
        |sr AS (SELECT neighbor_id, $shinglesSql AS sh FROM tr),
        |mr AS (SELECT neighbor_id,
        |${lanes("m")}
@@ -5761,22 +5754,18 @@ object ExtQueries {
        |ORDER BY doc_id, neighbor_id""".stripMargin
   }
 
-  /** md5 of every file under each `pfx=` dir of a band-index layout —
-    * the byte-identity evidence for the update gate (the string-key
-    * twin of [[cellChecksums]]). */
-  private def pfxChecksums(indexDir: String): Map[String, Map[String, String]] = {
-    val root = new java.io.File(indexDir)
-    root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("pfx="))
-      .map { d =>
-        val pfx = d.getName.stripPrefix("pfx=")
-        val files = d.listFiles().filter(_.isFile).map { f =>
-          val digest = java.security.MessageDigest.getInstance("MD5")
-            .digest(java.nio.file.Files.readAllBytes(f.toPath))
-          f.getName -> digest.map("%02x".format(_)).mkString
-        }.toMap
-        pfx -> files
-      }.toMap
-  }
+  /** [[streamNeardupQ]]'s oracle: [[minhashPairsSql]] over the
+    * planted arrivals against the whole corpus. */
+  val streamNeardupSql = minhashPairsSql(
+    """WITH arr0 AS (
+      |  SELECT doc_id + 700000 AS id, text FROM documents WHERE doc_id < 10
+      |  UNION ALL
+      |  SELECT doc_id + 710000, text || ' extra appended words here'
+      |  FROM documents WHERE doc_id >= 10 AND doc_id < 15
+      |  UNION ALL
+      |  SELECT doc_id + 720000, reverse(text)
+      |  FROM documents WHERE doc_id >= 15 AND doc_id < 20)""".stripMargin,
+    "documents")
 
   private def bandUpdateChanges(docs: DataFrame): DataFrame = {
     val del = docs.where(col("doc_id").isin(37L, 74L, 111L))
@@ -5807,17 +5796,10 @@ object ExtQueries {
     val idir = scratchDir("bandidx", dir)
     // signatures from the shared memoized sign-once pass
     Dedup.writeBandIndexFromSignatures(docSignatures(s, dir), "doc_id", idir)
-    val before = pfxChecksums(idir)
-    val touched = Dedup.updateBandIndex(idir, bandUpdateChanges(docs),
-      "text", "doc_id")
-    val after = pfxChecksums(idir)
-    val untouched = before.keySet.filterNot(touched.contains)
-    require(touched.nonEmpty && untouched.nonEmpty,
-      s"band update gate is vacuous: touched=${touched.length} " +
-        s"of ${before.size} prefixes")
-    untouched.foreach { p =>
-      require(before(p) == after.getOrElse(p, Map.empty),
-        s"untouched prefix $p was rewritten")
+    requireUntouchedDirsSame(idir, "pfx", "band update", "prefix",
+        "prefixes") {
+      Dedup.updateBandIndex(idir, bandUpdateChanges(docs), "text", "doc_id")
+        .toSeq
     }
     val post = graft.etl.Merge.applyCdc(docs, bandUpdateChanges(docs),
       "doc_id")
@@ -5842,45 +5824,23 @@ object ExtQueries {
       .withColumnRenamed("doc_id", "neighbor_id")
     val fresh = Dedup.minhashMatchesWithRefSignatures(arrivals,
       postRefSigs, "doc_id", "text")
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "updated index diverged from a from-scratch rebuild")
     served.orderBy("doc_id", "neighbor_id")
   }
 
-  val dedupIndexUpdateSql = {
-    def lanes(pfx: String) = (0 until 4).map(i =>
-      s"  list_min(list_transform(sh, x -> substr(md5(x), ${i * 8 + 1}, 8))) AS $pfx$i")
-      .mkString(",\n")
-    s"""WITH post AS (
-       |  SELECT doc_id,
-       |    CASE WHEN doc_id IN (41, 82) THEN text || ' revised edition'
-       |         ELSE text END AS text
-       |  FROM documents WHERE doc_id NOT IN (37, 74, 111)
-       |  UNION ALL
-       |  SELECT doc_id + 840000, text || ' brand new page'
-       |  FROM documents WHERE doc_id < 3),
-       |arr0 AS (SELECT doc_id + 850000 AS id, text FROM post
-       |  WHERE doc_id IN (0, 1, 2, 3, 4, 41, 82, 840000, 840001, 840002)),
-       |ta AS (SELECT id, $toksSql AS toks FROM arr0),
-       |sa AS (SELECT id, $shinglesSql AS sh FROM ta),
-       |ma AS (SELECT id,
-       |${lanes("a")}
-       |FROM sa WHERE len(sh) > 0),
-       |tr AS (SELECT doc_id AS neighbor_id, $toksSql AS toks FROM post),
-       |sr AS (SELECT neighbor_id, $shinglesSql AS sh FROM tr),
-       |mr AS (SELECT neighbor_id,
-       |${lanes("m")}
-       |FROM sr WHERE len(sh) > 0)
-       |SELECT a.id AS doc_id, r.neighbor_id,
-       |  ROUND(CAST((a.a0 = r.m0)::INT + (a.a1 = r.m1)::INT +
-       |    (a.a2 = r.m2)::INT + (a.a3 = r.m3)::INT AS DOUBLE) / 4, 6)
-       |    AS est_jaccard
-       |FROM ma a JOIN mr r
-       |  ON (a.a0 = r.m0 AND a.a1 = r.m1) OR (a.a2 = r.m2 AND a.a3 = r.m3)
-       |ORDER BY doc_id, neighbor_id""".stripMargin
-  }
+  val dedupIndexUpdateSql = minhashPairsSql(
+    """WITH post AS (
+      |  SELECT doc_id,
+      |    CASE WHEN doc_id IN (41, 82) THEN text || ' revised edition'
+      |         ELSE text END AS text
+      |  FROM documents WHERE doc_id NOT IN (37, 74, 111)
+      |  UNION ALL
+      |  SELECT doc_id + 840000, text || ' brand new page'
+      |  FROM documents WHERE doc_id < 3),
+      |arr0 AS (SELECT doc_id + 850000 AS id, text FROM post
+      |  WHERE doc_id IN (0, 1, 2, 3, 4, 41, 82, 840000, 840001, 840002))""".stripMargin,
+    "post")
 
   /** The DuckDB replay of [[graft.ext.Multimodal.Codec.dHash64]] over
     * an [[graft.ext.Multimodal.ImageFixture]] source CTE `$src` with
@@ -5913,6 +5873,27 @@ object ExtQueries {
        |  FROM hash$o CROSS JOIN (SELECT unnest(range(0, 4)) AS bi))""".stripMargin
   }
 
+  /** The two-sided banded-hamming oracle: `head` is a `WITH` clause
+    * defining the reference source CTE `ref` and the arrival source
+    * `arr`, each with columns (id, pid, pert); `bandCtes` hashes and
+    * bands them ([[dhashBandSqlCtes]], [[energyBandSqlCtes]]) into
+    * `bandr`/`banda` keyed by `hashCol`. Pairs that share a band
+    * value and lie within hamming 3. */
+  private def bandedHammingSql(head: String, ref: String,
+                               bandCtes: (String, String) => String = dhashBandSqlCtes,
+                               hashCol: String = "dhash"): String =
+    s"""$head,
+       |${bandCtes(ref, "r")},
+       |${bandCtes("arr", "a")},
+       |cand AS (
+       |  SELECT DISTINCT a.id AS doc_id, r.id AS neighbor_id,
+       |    a.$hashCol AS ha, r.$hashCol AS hb
+       |  FROM banda a JOIN bandr r ON a.bi = r.bi AND a.bv = r.bv)
+       |SELECT doc_id, neighbor_id,
+       |  CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
+       |FROM cand WHERE bit_count(xor(ha, hb)) <= 3
+       |ORDER BY doc_id, neighbor_id""".stripMargin
+
   /** Stored PERCEPTUAL hash index under CDC
     * ([[Dedup.writeHashIndex]]/[[Dedup.updateHashIndex]]/
     * [[Dedup.hashMatchesIndexed]] — the media twin of
@@ -5941,7 +5922,6 @@ object ExtQueries {
     // 64 prefix dirs: the CDC batch's ~50 band rows must leave most
     // dirs untouched or the byte-identity gate proves nothing
     Dedup.writeHashIndex(baseHashes, "doc_id", "dhash", idir, nPrefix = 64)
-    val before = pfxChecksums(idir)
     val updHashes = hashesOf(docs.where(col("doc_id").isin(41L, 82L))
       .select(col("doc_id"), col("doc_id").as("__seed"),
         lit(true).as("__pert")))
@@ -5956,15 +5936,9 @@ object ExtQueries {
       .unionByName(insHashes.select(col("doc_id"), col("dhash"),
         lit(1L).as("seq"), lit("u").as("op")))
       .localCheckpoint() // consumed by the update AND the CDC replay
-    val touched = Dedup.updateHashIndex(idir, changes, "doc_id", "dhash")
-    val after = pfxChecksums(idir)
-    val untouched = before.keySet.filterNot(p => touched.contains(p.toInt))
-    require(touched.nonEmpty && untouched.nonEmpty,
-      s"hash index update gate is vacuous: touched=${touched.length} " +
-        s"of ${before.size} prefixes")
-    untouched.foreach { p =>
-      require(before(p) == after.getOrElse(p, Map.empty),
-        s"untouched prefix $p was rewritten")
+    requireUntouchedDirsSame(idir, "pfx", "hash index update", "prefix",
+        "prefixes") {
+      Dedup.updateHashIndex(idir, changes, "doc_id", "dhash").toSeq
     }
     val postHashes = graft.etl.Merge.applyCdc(baseHashes, changes, "doc_id")
     val arrivals = hashesOf(
@@ -5983,42 +5957,31 @@ object ExtQueries {
       .localCheckpoint() // probed twice: served AND rebuild gate
     val served = Dedup.hashMatchesIndexed(idir, arrivals, "doc_id", "dhash")
     val fresh = Dedup.hashMatches(arrivals, postHashes, "doc_id", "dhash")
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "updated hash index diverged from a from-scratch rebuild")
     served.orderBy("doc_id", "neighbor_id")
   }
 
-  val dedupHashIndexSql =
-    s"""WITH post AS (
-       |  SELECT doc_id AS id, doc_id AS pid, (doc_id IN (41, 82)) AS pert
-       |  FROM documents WHERE doc_id NOT IN (37, 74, 111)
-       |  UNION ALL
-       |  SELECT 860000 + i, 860000 + i, FALSE
-       |  FROM (SELECT unnest(range(0, 3)) AS i)),
-       |arr AS (
-       |  SELECT doc_id + 870000 AS id, doc_id AS pid, TRUE AS pert
-       |  FROM documents WHERE doc_id < 5
-       |  UNION ALL
-       |  SELECT doc_id + 880000, doc_id, FALSE FROM documents
-       |  WHERE doc_id IN (41, 82)
-       |  UNION ALL
-       |  SELECT doc_id + 890000, doc_id, TRUE FROM documents
-       |  WHERE doc_id = 37
-       |  UNION ALL
-       |  SELECT 895000 + i, 860000 + i, TRUE
-       |  FROM (SELECT unnest(range(0, 3)) AS i)),
-       |${dhashBandSqlCtes("post", "r")},
-       |${dhashBandSqlCtes("arr", "a")},
-       |cand AS (
-       |  SELECT DISTINCT a.id AS doc_id, r.id AS neighbor_id,
-       |    a.dhash AS ha, r.dhash AS hb
-       |  FROM banda a JOIN bandr r ON a.bi = r.bi AND a.bv = r.bv)
-       |SELECT doc_id, neighbor_id,
-       |  CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-       |FROM cand WHERE bit_count(xor(ha, hb)) <= 3
-       |ORDER BY doc_id, neighbor_id""".stripMargin
+  val dedupHashIndexSql = bandedHammingSql(
+    """WITH post AS (
+      |  SELECT doc_id AS id, doc_id AS pid, (doc_id IN (41, 82)) AS pert
+      |  FROM documents WHERE doc_id NOT IN (37, 74, 111)
+      |  UNION ALL
+      |  SELECT 860000 + i, 860000 + i, FALSE
+      |  FROM (SELECT unnest(range(0, 3)) AS i)),
+      |arr AS (
+      |  SELECT doc_id + 870000 AS id, doc_id AS pid, TRUE AS pert
+      |  FROM documents WHERE doc_id < 5
+      |  UNION ALL
+      |  SELECT doc_id + 880000, doc_id, FALSE FROM documents
+      |  WHERE doc_id IN (41, 82)
+      |  UNION ALL
+      |  SELECT doc_id + 890000, doc_id, TRUE FROM documents
+      |  WHERE doc_id = 37
+      |  UNION ALL
+      |  SELECT 895000 + i, 860000 + i, TRUE
+      |  FROM (SELECT unnest(range(0, 3)) AS i))""".stripMargin,
+    "post")
 
   /** Streaming PERCEPTUAL near-dup gate ([[Dedup.hashMatches]] as a
     * REAL streaming run — the contamination-gate discipline applied to
@@ -6065,25 +6028,16 @@ object ExtQueries {
       .orderBy("doc_id", "neighbor_id")
   }
 
-  val streamImageGateSql =
-    s"""WITH ref AS (
-       |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
-       |arr AS (
-       |  SELECT doc_id + 970000 AS id, doc_id AS pid, TRUE AS pert
-       |  FROM documents WHERE doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 980000, doc_id + 980000, FALSE FROM documents
-       |  WHERE doc_id < 5),
-       |${dhashBandSqlCtes("ref", "r")},
-       |${dhashBandSqlCtes("arr", "a")},
-       |cand AS (
-       |  SELECT DISTINCT a.id AS doc_id, r.id AS neighbor_id,
-       |    a.dhash AS ha, r.dhash AS hb
-       |  FROM banda a JOIN bandr r ON a.bi = r.bi AND a.bv = r.bv)
-       |SELECT doc_id, neighbor_id,
-       |  CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-       |FROM cand WHERE bit_count(xor(ha, hb)) <= 3
-       |ORDER BY doc_id, neighbor_id""".stripMargin
+  val streamImageGateSql = bandedHammingSql(
+    """WITH ref AS (
+      |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
+      |arr AS (
+      |  SELECT doc_id + 970000 AS id, doc_id AS pid, TRUE AS pert
+      |  FROM documents WHERE doc_id < 10
+      |  UNION ALL
+      |  SELECT doc_id + 980000, doc_id + 980000, FALSE FROM documents
+      |  WHERE doc_id < 5)""".stripMargin,
+    "ref")
 
   /** Streaming perceptual gate served from the STORED hash index
     * ([[graft.streaming.ScoreStream.indexedHashGateSink]]): the same
@@ -6126,17 +6080,9 @@ object ExtQueries {
     q.awaitTermination()
     // gate (a)+(b): every trigger narrowed its scan, and there were
     // enough triggers for "per batch" to mean something
-    val logs = new java.io.File(s"$base/out/_probe").listFiles()
-      .filter(_.getName.endsWith(".json")).toSeq
-    require(logs.length >= 2,
-      s"expected >= 2 micro-batches, saw ${logs.length}")
-    logs.foreach { f =>
-      val src = scala.io.Source.fromFile(f)
-      val j = try src.mkString finally src.close()
-      val probed = "\"probed\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      val np = "\"n_prefix\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      require(np == 256 && probed > 0 && probed <= np / 4,
-        s"batch ${f.getName} scanned $probed of $np prefixes — no pruning")
+    requireNarrowed(s, s"$base/out", "_probe", "micro-batches",
+        _ => quarterOf(256)) { (_, probed, np) =>
+      s"scanned $probed of $np prefixes — no pruning"
     }
     val served = s.read.parquet(s"$base/out")
       .select("doc_id", "neighbor_id", "hamming")
@@ -6144,32 +6090,21 @@ object ExtQueries {
     val arrHashes = Multimodal.imageDHashes(arrivals, "payload")
       .select("doc_id", "dhash")
     val fresh = Dedup.hashMatches(arrHashes, refHashes, "doc_id", "dhash")
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "indexed streaming gate diverged from the batch hashMatches")
     served.orderBy("doc_id", "neighbor_id")
   }
 
-  val streamHashIndexedSql =
-    s"""WITH ref AS (
-       |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
-       |arr AS (
-       |  SELECT doc_id + 940000 AS id, doc_id AS pid, TRUE AS pert
-       |  FROM documents WHERE doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 950000, doc_id + 950000, FALSE FROM documents
-       |  WHERE doc_id < 5),
-       |${dhashBandSqlCtes("ref", "r")},
-       |${dhashBandSqlCtes("arr", "a")},
-       |cand AS (
-       |  SELECT DISTINCT a.id AS doc_id, r.id AS neighbor_id,
-       |    a.dhash AS ha, r.dhash AS hb
-       |  FROM banda a JOIN bandr r ON a.bi = r.bi AND a.bv = r.bv)
-       |SELECT doc_id, neighbor_id,
-       |  CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-       |FROM cand WHERE bit_count(xor(ha, hb)) <= 3
-       |ORDER BY doc_id, neighbor_id""".stripMargin
+  val streamHashIndexedSql = bandedHammingSql(
+    """WITH ref AS (
+      |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
+      |arr AS (
+      |  SELECT doc_id + 940000 AS id, doc_id AS pid, TRUE AS pert
+      |  FROM documents WHERE doc_id < 10
+      |  UNION ALL
+      |  SELECT doc_id + 950000, doc_id + 950000, FALSE FROM documents
+      |  WHERE doc_id < 5)""".stripMargin,
+    "ref")
 
   /** Streaming TEXT near-dup gate served from the STORED MinHash band
     * index ([[graft.streaming.ScoreStream.indexedBandGateSink]]) —
@@ -6209,64 +6144,34 @@ object ExtQueries {
     q.awaitTermination()
     // gate (a)+(b): every trigger narrowed its scan, and there were
     // enough triggers for "per batch" to mean something
-    val logs = new java.io.File(s"$base/out/_probe").listFiles()
-      .filter(_.getName.endsWith(".json")).toSeq
-    require(logs.length >= 2,
-      s"expected >= 2 micro-batches, saw ${logs.length}")
-    logs.foreach { f =>
-      val src = scala.io.Source.fromFile(f)
-      val j = try src.mkString finally src.close()
-      val probed = "\"probed\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      val np = "\"n_prefix\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      require(np == 256 && probed > 0 && probed <= np / 4,
-        s"batch ${f.getName} scanned $probed of $np prefixes — no pruning")
+    requireNarrowed(s, s"$base/out", "_probe", "micro-batches",
+        _ => quarterOf(256)) { (_, probed, np) =>
+      s"scanned $probed of $np prefixes — no pruning"
     }
     val served = s.read.parquet(s"$base/out")
       .select("doc_id", "neighbor_id", "est_jaccard")
     // gate (c): streamed+indexed == one-shot batch over the same texts
     val fresh = Dedup.minhashMatchesWithRefSignatures(arrivals,
       docRefSignatures(s, dir), "doc_id", "text")
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "indexed streaming band gate diverged from the batch minhashMatches")
     served.orderBy("doc_id", "neighbor_id")
   }
 
-  /** [[streamBandIndexedQ]]'s oracle: the [[streamNeardupSql]] lane
-    * arithmetic over the shifted arrival set — the stored index and
+  /** [[streamBandIndexedQ]]'s oracle: [[minhashPairsSql]] over the
+    * shifted arrival set — the stored index and
     * the per-batch pruning are value-invisible, so the replay is the
     * plain two-sided MinHash join. */
-  val streamBandIndexedSql = {
-    def lanes(pfx: String) = (0 until 4).map(i =>
-      s"  list_min(list_transform(sh, x -> substr(md5(x), ${i * 8 + 1}, 8))) AS $pfx$i")
-      .mkString(",\n")
-    s"""WITH arr0 AS (
-       |  SELECT doc_id + 893000 AS id, text FROM documents WHERE doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 896000, text || ' extra appended words here'
-       |  FROM documents WHERE doc_id >= 10 AND doc_id < 15
-       |  UNION ALL
-       |  SELECT doc_id + 899000, reverse(text)
-       |  FROM documents WHERE doc_id >= 15 AND doc_id < 20),
-       |ta AS (SELECT id, $toksSql AS toks FROM arr0),
-       |sa AS (SELECT id, $shinglesSql AS sh FROM ta),
-       |ma AS (SELECT id,
-       |${lanes("a")}
-       |FROM sa WHERE len(sh) > 0),
-       |tr AS (SELECT doc_id AS neighbor_id, $toksSql AS toks FROM documents),
-       |sr AS (SELECT neighbor_id, $shinglesSql AS sh FROM tr),
-       |mr AS (SELECT neighbor_id,
-       |${lanes("m")}
-       |FROM sr WHERE len(sh) > 0)
-       |SELECT a.id AS doc_id, r.neighbor_id,
-       |  ROUND(CAST((a.a0 = r.m0)::INT + (a.a1 = r.m1)::INT +
-       |    (a.a2 = r.m2)::INT + (a.a3 = r.m3)::INT AS DOUBLE) / 4, 6)
-       |    AS est_jaccard
-       |FROM ma a JOIN mr r
-       |  ON (a.a0 = r.m0 AND a.a1 = r.m1) OR (a.a2 = r.m2 AND a.a3 = r.m3)
-       |ORDER BY doc_id, neighbor_id""".stripMargin
-  }
+  val streamBandIndexedSql = minhashPairsSql(
+    """WITH arr0 AS (
+      |  SELECT doc_id + 893000 AS id, text FROM documents WHERE doc_id < 10
+      |  UNION ALL
+      |  SELECT doc_id + 896000, text || ' extra appended words here'
+      |  FROM documents WHERE doc_id >= 10 AND doc_id < 15
+      |  UNION ALL
+      |  SELECT doc_id + 899000, reverse(text)
+      |  FROM documents WHERE doc_id >= 15 AND doc_id < 20)""".stripMargin,
+    "documents")
 
   /** Streaming MAINTENANCE of the stored MinHash band index
     * ([[graft.streaming.ScoreStream.bandIndexMaintainSink]]) — the
@@ -6312,18 +6217,9 @@ object ExtQueries {
     q.awaitTermination()
     // gates (a)+(b): enough triggers to mean "per batch", each one
     // rewriting a slice of the layout, never the layout
-    val logs = new java.io.File(s"$base/out/_maint").listFiles()
-      .filter(_.getName.endsWith(".json")).toSeq
-    require(logs.length >= 2,
-      s"expected >= 2 maintenance micro-batches, saw ${logs.length}")
-    logs.foreach { f =>
-      val src = scala.io.Source.fromFile(f)
-      val j = try src.mkString finally src.close()
-      val touched = "\"touched\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      val np = "\"n_prefix\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      require(np == 256 && touched > 0 && touched <= np / 4,
-        s"batch ${f.getName} rewrote $touched of $np prefixes — " +
-          "no narrowing")
+    requireNarrowed(s, s"$base/out", "_maint", "maintenance micro-batches",
+        _ => quarterOf(256)) { (_, touched, np) =>
+      s"rewrote $touched of $np prefixes — no narrowing"
     }
     // the corpus the CDC log implies
     val post = docs.where(col("doc_id") >= 10)
@@ -6379,54 +6275,32 @@ object ExtQueries {
     val fresh = Dedup.minhashMatchesWithRefSignatures(arrivals,
       postSigs.withColumnRenamed("doc_id", "neighbor_id"),
       "doc_id", "text")
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "serving from the maintained index diverged from the batch " +
         "minhashMatches over the post-CDC corpus")
     served.orderBy("doc_id", "neighbor_id")
   }
 
   /** [[streamBandCdcQ]]'s oracle: the CDC log replayed into the
-    * post-corpus CTE, then the [[streamBandIndexedSql]] lane
+    * post-corpus CTE, then the [[minhashPairsSql]] lane
     * arithmetic — the stored index, the streaming application, and
     * the touched-dirs rewrite are all value-invisible. */
-  val streamBandCdcSql = {
-    def lanes(pfx: String) = (0 until 4).map(i =>
-      s"  list_min(list_transform(sh, x -> substr(md5(x), ${i * 8 + 1}, 8))) AS $pfx$i")
-      .mkString(",\n")
-    s"""WITH post AS (
-       |  SELECT doc_id, text FROM documents WHERE doc_id >= 10
-       |  UNION ALL
-       |  SELECT doc_id, text || ' cdc updated text marker'
-       |  FROM documents WHERE doc_id < 5
-       |  UNION ALL
-       |  SELECT doc_id + 705000, text || ' freshly inserted document'
-       |  FROM documents WHERE doc_id >= 10 AND doc_id < 15),
-       |arr0 AS (
-       |  SELECT doc_id + 880000 AS id, text FROM post
-       |  WHERE doc_id < 5 OR doc_id >= 705000
-       |  UNION ALL
-       |  SELECT doc_id + 883000, text FROM documents
-       |  WHERE doc_id >= 5 AND doc_id < 10),
-       |ta AS (SELECT id, $toksSql AS toks FROM arr0),
-       |sa AS (SELECT id, $shinglesSql AS sh FROM ta),
-       |ma AS (SELECT id,
-       |${lanes("a")}
-       |FROM sa WHERE len(sh) > 0),
-       |tr AS (SELECT doc_id AS neighbor_id, $toksSql AS toks FROM post),
-       |sr AS (SELECT neighbor_id, $shinglesSql AS sh FROM tr),
-       |mr AS (SELECT neighbor_id,
-       |${lanes("m")}
-       |FROM sr WHERE len(sh) > 0)
-       |SELECT a.id AS doc_id, r.neighbor_id,
-       |  ROUND(CAST((a.a0 = r.m0)::INT + (a.a1 = r.m1)::INT +
-       |    (a.a2 = r.m2)::INT + (a.a3 = r.m3)::INT AS DOUBLE) / 4, 6)
-       |    AS est_jaccard
-       |FROM ma a JOIN mr r
-       |  ON (a.a0 = r.m0 AND a.a1 = r.m1) OR (a.a2 = r.m2 AND a.a3 = r.m3)
-       |ORDER BY doc_id, neighbor_id""".stripMargin
-  }
+  val streamBandCdcSql = minhashPairsSql(
+    """WITH post AS (
+      |  SELECT doc_id, text FROM documents WHERE doc_id >= 10
+      |  UNION ALL
+      |  SELECT doc_id, text || ' cdc updated text marker'
+      |  FROM documents WHERE doc_id < 5
+      |  UNION ALL
+      |  SELECT doc_id + 705000, text || ' freshly inserted document'
+      |  FROM documents WHERE doc_id >= 10 AND doc_id < 15),
+      |arr0 AS (
+      |  SELECT doc_id + 880000 AS id, text FROM post
+      |  WHERE doc_id < 5 OR doc_id >= 705000
+      |  UNION ALL
+      |  SELECT doc_id + 883000, text FROM documents
+      |  WHERE doc_id >= 5 AND doc_id < 10)""".stripMargin,
+    "post")
 
   /** Streaming MAINTENANCE of the stored PERCEPTUAL hash index
     * ([[graft.streaming.ScoreStream.hashIndexMaintainSink]]) — the
@@ -6485,18 +6359,9 @@ object ExtQueries {
     val q = graft.streaming.ScoreStream.hashIndexMaintainSink(
       stream, idir, "doc_id", "payload", s"$base/out", s"$base/chk")
     q.awaitTermination()
-    val logs = new java.io.File(s"$base/out/_maint").listFiles()
-      .filter(_.getName.endsWith(".json")).toSeq
-    require(logs.length >= 2,
-      s"expected >= 2 maintenance micro-batches, saw ${logs.length}")
-    logs.foreach { f =>
-      val src = scala.io.Source.fromFile(f)
-      val j = try src.mkString finally src.close()
-      val touched = "\"touched\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      val np = "\"n_prefix\":(\\d+)".r.findFirstMatchIn(j).get.group(1).toInt
-      require(np == 1024 && touched > 0 && touched <= np / 4,
-        s"batch ${f.getName} rewrote $touched of $np prefixes — " +
-          "no narrowing")
+    requireNarrowed(s, s"$base/out", "_maint", "maintenance micro-batches",
+        _ => quarterOf(1024)) { (_, touched, np) =>
+      s"rewrote $touched of $np prefixes — no narrowing"
     }
     // the hash corpus the CDC log implies. The unchanged branch
     // (docs >= 10 at their own seeds) IS the shared ingest artifact
@@ -6544,9 +6409,7 @@ object ExtQueries {
     val served = Dedup.hashMatchesIndexed(idir, arrivals,
       "doc_id", "dhash")
     val fresh = Dedup.hashMatches(arrivals, postHashes, "doc_id", "dhash")
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "serving from the maintained hash index diverged from the " +
         "batch hashMatches over the post-CDC corpus")
     served.orderBy("doc_id", "neighbor_id")
@@ -6556,36 +6419,27 @@ object ExtQueries {
     * post-corpus seed set, then the pixel-formula dHash/band/popcount
     * replay — the stored index, the streaming application, and the
     * in-batch decode are all value-invisible. */
-  val streamHashCdcSql =
-    s"""WITH post AS (
-       |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert
-       |  FROM documents WHERE doc_id >= 10
-       |  UNION ALL
-       |  SELECT doc_id, doc_id + 650000, FALSE FROM documents
-       |  WHERE doc_id < 5
-       |  UNION ALL
-       |  SELECT doc_id + 707000, doc_id + 707000, FALSE FROM documents
-       |  WHERE doc_id >= 10 AND doc_id < 15),
-       |arr AS (
-       |  SELECT doc_id + 885000 AS id, doc_id + 650000 AS pid,
-       |    TRUE AS pert
-       |  FROM documents WHERE doc_id < 5
-       |  UNION ALL
-       |  SELECT doc_id + 886000, doc_id, TRUE FROM documents
-       |  WHERE doc_id >= 5 AND doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 887000, doc_id + 707000, TRUE FROM documents
-       |  WHERE doc_id >= 10 AND doc_id < 15),
-       |${dhashBandSqlCtes("post", "r")},
-       |${dhashBandSqlCtes("arr", "a")},
-       |cand AS (
-       |  SELECT DISTINCT a.id AS doc_id, r.id AS neighbor_id,
-       |    a.dhash AS ha, r.dhash AS hb
-       |  FROM banda a JOIN bandr r ON a.bi = r.bi AND a.bv = r.bv)
-       |SELECT doc_id, neighbor_id,
-       |  CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-       |FROM cand WHERE bit_count(xor(ha, hb)) <= 3
-       |ORDER BY doc_id, neighbor_id""".stripMargin
+  val streamHashCdcSql = bandedHammingSql(
+    """WITH post AS (
+      |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert
+      |  FROM documents WHERE doc_id >= 10
+      |  UNION ALL
+      |  SELECT doc_id, doc_id + 650000, FALSE FROM documents
+      |  WHERE doc_id < 5
+      |  UNION ALL
+      |  SELECT doc_id + 707000, doc_id + 707000, FALSE FROM documents
+      |  WHERE doc_id >= 10 AND doc_id < 15),
+      |arr AS (
+      |  SELECT doc_id + 885000 AS id, doc_id + 650000 AS pid,
+      |    TRUE AS pert
+      |  FROM documents WHERE doc_id < 5
+      |  UNION ALL
+      |  SELECT doc_id + 886000, doc_id, TRUE FROM documents
+      |  WHERE doc_id >= 5 AND doc_id < 10
+      |  UNION ALL
+      |  SELECT doc_id + 887000, doc_id + 707000, TRUE FROM documents
+      |  WHERE doc_id >= 10 AND doc_id < 15)""".stripMargin,
+    "post")
 
   /** The MEDIA curation pipeline as one oracled query — the image
     * twin of [[curationPipelineQ]]: ingest-decode → stored-index
@@ -6983,32 +6837,21 @@ object ExtQueries {
       Multimodal.audioEnergyHashes(arrivals, "payload")
         .select("doc_id", "ahash"),
       refHashes, "doc_id", "ahash")
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "streaming audio gate diverged from the batch hashMatches")
     served.orderBy("doc_id", "neighbor_id")
   }
 
-  val streamAudioGateSql =
-    s"""WITH ref AS (
-       |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
-       |arr AS (
-       |  SELECT doc_id + 910000 AS id, doc_id AS pid, TRUE AS pert
-       |  FROM documents WHERE doc_id < 10
-       |  UNION ALL
-       |  SELECT doc_id + 915000, doc_id + 915000, FALSE FROM documents
-       |  WHERE doc_id < 5),
-       |${energyBandSqlCtes("ref", "r")},
-       |${energyBandSqlCtes("arr", "a")},
-       |cand AS (
-       |  SELECT DISTINCT a.id AS doc_id, r.id AS neighbor_id,
-       |    a.ahash AS ha, r.ahash AS hb
-       |  FROM banda a JOIN bandr r ON a.bi = r.bi AND a.bv = r.bv)
-       |SELECT doc_id, neighbor_id,
-       |  CAST(bit_count(xor(ha, hb)) AS INTEGER) AS hamming
-       |FROM cand WHERE bit_count(xor(ha, hb)) <= 3
-       |ORDER BY doc_id, neighbor_id""".stripMargin
+  val streamAudioGateSql = bandedHammingSql(
+    """WITH ref AS (
+      |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
+      |arr AS (
+      |  SELECT doc_id + 910000 AS id, doc_id AS pid, TRUE AS pert
+      |  FROM documents WHERE doc_id < 10
+      |  UNION ALL
+      |  SELECT doc_id + 915000, doc_id + 915000, FALSE FROM documents
+      |  WHERE doc_id < 5)""".stripMargin,
+    "ref", energyBandSqlCtes, "ahash")
 
   /** Streaming perceptual VIDEO gate ([[graft.streaming.ScoreStream
     * .videoGateSink]]): arriving GVID containers are parsed, stride-
@@ -7056,9 +6899,7 @@ object ExtQueries {
     val fresh = Dedup.videoHashMatches(
       Multimodal.videoFrameDHashes(arrivals, "payload", stride = 2),
       refFrames, "doc_id", minMatches = 2)
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "streaming video gate diverged from the batch videoHashMatches")
     served.orderBy("doc_id", "neighbor_id")
   }
@@ -7352,9 +7193,7 @@ object ExtQueries {
     val fresh = Dedup.videoHashMatches(
       Multimodal.videoKeyframeDHashes(arrivals, "payload"),
       refFrames, "doc_id", "dhash", "ts_ms", align = "time")
-    val key = (df: DataFrame) => df.orderBy("doc_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    require(key(served) == key(fresh),
+    requireSameRows(served, fresh,
       "streaming timed-video gate diverged from the batch time vote")
     served.orderBy("doc_id", "neighbor_id")
   }
@@ -8427,289 +8266,165 @@ object ExtQueries {
 
   // ---- registry ----
 
-  val all: Map[String, Q] = Map(
-    "q_dedup_exact" -> dedupExact,
-    "q_dedup_minhash_sig" -> dedupMinhashSig,
-    "q_dedup_lsh_buckets" -> dedupLshBuckets,
-    "q_dedup_jaccard" -> dedupJaccard,
-    "q_dedup_neardup" -> dedupNeardup,
-    "q_dedup_components" -> dedupComponents,
-    "q_dedup_apply" -> dedupApply,
-    "q_dedup_simhash" -> dedupSimhash,
-    "q_dedup_embedding" -> dedupEmbedding,
-    "q_sim_topk" -> simTopK,
-    "q_sim_ivf" -> simIvf,
-    "q_sim_ivf_partitioned" -> simIvfPartitionedQ,
-    "q_sim_ivf_update" -> simIvfUpdateQ,
-    "q_stream_ivf_cdc" -> streamIvfCdcQ,
-    "q_stream_ivf_indexed" -> streamIvfIndexedQ,
-    "q_stream_all_indexed" -> streamAllIndexedQ,
-    "q_sim_pq" -> simPq,
-    "q_sim_sq8" -> simSq8,
-    "q_text_sentences" -> textSentencesQ,
-    "q_unicode_sentences" -> unicodeSentencesQ,
-    "q_text_langid" -> textLangid,
-    "q_text_quality" -> textQuality,
-    "q_text_tokens" -> textTokens,
-    "q_text_repetition" -> textRepetition,
-    "q_text_pii" -> textPii,
-    "q_text_fingerprint" -> textFingerprint,
-    "q_unicode_stats" -> unicodeStats,
-    "q_unicode_script" -> unicodeScript,
-    "q_unicode_dedup" -> unicodeDedup,
-    "q_unicode_lines" -> unicodeLines,
-    "q_unicode_tokens" -> unicodeTokens,
-    "q_unicode_fingerprint" -> unicodeFingerprint,
-    "q_unicode_csv" -> unicodeCsv,
-    "q_unicode_jsonl" -> unicodeJsonl,
-    "q_unicode_langid" -> unicodeLangid,
-    "q_unicode_gopher" -> unicodeGopher,
-    "q_unicode_c4" -> unicodeC4,
-    "q_unicode_nfc" -> unicodeNfc,
-    "q_unicode_c4_cjk" -> unicodeC4Cjk,
-    "q_unicode_clean" -> unicodeClean,
-    "q_unicode_clean_ml" -> unicodeCleanMl,
-    "q_unicode_graphemes" -> unicodeGraphemes,
-    "q_stream_script" -> streamScriptQ,
-    "q_retrieval_metrics" -> retrievalMetricsQ,
-    "q_bpe_apply_bytes" -> bpeApplyBytesQ,
-    "q_tokenizer_fertility" -> tokenizerFertilityQ,
-    "q_text_langid_model" -> textLangidModelQ,
-    "q_langid_mixture" -> langidMixtureQ,
-    "q_bpe_apply_pretok" -> bpeApplyPretokQ,
-    "q_tokenizer_fertility_pretok" -> tokenizerFertilityPretokQ,
-    "q_unigram_apply" -> unigramApplyQ,
-    "q_unigram_fertility" -> unigramFertilityQ,
-    "q_unigram_train" -> unigramTrainQ,
-    "q_unigram_train_soft" -> unigramTrainSoftQ,
-    "q_multimodal_meta" -> multimodalMeta,
-    "q_dedup_image" -> dedupImageQ,
-    "q_dedup_audio" -> dedupAudioQ,
-    "q_stream_window" -> streamWindow,
-    "q_stream_contamination" -> streamContaminationQ,
-    "q_stream_semantic" -> streamSemanticQ,
-    "q_stream_neardup" -> streamNeardupQ,
-    "q_stream_quota" -> streamQuotaQ,
-    "q_stream_join" -> streamJoin,
-    "q_sessionize" -> sessionizeQ,
-    "q_sessionize_timers" -> sessionizeTimersQ,
-    "q_stream_dedup" -> streamDedupQ,
-    "q_stream_totals" -> streamTotalsQ,
-    "q_stream_join_outer" -> streamJoinOuterQ,
-    "q_stream_enrich" -> streamEnrichQ,
-    "q_dedup_minhash_grouped" -> dedupMinhashGrouped,
-    "q_dedup_incremental" -> dedupIncremental,
-    "q_dedup_index_update" -> dedupIndexUpdateQ,
-    "q_dedup_hash_index" -> dedupHashIndexQ,
-    "q_stream_image_gate" -> streamImageGateQ,
-    "q_stream_hash_indexed" -> streamHashIndexedQ,
-    "q_stream_band_indexed" -> streamBandIndexedQ,
-    "q_media_pipeline" -> mediaPipelineQ,
-    "q_doc_pipeline" -> docPipelineQ,
-    "q_stream_audio_gate" -> streamAudioGateQ,
-    "q_stream_video_gate" -> streamVideoGateQ,
-    "q_dedup_video" -> dedupVideoQ,
-    "q_dedup_video_drift" -> dedupVideoDriftQ,
-    "q_dedup_video_time" -> dedupVideoTimeQ,
-    "q_stream_band_cdc" -> streamBandCdcQ,
-    "q_stream_hash_cdc" -> streamHashCdcQ,
-    "q_stream_video_time" -> streamVideoTimeQ,
-    "q_mixed_pipeline" -> mixedPipelineQ,
-    "q_text_normalize" -> textNormalize,
-    "q_bpe_pairs" -> bpePairs,
-    "q_bpe_apply" -> bpeApplyQ,
-    "q_vocab_coverage" -> vocabCoverageQ,
-    "q_contamination" -> contaminationQ,
-    "q_contamination_other" -> contaminationOtherQ,
-    "q_skipping_scan" -> skippingScanQ,
-    "q_profile_stats" -> profileStats,
-    "q_fuzzy_match" -> fuzzyMatch,
-    "q_pack_sequences" -> packSequencesQ,
-    "q_pack_spans" -> packSpansQ,
-    "q_chunk_docs" -> chunkDocsQ,
-    "q_dedup_spans" -> dedupSpansQ,
-    "q_dedup_substrings" -> dedupSubstringsQ,
-    "q_dedup_substrings_perdoc" -> dedupSubstringsPerdocQ,
-    "q_dedup_lines" -> dedupLinesQ,
-    "q_dedup_paragraphs" -> dedupParagraphsQ,
-    "q_text_compression" -> textCompressionQ,
-    "q_dedup_canonical" -> dedupCanonicalQ,
-    "q_batch_by_length" -> batchByLengthQ,
-    "q_sim_ivfpq" -> simIvfPq,
-    "q_sim_ivfpq_residual" -> simIvfPqResidual,
-    "q_sim_ivfpq_rerank" -> simIvfPqRerank,
-    "q_join_dpp" -> joinDppQ,
-    "q_join_runtime_filter" -> joinRuntimeFilterQ,
-    "q_join_skew_aqe" -> joinSkewAqeQ,
-    "q_join_bucketed" -> joinBucketedQ,
-    "q_bm25_topk" -> bm25TopKQ,
-    "q_tfidf_keywords" -> tfidfKeywordsQ,
-    "q_quality_gopher" -> qualityGopher,
-    "q_quality_blocklist" -> qualityBlocklistQ,
-    "q_text_html" -> textHtmlQ,
-    "q_text_pdf" -> textPdfQ,
-    "q_text_pdf_cid" -> textPdfCidQ,
-    "q_text_pdf_xref" -> textPdfXrefQ,
-    "q_text_pdf_extends" -> textPdfExtendsQ,
-    "q_filter_funnel" -> filterFunnelQ,
-    "q_quality_authority" -> qualityAuthorityQ,
-    "q_mixture_authority" -> mixtureAuthorityQ,
-    "q_text_urls" -> textUrlsQ,
-    "q_domain_cap" -> domainCapQ,
-    "q_quality_repetition" -> qualityRepetitionQ,
-    "q_select_weighted" -> selectWeightedQ,
-    "q_dsir_weights" -> dsirWeightsQ,
-    "q_dedup_semantic" -> dedupSemanticQ,
-    "q_dedup_semantic_lsh" -> dedupSemanticLshQ,
-    "q_retrieval_hybrid" -> retrievalHybridQ,
-    "q_lm_perplexity" -> lmPerplexityQ,
-    "q_join_range" -> joinRangeQ,
-    "q_join_interval_overlap" -> joinIntervalOverlapQ,
-    "q_curation_pipeline" -> curationPipelineQ,
-    "q_sim_matryoshka" -> simMatryoshkaQ,
-    "q_corpus_datasheet" -> corpusDatasheetQ,
-    "q_retrieval_negatives" -> retrievalNegativesQ,
-    "q_diversity_ngrams" -> diversityNgramsQ,
-    "q_shards_approx" -> shardsApproxQ,
-    "q_heavy_hitters_approx" -> heavyHittersApproxQ,
-    "q_quality_c4" -> qualityC4Q,
-    "q_cluster_balance" -> clusterBalanceQ,
-    "q_select_diverse" -> selectDiverseQ,
-    "q_datasheet_approx" -> datasheetApproxQ,
-    "q_sketch_column" -> sketchColumnQ,
-    "q_sketch_profile" -> sketchProfileQ,
-    "q_sketch_cms" -> sketchCmsQ,
-    "q_assembly_pipeline" -> assemblyPipelineQ,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_dedup_exact" -> dedupExactSql,
-    "q_dedup_minhash_sig" -> dedupMinhashSigSql,
-    "q_dedup_lsh_buckets" -> dedupLshBucketsSql,
-    "q_dedup_jaccard" -> dedupJaccardSql,
-    "q_dedup_neardup" -> dedupNeardupSql,
-    "q_dedup_components" -> dedupComponentsSql,
-    "q_dedup_apply" -> dedupApplySql,
-    "q_dedup_simhash" -> dedupSimhashSql,
-    "q_dedup_embedding" -> dedupEmbeddingSql,
-    "q_sim_topk" -> simTopKSql,
-    "q_sim_sq8" -> simSq8Sql,
-    "q_text_sentences" -> textSentencesSql,
-    "q_unicode_sentences" -> unicodeSentencesSql,
-    "q_text_langid" -> textLangidSql,
-    "q_text_quality" -> textQualitySql,
-    "q_text_tokens" -> textTokensSql,
-    "q_text_repetition" -> textRepetitionSql,
-    "q_text_pii" -> textPiiSql,
-    "q_text_fingerprint" -> textFingerprintSql,
-    "q_unicode_stats" -> unicodeStatsSql,
-    "q_unicode_script" -> unicodeScriptSql,
-    "q_unicode_dedup" -> unicodeDedupSql,
-    "q_unicode_lines" -> unicodeLinesSql,
-    "q_unicode_tokens" -> unicodeTokensSql,
-    "q_unicode_fingerprint" -> unicodeFingerprintSql,
-    "q_unicode_csv" -> unicodeRoundtripSql,
-    "q_unicode_jsonl" -> unicodeRoundtripSql,
-    "q_unicode_langid" -> unicodeLangidSql,
-    "q_unicode_gopher" -> unicodeGopherSql,
-    "q_unicode_c4" -> unicodeC4Sql,
-    "q_unicode_nfc" -> unicodeNfcSql,
-    "q_unicode_c4_cjk" -> unicodeC4CjkSql,
-    "q_unicode_clean" -> unicodeCleanSql,
-    "q_unicode_clean_ml" -> unicodeCleanMlSql,
-    "q_unicode_graphemes" -> unicodeGraphemesSql,
-    "q_stream_script" -> streamScriptSql,
-    "q_retrieval_metrics" -> retrievalMetricsSql,
-    "q_multimodal_meta" -> multimodalMetaSql,
-    "q_dedup_image" -> dedupImageSql,
-    "q_dedup_audio" -> dedupAudioSql,
-    "q_unigram_apply" -> unigramApplySql,
-    "q_unigram_fertility" -> unigramFertilitySql,
-    "q_stream_window" -> streamWindowSql,
-    "q_stream_contamination" -> streamContaminationSql,
-    "q_stream_neardup" -> streamNeardupSql,
-    "q_stream_quota" -> streamQuotaSql,
-    "q_stream_join" -> streamJoinSql,
-    "q_sessionize" -> sessionizeSql,
-    "q_sessionize_timers" -> sessionizeTimersSql,
-    "q_stream_dedup" -> streamDedupSql,
-    "q_stream_totals" -> streamTotalsSql,
-    "q_stream_join_outer" -> streamJoinOuterSql,
-    "q_stream_enrich" -> streamEnrichSql,
-    "q_dedup_minhash_grouped" -> dedupMinhashGroupedSql,
-    "q_dedup_incremental" -> dedupIncrementalSql,
-    "q_dedup_index_update" -> dedupIndexUpdateSql,
-    "q_dedup_hash_index" -> dedupHashIndexSql,
-    "q_stream_image_gate" -> streamImageGateSql,
-    "q_stream_hash_indexed" -> streamHashIndexedSql,
-    "q_stream_band_indexed" -> streamBandIndexedSql,
-    "q_media_pipeline" -> mediaPipelineSql,
-    "q_doc_pipeline" -> docPipelineSql,
-    "q_stream_audio_gate" -> streamAudioGateSql,
-    "q_stream_video_gate" -> streamVideoGateSql,
-    "q_dedup_video" -> dedupVideoSql,
-    "q_dedup_video_drift" -> dedupVideoDriftSql,
-    "q_dedup_video_time" -> dedupVideoTimeSql,
-    "q_stream_band_cdc" -> streamBandCdcSql,
-    "q_stream_hash_cdc" -> streamHashCdcSql,
-    "q_stream_video_time" -> streamVideoTimeSql,
-    "q_mixed_pipeline" -> mixedPipelineSql,
-    "q_text_normalize" -> textNormalizeSql,
-    "q_bpe_pairs" -> bpePairsSql,
-    "q_vocab_coverage" -> vocabCoverageSql,
-    "q_contamination" -> contaminationSql,
-    "q_contamination_other" -> contaminationOtherSql,
-    "q_skipping_scan" -> skippingScanSql,
-    "q_profile_stats" -> profileStatsSql,
-    "q_fuzzy_match" -> fuzzyMatchSql,
-    "q_pack_sequences" -> packSequencesSql,
-    "q_pack_spans" -> packSpansSql,
-    "q_chunk_docs" -> chunkDocsSql,
-    "q_dedup_spans" -> dedupSpansSql,
-    "q_dedup_substrings" -> dedupSubstringsSql,
-    "q_dedup_substrings_perdoc" -> dedupSubstringsPerdocSql,
-    "q_dedup_lines" -> dedupLinesSql,
-    "q_dedup_paragraphs" -> dedupParagraphsSql,
-    "q_dedup_canonical" -> dedupCanonicalSql,
-    "q_batch_by_length" -> batchByLengthSql,
-    "q_join_dpp" -> joinDppSql,
-    "q_join_runtime_filter" -> joinRuntimeFilterSql,
-    "q_join_skew_aqe" -> joinSkewAqeSql,
-    "q_join_bucketed" -> joinBucketedSql,
-    "q_bm25_topk" -> bm25TopKSql,
-    "q_tfidf_keywords" -> tfidfKeywordsSql,
-    "q_quality_gopher" -> qualityGopherSql,
-    "q_quality_blocklist" -> qualityBlocklistSql,
-    "q_text_html" -> textHtmlSql,
-    "q_text_pdf" -> textPdfSql,
-    "q_text_pdf_cid" -> textPdfCidSql,
-    "q_text_pdf_xref" -> textPdfXrefSql,
-    "q_text_pdf_extends" -> textPdfExtendsSql,
-    "q_quality_authority" -> qualityAuthoritySql,
-    "q_mixture_authority" -> mixtureAuthoritySql,
-    "q_filter_funnel" -> filterFunnelSql,
-    "q_text_urls" -> textUrlsSql,
-    "q_domain_cap" -> domainCapSql,
-    "q_quality_repetition" -> qualityRepetitionSql,
-    "q_select_weighted" -> selectWeightedSql,
-    "q_dsir_weights" -> dsirWeightsSql,
-    "q_dedup_semantic_lsh" -> dedupSemanticLshSql,
-    "q_retrieval_hybrid" -> retrievalHybridSql,
-    "q_lm_perplexity" -> lmPerplexitySql,
-    "q_join_range" -> joinRangeSql,
-    "q_join_interval_overlap" -> joinIntervalOverlapSql,
-    "q_curation_pipeline" -> curationPipelineSql,
-    "q_sim_matryoshka" -> simMatryoshkaSql,
-    "q_corpus_datasheet" -> corpusDatasheetSql,
-    "q_retrieval_negatives" -> retrievalNegativesSql,
-    "q_diversity_ngrams" -> diversityNgramsSql,
-    "q_shards_approx" -> shardsApproxSql,
-    "q_heavy_hitters_approx" -> heavyHittersApproxSql,
-    "q_quality_c4" -> qualityC4Sql,
-    "q_datasheet_approx" -> corpusDatasheetSql,
-    "q_sketch_column" -> sketchColumnSql,
-    "q_sketch_profile" -> sketchProfileSql,
-    "q_sketch_cms" -> sketchCmsSql,
-    "q_assembly_pipeline" -> assemblyPipelineSql,
+  /** Every query of this object, declared once: its name, its body
+    * and its static DuckDB oracle, if it has one. */
+  val registry: Seq[(String, Q, Option[String])] = Seq(
+    ("q_dedup_exact", dedupExact, Some(dedupExactSql)),
+    ("q_dedup_minhash_sig", dedupMinhashSig, Some(dedupMinhashSigSql)),
+    ("q_dedup_lsh_buckets", dedupLshBuckets, Some(dedupLshBucketsSql)),
+    ("q_dedup_jaccard", dedupJaccard, Some(dedupJaccardSql)),
+    ("q_dedup_neardup", dedupNeardup, Some(dedupNeardupSql)),
+    ("q_dedup_components", dedupComponents, Some(dedupComponentsSql)),
+    ("q_dedup_apply", dedupApply, Some(dedupApplySql)),
+    ("q_dedup_simhash", dedupSimhash, Some(dedupSimhashSql)),
+    ("q_dedup_embedding", dedupEmbedding, Some(dedupEmbeddingSql)),
+    ("q_sim_topk", simTopK, Some(simTopKSql)),
+    ("q_sim_ivf", simIvf, None),
+    ("q_sim_ivf_partitioned", simIvfPartitionedQ, None),
+    ("q_sim_ivf_update", simIvfUpdateQ, None),
+    ("q_stream_ivf_cdc", streamIvfCdcQ, None),
+    ("q_stream_ivf_indexed", streamIvfIndexedQ, None),
+    ("q_stream_all_indexed", streamAllIndexedQ, None),
+    ("q_sim_pq", simPq, None),
+    ("q_sim_sq8", simSq8, Some(simSq8Sql)),
+    ("q_text_sentences", textSentencesQ, Some(textSentencesSql)),
+    ("q_unicode_sentences", unicodeSentencesQ, Some(unicodeSentencesSql)),
+    ("q_text_langid", textLangid, Some(textLangidSql)),
+    ("q_text_quality", textQuality, Some(textQualitySql)),
+    ("q_text_tokens", textTokens, Some(textTokensSql)),
+    ("q_text_repetition", textRepetition, Some(textRepetitionSql)),
+    ("q_text_pii", textPii, Some(textPiiSql)),
+    ("q_text_fingerprint", textFingerprint, Some(textFingerprintSql)),
+    ("q_unicode_stats", unicodeStats, Some(unicodeStatsSql)),
+    ("q_unicode_script", unicodeScript, Some(unicodeScriptSql)),
+    ("q_unicode_dedup", unicodeDedup, Some(unicodeDedupSql)),
+    ("q_unicode_lines", unicodeLines, Some(unicodeLinesSql)),
+    ("q_unicode_tokens", unicodeTokens, Some(unicodeTokensSql)),
+    ("q_unicode_fingerprint", unicodeFingerprint, Some(unicodeFingerprintSql)),
+    ("q_unicode_csv", unicodeCsv, Some(unicodeRoundtripSql)),
+    ("q_unicode_jsonl", unicodeJsonl, Some(unicodeRoundtripSql)),
+    ("q_unicode_langid", unicodeLangid, Some(unicodeLangidSql)),
+    ("q_unicode_gopher", unicodeGopher, Some(unicodeGopherSql)),
+    ("q_unicode_c4", unicodeC4, Some(unicodeC4Sql)),
+    ("q_unicode_nfc", unicodeNfc, Some(unicodeNfcSql)),
+    ("q_unicode_c4_cjk", unicodeC4Cjk, Some(unicodeC4CjkSql)),
+    ("q_unicode_clean", unicodeClean, Some(unicodeCleanSql)),
+    ("q_unicode_clean_ml", unicodeCleanMl, Some(unicodeCleanMlSql)),
+    ("q_unicode_graphemes", unicodeGraphemes, Some(unicodeGraphemesSql)),
+    ("q_stream_script", streamScriptQ, Some(streamScriptSql)),
+    ("q_retrieval_metrics", retrievalMetricsQ, Some(retrievalMetricsSql)),
+    ("q_bpe_apply_bytes", bpeApplyBytesQ, None),
+    ("q_tokenizer_fertility", tokenizerFertilityQ, None),
+    ("q_text_langid_model", textLangidModelQ, None),
+    ("q_langid_mixture", langidMixtureQ, None),
+    ("q_bpe_apply_pretok", bpeApplyPretokQ, None),
+    ("q_tokenizer_fertility_pretok", tokenizerFertilityPretokQ, None),
+    ("q_unigram_apply", unigramApplyQ, Some(unigramApplySql)),
+    ("q_unigram_fertility", unigramFertilityQ, Some(unigramFertilitySql)),
+    ("q_unigram_train", unigramTrainQ, None),
+    ("q_unigram_train_soft", unigramTrainSoftQ, None),
+    ("q_multimodal_meta", multimodalMeta, Some(multimodalMetaSql)),
+    ("q_dedup_image", dedupImageQ, Some(dedupImageSql)),
+    ("q_dedup_audio", dedupAudioQ, Some(dedupAudioSql)),
+    ("q_stream_window", streamWindow, Some(streamWindowSql)),
+    ("q_stream_contamination", streamContaminationQ,
+      Some(streamContaminationSql)),
+    ("q_stream_semantic", streamSemanticQ, None),
+    ("q_stream_neardup", streamNeardupQ, Some(streamNeardupSql)),
+    ("q_stream_quota", streamQuotaQ, Some(streamQuotaSql)),
+    ("q_stream_join", streamJoin, Some(streamJoinSql)),
+    ("q_sessionize", sessionizeQ, Some(sessionizeSql)),
+    ("q_sessionize_timers", sessionizeTimersQ, Some(sessionizeTimersSql)),
+    ("q_stream_dedup", streamDedupQ, Some(streamDedupSql)),
+    ("q_stream_totals", streamTotalsQ, Some(streamTotalsSql)),
+    ("q_stream_join_outer", streamJoinOuterQ, Some(streamJoinOuterSql)),
+    ("q_stream_enrich", streamEnrichQ, Some(streamEnrichSql)),
+    ("q_dedup_minhash_grouped", dedupMinhashGrouped,
+      Some(dedupMinhashGroupedSql)),
+    ("q_dedup_incremental", dedupIncremental, Some(dedupIncrementalSql)),
+    ("q_dedup_index_update", dedupIndexUpdateQ, Some(dedupIndexUpdateSql)),
+    ("q_dedup_hash_index", dedupHashIndexQ, Some(dedupHashIndexSql)),
+    ("q_stream_image_gate", streamImageGateQ, Some(streamImageGateSql)),
+    ("q_stream_hash_indexed", streamHashIndexedQ, Some(streamHashIndexedSql)),
+    ("q_stream_band_indexed", streamBandIndexedQ, Some(streamBandIndexedSql)),
+    ("q_media_pipeline", mediaPipelineQ, Some(mediaPipelineSql)),
+    ("q_doc_pipeline", docPipelineQ, Some(docPipelineSql)),
+    ("q_stream_audio_gate", streamAudioGateQ, Some(streamAudioGateSql)),
+    ("q_stream_video_gate", streamVideoGateQ, Some(streamVideoGateSql)),
+    ("q_dedup_video", dedupVideoQ, Some(dedupVideoSql)),
+    ("q_dedup_video_drift", dedupVideoDriftQ, Some(dedupVideoDriftSql)),
+    ("q_dedup_video_time", dedupVideoTimeQ, Some(dedupVideoTimeSql)),
+    ("q_stream_band_cdc", streamBandCdcQ, Some(streamBandCdcSql)),
+    ("q_stream_hash_cdc", streamHashCdcQ, Some(streamHashCdcSql)),
+    ("q_stream_video_time", streamVideoTimeQ, Some(streamVideoTimeSql)),
+    ("q_mixed_pipeline", mixedPipelineQ, Some(mixedPipelineSql)),
+    ("q_text_normalize", textNormalize, Some(textNormalizeSql)),
+    ("q_bpe_pairs", bpePairs, Some(bpePairsSql)),
+    ("q_bpe_apply", bpeApplyQ, None),
+    ("q_vocab_coverage", vocabCoverageQ, Some(vocabCoverageSql)),
+    ("q_contamination", contaminationQ, Some(contaminationSql)),
+    ("q_contamination_other", contaminationOtherQ, Some(contaminationOtherSql)),
+    ("q_skipping_scan", skippingScanQ, Some(skippingScanSql)),
+    ("q_profile_stats", profileStats, Some(profileStatsSql)),
+    ("q_fuzzy_match", fuzzyMatch, Some(fuzzyMatchSql)),
+    ("q_pack_sequences", packSequencesQ, Some(packSequencesSql)),
+    ("q_pack_spans", packSpansQ, Some(packSpansSql)),
+    ("q_chunk_docs", chunkDocsQ, Some(chunkDocsSql)),
+    ("q_dedup_spans", dedupSpansQ, Some(dedupSpansSql)),
+    ("q_dedup_substrings", dedupSubstringsQ, Some(dedupSubstringsSql)),
+    ("q_dedup_substrings_perdoc", dedupSubstringsPerdocQ,
+      Some(dedupSubstringsPerdocSql)),
+    ("q_dedup_lines", dedupLinesQ, Some(dedupLinesSql)),
+    ("q_dedup_paragraphs", dedupParagraphsQ, Some(dedupParagraphsSql)),
+    ("q_text_compression", textCompressionQ, None),
+    ("q_dedup_canonical", dedupCanonicalQ, Some(dedupCanonicalSql)),
+    ("q_batch_by_length", batchByLengthQ, Some(batchByLengthSql)),
+    ("q_sim_ivfpq", simIvfPq, None),
+    ("q_sim_ivfpq_residual", simIvfPqResidual, None),
+    ("q_sim_ivfpq_rerank", simIvfPqRerank, None),
+    ("q_join_dpp", joinDppQ, Some(joinDppSql)),
+    ("q_join_runtime_filter", joinRuntimeFilterQ, Some(joinRuntimeFilterSql)),
+    ("q_join_skew_aqe", joinSkewAqeQ, Some(joinSkewAqeSql)),
+    ("q_join_bucketed", joinBucketedQ, Some(joinBucketedSql)),
+    ("q_bm25_topk", bm25TopKQ, Some(bm25TopKSql)),
+    ("q_tfidf_keywords", tfidfKeywordsQ, Some(tfidfKeywordsSql)),
+    ("q_quality_gopher", qualityGopher, Some(qualityGopherSql)),
+    ("q_quality_blocklist", qualityBlocklistQ, Some(qualityBlocklistSql)),
+    ("q_text_html", textHtmlQ, Some(textHtmlSql)),
+    ("q_text_pdf", textPdfQ, Some(textPdfSql)),
+    ("q_text_pdf_cid", textPdfCidQ, Some(textPdfCidSql)),
+    ("q_text_pdf_xref", textPdfXrefQ, Some(textPdfXrefSql)),
+    ("q_text_pdf_extends", textPdfExtendsQ, Some(textPdfExtendsSql)),
+    ("q_filter_funnel", filterFunnelQ, Some(filterFunnelSql)),
+    ("q_quality_authority", qualityAuthorityQ, Some(qualityAuthoritySql)),
+    ("q_mixture_authority", mixtureAuthorityQ, Some(mixtureAuthoritySql)),
+    ("q_text_urls", textUrlsQ, Some(textUrlsSql)),
+    ("q_domain_cap", domainCapQ, Some(domainCapSql)),
+    ("q_quality_repetition", qualityRepetitionQ, Some(qualityRepetitionSql)),
+    ("q_select_weighted", selectWeightedQ, Some(selectWeightedSql)),
+    ("q_dsir_weights", dsirWeightsQ, Some(dsirWeightsSql)),
+    ("q_dedup_semantic", dedupSemanticQ, None),
+    ("q_dedup_semantic_lsh", dedupSemanticLshQ, Some(dedupSemanticLshSql)),
+    ("q_retrieval_hybrid", retrievalHybridQ, Some(retrievalHybridSql)),
+    ("q_lm_perplexity", lmPerplexityQ, Some(lmPerplexitySql)),
+    ("q_join_range", joinRangeQ, Some(joinRangeSql)),
+    ("q_join_interval_overlap", joinIntervalOverlapQ,
+      Some(joinIntervalOverlapSql)),
+    ("q_curation_pipeline", curationPipelineQ, Some(curationPipelineSql)),
+    ("q_sim_matryoshka", simMatryoshkaQ, Some(simMatryoshkaSql)),
+    ("q_corpus_datasheet", corpusDatasheetQ, Some(corpusDatasheetSql)),
+    ("q_retrieval_negatives", retrievalNegativesQ, Some(retrievalNegativesSql)),
+    ("q_diversity_ngrams", diversityNgramsQ, Some(diversityNgramsSql)),
+    ("q_shards_approx", shardsApproxQ, Some(shardsApproxSql)),
+    ("q_heavy_hitters_approx", heavyHittersApproxQ,
+      Some(heavyHittersApproxSql)),
+    ("q_quality_c4", qualityC4Q, Some(qualityC4Sql)),
+    ("q_cluster_balance", clusterBalanceQ, None),
+    ("q_select_diverse", selectDiverseQ, None),
+    ("q_datasheet_approx", datasheetApproxQ, Some(corpusDatasheetSql)),
+    ("q_sketch_column", sketchColumnQ, Some(sketchColumnSql)),
+    ("q_sketch_profile", sketchProfileQ, Some(sketchProfileSql)),
+    ("q_sketch_cms", sketchCmsQ, Some(sketchCmsSql)),
+    ("q_assembly_pipeline", assemblyPipelineQ, Some(assemblyPipelineSql)),
   )
 }

@@ -1699,141 +1699,78 @@ object Queries {
 
   // ---- registry ----
 
-  val all: Map[String, Q] = Map(
-    "q_scan_project" -> scanProject,
-    "q_filter_notnull" -> filterNotNull,
-    "q_derived_when" -> derivedWhen,
-    "q_rename_drop" -> renameDrop,
-    "q_join_left" -> joinLeft,
-    "q_join_inner" -> joinInner,
-    "q_join_semi" -> joinSemi,
-    "q_join_anti" -> joinAnti,
-    "q_join_bloom" -> joinBloom,
-    "q_join_salted" -> joinSalted,
-    "q_join_asof" -> joinAsof,
-    "q_agg_sketch" -> aggSketch,
-    "q_agg_count" -> aggCount,
-    "q_agg_ratio" -> aggRatio,
-    "q_agg_avg" -> aggAvg,
-    "q_agg_quantiles" -> aggQuantiles,
-    "q_agg_distinct" -> aggDistinct,
-    "q_agg_rollup" -> aggRollup,
-    "q_window_percentile" -> windowPercentile,
-    "q_window_topk" -> windowTopK,
-    "q_sort_limit" -> sortLimit,
-    "q_sample_stratified" -> sampleStratified,
-    "q_clean_basic" -> cleanBasic,
-    "q_clean_full" -> cleanFull,
-    "q_label_encode" -> labelEncode,
-    "q_label_decode" -> labelDecode,
-    "q_sample_rates" -> sampleRates,
-    "q_split_train" -> splitTrain,
-    "q_sample_fixed_n" -> sampleFixedN,
-    "q_sample_exact_n" -> sampleExactNQ,
-    "q_ml_score" -> mlScore,
-    "q_ml_eval_summary" -> mlEvalSummary,
-    "q_ml_planted_accuracy" -> mlPlantedAccuracy,
-    "q_quality_classifier" -> qualityClassifierQ,
-    "q_tuning_halving" -> tuningHalving,
-    "q_training_file" -> trainingFileRoundtrip,
-    "q_featurize_counts" -> featurizeCounts,
-    "q_join_cross" -> joinCross,
-    "q_agg_cube" -> aggCube,
-    "q_histogram" -> histogram,
-    "q_bround" -> broundQ,
-    "q_date_parts" -> dateParts,
-    "q_clean_udf" -> cleanUdfSql_q,
-    "q_pivot" -> pivotQ,
-    "q_set_ops" -> setOps,
-    "q_window_running" -> windowRunning,
-    "q_agg_collect" -> aggCollect,
-    "q_jsonl_roundtrip" -> jsonlRoundtrip,
-    "q_orc_roundtrip" -> orcRoundtrip,
-    "q_csv_roundtrip" -> csvRoundtrip,
-    "q_agg_pushdown" -> aggPushdown,
-    "q_global_ids" -> globalIds,
-    "q_sample_temperature" -> sampleTemperatureQ,
-    "q_mixture_rates" -> mixtureRatesQ,
-    "q_mixture_sample" -> mixtureSampleQ,
-    "q_shard_shuffle" -> shardShuffleQ,
-    "q_shard_jsonl" -> shardJsonlQ,
-    "q_shard_shuffle_epoch" -> shardShuffleEpochQ,
-    "q_window_ntile" -> windowNtile,
-    "q_publish" -> publishRoundtrip,
-    "q_publish_timetravel" -> publishTimetravel,
-    "q_merge_upsert" -> mergeUpsert,
-    "q_corpus_diff" -> corpusDiffQ,
-    "q_publish_diff" -> publishDiffQ,
-    "q_expectations" -> expectationsQ,
-    "q_expectations_replay" -> expectationsReplayQ,
-    "q_shard_curriculum" -> shardCurriculumQ,
-    "q_zorder_key" -> zorderKey,
-    "q_skew_profile" -> skewProfile,
-    "q_window_range" -> windowRange,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_scan_project" -> scanProjectSql,
-    "q_filter_notnull" -> filterNotNullSql,
-    "q_derived_when" -> derivedWhenSql,
-    "q_rename_drop" -> renameDropSql,
-    "q_join_left" -> joinLeftSql,
-    "q_join_inner" -> joinInnerSql,
-    "q_join_semi" -> joinSemiSql,
-    "q_join_anti" -> joinAntiSql,
-    "q_join_bloom" -> joinBloomSql,
-    "q_join_salted" -> joinSaltedSql,
-    "q_join_asof" -> joinAsofSql,
-    "q_agg_count" -> aggCountSql,
-    "q_agg_ratio" -> aggRatioSql,
-    "q_agg_avg" -> aggAvgSql,
-    "q_agg_quantiles" -> aggQuantilesSql,
-    "q_agg_distinct" -> aggDistinctSql,
-    "q_agg_rollup" -> aggRollupSql,
-    "q_window_percentile" -> windowPercentileSql,
-    "q_window_topk" -> windowTopKSql,
-    "q_sort_limit" -> sortLimitSql,
-    "q_sample_stratified" -> sampleStratifiedSql,
-    "q_clean_basic" -> cleanBasicSql,
-    "q_label_encode" -> labelEncodeSql,
-    "q_label_decode" -> labelDecodeSql,
-    "q_sample_rates" -> sampleRatesSql,
-    "q_split_train" -> splitTrainSql,
-    "q_sample_fixed_n" -> sampleFixedNSql,
-    "q_sample_exact_n" -> sampleExactNSql,
-    "q_training_file" -> trainingFileRoundtripSql,
-    "q_featurize_counts" -> featurizeCountsSql,
-    "q_join_cross" -> joinCrossSql,
-    "q_agg_cube" -> aggCubeSql,
-    "q_histogram" -> histogramSql,
-    "q_bround" -> broundSql,
-    "q_date_parts" -> datePartsSql,
-    "q_pivot" -> pivotSql,
-    "q_set_ops" -> setOpsSql,
-    "q_window_running" -> windowRunningSql,
-    "q_agg_collect" -> aggCollectSql,
-    "q_jsonl_roundtrip" -> jsonlRoundtripSql,
-    "q_orc_roundtrip" -> orcRoundtripSql,
-    "q_csv_roundtrip" -> csvRoundtripSql,
-    "q_agg_pushdown" -> aggPushdownSql,
-    "q_global_ids" -> globalIdsSql,
-    "q_sample_temperature" -> sampleTemperatureSql,
-    "q_mixture_rates" -> mixtureRatesSql,
-    "q_mixture_sample" -> mixtureSampleSql,
-    "q_shard_shuffle" -> shardShuffleSql,
-    "q_shard_jsonl" -> shardJsonlSql,
-    "q_shard_shuffle_epoch" -> shardShuffleEpochSql,
-    "q_window_ntile" -> windowNtileSql,
-    "q_publish" -> publishRoundtripSql,
-    "q_publish_timetravel" -> publishTimetravelSql,
-    "q_merge_upsert" -> mergeUpsertSql,
-    "q_corpus_diff" -> corpusDiffSql,
-    "q_publish_diff" -> publishDiffSql,
-    "q_expectations" -> expectationsSql,
-    "q_expectations_replay" -> expectationsReplaySql,
-    "q_shard_curriculum" -> shardCurriculumSql,
-    "q_zorder_key" -> zorderKeySql,
-    "q_skew_profile" -> skewProfileSql,
-    "q_window_range" -> windowRangeSql,
+  /** Every query of this object, declared once: its name, its body
+    * and its static DuckDB oracle, if it has one. */
+  val registry: Seq[(String, Q, Option[String])] = Seq(
+    ("q_scan_project", scanProject, Some(scanProjectSql)),
+    ("q_filter_notnull", filterNotNull, Some(filterNotNullSql)),
+    ("q_derived_when", derivedWhen, Some(derivedWhenSql)),
+    ("q_rename_drop", renameDrop, Some(renameDropSql)),
+    ("q_join_left", joinLeft, Some(joinLeftSql)),
+    ("q_join_inner", joinInner, Some(joinInnerSql)),
+    ("q_join_semi", joinSemi, Some(joinSemiSql)),
+    ("q_join_anti", joinAnti, Some(joinAntiSql)),
+    ("q_join_bloom", joinBloom, Some(joinBloomSql)),
+    ("q_join_salted", joinSalted, Some(joinSaltedSql)),
+    ("q_join_asof", joinAsof, Some(joinAsofSql)),
+    ("q_agg_sketch", aggSketch, None),
+    ("q_agg_count", aggCount, Some(aggCountSql)),
+    ("q_agg_ratio", aggRatio, Some(aggRatioSql)),
+    ("q_agg_avg", aggAvg, Some(aggAvgSql)),
+    ("q_agg_quantiles", aggQuantiles, Some(aggQuantilesSql)),
+    ("q_agg_distinct", aggDistinct, Some(aggDistinctSql)),
+    ("q_agg_rollup", aggRollup, Some(aggRollupSql)),
+    ("q_window_percentile", windowPercentile, Some(windowPercentileSql)),
+    ("q_window_topk", windowTopK, Some(windowTopKSql)),
+    ("q_sort_limit", sortLimit, Some(sortLimitSql)),
+    ("q_sample_stratified", sampleStratified, Some(sampleStratifiedSql)),
+    ("q_clean_basic", cleanBasic, Some(cleanBasicSql)),
+    ("q_clean_full", cleanFull, None),
+    ("q_label_encode", labelEncode, Some(labelEncodeSql)),
+    ("q_label_decode", labelDecode, Some(labelDecodeSql)),
+    ("q_sample_rates", sampleRates, Some(sampleRatesSql)),
+    ("q_split_train", splitTrain, Some(splitTrainSql)),
+    ("q_sample_fixed_n", sampleFixedN, Some(sampleFixedNSql)),
+    ("q_sample_exact_n", sampleExactNQ, Some(sampleExactNSql)),
+    ("q_ml_score", mlScore, None),
+    ("q_ml_eval_summary", mlEvalSummary, None),
+    ("q_ml_planted_accuracy", mlPlantedAccuracy, None),
+    ("q_quality_classifier", qualityClassifierQ, None),
+    ("q_tuning_halving", tuningHalving, None),
+    ("q_training_file", trainingFileRoundtrip, Some(trainingFileRoundtripSql)),
+    ("q_featurize_counts", featurizeCounts, Some(featurizeCountsSql)),
+    ("q_join_cross", joinCross, Some(joinCrossSql)),
+    ("q_agg_cube", aggCube, Some(aggCubeSql)),
+    ("q_histogram", histogram, Some(histogramSql)),
+    ("q_bround", broundQ, Some(broundSql)),
+    ("q_date_parts", dateParts, Some(datePartsSql)),
+    ("q_clean_udf", cleanUdfSql_q, None),
+    ("q_pivot", pivotQ, Some(pivotSql)),
+    ("q_set_ops", setOps, Some(setOpsSql)),
+    ("q_window_running", windowRunning, Some(windowRunningSql)),
+    ("q_agg_collect", aggCollect, Some(aggCollectSql)),
+    ("q_jsonl_roundtrip", jsonlRoundtrip, Some(jsonlRoundtripSql)),
+    ("q_orc_roundtrip", orcRoundtrip, Some(orcRoundtripSql)),
+    ("q_csv_roundtrip", csvRoundtrip, Some(csvRoundtripSql)),
+    ("q_agg_pushdown", aggPushdown, Some(aggPushdownSql)),
+    ("q_global_ids", globalIds, Some(globalIdsSql)),
+    ("q_sample_temperature", sampleTemperatureQ, Some(sampleTemperatureSql)),
+    ("q_mixture_rates", mixtureRatesQ, Some(mixtureRatesSql)),
+    ("q_mixture_sample", mixtureSampleQ, Some(mixtureSampleSql)),
+    ("q_shard_shuffle", shardShuffleQ, Some(shardShuffleSql)),
+    ("q_shard_jsonl", shardJsonlQ, Some(shardJsonlSql)),
+    ("q_shard_shuffle_epoch", shardShuffleEpochQ, Some(shardShuffleEpochSql)),
+    ("q_window_ntile", windowNtile, Some(windowNtileSql)),
+    ("q_publish", publishRoundtrip, Some(publishRoundtripSql)),
+    ("q_publish_timetravel", publishTimetravel, Some(publishTimetravelSql)),
+    ("q_merge_upsert", mergeUpsert, Some(mergeUpsertSql)),
+    ("q_corpus_diff", corpusDiffQ, Some(corpusDiffSql)),
+    ("q_publish_diff", publishDiffQ, Some(publishDiffSql)),
+    ("q_expectations", expectationsQ, Some(expectationsSql)),
+    ("q_expectations_replay", expectationsReplayQ, Some(expectationsReplaySql)),
+    ("q_shard_curriculum", shardCurriculumQ, Some(shardCurriculumSql)),
+    ("q_zorder_key", zorderKey, Some(zorderKeySql)),
+    ("q_skew_profile", skewProfile, Some(skewProfileSql)),
+    ("q_window_range", windowRange, Some(windowRangeSql)),
   )
 }

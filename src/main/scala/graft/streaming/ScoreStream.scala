@@ -424,9 +424,8 @@ object ScoreStream {
     * hashes are computed once though probed twice (narrowing log +
     * match). Output follows the [[idempotentParquetSink]] contract
     * (per-batch overwrite → exactly-once in effect); the per-batch
-    * narrowing lands in `outDir/_probe/batch-<id>.json`
-    * (`{"batch":B,"probed":K,"n_prefix":N}`, overwritten on replay)
-    * so callers — and the driver query's in-query gate — can PROVE
+    * narrowing goes to the `_probe` batch log ([[writeBatchLog]]) so
+    * callers — and the serving query's in-query gate — can PROVE
     * each trigger pruned the scan instead of trusting the plan. */
   def indexedHashGateSink(arrivalHashes: DataFrame, indexDir: String,
                           idCol: String, hashCol: String,
@@ -453,18 +452,54 @@ object ScoreStream {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-  /** The per-batch record every indexed sink writes:
-    * `dir/<kind>/batch-<id>.json` holding `{"batch":<id>,<fields>}`
-    * (`_probe`: the probed-dir count and the layout's total; `_maint`:
-    * the touched-dir count and the total) — overwritten on replay, so
-    * the evidence stays exactly-once alongside the batch output. */
-  private def writeBatchLog(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, kind: String, batchId: Long,
-                            fields: String): Unit = {
+  /** The batch log every indexed sink writes, one record per
+    * micro-batch at `dir/<kind>/batch-<id>.json`, overwritten on
+    * replay so the evidence stays exactly-once alongside the batch
+    * output. A serve sink writes kind `_probe` as
+    * `{"batch":B,"probed":K,"n_prefix":N}`: it opened K of the
+    * layout's N dirs. A maintain sink writes kind `_maint` as
+    * `{"batch":B,"touched":K,"n_prefix":N}`: it rewrote K of N.
+    * [[indexedAllGateSink]] serves several families per batch and
+    * writes `{"batch":B,"families":{"band":{"probed":K,"n_prefix":N},
+    * ...}}`. [[readBatchLogs]] reads every form back. */
+  private[graft] def writeBatchLog(spark: org.apache.spark.sql.SparkSession,
+                                   dir: String, kind: String, batchId: Long,
+                                   fields: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$kind/batch-$batchId.json")
     val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
     try out.write(s"""{"batch":$batchId,$fields}""".getBytes("UTF-8"))
     finally out.close()
+  }
+
+  /** One [[writeBatchLog]] record: per family, the probed or touched
+    * dir count and the layout's total. A single-family record reads
+    * as the one family `""`. */
+  final case class BatchLog(batch: Long, families: Map[String, (Long, Long)])
+
+  /** Every [[writeBatchLog]] record of `kind` under `dir`, by batch
+    * id, read through the same Hadoop filesystem the writer uses. */
+  def readBatchLogs(spark: SparkSession, dir: String,
+                    kind: String): Seq[BatchLog] = {
+    import scala.jdk.CollectionConverters._
+    val root = new org.apache.hadoop.fs.Path(s"$dir/$kind")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def counts(n: com.fasterxml.jackson.databind.JsonNode): (Long, Long) =
+      (Option(n.get("probed")).getOrElse(n.get("touched")).asLong,
+        n.get("n_prefix").asLong)
+    fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".json"))
+      .map { p =>
+        val in = fs.open(p)
+        val j = try json.readTree(in) finally in.close()
+        val fams = Option(j.get("families")) match {
+          case Some(f) =>
+            f.properties().asScala.map(e => e.getKey -> counts(e.getValue)).toMap
+          case None => Map("" -> counts(j))
+        }
+        BatchLog(j.get("batch").asLong, fams)
+      }
+      .sortBy(_.batch)
   }
 
   /** Streaming TEXT near-dup gate served from a STORED
@@ -482,8 +517,9 @@ object ScoreStream {
     * never read. The batch pins with localCheckpoint so arrival
     * shingling runs once though probed twice (narrowing log + match).
     * Output follows the [[idempotentParquetSink]] contract; the
-    * per-batch narrowing lands in `outDir/_probe/batch-<id>.json` so
-    * callers can PROVE each trigger pruned the scan. */
+    * per-batch narrowing goes to the `_probe` batch log
+    * ([[writeBatchLog]]) so callers can PROVE each trigger pruned the
+    * scan. */
   def indexedBandGateSink(arrivalTexts: DataFrame, indexDir: String,
                           idCol: String, textCol: String,
                           outDir: String, checkpoint: String,
@@ -528,10 +564,9 @@ object ScoreStream {
     * effect. The layout constants come from the index's OWN marker
     * (here `_graft_band_layout`, read per batch by `updateBandIndex`)
     * — a sink cannot band or assign new rows differently than the
-    * stored rows. The per-batch narrowing evidence lands in
-    * `logDir/_maint/batch-<id>.json` (`{"batch":B,"touched":K,
-    * "n_prefix":N}`, overwritten on replay) so callers can PROVE
-    * each trigger rewrote a slice, not the index. */
+    * stored rows. The per-batch narrowing evidence goes to the
+    * `_maint` batch log under `logDir` ([[writeBatchLog]]) so callers
+    * can PROVE each trigger rewrote a slice, not the index. */
   def bandIndexMaintainSink(changes: DataFrame, indexDir: String,
                             textCol: String, idCol: String,
                             logDir: String, checkpoint: String,
@@ -582,9 +617,9 @@ object ScoreStream {
     * OWN layout marker. Every query's rows complete within its own
     * batch (the per-query window never crosses arrivals), so
     * batching never splits a result. Output follows the
-    * [[idempotentParquetSink]] contract; per-batch narrowing lands
-    * in `outDir/_probe/batch-<id>.json` so each trigger can PROVE it
-    * pruned the index scan. */
+    * [[idempotentParquetSink]] contract; per-batch narrowing goes to
+    * the `_probe` batch log ([[writeBatchLog]]) so each trigger can
+    * PROVE it pruned the index scan. */
   def indexedIvfGateSink(queryVecs: DataFrame, indexDir: String,
                          idCol: String, vecCol: String, k: Int,
                          outDir: String, checkpoint: String,
@@ -633,8 +668,8 @@ object ScoreStream {
 
   /** The foreachBatch body the three maintain sinks share: `apply`
     * maintains the index from one micro-batch and returns its touched
-    * dir count and the layout's total, logged to
-    * `logDir/_maint/batch-<id>.json`. */
+    * dir count and the layout's total, logged to the `_maint` batch
+    * log ([[writeBatchLog]]). */
   private def indexMaintainSink(changes: DataFrame, logDir: String,
                                 checkpoint: String)(
       apply: DataFrame => (Int, Long)): org.apache.spark.sql.streaming.StreamingQuery =
@@ -661,9 +696,9 @@ object ScoreStream {
     * normalized output (`family`, id, `neighbor_id`, `metric` DOUBLE:
     * est_jaccard / hamming / cosine) writes per-batch-overwrite
     * (exactly-once in effect); the per-family narrowing evidence
-    * lands in `outDir/_probe/batch-<id>.json` as
-    * `{"batch":B,"families":{"band":{"probed":K,"n_prefix":N},...}}`
-    * so each trigger PROVES every family pruned its scan. All three
+    * goes to the `_probe` batch log in its `"families"` form
+    * ([[writeBatchLog]]) so each trigger PROVES every family pruned
+    * its scan. All three
     * indexes must be keyed by `idCol` (the serve functions resolve
     * the stored id column under the probe name) — one shared id
     * namespace, the natural contract for a single mixed-modality

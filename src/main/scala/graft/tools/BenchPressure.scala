@@ -72,7 +72,7 @@ object BenchPressure {
       // every unreferenced column — packSequences' window (and any
       // query's expensive projection) would be optimized away and the
       // "pressure" run would measure nothing
-      val rows = graft.ops.ExtQueries.all(name)(spark, sfDir)
+      val rows = graft.SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.toRdd.count()
       val sec = (System.nanoTime() - t0) / 1e9
       // listener events drain asynchronously; settle before reading

@@ -1569,6 +1569,11 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
           col("doc_id").as("__seed"), lit(false).as("__pert")),
         "__seed", "__pert").select("doc_id", "payload"), "payload")
       .select("doc_id", "dhash")))
+    val cents = graft.ops.Artifacts.only[Array[Array[Double]]]("ivf_cents")
+    assert(cents.isDefined)
+    assert(cents.get.map(_.toSeq).toSeq == Similarity.kmeansCentroids(
+      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+      16, iters = 1).map(_.toSeq).toSeq)
   }
 
   test("scratch-dir wipe deletes symlinks without following them") {
@@ -2858,7 +2863,7 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
   test("corpus datasheet: planted duplicates move dup_rate by exactly their share") {
     import graft.ops.ExtQueries
     val dir = "/root/testdata/sf0.001"
-    val base = ExtQueries.all("q_corpus_datasheet")(spark, dir).head()
+    val base = graft.SparkEntry.queries("q_corpus_datasheet")(spark, dir).head()
     assert(base.getLong(0) > 0 && base.getLong(1) > 0)
     val baseDup = base.getDouble(4)
     // duplicate-free fixture slice: dup_rate 0 means distinct hashes

@@ -444,10 +444,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     drop("b.parquet", del)
     drop("c.parquet", ins)
     runOnce() // replays batch 0, then drains the remaining two waves
-    val logs = new java.io.File(s"$base/out/_maint").listFiles()
-      .map(_.getName).toSet
-    assert(Set("batch-0.json", "batch-1.json", "batch-2.json")
-      .subsetOf(logs), logs.toString)
+    val logs = ScoreStream.readBatchLogs(spark, s"$base/out", "_maint")
+      .map(_.batch).toSet
+    assert(Set(0L, 1L, 2L).subsetOf(logs), logs.toString)
     val post = graft.etl.Merge.applyCdc(docs,
       upd.unionByName(del).unionByName(ins), "doc_id")
     val rdir = s"$base/rebuild"
@@ -524,10 +523,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     drop("b.parquet", del)
     drop("c.parquet", ins)
     runOnce() // replays batch 0, then drains the remaining two waves
-    val logs = new java.io.File(s"$base/out/_maint").listFiles()
-      .map(_.getName).toSet
-    assert(Set("batch-0.json", "batch-1.json", "batch-2.json")
-      .subsetOf(logs), logs.toString)
+    val logs = ScoreStream.readBatchLogs(spark, s"$base/out", "_maint")
+      .map(_.batch).toSet
+    assert(Set(0L, 1L, 2L).subsetOf(logs), logs.toString)
     val postMedia = graft.etl.Merge.applyCdc(media,
       upd.unionByName(del).unionByName(ins), "doc_id")
     val rdir = s"$base/rebuild"
@@ -599,10 +597,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     drop("b.parquet", del)
     drop("c.parquet", ins)
     runOnce() // replays batch 0, then drains the remaining two waves
-    val logs = new java.io.File(s"$base/out/_maint").listFiles()
-      .map(_.getName).toSet
-    assert(Set("batch-0.json", "batch-1.json", "batch-2.json")
-      .subsetOf(logs), logs.toString)
+    val logs = ScoreStream.readBatchLogs(spark, s"$base/out", "_maint")
+      .map(_.batch).toSet
+    assert(Set(0L, 1L, 2L).subsetOf(logs), logs.toString)
     val applied = graft.etl.Merge.applyCdc(e,
       upd.unionByName(del).unionByName(ins), "vec_id")
     val rdir = s"$base/rebuild"
@@ -615,6 +612,27 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     assert(maintained.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(maintained).isEmpty,
       "restarted IVF maintenance diverged from an uninterrupted rebuild")
+  }
+
+  test("batch log: the reader returns what the writer wrote, replays and families included") {
+    val dir = java.nio.file.Files.createTempDirectory("batch log").toString
+    val families = """"families":{"band":{"probed":5,"n_prefix":256},""" +
+      """"hash":{"probed":9,"n_prefix":256},"ivf":{"probed":2,"n_prefix":16}}"""
+    ScoreStream.writeBatchLog(spark, dir, "_maint", 10, """"touched":1,"n_prefix":16""")
+    ScoreStream.writeBatchLog(spark, dir, "_maint", 2, """"touched":7,"n_prefix":16""")
+    // a replayed batch 2 overwrites its own record
+    ScoreStream.writeBatchLog(spark, dir, "_maint", 2, """"touched":3,"n_prefix":16""")
+    ScoreStream.writeBatchLog(spark, dir, "_probe", 0, families)
+    ScoreStream.writeBatchLog(spark, dir, "_probe", 1, """"probed":4,"n_prefix":1024""")
+    assert(ScoreStream.readBatchLogs(spark, dir, "_maint") == Seq(
+      ScoreStream.BatchLog(2, Map("" -> ((3L, 16L)))),
+      ScoreStream.BatchLog(10, Map("" -> ((1L, 16L))))))
+    assert(ScoreStream.readBatchLogs(spark, dir, "_probe") == Seq(
+      ScoreStream.BatchLog(0, Map("band" -> ((5L, 256L)), "hash" -> ((9L, 256L)),
+        "ivf" -> ((2L, 16L)))),
+      ScoreStream.BatchLog(1, Map("" -> ((4L, 1024L))))))
+    assert(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      s"$dir/_maint/batch-2.json")), "UTF-8") == """{"batch":2,"touched":3,"n_prefix":16}""")
   }
 
   test("index build, maintain sink and serve run under a path with a space") {
@@ -632,14 +650,21 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     /** One change batch through `sink`; returns its `_maint` log. */
     def maintain(family: String, batch: org.apache.spark.sql.DataFrame)(
         sink: (org.apache.spark.sql.DataFrame, String, String) =>
-          org.apache.spark.sql.streaming.StreamingQuery): String = {
+          org.apache.spark.sql.streaming.StreamingQuery): Seq[ScoreStream.BatchLog] = {
       val src = s"$base/$family src"
       batch.coalesce(1).write.mode("overwrite").parquet(src)
       val q = sink(spark.readStream.schema(batch.schema).parquet(src),
         s"$base/$family log", s"$base/$family chk")
       try q.awaitTermination() finally q.stop()
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        s"$base/$family log/_maint/batch-0.json")), "UTF-8")
+      ScoreStream.readBatchLogs(spark, s"$base/$family log", "_maint")
+    }
+    /** The log holds batch 0 alone, which rewrote 1 to `nDirs` of the
+      * layout's `nDirs` dirs. */
+    def batch0Of(nDirs: Long)(log: Seq[ScoreStream.BatchLog]): Boolean = log match {
+      case Seq(ScoreStream.BatchLog(0L, fams)) => fams.get("").exists {
+        case (touched, total) => total == nDirs && touched > 0 && touched <= nDirs
+      } && fams.size == 1
+      case _ => false
     }
 
     // band
@@ -655,7 +680,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       .localCheckpoint()
     val bLog = maintain("band", bChanges)(
       ScoreStream.bandIndexMaintainSink(_, bdir, "text", "doc_id", _, _))
-    assert(bLog.startsWith("""{"batch":0,"touched":"""), bLog)
+    assert(batch0Of(256)(bLog), bLog)
     val bArr = bChanges.where(col("op") =!= "d").select("doc_id", "text")
     val bPost = graft.etl.Merge.applyCdc(docs, bChanges, "doc_id")
     val bServed = rows(D.minhashMatchesIndexed(bdir, bArr, "doc_id", "text"))
@@ -675,7 +700,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       .toDF("doc_id", "payload", "seq", "op").localCheckpoint()
     val hLog = maintain("hash", hChanges)(
       ScoreStream.hashIndexMaintainSink(_, hdir, "doc_id", "payload", _, _))
-    assert(hLog.startsWith("""{"batch":0,"touched":"""), hLog)
+    assert(batch0Of(16)(hLog), hLog)
     val hArr = M.imageDHashes(hChanges.where(col("op") =!= "d"), "payload")
       .select("doc_id", "dhash")
     val hPost = M.imageDHashes(
@@ -699,7 +724,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       .localCheckpoint()
     val iLog = maintain("ivf", iChanges)(
       ScoreStream.ivfIndexMaintainSink(_, idir, "vec_id", "embedding", _, _))
-    assert(iLog.startsWith("""{"batch":0,"touched":"""), iLog)
+    assert(batch0Of(8)(iLog), iLog)
     val iArr = iChanges.where(col("op") =!= "d").select("vec_id", "embedding")
     val iPost = graft.etl.Merge.applyCdc(e, iChanges, "vec_id")
     val iServed = rows(S.ivfPartitionedTopK(idir, iArr, "vec_id", "embedding",
