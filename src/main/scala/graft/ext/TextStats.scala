@@ -852,75 +852,18 @@ object TextStats extends Serializable {
     * single whitespace token for the next round's [[pairCounts]]. */
   val BpeJoiner = "▁"
 
-  /** Full BPE vocabulary training: `merges` rounds of (distributed
-    * pair count → adopt the most frequent pair → merge its adjacent
-    * occurrences corpus-wide). The merge pass is ONE codegen'd
-    * `regexp_replace` over the token stream — greedy left-to-right
-    * non-overlapping, exactly BPE's merge rule — so each round is one
-    * bounded-shuffle count job plus one narrow map; the driver holds
-    * only the O(merges) vocabulary, never corpus data. Returns the
-    * adopted merges in order with their pre-merge frequencies.
-    * Deterministic: ties adopt the lexicographically first pair
-    * (pairCounts' total order). */
   private def quoteRepl(s: String): String =
     s.replace("\\", "\\\\").replace("$", "\\$")
 
-  /** The greedy merge of one adopted pair as a column transform —
-    * shared by [[bpeTrain]] (corpus-wide round) and [[bpeApply]]
-    * (tokenization with a trained vocabulary). */
-  private def mergePair(tokenStream: Column, l: String, r: String): Column =
+  /** The greedy merge of one adopted pair as a column transform over
+    * a space-separated symbol stream — one corpus-wide round of
+    * [[bpeTrain]]. [[mergeOnce]] is the same rule over a symbol
+    * array. */
+  private[graft] def mergePair(tokenStream: Column, l: String, r: String): Column =
     regexp_replace(tokenStream,
       "(?<=^|\\s)" + java.util.regex.Pattern.quote(l) + " " +
         java.util.regex.Pattern.quote(r) + "(?=\\s|$)",
       quoteRepl(l + BpeJoiner + r))
-
-  /** `sampleFraction` < 1 trains the vocabulary on a deterministic
-    * content-hash sample (md5-bucket membership, the
-    * [[graft.etl.Sampling.membershipBucket]] idiom) — the standard
-    * production shape where each of the `merges` full-corpus rescans
-    * would otherwise dominate: the vocabulary trains on a sample,
-    * [[bpeApply]] still runs on everything. Pair frequencies are
-    * corpus-level statistics, so a uniform sample preserves the
-    * adoption order of all but the rarest ties. */
-  def bpeTrain(df: DataFrame, textCol: String, merges: Int,
-               sampleFraction: Double = 1.0,
-               checkpointEvery: Int = 16): Seq[(String, String, Long)] = {
-    require(sampleFraction > 0 && sampleFraction <= 1.0,
-      s"sampleFraction=$sampleFraction must be in (0, 1]")
-    require(checkpointEvery >= 1, s"checkpointEvery=$checkpointEvery")
-    val modulus = 1 << 20
-    val base =
-      if (sampleFraction >= 1.0) df
-      else df.where(graft.etl.Sampling.membershipBucket(col(textCol), modulus)
-        < lit(sampleFraction * modulus))
-    bpeTrainLoop(base
-      .select(concat_ws(" ", Featurize.tokensCol(col(textCol))).as("__t")),
-      merges, checkpointEvery)
-  }
-
-  /** Byte-LEVEL BPE training: identical greedy loop, but the seed
-    * symbols are the document's UTF-8 bytes as hex-pair symbols
-    * ([[byteSymbolStream]]) instead of whitespace words — so the
-    * alphabet is CLOSED (≤256 seed symbols) and ANY UTF-8 input
-    * tokenizes to a known vocabulary, the byte-fallback property every
-    * production tokenizer ships (GPT-2 byte encoder, SentencePiece
-    * byte-fallback). Spaces are ordinary bytes (symbol "20"), so
-    * merges freely learn space-prefixed units the way GPT-2's Ġ does.
-    * Same determinism and scale shape as [[bpeTrain]]. */
-  def bpeTrainBytes(df: DataFrame, textCol: String, merges: Int,
-                    sampleFraction: Double = 1.0,
-                    checkpointEvery: Int = 16): Seq[(String, String, Long)] = {
-    require(sampleFraction > 0 && sampleFraction <= 1.0,
-      s"sampleFraction=$sampleFraction must be in (0, 1]")
-    require(checkpointEvery >= 1, s"checkpointEvery=$checkpointEvery")
-    val modulus = 1 << 20
-    val base =
-      if (sampleFraction >= 1.0) df
-      else df.where(graft.etl.Sampling.membershipBucket(col(textCol), modulus)
-        < lit(sampleFraction * modulus))
-    bpeTrainLoop(base.select(byteSymbolStream(col(textCol)).as("__t")),
-      merges, checkpointEvery)
-  }
 
   /** GPT-2-style pretokenizer: category-run split applied BEFORE
     * byte-level BPE so merges never cross letter/number/punctuation
@@ -952,33 +895,98 @@ object TextStats extends Serializable {
   def bpePiecesCol(text: Column): Column =
     regexp_extract_all(coalesce(text, lit("")), lit(BpePretokPattern), lit(0))
 
-  /** [[bpeTrainBytes]] with the [[BpePretokPattern]] boundary rule:
-    * the corpus explodes into pretokenizer pieces and each piece
-    * seeds its own byte-symbol stream — a pair spanning two pieces
-    * simply never appears in any row, so the trained vocabulary can
-    * only contain within-category merges (the production contract).
-    * Same greedy loop, determinism and scale shape; the explode
-    * multiplies rows, not bytes (total symbol volume is unchanged). */
-  def bpeTrainBytesPretok(df: DataFrame, textCol: String, merges: Int,
-                          sampleFraction: Double = 1.0,
-                          checkpointEvery: Int = 16): Seq[(String, String, Long)] = {
+  /** The document's UTF-8 bytes as a space-separated stream of
+    * fixed-width HEX-PAIR symbols ("48 65 6C ..."): the byte-level
+    * BPE seed alphabet. Hex pairs are the byte-to-printable mapping
+    * (GPT-2 uses a unicode shift table for the same purpose); they
+    * are whitespace-free, joiner-free and engine-portable (`hex` is
+    * uppercase in both Spark and DuckDB), so the SAME merge machinery
+    * ([[mergePair]]) and oracle replay work unchanged. Pure codegen:
+    * encode → hex → one regexp pass to interleave spaces. */
+  def byteSymbolStream(text: Column): Column =
+    trim(regexp_replace(hex(encode(coalesce(text, lit("")), "UTF-8")),
+      "(..)", "$1 "))
+
+  /** The BPE seeder: the merge units of `text` under a tokenizer
+    * `mode` (the artifact's [[Tokenizer.ModeWords]] /
+    * [[Tokenizer.ModeBytes]] / [[Tokenizer.ModeBytesPretok]]), each
+    * unit a space-separated symbol stream. A merge never crosses two
+    * units.
+    *
+    *  - `words`: one unit, the document's whitespace tokens
+    *    ([[Featurize.tokensCol]]).
+    *  - `bytes`: one unit, the document's UTF-8 bytes as hex-pair
+    *    symbols ([[byteSymbolStream]]). The alphabet is CLOSED (≤ 256
+    *    seed symbols), so ANY UTF-8 input tokenizes to a known
+    *    vocabulary — the byte-fallback property of GPT-2's byte
+    *    encoder and SentencePiece's byte-fallback. Spaces are ordinary
+    *    bytes (symbol "20"), so merges learn space-prefixed units the
+    *    way GPT-2's Ġ does.
+    *  - `bytes-pretok`: one unit per [[BpePretokPattern]] piece, each
+    *    the piece's hex pairs — a pair spanning two pieces never
+    *    exists, so a trained vocabulary only holds within-category
+    *    merges (the production contract). Splitting multiplies units,
+    *    not bytes.
+    *
+    * Both trainers, [[bpeApply]], the ranked apply and
+    * [[tokenizerFertility]] seed here; the DuckDB oracles mirror the
+    * same three seeds. */
+  private[ext] def bpeUnitsCol(text: Column, mode: String): Column = mode match {
+    case Tokenizer.ModeWords => array(concat_ws(" ", Featurize.tokensCol(text)))
+    case Tokenizer.ModeBytes => array(byteSymbolStream(text))
+    case Tokenizer.ModeBytesPretok => transform(bpePiecesCol(text), byteSymbolStream(_))
+    case other => throw new IllegalArgumentException(
+      s"unknown BPE mode '$other' (want ${Tokenizer.ModeWords} | " +
+        s"${Tokenizer.ModeBytes} | ${Tokenizer.ModeBytesPretok})")
+  }
+
+  /** The symbols of one [[bpeUnitsCol]] unit. */
+  private def unitSymbols(unit: String): Array[String] =
+    unit.split(' ').filter(_.nonEmpty)
+
+  /** The rows a trainer learns from: all of `df`, or for
+    * `sampleFraction` < 1 a deterministic content-hash sample
+    * (md5-bucket membership, the
+    * [[graft.etl.Sampling.membershipBucket]] idiom) — the production
+    * shape where each of the `merges` full-corpus rescans would
+    * otherwise dominate: the vocabulary trains on a sample,
+    * [[bpeApply]] still runs on everything. Pair frequencies are
+    * corpus-level statistics, so a uniform sample preserves the
+    * adoption order of all but the rarest ties. */
+  private def trainingSample(df: DataFrame, textCol: String,
+                             sampleFraction: Double): DataFrame = {
     require(sampleFraction > 0 && sampleFraction <= 1.0,
       s"sampleFraction=$sampleFraction must be in (0, 1]")
-    require(checkpointEvery >= 1, s"checkpointEvery=$checkpointEvery")
     val modulus = 1 << 20
-    val base =
-      if (sampleFraction >= 1.0) df
-      else df.where(graft.etl.Sampling.membershipBucket(col(textCol), modulus)
-        < lit(sampleFraction * modulus))
-    bpeTrainLoop(base
-      .select(explode(bpePiecesCol(col(textCol))).as("__p"))
-      .select(byteSymbolStream(col("__p")).as("__t")),
+    if (sampleFraction >= 1.0) df
+    else df.where(graft.etl.Sampling.membershipBucket(col(textCol), modulus)
+      < lit(sampleFraction * modulus))
+  }
+
+  /** Full BPE vocabulary training: `merges` rounds of (distributed
+    * pair count → adopt the most frequent pair → merge its adjacent
+    * occurrences corpus-wide) over the merge units of `mode`
+    * ([[bpeUnitsCol]]). The merge pass is ONE codegen'd
+    * `regexp_replace` over the symbol stream — greedy left-to-right
+    * non-overlapping, exactly BPE's merge rule — so each round is one
+    * bounded-shuffle count job plus one narrow map; the driver holds
+    * only the O(merges) vocabulary, never corpus data. Returns the
+    * adopted merges in order with their pre-merge frequencies.
+    * Deterministic: ties adopt the lexicographically first pair
+    * (pairCounts' total order). `sampleFraction` < 1 trains on a
+    * content-hash sample ([[trainingSample]]). */
+  def bpeTrain(df: DataFrame, textCol: String, merges: Int,
+               mode: String = Tokenizer.ModeWords,
+               sampleFraction: Double = 1.0,
+               checkpointEvery: Int = 16): Seq[(String, String, Long)] = {
+    require(checkpointEvery >= 1, s"checkpointEvery=$checkpointEvery")
+    bpeTrainLoop(trainingSample(df, textCol, sampleFraction)
+      .select(explode(bpeUnitsCol(col(textCol), mode)).as("__t")),
       merges, checkpointEvery)
   }
 
-  /** The shared greedy merge loop over a pre-seeded symbol stream
-    * column `__t` (space-separated symbols; see [[bpeTrain]] /
-    * [[bpeTrainBytes]] for the two seeders). */
+  /** The greedy merge loop of [[bpeTrain]] over a seeded symbol
+    * stream column `__t` (one row per merge unit). */
   private def bpeTrainLoop(seeded: DataFrame, merges: Int,
                            checkpointEvery: Int): Seq[(String, String, Long)] = {
     var cur = seeded
@@ -1081,18 +1089,16 @@ object TextStats extends Serializable {
     * RDD object graph before task serialization overflows the stack
     * (the [[bpeTrain]] discipline).
     *
-    * The adopted sequence is IDENTICAL to the matching batch
-    * trainer's — [[bpeTrain]] for `seedMode = words` (spec-enforced
-    * at 512 merges), [[bpeTrainBytes]] for `bytes`,
-    * [[bpeTrainBytesPretok]] for `bytes-pretok` (both spec-enforced)
-    * — same greedy left-to-right non-overlap merge rule
-    * ([[mergeOnce]] == [[mergePair]], the bpeApplyLarge equivalence),
-    * same (count DESC, l, r) total order, and the certification
-    * logic never ACCEPTS a step it cannot prove. Byte seeding is
-    * what makes PRODUCTION-scale vocabularies trainable here: a
-    * 32k–50k-merge byte-level vocabulary (the GPT-2 shape) needs the
-    * flat per-merge cost, and the word-mode-only seeding previously
-    * forced byte vocabularies onto the O(merges) rescan path.
+    * The adopted sequence is IDENTICAL to [[bpeTrain]]'s in the same
+    * `mode` (spec-enforced: 512 merges in `words`, 128 in `bytes`, 96
+    * in `bytes-pretok`) — same seeder ([[bpeUnitsCol]]), same greedy
+    * left-to-right non-overlap merge rule ([[mergeOnce]] ==
+    * [[mergePair]], the [[bpeApply]] equivalence), same (count DESC,
+    * l, r) total order, and the certification logic never ACCEPTS a
+    * step it cannot prove. Byte seeding is what makes
+    * PRODUCTION-scale vocabularies trainable here: a 32k–50k-merge
+    * byte-level vocabulary (the GPT-2 shape) needs the flat per-merge
+    * cost.
     *
     * Per-merge cost stays FLAT to 32k+ merges via two levers (see the
     * in-loop comment): once the distinct-pair table fits
@@ -1102,33 +1108,6 @@ object TextStats extends Serializable {
     * up to `maxBatch` so corpus passes amortize; a corpus whose pair
     * table never fits stays distributed with an adaptively widening
     * window. */
-  /** Seeding modes for [[bpeTrainIncremental]] — mirror the three
-    * batch trainers ([[bpeTrain]], [[bpeTrainBytes]],
-    * [[bpeTrainBytesPretok]]) and the artifact mode field. */
-  val SeedWords = "words"
-  val SeedBytes = "bytes"
-  val SeedBytesPretok = "bytes-pretok"
-
-  /** One symbol-array row per merge unit for the chosen seeding:
-    * `words` — the document's whitespace tokens (pairs may span the
-    * whole document); `bytes` — the document's UTF-8 hex-pair
-    * symbols; `bytes-pretok` — one ROW PER PRETOKENIZER PIECE of
-    * hex-pair symbols, so cross-boundary pairs never exist, exactly
-    * like the batch trainer's explode seeding. */
-  private def seedSymbolRows(df: DataFrame, textCol: String,
-                             seedMode: String): DataFrame = seedMode match {
-    case SeedWords => df.select(Featurize.tokensCol(col(textCol)).as("__t"))
-    case SeedBytes => df.select(
-      filter(split(byteSymbolStream(col(textCol)), " "),
-        t => length(t) > 0).as("__t"))
-    case SeedBytesPretok => df
-      .select(explode(bpePiecesCol(col(textCol))).as("__p"))
-      .select(filter(split(byteSymbolStream(col("__p")), " "),
-        t => length(t) > 0).as("__t"))
-    case other => throw new IllegalArgumentException(
-      s"unknown seedMode '$other' (want $SeedWords | $SeedBytes | $SeedBytesPretok)")
-  }
-
   def bpeTrainIncremental(df: DataFrame, textCol: String, merges: Int,
                           sampleFraction: Double = 1.0,
                           numPartitions: Int = 8,
@@ -1137,10 +1116,9 @@ object TextStats extends Serializable {
                           driverTableMaxPairs: Int = 500000,
                           maxBatch: Int = 1024,
                           driverCorpusMaxSymbols: Long = 2000000L,
-                          seedMode: String = SeedWords)
+                          mode: String = Tokenizer.ModeWords)
       : Seq[(String, String, Long)] = {
-    require(sampleFraction > 0 && sampleFraction <= 1.0,
-      s"sampleFraction=$sampleFraction must be in (0, 1]")
+    val base = trainingSample(df, textCol, sampleFraction)
     require(merges >= 0, s"merges=$merges")
     require(numPartitions >= 1, s"numPartitions=$numPartitions")
     require(checkpointEvery >= 1, s"checkpointEvery=$checkpointEvery")
@@ -1156,11 +1134,6 @@ object TextStats extends Serializable {
     type Docs = RDD[(Array[String], Array[((Int, Pair), Long)])]
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val modulus = 1 << 20
-    val base =
-      if (sampleFraction >= 1.0) df
-      else df.where(graft.etl.Sampling.membershipBucket(col(textCol), modulus)
-        < lit(sampleFraction * modulus))
     val part = new HashPartitioner(numPartitions)
     def pairsInto(toks: Array[String], sign: Long,
                   m: scala.collection.mutable.HashMap[Pair, Long]): Unit = {
@@ -1224,9 +1197,9 @@ object TextStats extends Serializable {
       case ((l, r), n) => (-n, l, r)
     }
     val pairOrd = Ordering.Tuple2[String, String]
-    val docs0: Docs = seedSymbolRows(base, textCol, seedMode)
+    val docs0: Docs = base.select(explode(bpeUnitsCol(col(textCol), mode)))
       .rdd.map(r =>
-        (r.getSeq[String](0).toArray, null: Array[((Int, Pair), Long)]))
+        (unitSymbols(r.getString(0)), null: Array[((Int, Pair), Long)]))
       // one balancing shuffle, paid once — every later pass is narrow
       .repartition(numPartitions)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1569,161 +1542,39 @@ object TextStats extends Serializable {
     }
   }
 
-  /** Tokenize with a trained vocabulary: replay the adopted merges in
-    * adoption order (BPE's apply rule) and emit the final symbol
-    * array. One narrow codegen'd regexp chain per document — no
-    * shuffle, no state; the merge list is O(vocab) plan data. */
+  /** Tokenize with a trained vocabulary: seed `textCol` into the merge
+    * units of `mode` ([[bpeUnitsCol]], the trainer's seeding) and
+    * replay the adopted merges on each unit in adoption order (BPE's
+    * apply rule) with the trainer's greedy left-to-right non-overlap
+    * rule ([[mergeOnce]]); `outCol` holds the units' final symbols in
+    * order. The merge list broadcasts once and the replay is one
+    * narrow UDF over the units column — no shuffle and no state, so it
+    * runs on a streaming frame unchanged, and no plan grows with the
+    * vocabulary (a merge-per-expression chain is `merges` deep and
+    * rewrites the whole stream once per merge). Per-unit cost is
+    * O(merges × symbols); [[bpeApplyRankedBytesPretok]] drops the
+    * merges factor. */
   def bpeApply(df: DataFrame, textCol: String,
                merges: Seq[(String, String)],
+               mode: String = Tokenizer.ModeWords,
                outCol: String = "bpe_symbols"): DataFrame = {
-    val stream = merges.foldLeft(
-        concat_ws(" ", Featurize.tokensCol(col(textCol)))) {
-      case (acc, (l, r)) => mergePair(acc, l, r)
-    }
-    df.withColumn(outCol,
-      filter(split(stream, " "), t => length(t) > 0))
-  }
-
-  /** The document's UTF-8 bytes as a space-separated stream of
-    * fixed-width HEX-PAIR symbols ("48 65 6C ..."): the byte-level
-    * BPE seed alphabet. Hex pairs are the byte-to-printable mapping
-    * (GPT-2 uses a unicode shift table for the same purpose); they
-    * are whitespace-free, joiner-free and engine-portable (`hex` is
-    * uppercase in both Spark and DuckDB), so the SAME merge machinery
-    * ([[mergePair]]) and oracle replay work unchanged. Pure codegen:
-    * encode → hex → one regexp pass to interleave spaces. */
-  def byteSymbolStream(text: Column): Column =
-    trim(regexp_replace(hex(encode(coalesce(text, lit("")), "UTF-8")),
-      "(..)", "$1 "))
-
-  /** Tokenize with a BYTE-LEVEL vocabulary ([[bpeTrainBytes]]):
-    * every UTF-8 input reduces to hex-pair base symbols plus trained
-    * merge products — closed vocabulary over arbitrary text, no
-    * un-mergeable out-of-alphabet tokens possible. Narrow codegen'd
-    * regexp chain, no shuffle. */
-  def bpeApplyBytes(df: DataFrame, textCol: String,
-                    merges: Seq[(String, String)],
-                    outCol: String = "bpe_symbols"): DataFrame = {
-    val stream = merges.foldLeft(byteSymbolStream(col(textCol))) {
-      case (acc, (l, r)) => mergePair(acc, l, r)
-    }
-    df.withColumn(outCol, filter(split(stream, " "), t => length(t) > 0))
-  }
-
-  /** [[bpeApplyBytes]] with the [[BpePretokPattern]] boundary rule —
-    * the apply side of [[bpeTrainBytesPretok]]: pieces are merged
-    * independently (the merge fold runs inside a `transform` lambda
-    * per piece, so a pair can never span a boundary) and the
-    * per-piece symbol lists flatten back in order. Because the
-    * pieces partition the text, [[bpeDecodeBytes]] inverts this
-    * exactly as it does the unpretokenized path. Still one narrow
-    * codegen'd projection — no explode, no shuffle. */
-  def bpeApplyBytesPretok(df: DataFrame, textCol: String,
-                          merges: Seq[(String, String)],
-                          outCol: String = "bpe_symbols"): DataFrame =
-    df.withColumn(outCol,
-      flatten(transform(bpePiecesCol(col(textCol)), p => {
-        val stream = merges.foldLeft(byteSymbolStream(p)) {
-          case (acc, (l, r)) => mergePair(acc, l, r)
-        }
-        filter(split(stream, " "), t => length(t) > 0)
-      })))
-
-  private val hexPairs: Array[String] =
-    Array.tabulate(256)(b => f"$b%02X")
-
-  /** [[bpeApplyBytes]] for LARGE vocabularies: the regexp-chain form
-    * rewrites the full 3×-text hex stream once per merge (measured
-    * superlinear wall at x100 corpus from string churn alone); this
-    * form seeds hex-pair symbols directly from the UTF-8 bytes in a
-    * `mapPartitions` and applies merges with in-place array passes
-    * ([[mergeOnce]] — the exact regex semantics), broadcasting the
-    * merge list once. Bit-identical output to [[bpeApplyBytes]]
-    * (spec-pinned); same shape as [[bpeApplyLarge]] for word mode. */
-  def bpeApplyLargeBytes(df: DataFrame, textCol: String,
-                         merges: Seq[(String, String)],
-                         outCol: String = "bpe_symbols"): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    val outSchema = df.schema.add(outCol, ArrayType(StringType, false))
-    val textIdx = df.schema.fieldIndex(textCol)
     val bc = df.sparkSession.sparkContext.broadcast(merges.toArray)
-    df.mapPartitions { rows =>
-      val ms = bc.value
-      rows.map { row =>
-        val text = if (row.isNullAt(textIdx)) "" else row.getString(textIdx)
-        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        var toks = Array.tabulate(bytes.length)(i => hexPairs(bytes(i) & 0xFF))
-        var i = 0
-        while (i < ms.length) {
-          toks = mergeOnce(toks, ms(i)._1, ms(i)._2)
-          i += 1
-        }
-        Row.fromSeq(row.toSeq :+ toks.toSeq)
-      }
-    }(Encoders.row(outSchema))
+    mergeUnits(df, textCol, mode, outCol) { unit =>
+      bc.value.foldLeft(unit) { case (toks, (l, r)) => mergeOnce(toks, l, r) }
+    }
   }
 
-  /** [[bpeApplyBytesPretok]] for LARGE vocabularies — the
-    * `mapPartitions` form ([[bpeApplyLargeBytes]] rationale): pieces
-    * come from the SAME [[BpePretokPattern]] compiled once per
-    * partition, each piece byte-seeds and merges in-place
-    * ([[mergeOnce]]), outputs concatenate in piece order.
-    * Bit-identical to [[bpeApplyBytesPretok]] (spec-pinned). */
-  def bpeApplyLargeBytesPretok(df: DataFrame, textCol: String,
-                               merges: Seq[(String, String)],
-                               outCol: String = "bpe_symbols"): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    val outSchema = df.schema.add(outCol, ArrayType(StringType, false))
-    val textIdx = df.schema.fieldIndex(textCol)
-    val bc = df.sparkSession.sparkContext.broadcast(merges.toArray)
-    df.mapPartitions { rows =>
-      val ms = bc.value
-      val pretok = java.util.regex.Pattern.compile(BpePretokPattern)
-      rows.map { row =>
-        val text = if (row.isNullAt(textIdx)) "" else row.getString(textIdx)
-        val out = Seq.newBuilder[String]
-        val m = pretok.matcher(text)
-        while (m.find()) {
-          val bytes = m.group().getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var toks = Array.tabulate(bytes.length)(i => hexPairs(bytes(i) & 0xFF))
-          var i = 0
-          while (i < ms.length) {
-            toks = mergeOnce(toks, ms(i)._1, ms(i)._2)
-            i += 1
-          }
-          out ++= toks
-        }
-        Row.fromSeq(row.toSeq :+ out.result())
-      }
-    }(Encoders.row(outSchema))
+  /** The row plumbing both applies share: `mergeUnit` runs on the
+    * symbols of each [[bpeUnitsCol]] unit of `textCol`, and `outCol`
+    * concatenates the results in unit order. */
+  private def mergeUnits(df: DataFrame, textCol: String, mode: String,
+                         outCol: String)(
+      mergeUnit: Array[String] => Array[String]): DataFrame = {
+    val kernel = udf((units: Seq[String]) =>
+      units.flatMap(u => mergeUnit(unitSymbols(u))))
+    df.withColumn(outCol, kernel(bpeUnitsCol(col(textCol), mode)))
   }
 
-  /** [[bpeApplyBytesPretok]] at PRODUCTION vocabulary depth — the
-    * HF-tokenizers-shaped RANKED apply, whose per-document cost is
-    * independent of vocabulary size: instead of replaying all
-    * `|merges|` passes over every piece (the [[bpeApplyLargeBytesPretok]]
-    * shape, O(merges × bytes) per document — 32k merges × a 100 TB
-    * corpus is 3×10^18 symbol visits), each piece repeatedly merges
-    * its lowest-RANK adjacent pair until none of its pairs is in the
-    * broadcast rank table — O(piece_len) hash probes per round,
-    * ≤ piece_len rounds, so per-document cost is O(bytes × piece_len)
-    * with pretok pieces a few symbols long, whatever the vocabulary.
-    *
-    * Output is BIT-IDENTICAL to the sequential per-merge replay
-    * (spec-enforced) for any TRAINER-PRODUCED merge list, by the
-    * standard BPE equivalence: a merge consuming a product symbol is
-    * always learned — hence ranked — after the merge that produces
-    * it, so processing pairs in rank order visits the same merges in
-    * the same order the sequential replay does, and both apply each
-    * pair with the same greedy left-to-right non-overlap rule
-    * ([[mergeOnce]] is shared). That precondition is VALIDATED, not
-    * assumed: a merge list whose part references a product no earlier
-    * merge created (a hand-shuffled list) fails loudly up front.
-    * `mapPartitions` is justified as in [[bpeApplyLarge]] (case (d)):
-    * the ordered-replay semantics cannot ride in Catalyst without
-    * vocab-deep plan trees. */
   /** Trainer-order validation for rank-based apply: any joiner-bearing
     * part must be the product of an EARLIER merge, else ranked order ≠
     * replay order; product strings must also be UNIQUE — two merges
@@ -1769,6 +1620,29 @@ object TextStats extends Serializable {
     applyRankedBytesPretokValidated(df, textCol, merges, outCol)
   }
 
+  /** Byte-pretok [[bpeApply]] at PRODUCTION vocabulary depth — the
+    * HF-tokenizers-shaped RANKED apply, whose per-document cost is
+    * independent of vocabulary size: instead of replaying all
+    * `|merges|` passes over every piece (O(merges × bytes) per
+    * document — 32k merges × a 100 TB corpus is 3×10^18 symbol
+    * visits), each piece repeatedly merges its lowest-RANK adjacent
+    * pair until none of its pairs is in the broadcast rank table —
+    * O(piece_len) hash probes per round, ≤ piece_len rounds, so
+    * per-document cost is O(bytes × piece_len) with pretok pieces a
+    * few symbols long, whatever the vocabulary. Seeding and row
+    * plumbing are [[bpeApply]]'s; only the per-unit merge loop differs.
+    *
+    * Output is BIT-IDENTICAL to the sequential per-merge replay
+    * (spec-enforced) for any TRAINER-PRODUCED merge list, by the
+    * standard BPE equivalence: a merge consuming a product symbol is
+    * always learned — hence ranked — after the merge that produces
+    * it, so processing pairs in rank order visits the same merges in
+    * the same order the sequential replay does, and both apply each
+    * pair with the same greedy left-to-right non-overlap rule
+    * ([[mergeOnce]] is shared). That precondition is VALIDATED, not
+    * assumed ([[requireTrainerOrdered]]): a merge list whose part
+    * references a product no earlier merge created (a hand-shuffled
+    * list) fails loudly up front. */
   def bpeApplyRankedBytesPretok(df: DataFrame, textCol: String,
                                 merges: Seq[(String, String)],
                                 outCol: String = "bpe_symbols"): DataFrame = {
@@ -1779,52 +1653,40 @@ object TextStats extends Serializable {
   private def applyRankedBytesPretokValidated(
       df: DataFrame, textCol: String, merges: Seq[(String, String)],
       outCol: String): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    val outSchema = df.schema.add(outCol, ArrayType(StringType, false))
-    val textIdx = df.schema.fieldIndex(textCol)
-    val bc = df.sparkSession.sparkContext.broadcast(merges.toArray)
-    df.mapPartitions { rows =>
-      val ms = bc.value
-      val rank = new java.util.HashMap[String, Integer](ms.length * 2)
-      var k = 0
-      while (k < ms.length) {
-        // symbols are whitespace-free (hex pairs + joiner products),
-        // so "l r" is collision-free as a pair key
-        rank.putIfAbsent(ms(k)._1 + " " + ms(k)._2, Integer.valueOf(k))
-        k += 1
-      }
-      val pretok = java.util.regex.Pattern.compile(BpePretokPattern)
-      rows.map { row =>
-        val text = if (row.isNullAt(textIdx)) "" else row.getString(textIdx)
-        val out = Seq.newBuilder[String]
-        val m = pretok.matcher(text)
-        while (m.find()) {
-          val bytes = m.group().getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var toks = Array.tabulate(bytes.length)(i => hexPairs(bytes(i) & 0xFF))
-          var done = false
-          while (!done && toks.length >= 2) {
-            var best = Int.MaxValue
-            var i = 0
-            while (i < toks.length - 1) {
-              val r = rank.get(toks(i) + " " + toks(i + 1))
-              if (r != null && r.intValue() < best) best = r.intValue()
-              i += 1
-            }
-            if (best == Int.MaxValue) done = true
-            else toks = mergeOnce(toks, ms(best)._1, ms(best)._2)
-          }
-          out ++= toks
+    val ms = merges.toArray
+    val rank = new java.util.HashMap[String, Integer](ms.length * 2)
+    var k = 0
+    while (k < ms.length) {
+      // symbols are whitespace-free (hex pairs + joiner products),
+      // so "l r" is collision-free as a pair key
+      rank.putIfAbsent(ms(k)._1 + " " + ms(k)._2, Integer.valueOf(k))
+      k += 1
+    }
+    val bc = df.sparkSession.sparkContext.broadcast((ms, rank))
+    mergeUnits(df, textCol, Tokenizer.ModeBytesPretok, outCol) { unit =>
+      val (ms, rank) = bc.value
+      var toks = unit
+      var done = false
+      while (!done && toks.length >= 2) {
+        var best = Int.MaxValue
+        var i = 0
+        while (i < toks.length - 1) {
+          val r = rank.get(toks(i) + " " + toks(i + 1))
+          if (r != null && r.intValue() < best) best = r.intValue()
+          i += 1
         }
-        Row.fromSeq(row.toSeq :+ out.result())
+        if (best == Int.MaxValue) done = true
+        else toks = mergeOnce(toks, ms(best)._1, ms(best)._2)
       }
-    }(Encoders.row(outSchema))
+      toks
+    }
   }
 
-  /** Exact inverse of [[bpeApplyBytes]]: strip joiners, concatenate
+  /** Exact inverse of byte-mode [[bpeApply]]: strip joiners, concatenate
     * the hex pairs, unhex, decode UTF-8 — `bpeDecodeBytes ∘
-    * bpeApplyBytes == identity` on ANY string (property-tested), the
-    * round-trip guarantee word-level BPE cannot make. */
+    * bpeApply == identity` on ANY string in either byte mode
+    * (property-tested), the round-trip guarantee word-level BPE cannot
+    * make. */
   def bpeDecodeBytes(symbols: Column): Column =
     decode(unhex(translate(concat_ws("", symbols), BpeJoiner, "")), "UTF-8")
 
@@ -1981,7 +1843,7 @@ object TextStats extends Serializable {
     * concatenating the output symbols and turning markers back into
     * spaces reproduces the whitespace-normalized text (spec-pinned).
     *
-    * `mapPartitions` is justified as for [[bpeApplyRankedBytesPretok]]
+    * `mapPartitions` is justified here
     * (case (d)): the per-word DP is an ordered recurrence that cannot
     * ride Catalyst without word-length-deep plan trees; the vocab
     * broadcasts once (bounded driver data, same class as merge lists).
@@ -2269,8 +2131,9 @@ object TextStats extends Serializable {
   /** Tokenizer fertility audit — the per-group efficiency report a
     * vocabulary decision is made on (HuggingFace "fertility" = subword
     * tokens per word; Rust/SentencePiece eval reports the same
-    * triple): apply a byte-level vocabulary ([[bpeApplyBytes]]) and
-    * aggregate per `groupCol` (typically language):
+    * triple): apply a byte-level vocabulary ([[bpeApply]] in byte
+    * `mode`, `bytes` or `bytes-pretok`) and aggregate per `groupCol`
+    * (typically language):
     *
     *  - `fertility` = total BPE symbols / total whitespace words — the
     *    classic metric, meaningful for whitespace scripts (a CJK group
@@ -2290,10 +2153,10 @@ object TextStats extends Serializable {
     * fertility rather than a fake number). */
   def tokenizerFertility(df: DataFrame, textCol: String, groupCol: String,
                          merges: Seq[(String, String)],
-                         pretok: Boolean = false): DataFrame = {
-    val applied =
-      if (pretok) bpeApplyBytesPretok(df, textCol, merges, outCol = "__tf_syms")
-      else bpeApplyBytes(df, textCol, merges, outCol = "__tf_syms")
+                         mode: String = Tokenizer.ModeBytes): DataFrame = {
+    require(mode == Tokenizer.ModeBytes || mode == Tokenizer.ModeBytesPretok,
+      s"tokenizerFertility: mode '$mode' is not a byte mode")
+    val applied = bpeApply(df, textCol, merges, mode, outCol = "__tf_syms")
     val syms = col("__tf_syms")
     applied
       .withColumn("__tf_words", size(Featurize.tokensCol(col(textCol))))
@@ -2335,44 +2198,6 @@ object TextStats extends Serializable {
       } else { out += toks(i); i += 1 }
     }
     out.result()
-  }
-
-  /** [[bpeApply]] for REALISTIC vocabulary sizes (hundreds to tens of
-    * thousands of merges). The regexp-chain form folds one
-    * `regexp_replace` per merge into a single expression — fine at
-    * oracle scale, but at vocab scale that is a `merges`-deep
-    * expression tree (stack-overflow territory past ~1k) and
-    * `merges` FULL REGEX PASSES over every document. This variant
-    * replays the same merge list, in the same order, with the same
-    * greedy left-to-right non-overlap rule, as a per-partition
-    * imperative loop over the token array with the merge list
-    * broadcast once — no expression-tree depth, no regex engine, no
-    * shuffle; per-document cost O(merges × tokens) with array scans.
-    * `mapPartitions` is justified here (the (d) case): Catalyst
-    * cannot express an arbitrarily long ordered replay without
-    * materializing it as plan depth. Output is bit-identical to
-    * [[bpeApply]] (spec-enforced equivalence). */
-  def bpeApplyLarge(df: DataFrame, textCol: String,
-                    merges: Seq[(String, String)],
-                    outCol: String = "bpe_symbols"): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    val outSchema = df.schema.add(outCol, ArrayType(StringType, false))
-    val textIdx = df.schema.fieldIndex(textCol)
-    val bc = df.sparkSession.sparkContext.broadcast(merges.toArray)
-    df.mapPartitions { rows =>
-      val ms = bc.value
-      rows.map { row =>
-        val text = if (row.isNullAt(textIdx)) "" else row.getString(textIdx)
-        var toks = text.trim.split("\\s+").filter(_.nonEmpty)
-        var i = 0
-        while (i < ms.length) {
-          toks = mergeOnce(toks, ms(i)._1, ms(i)._2)
-          i += 1
-        }
-        Row.fromSeq(row.toSeq :+ toks.toSeq)
-      }
-    }(Encoders.row(outSchema))
   }
 
   /** Greedy sequence packing — assemble documents into fixed

@@ -35,7 +35,7 @@ import scala.jdk.CollectionConverters._
   *
   * Format (`graft-bpe v3` — adds the MODE field: `words` artifacts
   * keep writing v2 byte-for-byte so existing readers are unaffected;
-  * `bytes` artifacts — [[TextStats.bpeTrainBytes]] hex-pair seeding,
+  * `bytes` artifacts — [[TextStats.bpeTrain]] hex-pair seeding,
   * closed vocabulary over arbitrary UTF-8 — need the consumer to use
   * the matching seeder, so the mode rides in the header):
   * {{{
@@ -77,16 +77,15 @@ object Tokenizer {
   private val RankedTag = "ranked"
   private val SpecialTag = "#special"
 
-  /** Tokenizer modes: `words` seeds from whitespace tokens
-    * ([[TextStats.bpeTrain]]); `bytes` seeds from UTF-8 hex-pair
-    * symbols ([[TextStats.bpeTrainBytes]] — closed vocabulary over
-    * arbitrary input); `bytes-pretok` is byte seeding BEHIND the
-    * [[TextStats.BpePretokPattern]] category-run pretokenizer
-    * ([[TextStats.bpeTrainBytesPretok]] /
-    * [[TextStats.bpeApplyBytesPretok]]) — the boundary rule is part
-    * of the tokenizer's identity (the same merge list tokenizes
-    * differently with and without it), so it rides in the mode field
-    * like the seeder does. A consumer MUST apply the matching
+  /** Tokenizer modes, the `mode` of [[TextStats.bpeTrain]] and
+    * [[TextStats.bpeApply]] (seeded by [[TextStats.bpeUnitsCol]]):
+    * `words` seeds from whitespace tokens; `bytes` seeds from UTF-8
+    * hex-pair symbols (closed vocabulary over arbitrary input);
+    * `bytes-pretok` is byte seeding BEHIND the
+    * [[TextStats.BpePretokPattern]] category-run pretokenizer — the
+    * boundary rule is part of the tokenizer's identity (the same merge
+    * list tokenizes differently with and without it), so it rides in
+    * the mode field like the seeder does. A consumer MUST apply the matching
     * seeder+pretokenizer; the mode rides in the artifact (v3) rather
     * than in folklore. */
   val ModeWords = "words"
@@ -261,7 +260,7 @@ object Tokenizer {
   }
 
   /** Load the merge list of a v1 OR v2 artifact (specials dropped) —
-    * the [[graft.ext.TextStats.bpeApplyLarge]] input; existing v1
+    * the [[graft.ext.TextStats.bpeApply]] input; existing v1
     * consumers read v2 artifacts unchanged. */
   def loadMerges(path: String): Seq[(String, String, Long)] =
     loadArtifact(path).merges

@@ -1532,11 +1532,11 @@ object ExtQueries {
       .map(m => "q_bpe_apply" -> bpeApplySqlFor(m))
     val bpeBytes = Artifacts.only[Merges]("bpe_byte_merges").toSeq
       .flatMap(m => Seq(
-        "q_bpe_apply_bytes" -> bpeApplyBytesSqlFor(m),
+        "q_bpe_apply_bytes" -> bpeBytesSqlFor(m),
         "q_tokenizer_fertility" -> tokenizerFertilitySqlFor(m)))
     val bpePretok = Artifacts.only[Merges]("bpe_pretok_merges").toSeq
       .flatMap(m => Seq(
-        "q_bpe_apply_pretok" -> bpeApplyPretokSqlFor(m),
+        "q_bpe_apply_pretok" -> bpePretokSqlFor(m),
         "q_tokenizer_fertility_pretok" -> tokenizerFertilityPretokSqlFor(m)))
     (ivf ++ pq ++ ivfpq ++ rpq ++ bpe ++ bpeBytes ++ bpePretok).toMap
   }
@@ -2134,9 +2134,9 @@ object ExtQueries {
         .map(m => (m._1, m._2)))
 
   /** Tokenize the whole corpus with a trained BPE vocabulary
-    * ([[TextStats.bpeApply]]) — one narrow codegen'd regexp chain per
-    * document, no shuffle. Oracled dynamically with the adopted merges
-    * as literals (see [[bpeApplySqlFor]]). */
+    * ([[TextStats.bpeApply]]) — one narrow pass per document, no
+    * shuffle. Oracled dynamically with the adopted merges as literals
+    * (see [[bpeApplySqlFor]]). */
   val bpeApplyQ: Q = (s, dir) =>
     TextStats.bpeApply(documents(s, dir).select("doc_id", "text"),
         "text", bpeMergesFor(s, dir))
@@ -2149,36 +2149,58 @@ object ExtQueries {
         size(col("bpe_symbols")).as("n_symbols"))
       .orderBy("doc_id")
 
-  /** The BPE merge replay in DuckDB. RE2 has no lookbehind, so the
-    * Spark side's `(?<=^|\s)l r(?=\s|$)` pass is mirrored instead as a
-    * LITERAL replace over a space-doubled token stream: doubling every
+  /** The BPE merge replay in DuckDB over one space-separated symbol
+    * stream `seed`. RE2 has no lookbehind, so the Spark side's
+    * `(?<=^|\s)l r(?=\s|$)` rule is mirrored instead as a LITERAL
+    * replace over a space-doubled token stream: doubling every
     * separator gives each match site private delimiters on both sides,
     * so plain left-to-right non-overlapping `replace(' l  r ', …)` is
     * exactly the greedy merge (adjacent occurrences like "a b a b"
     * can't steal each other's boundary space), and collapsing the
     * doubles afterwards restores the single-space stream for the next
     * merge in the chain. */
-  def bpeApplySqlFor(merges: Seq[(String, String)]): String = {
+  private def mergeChainSql(seed: String, merges: Seq[(String, String)]): String = {
     def q(str: String) = str.replace("'", "''")
-    val chain = merges.foldLeft(s"array_to_string($toksSql, ' ')") {
+    merges.foldLeft(seed) {
       case (acc, (l, r)) =>
         val from = "' " + q(l) + "  " + q(r) + " '"
         val to = "' " + q(l) + TextStats.BpeJoiner + q(r) + " '"
         s"trim(replace(replace(' ' || replace($acc, ' ', '  ') || ' ', $from, $to), '  ', ' '))"
     }
+  }
+
+  /** The symbol list of `seed` after [[mergeChainSql]]. */
+  private def chainSymbolsSql(seed: String, merges: Seq[(String, String)]): String =
+    s"list_filter(string_split(${mergeChainSql(seed, merges)}, ' '), t -> len(t) > 0)"
+
+  /** DuckDB twin of [[TextStats.byteSymbolStream]] over column `c`. */
+  private def hexSeedSql(c: String): String =
+    raw"""trim(regexp_replace(hex(encode($c)), '(..)', '\1 ', 'g'))"""
+
+  /** The pretokenized byte-merge replay in DuckDB: pieces via the
+    * shared Java∩RE2 [[TextStats.BpePretokPattern]], then the merge
+    * chain PER PIECE inside a list_transform, flattened in piece
+    * order. */
+  private def pretokSymbolsSql(merges: Seq[(String, String)]): String =
+    s"""flatten(list_transform(
+       |    regexp_extract_all(text, '${TextStats.BpePretokPattern}'),
+       |    pc -> ${chainSymbolsSql(hexSeedSql("pc"), merges)}))""".stripMargin
+
+  /** The word-level merge replay in DuckDB, seeded from the
+    * whitespace tokens. */
+  def bpeApplySqlFor(merges: Seq[(String, String)]): String =
     s"""WITH a AS (SELECT doc_id,
-       |    list_filter(string_split($chain, ' '), t -> len(t) > 0) AS bpe_symbols
+       |    ${chainSymbolsSql(s"array_to_string($toksSql, ' ')", merges)} AS bpe_symbols
        |  FROM documents)
        |SELECT doc_id, array_to_string(bpe_symbols, ' ') AS bpe_text,
        |  CAST(len(bpe_symbols) AS INTEGER) AS n_symbols
        |FROM a ORDER BY doc_id""".stripMargin
-  }
 
   private def bpeByteMergesFor(s: SparkSession, dir: String): Seq[(String, String)] =
     Artifacts.get("bpe_byte_merges", s, dir)(
-      TextStats.bpeTrainBytes(
+      TextStats.bpeTrain(
           documents(s, dir).where(col("doc_id") % 10 === 0).select("text"),
-          "text", merges = 8)
+          "text", merges = 8, mode = Tokenizer.ModeBytes)
         .map(m => (m._1, m._2)))
 
   /** BYTE-level BPE over the unicode corpus: vocabulary trained on
@@ -2188,10 +2210,10 @@ object ExtQueries {
     * the property word-seeded BPE cannot give), and the in-query
     * `rt_ok` gate raise_errors unless decode∘apply reproduces every
     * document byte-exactly. Oracle replays the same merges over the
-    * same hex stream in DuckDB ([[bpeApplyBytesSqlFor]]). */
-  val bpeApplyBytesQ: Q = (s, dir) => {
+    * same hex stream in DuckDB ([[bpeBytesSqlFor]]). */
+  val bpeBytesQ: Q = (s, dir) => {
     val merges = bpeByteMergesFor(s, dir)
-    TextStats.bpeApplyBytes(unicodeBase(s, dir), "text", merges)
+    TextStats.bpeApply(unicodeBase(s, dir), "text", merges, Tokenizer.ModeBytes)
       .select(col("doc_id"),
         array_join(col("bpe_symbols"), " ").as("bpe_text"),
         size(col("bpe_symbols")).as("n_symbols"),
@@ -2203,27 +2225,18 @@ object ExtQueries {
       .orderBy("doc_id")
   }
 
-  /** The byte-level merge replay in DuckDB: same space-doubling
-    * literal-replace chain as [[bpeApplySqlFor]], seeded from the
-    * hex-pair byte stream instead of whitespace tokens. */
-  def bpeApplyBytesSqlFor(merges: Seq[(String, String)]): String = {
-    def q(str: String) = str.replace("'", "''")
-    val seed = """trim(regexp_replace(hex(encode(text)), '(..)', '\1 ', 'g'))"""
-    val chain = merges.foldLeft(seed) {
-      case (acc, (l, r)) =>
-        val from = "' " + q(l) + "  " + q(r) + " '"
-        val to = "' " + q(l) + TextStats.BpeJoiner + q(r) + " '"
-        s"trim(replace(replace(' ' || replace($acc, ' ', '  ') || ' ', $from, $to), '  ', ' '))"
-    }
+  /** The byte-level merge replay in DuckDB: the [[mergeChainSql]]
+    * chain seeded from the hex-pair byte stream instead of whitespace
+    * tokens. */
+  def bpeBytesSqlFor(merges: Seq[(String, String)]): String =
     s"""WITH $unicodeBaseSql,
        |a AS (SELECT doc_id,
-       |    list_filter(string_split($chain, ' '), t -> len(t) > 0) AS bpe_symbols
+       |    ${chainSymbolsSql(hexSeedSql("text"), merges)} AS bpe_symbols
        |  FROM base)
        |SELECT doc_id, array_to_string(bpe_symbols, ' ') AS bpe_text,
        |  CAST(len(bpe_symbols) AS INTEGER) AS n_symbols,
        |  true AS rt_ok
        |FROM a ORDER BY doc_id""".stripMargin
-  }
 
   /** Tokenizer fertility audit ([[TextStats.tokenizerFertility]])
     * over documents ∪ the unicode zoo, grouped by lang: the
@@ -2240,23 +2253,11 @@ object ExtQueries {
       .orderBy("lang")
   }
 
-  /** Per-group fertility mirror: the same byte merge replay as
-    * [[bpeApplyBytesSqlFor]], aggregated per lang. */
-  def tokenizerFertilitySqlFor(merges: Seq[(String, String)]): String = {
-    def q(str: String) = str.replace("'", "''")
-    val seed = """trim(regexp_replace(hex(encode(text)), '(..)', '\1 ', 'g'))"""
-    val chain = merges.foldLeft(seed) {
-      case (acc, (l, r)) =>
-        val from = "' " + q(l) + "  " + q(r) + " '"
-        val to = "' " + q(l) + TextStats.BpeJoiner + q(r) + " '"
-        s"trim(replace(replace(' ' || replace($acc, ' ', '  ') || ' ', $from, $to), '  ', ' '))"
-    }
-    s"""WITH $unicodeBaseSql,
-       |a AS (SELECT doc_id, lang, text,
-       |    list_filter(string_split($chain, ' '), t -> len(t) > 0)
-       |      AS bpe_symbols
-       |  FROM base),
-       |g AS (SELECT lang,
+  /** The per-lang aggregate both fertility oracles end with, over
+    * `a(doc_id, lang, text, bpe_symbols)`: integer totals, then the
+    * three ratios rounded at 6 dp. */
+  private def fertilityTailSql: String =
+    s"""g AS (SELECT lang,
        |  COUNT(*) AS n_docs,
        |  CAST(SUM(len($toksSql)) AS BIGINT) AS total_words,
        |  CAST(SUM(len(bpe_symbols)) AS BIGINT) AS total_symbols,
@@ -2274,28 +2275,36 @@ object ExtQueries {
        |  CASE WHEN total_symbols > 0 THEN ROUND(CAST(base_symbols AS DOUBLE)
        |    / CAST(total_symbols AS DOUBLE), 6) END AS unmerged_frac
        |FROM g ORDER BY lang""".stripMargin
-  }
+
+  /** Per-group fertility mirror: the same byte merge replay as
+    * [[bpeBytesSqlFor]], aggregated per lang. */
+  def tokenizerFertilitySqlFor(merges: Seq[(String, String)]): String =
+    s"""WITH $unicodeBaseSql,
+       |a AS (SELECT doc_id, lang, text,
+       |    ${chainSymbolsSql(hexSeedSql("text"), merges)}
+       |      AS bpe_symbols
+       |  FROM base),
+       |$fertilityTailSql""".stripMargin
 
   private def bpePretokMergesFor(s: SparkSession, dir: String): Seq[(String, String)] =
     Artifacts.get("bpe_pretok_merges", s, dir)(
-      TextStats.bpeTrainBytesPretok(
+      TextStats.bpeTrain(
           documents(s, dir).where(col("doc_id") % 10 === 0).select("text"),
-          "text", merges = 8)
+          "text", merges = 8, mode = Tokenizer.ModeBytesPretok)
         .map(m => (m._1, m._2)))
 
   /** Byte BPE behind the GPT-2-style category-run pretokenizer
-    * ([[TextStats.bpeApplyBytesPretok]]): vocabulary trained with the
-    * boundary rule ([[TextStats.bpeTrainBytesPretok]] — merges can
-    * never cross letter/number/punctuation runs, the production
-    * contract GPT-2/SentencePiece ship), applied to documents ∪ the
-    * unicode zoo with the same decode∘apply round-trip gate as
-    * [[bpeApplyBytesQ]] (the pretokenizer pieces partition the text,
-    * so the inverse is unchanged). Oracle replays the SAME
-    * [[TextStats.BpePretokPattern]] split in RE2 and the merge chain
-    * per piece. */
-  val bpeApplyPretokQ: Q = (s, dir) => {
+    * ([[TextStats.bpeApply]] in `bytes-pretok` mode): vocabulary
+    * trained with the boundary rule (merges can never cross
+    * letter/number/punctuation runs, the production contract
+    * GPT-2/SentencePiece ship), applied to documents ∪ the unicode zoo
+    * with the same decode∘apply round-trip gate as [[bpeBytesQ]] (the
+    * pretokenizer pieces partition the text, so the inverse is
+    * unchanged). Oracle replays the SAME [[TextStats.BpePretokPattern]]
+    * split in RE2 and the merge chain per piece. */
+  val bpePretokQ: Q = (s, dir) => {
     val merges = bpePretokMergesFor(s, dir)
-    TextStats.bpeApplyBytesPretok(unicodeBase(s, dir), "text", merges)
+    TextStats.bpeApply(unicodeBase(s, dir), "text", merges, Tokenizer.ModeBytesPretok)
       .select(col("doc_id"),
         array_join(col("bpe_symbols"), " ").as("bpe_text"),
         size(col("bpe_symbols")).as("n_symbols"),
@@ -2307,41 +2316,28 @@ object ExtQueries {
       .orderBy("doc_id")
   }
 
-  /** The pretokenized byte-merge replay in DuckDB: pieces via the
-    * shared Java∩RE2 [[TextStats.BpePretokPattern]], then the
-    * space-doubling literal-replace chain PER PIECE inside a
-    * list_transform, flattened in piece order. */
-  def bpeApplyPretokSqlFor(merges: Seq[(String, String)]): String = {
-    def q(str: String) = str.replace("'", "''")
-    val seed = """trim(regexp_replace(hex(encode(pc)), '(..)', '\1 ', 'g'))"""
-    val chain = merges.foldLeft(seed) {
-      case (acc, (l, r)) =>
-        val from = "' " + q(l) + "  " + q(r) + " '"
-        val to = "' " + q(l) + TextStats.BpeJoiner + q(r) + " '"
-        s"trim(replace(replace(' ' || replace($acc, ' ', '  ') || ' ', $from, $to), '  ', ' '))"
-    }
+  /** The pretokenized byte-merge replay in DuckDB
+    * ([[pretokSymbolsSql]]). */
+  def bpePretokSqlFor(merges: Seq[(String, String)]): String =
     s"""WITH $unicodeBaseSql,
-       |a AS (SELECT doc_id, flatten(list_transform(
-       |    regexp_extract_all(text, '${TextStats.BpePretokPattern}'),
-       |    pc -> list_filter(string_split($chain, ' '), t -> len(t) > 0)))
+       |a AS (SELECT doc_id, ${pretokSymbolsSql(merges)}
        |      AS bpe_symbols
        |  FROM base)
        |SELECT doc_id, array_to_string(bpe_symbols, ' ') AS bpe_text,
        |  CAST(len(bpe_symbols) AS INTEGER) AS n_symbols,
        |  true AS rt_ok
        |FROM a ORDER BY doc_id""".stripMargin
-  }
 
   /** Fertility re-measured with the pretokenizer on
-    * ([[TextStats.tokenizerFertility]] `pretok = true`) — the audit
-    * the un-pretokenized fertility query cannot stand in for: without
-    * the boundary rule the vocabulary is non-standard, so its
+    * ([[TextStats.tokenizerFertility]] in `bytes-pretok` mode) — the
+    * audit the un-pretokenized fertility query cannot stand in for:
+    * without the boundary rule the vocabulary is non-standard, so its
     * fertility describes a tokenizer no production stack would ship.
     * Same output shape and grouping as [[tokenizerFertilityQ]]. */
   val tokenizerFertilityPretokQ: Q = (s, dir) => {
     val merges = bpePretokMergesFor(s, dir)
     TextStats.tokenizerFertility(unicodeBase(s, dir), "text", "lang", merges,
-        pretok = true)
+        mode = Tokenizer.ModeBytesPretok)
       .select("lang", "n_docs", "total_words", "total_symbols",
         "total_bytes", "base_symbols", "fertility", "bytes_per_symbol",
         "unmerged_frac")
@@ -2349,40 +2345,12 @@ object ExtQueries {
   }
 
   /** Per-group fertility mirror over the pretokenized apply. */
-  def tokenizerFertilityPretokSqlFor(merges: Seq[(String, String)]): String = {
-    def q(str: String) = str.replace("'", "''")
-    val seed = """trim(regexp_replace(hex(encode(pc)), '(..)', '\1 ', 'g'))"""
-    val chain = merges.foldLeft(seed) {
-      case (acc, (l, r)) =>
-        val from = "' " + q(l) + "  " + q(r) + " '"
-        val to = "' " + q(l) + TextStats.BpeJoiner + q(r) + " '"
-        s"trim(replace(replace(' ' || replace($acc, ' ', '  ') || ' ', $from, $to), '  ', ' '))"
-    }
+  def tokenizerFertilityPretokSqlFor(merges: Seq[(String, String)]): String =
     s"""WITH $unicodeBaseSql,
-       |a AS (SELECT doc_id, lang, text, flatten(list_transform(
-       |    regexp_extract_all(text, '${TextStats.BpePretokPattern}'),
-       |    pc -> list_filter(string_split($chain, ' '), t -> len(t) > 0)))
+       |a AS (SELECT doc_id, lang, text, ${pretokSymbolsSql(merges)}
        |      AS bpe_symbols
        |  FROM base),
-       |g AS (SELECT lang,
-       |  COUNT(*) AS n_docs,
-       |  CAST(SUM(len($toksSql)) AS BIGINT) AS total_words,
-       |  CAST(SUM(len(bpe_symbols)) AS BIGINT) AS total_symbols,
-       |  CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_bytes,
-       |  CAST(SUM(len(list_filter(bpe_symbols,
-       |    sy -> NOT contains(sy, '${TextStats.BpeJoiner}')))) AS BIGINT)
-       |    AS base_symbols
-       |FROM a GROUP BY 1)
-       |SELECT lang, n_docs, total_words, total_symbols, total_bytes,
-       |  base_symbols,
-       |  CASE WHEN total_words > 0 THEN ROUND(CAST(total_symbols AS DOUBLE)
-       |    / CAST(total_words AS DOUBLE), 6) END AS fertility,
-       |  CASE WHEN total_symbols > 0 THEN ROUND(CAST(total_bytes AS DOUBLE)
-       |    / CAST(total_symbols AS DOUBLE), 6) END AS bytes_per_symbol,
-       |  CASE WHEN total_symbols > 0 THEN ROUND(CAST(base_symbols AS DOUBLE)
-       |    / CAST(total_symbols AS DOUBLE), 6) END AS unmerged_frac
-       |FROM g ORDER BY lang""".stripMargin
-  }
+       |$fertilityTailSql""".stripMargin
 
   // ---- unigram-LM (SentencePiece-style) tokenization ----
 
@@ -8313,11 +8281,11 @@ object ExtQueries {
     ("q_unicode_graphemes", unicodeGraphemes, Some(unicodeGraphemesSql)),
     ("q_stream_script", streamScriptQ, Some(streamScriptSql)),
     ("q_retrieval_metrics", retrievalMetricsQ, Some(retrievalMetricsSql)),
-    ("q_bpe_apply_bytes", bpeApplyBytesQ, None),
+    ("q_bpe_apply_bytes", bpeBytesQ, None),
     ("q_tokenizer_fertility", tokenizerFertilityQ, None),
     ("q_text_langid_model", textLangidModelQ, None),
     ("q_langid_mixture", langidMixtureQ, None),
-    ("q_bpe_apply_pretok", bpeApplyPretokQ, None),
+    ("q_bpe_apply_pretok", bpePretokQ, None),
     ("q_tokenizer_fertility_pretok", tokenizerFertilityPretokQ, None),
     ("q_unigram_apply", unigramApplyQ, Some(unigramApplySql)),
     ("q_unigram_fertility", unigramFertilityQ, Some(unigramFertilitySql)),

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *     one pair-count agg + one codegen'd regexp pass over the
   *     persisted sample (never the full corpus), so train wall should
   *     grow ~linearly in `merges` — reported at 256/512/1024 merges;
-  *  2. apply stays a narrow single pass: the 1024-deep merge chain is
-  *     per-document work with zero shuffle, measured corpus-wide.
+  *  2. apply stays a narrow single pass: replaying the whole merge
+  *     list is per-document work with zero shuffle, measured
+  *     corpus-wide.
   *
   * Output: one JSON line → BENCH_BPE_SCALE.json.
   */
@@ -63,11 +64,9 @@ object BenchBpeScale {
       s"incremental adoption diverged from rescan within the first $overlap merges")
     // apply the LARGEST vocabulary corpus-wide (train saw only the
     // sample; apply must cover everything — the production asymmetry).
-    // bpeApplyLarge: at vocab scale the regexp-chain form would be a
-    // 8192-deep expression tree and 8192 regex passes per document.
     val vocab = incs.last._3.map(a => (a._1, a._2))
     val (tApply, applied) = timed {
-      graft.ext.TextStats.bpeApplyLarge(docs, "text", vocab)
+      graft.ext.TextStats.bpeApply(docs, "text", vocab)
         .agg(sum(size(col("bpe_symbols"))), count(lit(1)))
         .head()
     }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import graft.ext.TextStats
+import graft.ext.{TextStats, Tokenizer}
 
 /** The incremental (batched-speculative) BPE trainer must adopt the
   * EXACT sequence the rescan trainer adopts — same pairs, same order,
@@ -60,17 +60,18 @@ class BpeIncrementalSpec extends AnyFunSuite {
       .unionByName(graft.ext.UnicodeFixture.df(spark)
         .select("doc_id", "text"))
     val incB = TextStats.bpeTrainIncremental(fx, "text", 128,
-      seedMode = TextStats.SeedBytes)
-    val resB = TextStats.bpeTrainBytes(fx, "text", 128)
+      mode = Tokenizer.ModeBytes)
+    val resB = TextStats.bpeTrain(fx, "text", 128, mode = Tokenizer.ModeBytes)
     assert(incB == resB,
       s"bytes divergence at ${incB.zip(resB).indexWhere(t => t._1 != t._2)}")
     val incP = TextStats.bpeTrainIncremental(fx, "text", 96,
-      seedMode = TextStats.SeedBytesPretok)
-    val resP = TextStats.bpeTrainBytesPretok(fx, "text", 96)
+      mode = Tokenizer.ModeBytesPretok)
+    val resP = TextStats.bpeTrain(fx, "text", 96,
+      mode = Tokenizer.ModeBytesPretok)
     assert(incP == resP,
       s"pretok divergence at ${incP.zip(resP).indexWhere(t => t._1 != t._2)}")
     intercept[IllegalArgumentException](
-      TextStats.bpeTrainIncremental(fx, "text", 1, seedMode = "hexish"))
+      TextStats.bpeTrainIncremental(fx, "text", 1, mode = "hexish"))
   }
 
   test("degenerate inputs: zero merges, exhausted corpus, empty corpus") {

@@ -415,10 +415,17 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       checkpointEvery = 1000)
     assert(cut == uncut, s"cut=$cut uncut=$uncut")
     val vocab = cut.map(m => (m._1, m._2))
-    val chain = TextStats.bpeApply(corpus, "text", vocab)
+    // control-char edges: Spark's trim strips only U+0020, so a leading
+    // U+0001 or a trailing U+001F stays inside its token and the first
+    // merge must not fire across it
+    val (l0, r0) = vocab.head
+    val input = corpus.union(Seq(
+      (61L, s"\u0001$l0 $r0"), (62L, s"$l0 $r0\u001f"),
+      (63L, s"\u0001$l0 $r0\t")).toDF("doc_id", "text"))
+    val chain = BpeChain(input, "text", vocab)
       .select("doc_id", "bpe_symbols").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val large = TextStats.bpeApplyLarge(corpus, "text", vocab)
+    val large = TextStats.bpeApply(input, "text", vocab)
       .select("doc_id", "bpe_symbols").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(chain == large,
@@ -2078,10 +2085,11 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     val T = TextStats
     val corpus = docs.select("doc_id", "text")
     // a real trainer-produced vocabulary deep enough to chain products
-    val vocab = T.bpeTrainBytesPretok(corpus, "text", merges = 96)
+    val vocab = T.bpeTrain(corpus, "text", merges = 96,
+        mode = Tokenizer.ModeBytesPretok)
       .map(m => (m._1, m._2))
     assert(vocab.size == 96, vocab.size)
-    val seq = T.bpeApplyBytesPretok(corpus, "text", vocab)
+    val seq = T.bpeApply(corpus, "text", vocab, Tokenizer.ModeBytesPretok)
       .select("doc_id", "bpe_symbols").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val ranked = T.bpeApplyRankedBytesPretok(corpus, "text", vocab)
@@ -3076,9 +3084,9 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     assert(Tokenizer.loadMerges(path) == merges)
     // a loaded artifact tokenizes identically to the in-memory list
     val unseen = Seq("new york city limits").toDF("text")
-    val fromMem = TextStats.bpeApplyLarge(unseen, "text",
+    val fromMem = TextStats.bpeApply(unseen, "text",
       merges.map(m => (m._1, m._2))).select("bpe_symbols").head().getSeq[String](0)
-    val fromFile = TextStats.bpeApplyLarge(unseen, "text",
+    val fromFile = TextStats.bpeApply(unseen, "text",
       Tokenizer.loadMerges(path).map(m => (m._1, m._2)))
       .select("bpe_symbols").head().getSeq[String](0)
     assert(fromMem == fromFile, s"$fromMem vs $fromFile")
@@ -3140,7 +3148,8 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     assert(Tokenizer.loadArtifact(trapPath) == trap)
 
     // ---- v3: byte-mode artifact records its seeder ----
-    val byteMerges = TextStats.bpeTrainBytes(corpus, "text", merges = 4)
+    val byteMerges = TextStats.bpeTrain(corpus, "text", merges = 4,
+      mode = Tokenizer.ModeBytes)
     val bArt = Tokenizer.BpeArtifact(byteMerges, Tokenizer.DefaultSpecials,
       Tokenizer.ModeBytes)
     val v3path = s"$dir/tokenizer.v3.tsv"
@@ -3171,7 +3180,8 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       merges, Seq("bos" -> (l0 + J + r0))).vocabIds) // special == product
 
     // ---- v3: bytes-pretok mode records the boundary rule ----
-    val preMerges = TextStats.bpeTrainBytesPretok(corpus, "text", merges = 4)
+    val preMerges = TextStats.bpeTrain(corpus, "text", merges = 4,
+      mode = Tokenizer.ModeBytesPretok)
     val pArt = Tokenizer.BpeArtifact(preMerges, Tokenizer.DefaultSpecials,
       Tokenizer.ModeBytesPretok)
     val vPre = s"$dir/tokenizer.pretok.tsv"

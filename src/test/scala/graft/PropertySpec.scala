@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.ext.{Dedup, Multimodal, TextStats}
+import graft.ext.{Dedup, Multimodal, TextStats, Tokenizer}
 
 /** Algebraic invariants over generated inputs — each property runs as
   * ONE Spark job over a generated batch (never a job per sample), with
@@ -400,17 +400,18 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     // merges trained on the same distribution, so some products fire
-    val merges = TextStats.bpeTrainBytes(df, "text", merges = 12)
+    val merges = TextStats.bpeTrain(df, "text", merges = 12,
+        mode = Tokenizer.ModeBytes)
       .map(m => (m._1, m._2))
     assert(merges.nonEmpty)
-    val out = TextStats.bpeApplyBytes(df, "text", merges)
+    val out = BpeChain(df, "text", merges, Tokenizer.ModeBytes)
       .select(col("id"), col("text"),
         TextStats.bpeDecodeBytes(col("bpe_symbols")).as("rt"),
         col("bpe_symbols"))
       .collect()
-    // the large-vocab mapPartitions path is bit-identical to the
-    // regexp-chain path on every generated string
-    val viaLarge = TextStats.bpeApplyLargeBytes(df, "text", merges)
+    // the apply kernel is bit-identical to the regexp-chain reference
+    // on every generated string
+    val viaLarge = TextStats.bpeApply(df, "text", merges, Tokenizer.ModeBytes)
       .select(col("id"), col("bpe_symbols")).collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     out.foreach { r =>
@@ -442,15 +443,17 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
       .collect()
     pieces.foreach(r => assert(r.getString(1) == r.getString(2),
       s"pieces lost bytes at id ${r.getLong(0)}"))
-    val merges = TextStats.bpeTrainBytesPretok(df, "text", merges = 12)
+    val merges = TextStats.bpeTrain(df, "text", merges = 12,
+        mode = Tokenizer.ModeBytesPretok)
       .map(m => (m._1, m._2))
     assert(merges.nonEmpty)
-    val out = TextStats.bpeApplyBytesPretok(df, "text", merges)
+    val out = BpeChain(df, "text", merges, Tokenizer.ModeBytesPretok)
       .select(col("id"), col("text"),
         TextStats.bpeDecodeBytes(col("bpe_symbols")).as("rt"),
         col("bpe_symbols"))
       .collect()
-    val viaLarge = TextStats.bpeApplyLargeBytesPretok(df, "text", merges)
+    val viaLarge = TextStats.bpeApply(df, "text", merges,
+        Tokenizer.ModeBytesPretok)
       .select(col("id"), col("bpe_symbols")).collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     // the vocab-size-independent RANKED apply must agree bit-for-bit
@@ -474,9 +477,11 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     // pieces — a pretok-trained vocabulary must never adopt the
     // ("61","31") merge the unpretokenized trainer happily learns
     val df = Seq.tabulate(50)(i => (i.toLong, "a1 a1 a1")).toDF("id", "text")
-    val plain = TextStats.bpeTrainBytes(df, "text", merges = 1)
+    val plain = TextStats.bpeTrain(df, "text", merges = 1,
+      mode = Tokenizer.ModeBytes)
     assert(plain.head._1 == "61" && plain.head._2 == "31", plain)
-    val pre = TextStats.bpeTrainBytesPretok(df, "text", merges = 8)
+    val pre = TextStats.bpeTrain(df, "text", merges = 8,
+      mode = Tokenizer.ModeBytesPretok)
     pre.foreach { case (l, r, _) =>
       val prod = (l + r).replace(TextStats.BpeJoiner, "")
       val bytes = prod.grouped(2).map(Integer.parseInt(_, 16)).toSeq
@@ -493,8 +498,9 @@ class PropertySpec extends AnyFunSuite with SparkTestSession {
     }
     // and the apply side leaves the boundary untouched even when
     // handed a cross-boundary merge from a foreign vocabulary
-    val applied = TextStats.bpeApplyBytesPretok(
-        Seq((1L, "a1")).toDF("id", "text"), "text", Seq(("61", "31")))
+    val applied = TextStats.bpeApply(
+        Seq((1L, "a1")).toDF("id", "text"), "text", Seq(("61", "31")),
+        Tokenizer.ModeBytesPretok)
       .select("bpe_symbols").head().getSeq[String](0)
     assert(applied == Seq("61", "31"), applied)
   }

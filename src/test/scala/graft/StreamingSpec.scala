@@ -1012,7 +1012,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
   test("frozen tokenizer artifact applies to a stream identically to batch") {
     import spark.implicits._
     // train → ship artifact → tokenize an ingest stream with the
-    // LOADED merges: bpeApplyLarge's per-partition replay is
+    // LOADED merges: bpeApply's per-row replay is
     // stateless, so it runs in append mode with no watermark
     val corpus = Seq(
       "new york city", "new york times", "new york",
@@ -1033,10 +1033,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     docs.write.mode("overwrite").parquet(dir)
     def grab(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap
-    val batch = grab(graft.ext.TextStats.bpeApplyLarge(docs, "text", loaded)
+    val batch = grab(graft.ext.TextStats.bpeApply(docs, "text", loaded)
       .select("doc_id", "bpe_symbols"))
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
-    val q = graft.ext.TextStats.bpeApplyLarge(stream, "text", loaded)
+    val q = graft.ext.TextStats.bpeApply(stream, "text", loaded)
       .select("doc_id", "bpe_symbols")
       .writeStream.outputMode("append")
       .format("memory").queryName("bpe_out").start()
@@ -1103,7 +1103,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
     val corpus = Seq(
       "new york city", "new york times", "new york",
       "san francisco bay", "san francisco").toDF("text")
-    val merges = T.bpeTrainBytesPretok(corpus, "text", merges = 24)
+    val merges = T.bpeTrain(corpus, "text", merges = 24,
+      mode = Tok.ModeBytesPretok)
     val art = java.nio.file.Files.createTempDirectory("bpe_v4_stream")
       .resolve("tokenizer.v4.tsv").toString
     Tok.saveArtifact(Tok.BpeArtifact(merges, Tok.DefaultSpecials,
@@ -1120,8 +1121,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
       "bpe_symbols").select("doc_id", "bpe_symbols"))
     // the ranked path must equal the sequential replay on the stream's
     // input too (the spec-pinned equivalence, here through the artifact)
-    assert(batch == grab(T.bpeApplyBytesPretok(docs, "text",
-      merges.map(m => (m._1, m._2))).select("doc_id", "bpe_symbols")))
+    assert(batch == grab(T.bpeApply(docs, "text",
+      merges.map(m => (m._1, m._2)), Tok.ModeBytesPretok)
+      .select("doc_id", "bpe_symbols")))
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
     val q = T.bpeApplyRankedBytesPretok(stream, "text", loaded, "bpe_symbols")
       .select("doc_id", "bpe_symbols")
