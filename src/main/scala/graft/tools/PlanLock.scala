@@ -45,7 +45,9 @@ object PlanLock {
 
   val heavy: Seq[String] = Seq(
     "q_mixture_authority", "q_dedup_index_update", "q_curation_pipeline",
-    "q_bm25_topk", "q_langid_mixture", "q_sim_ivfpq_rerank")
+    "q_bm25_topk", "q_langid_mixture", "q_sim_ivfpq_rerank",
+    "q_sim_ivf", "q_sim_pq", "q_sim_sq8", "q_sim_ivfpq",
+    "q_sim_ivfpq_residual", "q_sim_matryoshka")
 
   /** Every locked query, in lock-file order. */
   val all: Seq[String] = headline ++ heavy
