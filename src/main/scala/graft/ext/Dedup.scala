@@ -987,7 +987,7 @@ object Dedup {
 
   /** [[semanticDedup]] past the plan-literal centroid boundary: the
     * partition comes from the deterministic sign-bucket LSH
-    * ([[Similarity.signBucket]]'s md5-derived ±1 planes) instead of
+    * ([[Similarity.signBucketNative]]'s md5-derived ±1 planes) instead of
     * k-means cells, so "cluster count ∝ corpus size" costs NOTHING at
     * assignment time — `nBits` planes give 2^nBits buckets from an
     * O(nBits·dim) narrow projection per row, no O(k)-per-row literal

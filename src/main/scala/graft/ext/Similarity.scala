@@ -28,15 +28,6 @@ object Similarity {
     aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
       lit(0.0), (acc, v) => acc + v)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity rounded to 6 dp (absorbs engine-side FP noise
-    * while keeping 1e-6 discrimination). */
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d > 0, round(dot(a, b) / d, 6)).otherwise(0.0)
-  }
-
   // ---- native codegen'd kernels (need a session to register) ----
 
   /** Codegen'd dot product — identical fold order and values to
@@ -47,6 +38,14 @@ object Similarity {
     graft.GraftFunctions.register(spark)
     call_function("dot_product", a, b)
   }
+
+  /** `sqrt(dot(v, v))` of vector column `v`: the per-vector norm every
+    * operator stages once before its join. */
+  private def vnorm(spark: org.apache.spark.sql.SparkSession, v: String): Column =
+    sqrt(nDot(spark, col(v), col(v)))
+
+  /** Squared norm of a driver-held vector (centroid or sub-centroid). */
+  private def norm2(c: Array[Double]): Double = c.map(x => x * x).sum
 
   /** Cosine from a per-pair dot and PRE-STAGED per-side norms (pass
     * attributes). A self-contained per-pair cosine expression would
@@ -62,6 +61,20 @@ object Similarity {
     when(d > 0, round(dot / d, 6)).otherwise(0.0)
   }
 
+  /** The one ANN ranking rule: per query, `cosine` DESC with the
+    * neighbor id breaking ties; the first `k` rows stay, numbered from
+    * 1 in `rank`. Every top-k path (and matryoshka's shortlist) ranks
+    * here, so their results are comparable row for row. */
+  private def ranked(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+  }
+
+  /** [[ranked]] in the top-k result shape. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    ranked(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
+
   /** Brute-force exact top-k: every query scored against every corpus
     * vector (query side broadcast), ranked per query with id
     * tie-break. Norms are computed once per VECTOR before the join —
@@ -70,17 +83,12 @@ object Similarity {
                 vecCol: String, k: Int): DataFrame = {
     val s = corpus.sparkSession
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
+      .withColumn("__qn", vnorm(s, "qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("__cn", sqrt(nDot(s, col("cv"), col("cv"))))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .withColumn("__cn", vnorm(s, "cv"))
+    topK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", cosineFromNorms(
-        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn"))), k)
   }
 
   /** Deterministic ±1 plane pattern for pseudo-plane `p` over `dim`
@@ -97,23 +105,11 @@ object Similarity {
   }
 
   /** Sign-bucket key from `nBits` deterministic pseudo-planes: plane p
-    * is a ±1 literal pattern over dimensions, so the bucket of a vector
-    * is stable across runs with no stored plane matrix. Nearby vectors
-    * likely share buckets. `dim` must match the embedding length. */
-  def signBucket(vec: Column, nBits: Int, dim: Int = 64): Column = {
-    val bits = (0 until nBits).map { p =>
-      val signs = lit(planeSigns(p, dim))
-      val proj = aggregate(
-        zip_with(vec, signs, (x, s) => x.cast("double") * s),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << p)).otherwise(0L)
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** [[signBucket]] on the native dot kernel — same values (identical
-    * fold order), codegen'd projections. */
-  private[ext] def signBucketNative(spark: org.apache.spark.sql.SparkSession,
+    * is a ±1 literal pattern over dimensions ([[planeSigns]]), so the
+    * bucket of a vector is stable across runs with no stored plane
+    * matrix. Nearby vectors likely share buckets. `dim` must match the
+    * embedding length. Projections run on the native dot kernel. */
+  private[graft] def signBucketNative(spark: org.apache.spark.sql.SparkSession,
                                     vec: Column, nBits: Int,
                                     dim: Int = 64): Column =
     (0 until nBits).map { p =>
@@ -153,10 +149,9 @@ object Similarity {
   private def withSimCols(df: DataFrame, vecCol: String,
                           cents: Array[Array[Double]]): (DataFrame, Seq[String]) = {
     val spark = df.sparkSession
-    val staged = df.withColumn("__vn",
-      sqrt(nDot(spark, col(vecCol), col(vecCol))))
+    val staged = df.withColumn("__vn", vnorm(spark, vecCol))
     val simCols = cents.toSeq.zipWithIndex.map { case (c, i) =>
-      val cn = math.sqrt(c.map(x => x * x).sum)
+      val cn = math.sqrt(norm2(c))
       val s = if (cn == 0) lit(0.0)
       else when(col("__vn") > 0,
         nDot(spark, col(vecCol), lit(c)) / (col("__vn") * cn)).otherwise(0.0)
@@ -165,18 +160,20 @@ object Similarity {
     (staged.select(col("*") +: simCols: _*), cents.indices.map(i => s"__s$i"))
   }
 
-  /** Nearest-centroid index (0-based; first max wins ties) as a
-    * `cell` column. */
-  private def withBestCell(df: DataFrame, vecCol: String,
-                           cents: Array[Array[Double]]): DataFrame = {
-    val (withS, names) = withSimCols(df, vecCol, cents)
+  /** Index (0-based; first max wins ties) of the largest staged score
+    * column as int `outCol` — the one argmax behind IVF cells and PQ
+    * codes. Drops the scores, their max and the `extra` staging
+    * columns. */
+  private def withArgmax(staged: (DataFrame, Seq[String]), outCol: String,
+                         extra: String*): DataFrame = {
+    val (df, names) = staged
     val refs = names.map(col)
-    val cellExpr = refs.zipWithIndex.init.foldRight(lit(cents.length - 1): Column) {
-      case ((s, i), acc) => when(s === col("__m"), lit(i)).otherwise(acc)
+    val idx = refs.zipWithIndex.init.foldRight(lit(refs.length - 1): Column) {
+      case ((sc, i), acc) => when(sc === col("__m"), lit(i)).otherwise(acc)
     }.cast("int")
-    withS.withColumn("__m", greatest(refs: _*))
-      .withColumn("cell", cellExpr)
-      .drop("__vn" +: "__m" +: names: _*)
+    df.withColumn("__m", greatest(refs: _*))
+      .withColumn(outCol, idx)
+      .drop(extra ++ ("__m" +: names): _*)
   }
 
   /** Explode the `nprobe` nearest-centroid indices per row into a
@@ -203,18 +200,22 @@ object Similarity {
       .orderBy("__h").limit(k)
       .collect().map(_.getSeq[Double](0).toArray)
 
-  /** `iters` Lloyd iterations from the md5 seed. Cells that lose all
-    * members keep their previous centroid. */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int = 2): Array[Array[Double]] = {
+  /** `iters` Lloyd iterations from the md5 seed: `score` stages one
+    * score column per centroid and each vector joins the first max
+    * ([[withArgmax]]). Narrow assign → per-(cell, dim) partial sums →
+    * O(k·dim) collect. Cells that lose all members keep their previous
+    * centroid. */
+  private def lloyd(corpus: DataFrame, idCol: String, vecCol: String,
+                    k: Int, iters: Int)(
+      score: (DataFrame, Array[Array[Double]]) => (DataFrame, Seq[String]))
+      : Array[Array[Double]] = {
     var cents = seedCentroids(corpus, idCol, vecCol, k)
-    // keep the RAW vector column: pre-casting via transform() is a
-    // lambda expr that CollapseProject would inline into every
-    // element_at reference; elemD casts per element instead.
+    // keep the RAW vector column: a transform() pre-cast is a lambda
+    // expression CollapseProject would inline into every score
     val vecs = corpus.select(col(vecCol).as("__v"))
     for (_ <- 0 until iters) {
-      val stats = withBestCell(vecs, "__v", cents)
-        .select(col("cell").as("__cell"),
+      val stats = withArgmax(score(vecs, cents), "__cell")
+        .select(col("__cell"),
           posexplode(asDouble(col("__v"))).as(Seq("__pos", "__x")))
         .groupBy("__cell", "__pos")
         .agg(sum("__x").as("__s"), count(lit(1)).as("__n"))
@@ -228,28 +229,18 @@ object Similarity {
     cents
   }
 
-  /** IVF index: corpus + `cell` (nearest k-means centroid, 0-based).
-    * At scale `cell` is the partitioning/bucketing key of the stored
-    * index; assignment itself is a narrow projection. */
-  def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                nCells: Int, iters: Int = 2): DataFrame =
-    assignCells(corpus, vecCol,
-      kmeansCentroids(corpus, idCol, vecCol, nCells, iters))
+  /** `iters` Lloyd iterations from the md5 seed, cosine assignment:
+    * the IVF centroids. */
+  def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
+                      k: Int, iters: Int = 2): Array[Array[Double]] =
+    lloyd(corpus, idCol, vecCol, k, iters)(withSimCols(_, "__v", _))
 
-  /** Add a `cell` column from driver-held centroids. */
+  /** Add a `cell` column (nearest centroid by cosine, 0-based) from
+    * driver-held centroids — a narrow projection; at scale `cell` is
+    * the partitioning key of the stored index. */
   def assignCells(df: DataFrame, vecCol: String,
                   cents: Array[Array[Double]]): DataFrame =
-    withBestCell(df, vecCol, cents)
-
-  /** IVF approximate top-k: probe the `nprobe` cells nearest each
-    * query (computed in the same narrow projection), exact cosine
-    * within those cells only. The probe side is |queries|·nprobe rows
-    * — broadcast, so the corpus never shuffles. */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-              vecCol: String, k: Int, nCells: Int = 16,
-              nprobe: Int = 4, iters: Int = 2): DataFrame =
-    ivfTopKWith(queries, corpus, idCol, vecCol, k,
-      kmeansCentroids(corpus, idCol, vecCol, nCells, iters), nprobe)
+    withArgmax(withSimCols(df, vecCol, cents), "cell", "__vn")
 
   // ---- PQ: product quantization (compressed codes + ADC scan) ----
   //
@@ -273,50 +264,18 @@ object Similarity {
                            cents: Array[Array[Double]]): (DataFrame, Seq[String]) = {
     val spark = df.sparkSession
     val scoreCols = cents.toSeq.zipWithIndex.map { case (c, i) =>
-      (nDot(spark, col(vecCol), lit(c)) - lit(c.map(x => x * x).sum / 2))
+      (nDot(spark, col(vecCol), lit(c)) - lit(norm2(c) / 2))
         .as(s"__p$i")
     }
     (df.select(col("*") +: scoreCols: _*), cents.indices.map(i => s"__p$i"))
   }
 
-  /** Nearest sub-centroid id (0-based, first max wins ties) of
-    * `vecCol` as `outCol`. */
-  private def withCodeCol(df: DataFrame, vecCol: String,
-                          cents: Array[Array[Double]],
-                          outCol: String): DataFrame = {
-    val (withS, names) = withL2Scores(df, vecCol, cents)
-    val refs = names.map(col)
-    val codeExpr = refs.zipWithIndex.init.foldRight(lit(cents.length - 1): Column) {
-      case ((sc, i), acc) => when(sc === col("__pm"), lit(i)).otherwise(acc)
-    }.cast("int")
-    withS.withColumn("__pm", greatest(refs: _*))
-      .withColumn(outCol, codeExpr)
-      .drop("__pm" +: names: _*)
-  }
-
   /** Lloyd iterations with L2 assignment from the md5 seed — the PQ
-    * sub-codebook trainer; same distributed shape as
-    * [[kmeansCentroids]] (narrow assign → k·dim partial sums →
-    * O(k·dim) collect). */
+    * sub-codebook trainer, [[kmeansCentroids]]'s loop with
+    * [[withL2Scores]]. */
   def kmeansL2(corpus: DataFrame, idCol: String, vecCol: String,
-               k: Int, iters: Int = 1): Array[Array[Double]] = {
-    var cents = seedCentroids(corpus, idCol, vecCol, k)
-    val vecs = corpus.select(col(vecCol).as("__v"))
-    for (_ <- 0 until iters) {
-      val stats = withCodeCol(vecs, "__v", cents, "__cell")
-        .select(col("__cell"),
-          posexplode(asDouble(col("__v"))).as(Seq("__pos", "__x")))
-        .groupBy("__cell", "__pos")
-        .agg(sum("__x").as("__s"), count(lit(1)).as("__n"))
-        .collect()
-      val next = cents.map(_.clone())
-      stats.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2) / r.getLong(3)
-      }
-      cents = next
-    }
-    cents
-  }
+               k: Int, iters: Int = 1): Array[Array[Double]] =
+    lloyd(corpus, idCol, vecCol, k, iters)(withL2Scores(_, "__v", _))
 
   /** Per-subspace PQ codebooks: `books(s)(j)` is sub-centroid `j`
     * (dsub = dim/m doubles) of subspace `s`. `m` distributed k-means
@@ -342,12 +301,45 @@ object Similarity {
                books: Array[Array[Array[Double]]]): DataFrame = {
     val dsub = books(0)(0).length
     books.indices.foldLeft(df) { (acc, s) =>
-      withCodeCol(
-        acc.withColumn(s"__sub$s", slice(col(vecCol), s * dsub + 1, dsub)),
-        s"__sub$s", books(s), s"code_$s")
-        .drop(s"__sub$s")
+      withArgmax(withL2Scores(
+          acc.withColumn(s"__sub$s", slice(col(vecCol), s * dsub + 1, dsub)),
+          s"__sub$s", books(s)),
+        s"code_$s", s"__sub$s")
     }
   }
+
+  /** Per-query PQ lookup tables `__lut0..__lut{m-1}`: the dot of each
+    * `qv` sub-slice with every sub-centroid of its subspace (m·ksub
+    * doubles per query); drops `qv`. */
+  private def withLuts(q: DataFrame,
+                       books: Array[Array[Array[Double]]]): DataFrame = {
+    val s = q.sparkSession
+    val dsub = books(0)(0).length
+    books.indices.foldLeft(q) { (acc, i) =>
+      acc.withColumn(s"__lut$i", array(books(i).toSeq.map(c =>
+        nDot(s, slice(col("qv"), i * dsub + 1, dsub), lit(c))): _*))
+    }.drop("qv")
+  }
+
+  /** Σₛ `tables(s)[code_s]`: one literal table per subspace, looked up
+    * by that subspace's code. */
+  private def codeSum(tables: Array[Array[Double]]): Column =
+    tables.indices.map(i =>
+      element_at(lit(tables(i)), col(s"code_$i") + 1)).reduce(_ + _)
+
+  /** Asymmetric-distance inner product of a query (its [[withLuts]]
+    * tables) and a coded candidate: Σₛ lutₛ[codeₛ]. */
+  private def adcDot(m: Int): Column =
+    (0 until m).map(i =>
+      element_at(col(s"__lut$i"), col(s"code_$i") + 1)).reduce(_ + _)
+
+  /** PQ index rows: `keep` ++ codes ++ `__cxn`, the norm of the
+    * reconstruction √Σₛ|c_{s,code_s}|², from rows carrying `cv`. */
+  private def pqIndex(rows: DataFrame, keep: Seq[String],
+                      books: Array[Array[Array[Double]]]): DataFrame =
+    pqEncode(rows, "cv", books)
+      .withColumn("__cxn", sqrt(codeSum(books.map(_.map(norm2)))))
+      .select((keep ++ books.indices.map(i => s"code_$i") :+ "__cxn").map(col): _*)
 
   /** PQ approximate top-k by asymmetric distance: the corpus side is
     * its CODES only (raw corpus vectors are never read after encode);
@@ -359,33 +351,15 @@ object Similarity {
              vecCol: String, k: Int,
              books: Array[Array[Array[Double]]]): DataFrame = {
     val s = corpus.sparkSession
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val cnorm2 = books.map(_.map(c => c.map(x => x * x).sum))
-    val codeCols = (0 until m).map(i => s"code_$i")
-    val encoded = pqEncode(
-        corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
-        "cv", books)
-      .withColumn("__cxn", sqrt((0 until m).map(i =>
-        element_at(lit(cnorm2(i)), col(s"code_$i") + 1)).reduce(_ + _)))
-      .select((("neighbor_id" +: codeCols) :+ "__cxn").map(col): _*)
-    val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
-    val withLuts = (0 until m).foldLeft(q0) { (acc, i) =>
-      acc.withColumn(s"__lut$i", array((0 until ksub).map(j =>
-        nDot(s, slice(col("qv"), i * dsub + 1, dsub), lit(books(i)(j)))): _*))
-    }.drop("qv")
-    val adot = (0 until m).map(i =>
-      element_at(col(s"__lut$i"), col(s"code_$i") + 1)).reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    encoded.join(broadcast(withLuts), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", when(col("__qn") * col("__cxn") > 0,
-        round(adot / (col("__qn") * col("__cxn")), 6)).otherwise(0.0))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    val encoded = pqIndex(
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
+      Seq("neighbor_id"), books)
+    val luts = withLuts(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+        .withColumn("__qn", vnorm(s, "qv")), books)
+    topK(encoded.join(broadcast(luts), col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", cosineFromNorms(
+        adcDot(books.length), col("__qn"), col("__cxn"))), k)
   }
 
   /** Per-dimension scalar-quantization bounds (FAISS `SQ8` analog):
@@ -457,24 +431,18 @@ object Similarity {
         corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
         "cv", mins, steps)
       .withColumn("__dq", dequant)
-      .withColumn("__cxn", sqrt(nDot(s, col("__dq"), col("__dq"))))
+      .withColumn("__cxn", vnorm(s, "__dq"))
       .select(col("neighbor_id"),
         transform(col("sq_code"), _.cast("double")).as("__cd"), col("__cxn"))
     val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
+      .withColumn("__qn", vnorm(s, "qv"))
       .withColumn("__qm", nDot(s, col("qv"), lit(mins)))
       .withColumn("__qs", zip_with(col("qv"), lit(steps), (x, st) => x * st))
       .drop("qv")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    encoded.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        when(col("__qn") * col("__cxn") > 0,
-          round((col("__qm") + nDot(s, col("__qs"), col("__cd"))) /
-            (col("__qn") * col("__cxn")), 6)).otherwise(0.0))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    topK(encoded.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+      .withColumn("cosine", cosineFromNorms(
+        col("__qm") + nDot(s, col("__qs"), col("__cd")),
+        col("__qn"), col("__cxn"))), k)
   }
 
   /** IVFPQ — the production ANN composition (Jégou et al., "Product
@@ -493,39 +461,13 @@ object Similarity {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                 vecCol: String, k: Int, cents: Array[Array[Double]],
                 nprobe: Int, books: Array[Array[Array[Double]]]): DataFrame = {
-    val s = corpus.sparkSession
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val cnorm2 = books.map(_.map(c => c.map(x => x * x).sum))
-    val codeCols = (0 until m).map(i => s"code_$i")
-    val indexed = pqEncode(
-        assignCells(corpus, vecCol, cents)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell")),
-        "cv", books)
-      .withColumn("__cxn", sqrt((0 until m).map(i =>
-        element_at(lit(cnorm2(i)), col(s"code_$i") + 1)).reduce(_ + _)))
-      .select((Seq("neighbor_id", "cell") ++ codeCols :+ "__cxn").map(col): _*)
-    val probed = withProbeCells(
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-        "qv", cents, nprobe)
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
-    val withLuts = (0 until m).foldLeft(probed) { (acc, i) =>
-      acc.withColumn(s"__lut$i", array((0 until ksub).map(j =>
-        nDot(s, slice(col("qv"), i * dsub + 1, dsub), lit(books(i)(j)))): _*))
-    }.drop("qv")
-    val adot = (0 until m).map(i =>
-      element_at(col(s"__lut$i"), col(s"code_$i") + 1)).reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    indexed.join(broadcast(withLuts), Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", when(col("__qn") * col("__cxn") > 0,
-        round(adot / (col("__qn") * col("__cxn")), 6)).otherwise(0.0))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+    val indexed = pqIndex(
+      cellRows(assignCells(corpus, vecCol, cents), idCol, vecCol),
+      Seq("neighbor_id", "cell"), books)
+    val luts = withLuts(probe(queries, idCol, vecCol, cents, nprobe), books)
+    topK(inProbedCells(indexed, luts)
+      .withColumn("cosine", cosineFromNorms(
+        adcDot(books.length), col("__qn"), col("__cxn"))), k)
   }
 
   /** Per-subspace PQ codebooks trained on RESIDUALS `v − cent(cell)`
@@ -540,13 +482,20 @@ object Similarity {
   def pqResidualBooks(corpus: DataFrame, idCol: String, vecCol: String,
                       cents: Array[Array[Double]], m: Int, ksub: Int,
                       iters: Int = 1): Array[Array[Array[Double]]] = {
-    val dim = cents(0).length
-    val centsLit = typedlit(cents.map(_.toSeq).toSeq)
     val withResid = assignCells(corpus, vecCol, cents)
-      .withColumn("__resid", zip_with(asDouble(col(vecCol)),
-        element_at(centsLit, col("cell") + 1), (x, c) => x - c))
-    pqCodebooks(withResid, idCol, "__resid", dim, m, ksub, iters)
+      .withColumn("__resid", residual(col(vecCol), cents))
+    pqCodebooks(withResid, idCol, "__resid", cents(0).length, m, ksub, iters)
   }
+
+  /** The nested literal of the centroids, indexable by `cell + 1`. */
+  private def centsLit(cents: Array[Array[Double]]): Column =
+    typedlit(cents.map(_.toSeq).toSeq)
+
+  /** `v − cent(cell)` per row: what residual codebooks train on and
+    * residual codes describe. */
+  private def residual(vec: Column, cents: Array[Array[Double]]): Column =
+    zip_with(asDouble(vec), element_at(centsLit(cents), col("cell") + 1),
+      (x, c) => x - c)
 
   /** IVFADC proper (Jégou et al. §III): IVF cells prune, PQ codes on
     * the RESIDUAL `v − cent(cell)` score. Versus [[ivfPqTopK]] (which
@@ -578,8 +527,6 @@ object Similarity {
     val dim = cents(0).length
     require(m * dsub == dim,
       s"books cover ${m * dsub} dims, centroids have $dim")
-    val rn2 = books.map(_.map(c => c.map(x => x * x).sum))
-    val cnorm2 = cents.map(c => c.map(x => x * x).sum)
     // crTable(s)(cell·ksub + j) = ⟨cent(cell) sub-slice s, books(s)(j)⟩
     val crTable: Array[Array[Double]] = Array.tabulate(m) { sub =>
       val out = new Array[Double](cents.length * ksub)
@@ -594,71 +541,67 @@ object Similarity {
       }
       out
     }
-    val centsLit = typedlit(cents.map(_.toSeq).toSeq)
-    val codeCols = (0 until m).map(i => s"code_$i")
     val indexed = pqEncode(
-        assignCells(corpus, vecCol, cents)
-          .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-            col("cell"))
-          .withColumn("__resid", zip_with(asDouble(col("cv")),
-            element_at(centsLit, col("cell") + 1), (x, c) => x - c)),
+        cellRows(assignCells(corpus, vecCol, cents), idCol, vecCol)
+          .withColumn("__resid", residual(col("cv"), cents)),
         "__resid", books)
       .withColumn("__cr", (0 until m).map(i =>
         element_at(lit(crTable(i)),
           col("cell") * ksub + col(s"code_$i") + 1)).reduce(_ + _))
-      .withColumn("__rn2", (0 until m).map(i =>
-        element_at(lit(rn2(i)), col(s"code_$i") + 1)).reduce(_ + _))
+      .withColumn("__rn2", codeSum(books.map(_.map(norm2))))
       .withColumn("__cxn", sqrt(
-        element_at(lit(cnorm2), col("cell") + 1) +
+        element_at(lit(cents.map(norm2)), col("cell") + 1) +
           lit(2.0) * col("__cr") + col("__rn2")))
-      .select((Seq("neighbor_id", "cell") ++ codeCols :+ "__cxn").map(col): _*)
-    val probed = withProbeCells(
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-        "qv", cents, nprobe)
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
-      .withColumn("__qc",
-        nDot(s, col("qv"), element_at(centsLit, col("cell") + 1)))
-    val withLuts = (0 until m).foldLeft(probed) { (acc, i) =>
-      acc.withColumn(s"__lut$i", array((0 until ksub).map(j =>
-        nDot(s, slice(col("qv"), i * dsub + 1, dsub), lit(books(i)(j)))): _*))
-    }.drop("qv")
-    val adot = (0 until m).map(i =>
-      element_at(col(s"__lut$i"), col(s"code_$i") + 1)).reduce(_ + _)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    indexed.join(broadcast(withLuts), Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", when(col("__qn") * col("__cxn") > 0,
-        round((col("__qc") + adot) / (col("__qn") * col("__cxn")), 6))
-        .otherwise(0.0))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .select((Seq("neighbor_id", "cell") ++
+        (0 until m).map(i => s"code_$i") :+ "__cxn").map(col): _*)
+    val luts = withLuts(probe(queries, idCol, vecCol, cents, nprobe)
+      .withColumn("__qc", nDot(s, col("qv"),
+        element_at(centsLit(cents), col("cell") + 1))), books)
+    topK(inProbedCells(indexed, luts)
+      .withColumn("cosine", cosineFromNorms(
+        col("__qc") + adcDot(m), col("__qn"), col("__cxn"))), k)
   }
 
-  /** [[ivfTopK]] against caller-held centroids — lets a caller build
-    * the index once (or persist centroids) and share them across
-    * queries and oracle generation. */
+  /** IVF approximate top-k against caller-held centroids: probe the
+    * `nprobe` cells nearest each query (computed in the same narrow
+    * projection), exact cosine within those cells only. The probe side
+    * is |queries|·nprobe rows — broadcast, so the corpus never
+    * shuffles. Holding the centroids lets a caller build the index
+    * once (or persist centroids) and share them across queries and
+    * oracle generation. */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame, idCol: String,
                   vecCol: String, k: Int, cents: Array[Array[Double]],
-                  nprobe: Int): DataFrame = {
-    val s = corpus.sparkSession
-    val indexed = assignCells(corpus, vecCol, cents)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("cell"))
-      .withColumn("__cn", sqrt(nDot(s, col("cv"), col("cv"))))
-    val probed = withProbeCells(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      "qv", cents, nprobe)
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
+                  nprobe: Int): DataFrame =
+    ivfScore(cellRows(assignCells(corpus, vecCol, cents), idCol, vecCol),
+      probe(queries, idCol, vecCol, cents, nprobe), k)
+
+  /** `cell`-carrying corpus rows as `(neighbor_id, cv, cell)`. */
+  private def cellRows(withCell: DataFrame, idCol: String,
+                       vecCol: String): DataFrame =
+    withCell.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      col("cell"))
+
+  /** Queries as `(query_id, qv, cell, __qn)`, one row per probed cell. */
+  private def probe(queries: DataFrame, idCol: String, vecCol: String,
+                    cents: Array[Array[Double]], nprobe: Int): DataFrame =
+    withProbeCells(
+        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
+        "qv", cents, nprobe)
+      .withColumn("__qn", vnorm(queries.sparkSession, "qv"))
+
+  /** Index rows meet the (broadcast) probe rows of their cell; a query
+    * never scores itself. */
+  private def inProbedCells(indexed: DataFrame, probed: DataFrame): DataFrame =
     indexed.join(broadcast(probed), Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
+
+  /** The IVF scoring join: [[cellRows]] against the probed queries,
+    * exact cosine, top-k. */
+  private def ivfScore(rows: DataFrame, probed: DataFrame, k: Int): DataFrame = {
+    val s = rows.sparkSession
+    topK(inProbedCells(rows.withColumn("__cn", vnorm(s, "cv")), probed)
       .withColumn("cosine", cosineFromNorms(
-        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn"))), k)
   }
 
   /** IVF as a STORAGE layout: the corpus written `partitionBy(cell)`,
@@ -730,30 +673,17 @@ object Similarity {
       indexDir: String, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, cents: Array[Array[Double]],
       nprobe: Int): (DataFrame, Array[Int], Int) = {
-    val s = queries.sparkSession
-    val probed = withProbeCells(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")),
-      "qv", cents, nprobe)
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
+    val probed = probe(queries, idCol, vecCol, cents, nprobe)
     val cellSet = probed.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted
     // list + read ONLY the probed cell dirs (PartitionedIndex.read): a
     // query batch against a billion-row layout must not pay a
     // full-layout file listing to open nprobe cells
-    val indexed = PartitionedIndex.read(s, indexDir, IvfIndex, cellSet.toSet)
+    val stored = PartitionedIndex.read(queries.sparkSession, indexDir,
+        IvfIndex, cellSet.toSet)
       .where(col("cell").isin(cellSet.toIndexedSeq: _*))
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("cell"))
-      .withColumn("__cn", sqrt(nDot(s, col("cv"), col("cv"))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val topk = indexed.join(broadcast(probed), Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosineFromNorms(
-        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
-    (topk, cellSet, cents.length)
+    (ivfScore(cellRows(stored, idCol, vecCol), probed, k), cellSet,
+      cents.length)
   }
 
   /** Incremental maintenance of a [[writeIvfIndex]] layout under a CDC
@@ -818,18 +748,13 @@ object Similarity {
     val s = corpus.sparkSession
     val pairs = shortlist.select(col("query_id"), col("neighbor_id"))
     val full = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-      .withColumn("__cn", sqrt(nDot(s, col("cv"), col("cv"))))
+      .withColumn("__cn", vnorm(s, "cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    full.join(broadcast(pairs), Seq("neighbor_id"))
+      .withColumn("__qn", vnorm(s, "qv"))
+    topK(full.join(broadcast(pairs), Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("cosine", cosineFromNorms(
-        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn"))), k)
   }
 
   /** Matryoshka funnel retrieval (Kusupati et al., arXiv:2205.13147):
@@ -855,32 +780,26 @@ object Similarity {
     val s = corpus.sparkSession
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
         slice(col(vecCol), 1, dims).as("qt"))
-      .withColumn("__qtn", sqrt(nDot(s, col("qt"), col("qt"))))
-    // stage 1: truncated-prefix scan — the only corpus-sized pass
+      .withColumn("__qtn", vnorm(s, "qt"))
+    // stage 1: truncated-prefix scan — the only corpus-sized pass,
+    // ranked by the prefix cosine
     val ct = corpus.select(col(idCol).as("neighbor_id"),
         slice(col(vecCol), 1, dims).as("ct"))
-      .withColumn("__ctn", sqrt(nDot(s, col("ct"), col("ct"))))
-    val w1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("tcos").desc, col("neighbor_id"))
-    val shortl = ct.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("tcos", cosineFromNorms(
-        nDot(s, col("qt"), col("ct")), col("__qtn"), col("__ctn")))
-      .withColumn("__r1", row_number().over(w1))
-      .where(col("__r1") <= shortlist)
+      .withColumn("__ctn", vnorm(s, "ct"))
+    val shortl = ranked(
+        ct.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+          .withColumn("cosine", cosineFromNorms(
+            nDot(s, col("qt"), col("ct")), col("__qtn"), col("__ctn"))),
+        shortlist)
       .select(col("query_id"), col("neighbor_id"), col("qv"))
     // stage 2: full-width re-rank of the shortlist only (vectors
     // fetched by id — bounded rows, not a corpus scan)
     val full = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("cv"))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    shortl.join(full, Seq("neighbor_id"))
-      .withColumn("__qn", sqrt(nDot(s, col("qv"), col("qv"))))
-      .withColumn("__cn", sqrt(nDot(s, col("cv"), col("cv"))))
+    topK(shortl.join(full, Seq("neighbor_id"))
+      .withColumn("__qn", vnorm(s, "qv"))
+      .withColumn("__cn", vnorm(s, "cv"))
       .withColumn("cosine", cosineFromNorms(
-        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn")))
-      .withColumn("rank", row_number().over(w2))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+        nDot(s, col("qv"), col("cv")), col("__qn"), col("__cn"))), k)
   }
 }

@@ -1895,8 +1895,7 @@ object TextStats extends Serializable {
       rows.map { row =>
         val text = if (row.isNullAt(textIdx)) "" else row.getString(textIdx)
         val out = Seq.newBuilder[String]
-        text.trim.split("\\s+").filter(_.nonEmpty)
-          .foreach(tok => out ++= segment(tok))
+        graft.ml.Featurize.tokensLocal(text).foreach(tok => out ++= segment(tok))
         Row.fromSeq(row.toSeq :+ out.result())
       }
     }(Encoders.row(outSchema))

@@ -24,6 +24,17 @@ object Featurize {
       filter(split(trim(text), "\\s+"), t => length(t) > 0),
       array().cast("array<string>"))
 
+  /** JVM mirror of [[tokensCol]] for one string (single-row scoring and
+    * `mapPartitions` kernels): the `\s+` split with empty tokens
+    * dropped. Spark `trim` strips only U+0020, itself a `\s` char, so
+    * the split alone gives the same tokens. Java `String.trim` would
+    * differ: it strips every char <= U+0020 at the ends, including
+    * controls such as U+0001 that `\s` leaves inside a token. Null →
+    * no tokens. */
+  private[graft] def tokensLocal(text: String): Array[String] =
+    if (text == null) Array.empty
+    else text.split("\\s+").filter(_.nonEmpty)
+
   /** All word n-grams of a fixed n (n >= 2) as space-joined strings.
     * Built by zipping the token array with its own shifted slices:
     * zip_with evaluates its ARRAY children once per row and the

@@ -159,8 +159,7 @@ class Model(
     * registered-UDF path; the vectorized `predict` transform is the
     * fast path. */
   def predictOne(text: String): String = {
-    val toks = Option(text).map(_.trim.split("\\s+").filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
+    val toks = Featurize.tokensLocal(text).toSeq
     val grams =
       if (params.charNgrams.nonEmpty) {
         val t = Featurize.charPrepLocal(text, params.charPrefixLen)

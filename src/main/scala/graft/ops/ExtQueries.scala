@@ -550,11 +550,35 @@ object ExtQueries {
   }
 
   // ---- similarity search ----
+  //
+  // The ANN oracles restate each decision of `Similarity` once, in SQL
+  // and without calling it: the rounded cosine ([[cosSql]]), the top-k
+  // rank ([[topKSql]]), the literal-centroid cell assignment
+  // ([[cellCtes]], [[probeCtes]]) and the PQ codes and lookup tables
+  // ([[PqSql]]).
 
-  private val cosineSql =
-    s"""ROUND(${foldSumSql("list_transform(range(1, len(qv)+1), i -> qv[i] * cv[i])")} /
-       |  (sqrt(${foldSumSql("list_transform(range(1, len(qv)+1), i -> qv[i] * qv[i])")}) *
-       |   sqrt(${foldSumSql("list_transform(range(1, len(cv)+1), i -> cv[i] * cv[i])")})), 6)""".stripMargin
+  /** `Σ a[i]·b[i]` over two list expressions, folded left to right. */
+  private def listDotSql(a: String, b: String): String =
+    foldSumSql(s"list_transform(range(1, len($a)+1), i -> $a[i] * $b[i])")
+
+  /** The rounded cosine every ANN oracle scores with: `dot / (na·nb)`
+    * to 6 dp, 0 when a norm is 0. */
+  private def cosSql(dot: String, na: String, nb: String): String =
+    s"CASE WHEN $na * $nb > 0 THEN ROUND($dot / ($na * $nb), 6) ELSE 0.0 END"
+
+  /** [[cosSql]] of two list columns, their norms folded inline. */
+  private def listCosSql(a: String, b: String): String =
+    cosSql(listDotSql(a, b), s"sqrt(${listDotSql(a, a)})",
+      s"sqrt(${listDotSql(b, b)})")
+
+  /** The ANN top-k rank over `from`'s `(query_id, neighbor_id,
+    * cosine)` rows: per query, cosine DESC with the neighbor id
+    * breaking ties, first `k`. */
+  private def topKSql(from: String, k: Int): String =
+    s"""SELECT query_id, neighbor_id, cosine, rank FROM (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM $from) t
+       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
   /** Brute-force exact cosine top-5 for queries vec_id < 10. */
   val simTopK: Q = (s, dir) => {
@@ -570,11 +594,9 @@ object ExtQueries {
        |scored AS (
        |  SELECT query_id, e.vec_id AS neighbor_id, e.v AS cv, qv
        |  FROM e, q WHERE e.vec_id <> query_id),
-       |sims AS (SELECT query_id, neighbor_id, $cosineSql AS cosine FROM scored)
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM sims) t
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |sims AS (SELECT query_id, neighbor_id, ${listCosSql("qv", "cv")} AS cosine
+       |  FROM scored)
+       |${topKSql("sims", 5)}""".stripMargin
 
   /** Matryoshka funnel retrieval ([[Similarity.matryoshkaTopK]]):
     * 16-dim prefix shortlist (top-20), full 64-dim re-rank to top-5.
@@ -586,31 +608,21 @@ object ExtQueries {
       .orderBy("query_id", "rank")
   }
 
-  val simMatryoshkaSql = {
-    def cos(a: String, b: String) =
-      s"""ROUND(${foldSumSql(s"list_transform(range(1, len($a)+1), i -> $a[i] * $b[i])")} /
-         |  (sqrt(${foldSumSql(s"list_transform(range(1, len($a)+1), i -> $a[i] * $a[i])")}) *
-         |   sqrt(${foldSumSql(s"list_transform(range(1, len($b)+1), i -> $b[i] * $b[i])")})), 6)""".stripMargin
+  val simMatryoshkaSql =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |q AS (SELECT vec_id AS query_id, v AS qv, v[1:16] AS qt FROM e
        |  WHERE vec_id < 10),
-       |s1 AS (SELECT query_id, e.vec_id AS neighbor_id, qv,
-       |    ${cos("qt", "ct")} AS tcos
+       |s1 AS (SELECT query_id, e.vec_id AS neighbor_id,
+       |    ${listCosSql("qt", "ct")} AS cosine
        |  FROM (SELECT vec_id, v[1:16] AS ct FROM e) e
        |    CROSS JOIN q
        |  WHERE e.vec_id <> query_id),
-       |sl AS (SELECT query_id, neighbor_id, qv FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY tcos DESC, neighbor_id) AS r1 FROM s1) t
-       |  WHERE r1 <= 20),
-       |s2 AS (SELECT query_id, neighbor_id, ${cos("qv", "cv")} AS cosine
-       |  FROM sl JOIN (SELECT vec_id AS neighbor_id, v AS cv FROM e) c
+       |sl AS (${topKSql("s1", 20)}),
+       |s2 AS (SELECT query_id, neighbor_id, ${listCosSql("qv", "cv")} AS cosine
+       |  FROM sl JOIN q USING (query_id)
+       |    JOIN (SELECT vec_id AS neighbor_id, v AS cv FROM e) c
        |    USING (neighbor_id))
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM s2) t
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
+       |${topKSql("s2", 5)}""".stripMargin
 
   /** IVF centroids (16 cells, 1 Lloyd iteration, md5-seeded), one
     * registry artifact. The query and its oracle generator
@@ -1031,14 +1043,9 @@ object ExtQueries {
        |    sqrt($qnFold) AS qn, $qmFold AS qm
        |  FROM e, b WHERE vec_id < 10),
        |j AS (SELECT query_id, cn.vec_id AS neighbor_id,
-       |    CASE WHEN qn * cxn > 0
-       |         THEN ROUND((qm + $adotFold) / (qn * cxn), 6)
-       |         ELSE 0.0 END AS cosine
+       |    ${cosSql(s"(qm + $adotFold)", "qn", "cxn")} AS cosine
        |  FROM q, cn, b WHERE query_id <> cn.vec_id)
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM j) t
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |${topKSql("j", 5)}""".stripMargin
   }
 
   /** DuckDB double literal: an exponent suffix forces DOUBLE typing
@@ -1050,6 +1057,61 @@ object ExtQueries {
     if (s.contains("E")) s else s + "E0"
   }
 
+  /** Squared norm of a literal vector, summed in index order. */
+  private def norm2(c: Array[Double]): Double = c.map(x => x * x).sum
+
+  /** The `ct` CTE: the centroids as one nested literal `cents`. */
+  private def centsCte(cents: Array[Array[Double]]): String = {
+    val centsLit = cents.map(_.map(dlit).mkString("[", ", ", "]"))
+      .mkString("[", ",\n    ", "]")
+    s"ct AS (SELECT $centsLit AS cents)"
+  }
+
+  /** Literal-centroid cell assignment as CTEs over `src` (columns
+    * `vec_id`, `cv`; [[centsCte]] in scope): `${p}n` stages the norm
+    * `vn`, `${p}s` the cosine `s_i` to each centroid (literal centroid
+    * norms), `${p}m` their max `best`, and `${p}a` is
+    * `(vec_id, cv, vn, cell)` with the first max winning ties. */
+  private def cellCtes(cents: Array[Array[Double]], src: String,
+                       p: String = ""): String = {
+    val k = cents.length
+    val sims = cents.indices.map { i =>
+      val cn = math.sqrt(norm2(cents(i)))
+      val sim =
+        if (cn == 0) "CAST(0.0 AS DOUBLE)"
+        else s"(CASE WHEN vn > 0 THEN ${listDotSql("cv", s"cents[${i + 1}]")} / " +
+          s"(vn * ${dlit(cn)}) ELSE 0.0 END)"
+      s"  $sim AS s_$i"
+    }.mkString(",\n")
+    val cellCase = (0 until k - 1).map(i => s"WHEN s_$i = best THEN $i")
+      .mkString("\n    ") + s"\n    ELSE ${k - 1}"
+    s"""${p}n AS (SELECT vec_id, cv, sqrt(${listDotSql("cv", "cv")}) AS vn
+       |  FROM $src),
+       |${p}s AS (SELECT vec_id, cv, vn,
+       |$sims
+       |FROM ${p}n, ct),
+       |${p}m AS (SELECT *, greatest(${(0 until k).map("s_" + _).mkString(", ")})
+       |  AS best FROM ${p}s),
+       |${p}a AS (SELECT vec_id, cv, vn,
+       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM ${p}m)""".stripMargin
+  }
+
+  /** The IVF probe side over [[cellCtes]]' `m`: queries `vec_id < 10`
+    * as `pr` rows `(query_id, qv, qn, cell)` for their `nprobe` best
+    * cells, ranked (sim DESC, cell). */
+  private def probeCtes(k: Int, nprobe: Int): String = {
+    val probeStructs = (0 until k).map(i => s"{'s': s_$i, 'cell': $i}")
+      .mkString("[", ", ", "]")
+    s"""p0 AS (SELECT vec_id AS query_id, cv AS qv, vn AS qn,
+       |    unnest($probeStructs) AS pc
+       |  FROM m WHERE vec_id < 10),
+       |pr AS (SELECT query_id, qv, qn, cell FROM (
+       |  SELECT query_id, qv, qn, pc.cell AS cell,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY pc.s DESC, pc.cell) AS prk
+       |  FROM p0) WHERE prk <= $nprobe)""".stripMargin
+  }
+
   /** The IVF query mirrored in SQL against literal centroids: same
     * staged norms, same per-centroid cosine (literal centroid norms),
     * same first-max-wins cell argmax, same (sim DESC, cell) probe
@@ -1057,52 +1119,16 @@ object ExtQueries {
   def simIvfSqlFor(cents: Array[Array[Double]], nprobe: Int = 4,
                    corpusSql: String =
                      "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings")
-      : String = {
-    val k = cents.length
-    val centsLit = cents.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n    ", "]")
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    def simExpr(i: Int): String =
-      if (cnorms(i) == 0) "CAST(0.0 AS DOUBLE)"
-      else {
-        val fold = foldSumSql(
-          s"list_transform(range(1, len(cv)+1), j -> cv[j] * cents[${i + 1}][j])")
-        s"(CASE WHEN vn > 0 THEN $fold / (vn * ${dlit(cnorms(i))}) ELSE 0.0 END)"
-      }
-    val sims = (0 until k).map(i => s"  ${simExpr(i)} AS s_$i").mkString(",\n")
-    val best = s"greatest(${(0 until k).map("s_" + _).mkString(", ")})"
-    val cellCase = (0 until k - 1).map(i => s"WHEN s_$i = best THEN $i")
-      .mkString("\n    ") + s"\n    ELSE ${k - 1}"
-    val probeStructs = (0 until k).map(i => s"{'s': s_$i, 'cell': $i}")
-      .mkString("[", ", ", "]")
-    val vnFold = foldSumSql("list_transform(range(1, len(cv)+1), j -> cv[j] * cv[j])")
-    val pairFold = foldSumSql("list_transform(range(1, len(qv)+1), j -> qv[j] * cv[j])")
-    s"""WITH ct AS (SELECT $centsLit AS cents),
+      : String =
+    s"""WITH ${centsCte(cents)},
        |e AS ($corpusSql),
-       |n AS (SELECT vec_id, cv, sqrt($vnFold) AS vn FROM e),
-       |s AS (SELECT vec_id, cv, vn,
-       |$sims
-       |FROM n, ct),
-       |m AS (SELECT *, $best AS best FROM s),
-       |a AS (SELECT vec_id, cv, vn,
-       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM m),
-       |p0 AS (SELECT vec_id AS query_id, cv AS qv, vn AS qn,
-       |    unnest($probeStructs) AS pc
-       |  FROM m WHERE vec_id < 10),
-       |pr AS (SELECT query_id, qv, qn, pc.cell AS cell,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY pc.s DESC, pc.cell) AS prk
-       |  FROM p0),
+       |${cellCtes(cents, "e")},
+       |${probeCtes(cents.length, nprobe)},
        |j AS (SELECT query_id, a.vec_id AS neighbor_id,
-       |    CASE WHEN qn * vn > 0
-       |         THEN ROUND($pairFold / (qn * vn), 6) ELSE 0.0 END AS cosine
+       |    ${cosSql(listDotSql("qv", "cv"), "qn", "vn")} AS cosine
        |  FROM pr JOIN a ON pr.cell = a.cell
-       |  WHERE pr.prk <= $nprobe AND pr.query_id <> a.vec_id)
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM j) t
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
+       |  WHERE pr.query_id <> a.vec_id)
+       |${topKSql("j", 5)}""".stripMargin
 
   /** PQ codebooks (m=4 subspaces × ksub=8 sub-centroids over the
     * 64-dim embeddings, 1 Lloyd iteration), a registry artifact for
@@ -1123,74 +1149,98 @@ object ExtQueries {
       .orderBy("query_id", "rank")
   }
 
-  /** The PQ query mirrored in SQL against literal codebooks: same
-    * staged L2 scores (dot − |c|²/2 with the SAME Scala-computed
-    * half-norm literals), same first-max-wins code argmax, same
-    * lut[code] ADC sum in subspace order, same rounded cosine and
-    * (cosine DESC, id) top-k. */
-  def simPqSqlFor(books: Array[Array[Array[Double]]]): String = {
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val booksLit = books.map(_.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n     ", "]")).mkString("[", ",\n    ", "]")
-    // identical Scala folds to the operator's literals
-    val half = books.map(_.map(c => c.map(x => x * x).sum / 2))
-    val cn2 = books.map(_.map(c => c.map(x => x * x).sum))
-    def scoreExpr(s: Int, j: Int): String = {
-      val fold = foldSumSql(
-        s"list_transform(range(1, $dsub+1), t -> cv[${s * dsub}+t] * books[${s + 1}][${j + 1}][t])")
-      s"($fold - ${dlit(half(s)(j))})"
+  /** The PQ encode and asymmetric-distance parts of the oracles over
+    * literal codebooks `books`: the same staged L2 scores
+    * (dot − |c|²/2 with the same Scala-computed half-norm literals),
+    * the same first-max-wins code argmax, and the same lut[code] sum
+    * in subspace order. */
+  private final class PqSql(books: Array[Array[Array[Double]]]) {
+    private val m = books.length
+    private val ksub = books(0).length
+    private val dsub = books(0)(0).length
+
+    /** The `bk` CTE: the codebooks as one nested literal `books`. */
+    val bkCte: String = {
+      val booksLit = books.map(_.map(_.map(dlit).mkString("[", ", ", "]"))
+        .mkString("[", ",\n     ", "]")).mkString("[", ",\n    ", "]")
+      s"bk AS (SELECT $booksLit AS books)"
     }
-    val scores = (0 until m).flatMap(s => (0 until ksub).map(j =>
-      s"  ${scoreExpr(s, j)} AS p_${s}_$j")).mkString(",\n")
-    val bests = (0 until m).map(s =>
-      s"  greatest(${(0 until ksub).map(j => s"p_${s}_$j").mkString(", ")}) AS b_$s")
-      .mkString(",\n")
-    val codes = (0 until m).map { s =>
-      val cases = (0 until ksub - 1)
-        .map(j => s"WHEN p_${s}_$j = b_$s THEN $j").mkString(" ")
-      s"  CAST(CASE $cases ELSE ${ksub - 1} END AS INTEGER) AS code_$s"
-    }.mkString(",\n")
-    val cxn = (0 until m).map(s =>
-      s"(${cn2(s).map(dlit).mkString("[", ", ", "]")})[code_$s + 1]")
-      .mkString(" + ")
-    val luts = (0 until m).map { s =>
-      val entries = (0 until ksub).map { j =>
-        foldSumSql(
-          s"list_transform(range(1, $dsub+1), t -> qv[${s * dsub}+t] * books[${s + 1}][${j + 1}][t])")
-      }.mkString("[", ",\n     ", "]")
+
+    /** Subspace `s` of list `vec` dotted with sub-centroid `j`. */
+    private def subDot(vec: String, s: Int, j: Int): String = foldSumSql(
+      s"list_transform(range(1, $dsub+1), t -> $vec[${s * dsub}+t] * books[${s + 1}][${j + 1}][t])")
+
+    /** CTEs `sc`, `bm`, `cd`: `cd` is `keep` plus `code_0..code_{m-1}`,
+      * the nearest sub-centroid of each subspace of list `vec` in
+      * `src`. */
+    def codeCtes(src: String, vec: String, keep: String): String = {
+      val scores = (0 until m).flatMap(s => (0 until ksub).map(j =>
+        s"  (${subDot(vec, s, j)} - ${dlit(norm2(books(s)(j)) / 2)}) AS p_${s}_$j"))
+        .mkString(",\n")
+      val bests = (0 until m).map(s =>
+        s"  greatest(${(0 until ksub).map(j => s"p_${s}_$j").mkString(", ")}) AS b_$s")
+        .mkString(",\n")
+      val codes = (0 until m).map { s =>
+        val cases = (0 until ksub - 1)
+          .map(j => s"WHEN p_${s}_$j = b_$s THEN $j").mkString(" ")
+        s"  CAST(CASE $cases ELSE ${ksub - 1} END AS INTEGER) AS code_$s"
+      }.mkString(",\n")
+      s"""sc AS (SELECT $keep,
+         |$scores
+         |FROM $src, bk),
+         |bm AS (SELECT *,
+         |$bests
+         |FROM sc),
+         |cd AS (SELECT $keep,
+         |$codes
+         |FROM bm)""".stripMargin
+    }
+
+    /** Σₛ `tables(s)[code_s]`, one literal table per subspace. */
+    def codeSum(tables: Array[Array[Double]]): String =
+      (0 until m).map(s =>
+        s"(${tables(s).map(dlit).mkString("[", ", ", "]")})[code_$s + 1]")
+        .mkString(" + ")
+
+    /** The reconstruction norm √Σₛ|c_{s,code_s}|² of a coded row. */
+    val codeNorm: String = s"sqrt(${codeSum(books.map(_.map(norm2)))})"
+
+    /** The `enc` CTE over `cd`: `neighbor_id` ++ `extra` ++ codes ++
+      * `cxn`. */
+    def encCte(extra: String, cxn: String): String =
+      s"""enc AS (SELECT vec_id AS neighbor_id$extra,
+         |    ${(0 until m).map(s => s"code_$s").mkString(", ")}, $cxn AS cxn
+         |  FROM cd)""".stripMargin
+
+    /** Select-list entries `lut_0..lut_{m-1}` over `qv` and `bk`. */
+    val luts: String = (0 until m).map { s =>
+      val entries = (0 until ksub).map(j => subDot("qv", s, j))
+        .mkString("[", ",\n     ", "]")
       s"  $entries AS lut_$s"
     }.mkString(",\n")
-    val adot = (0 until m).map(s => s"lut_$s[code_$s + 1]").mkString(" + ")
-    val qnFold = foldSumSql("list_transform(range(1, len(qv)+1), i -> qv[i] * qv[i])")
-    s"""WITH bk AS (SELECT $booksLit AS books),
+
+    /** Σₛ lut_s[code_s + 1]: the ADC inner product. */
+    val adot: String = (0 until m).map(s => s"lut_$s[code_$s + 1]").mkString(" + ")
+  }
+
+  /** The PQ query mirrored in SQL against literal codebooks ([[PqSql]]),
+    * same rounded cosine and (cosine DESC, id) top-k. */
+  def simPqSqlFor(books: Array[Array[Array[Double]]]): String = {
+    val pq = new PqSql(books)
+    s"""WITH ${pq.bkCte},
        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-       |sc AS (SELECT vec_id, cv,
-       |$scores
-       |FROM e, bk),
-       |bm AS (SELECT *,
-       |$bests
-       |FROM sc),
-       |cd AS (SELECT vec_id, cv,
-       |$codes
-       |FROM bm),
-       |enc AS (SELECT vec_id AS neighbor_id,
-       |    code_0, code_1, code_2, code_3, sqrt($cxn) AS cxn
-       |  FROM cd),
-       |q0 AS (SELECT vec_id AS query_id, cv AS qv, sqrt($qnFold) AS qn
+       |${pq.codeCtes("e", "cv", "vec_id")},
+       |${pq.encCte("", pq.codeNorm)},
+       |q0 AS (SELECT vec_id AS query_id, cv AS qv,
+       |    sqrt(${listDotSql("cv", "cv")}) AS qn
        |  FROM e WHERE vec_id < 10),
        |ql AS (SELECT query_id, qn,
-       |$luts
+       |${pq.luts}
        |FROM q0, bk),
        |j AS (SELECT query_id, neighbor_id,
-       |    CASE WHEN qn * cxn > 0
-       |         THEN ROUND(($adot) / (qn * cxn), 6) ELSE 0.0 END AS cosine
+       |    ${cosSql(s"(${pq.adot})", "qn", "cxn")} AS cosine
        |  FROM enc, ql WHERE query_id <> neighbor_id)
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM j) t
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |${topKSql("j", 5)}""".stripMargin
   }
 
   /** IVFPQ approximate top-5 ([[Similarity.ivfPqTopK]]): IVF cells
@@ -1235,31 +1285,10 @@ object ExtQueries {
                              books: Array[Array[Array[Double]]],
                              k: Int = 5): String = {
     val kc = cents.length
-    val centsLit = cents.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n    ", "]")
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    def simExpr(i: Int): String =
-      if (cnorms(i) == 0) "CAST(0.0 AS DOUBLE)"
-      else {
-        val fold = foldSumSql(
-          s"list_transform(range(1, len(cv)+1), j -> cv[j] * cents[${i + 1}][j])")
-        s"(CASE WHEN vn > 0 THEN $fold / (vn * ${dlit(cnorms(i))}) ELSE 0.0 END)"
-      }
-    val sims = (0 until kc).map(i => s"  ${simExpr(i)} AS s_$i").mkString(",\n")
-    val best = s"greatest(${(0 until kc).map("s_" + _).mkString(", ")})"
-    val cellCase = (0 until kc - 1).map(i => s"WHEN s_$i = best THEN $i")
-      .mkString("\n    ") + s"\n    ELSE ${kc - 1}"
-    val probeStructs = (0 until kc).map(i => s"{'s': s_$i, 'cell': $i}")
-      .mkString("[", ", ", "]")
-    val vnFold = foldSumSql("list_transform(range(1, len(cv)+1), j -> cv[j] * cv[j])")
+    val pq = new PqSql(books)
     val m = books.length
     val ksub = books(0).length
     val dsub = books(0)(0).length
-    val booksLit = books.map(_.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n     ", "]")).mkString("[", ",\n    ", "]")
-    val half = books.map(_.map(c => c.map(x => x * x).sum / 2))
-    val rn2 = books.map(_.map(c => c.map(x => x * x).sum))
-    val cn2cell = cents.map(c => c.map(x => x * x).sum)
     val crTable: Array[Array[Double]] = Array.tabulate(m) { sub =>
       val out = new Array[Double](kc * ksub)
       for (c <- 0 until kc; j <- 0 until ksub) {
@@ -1273,87 +1302,32 @@ object ExtQueries {
       }
       out
     }
-    def scoreExpr(s: Int, j: Int): String = {
-      val fold = foldSumSql(
-        s"list_transform(range(1, $dsub+1), t -> rv[${s * dsub}+t] * books[${s + 1}][${j + 1}][t])")
-      s"($fold - ${dlit(half(s)(j))})"
-    }
-    val scores = (0 until m).flatMap(s => (0 until ksub).map(j =>
-      s"  ${scoreExpr(s, j)} AS p_${s}_$j")).mkString(",\n")
-    val bests = (0 until m).map(s =>
-      s"  greatest(${(0 until ksub).map(j => s"p_${s}_$j").mkString(", ")}) AS b_$s")
-      .mkString(",\n")
-    val codes = (0 until m).map { s =>
-      val cases = (0 until ksub - 1)
-        .map(j => s"WHEN p_${s}_$j = b_$s THEN $j").mkString(" ")
-      s"  CAST(CASE $cases ELSE ${ksub - 1} END AS INTEGER) AS code_$s"
-    }.mkString(",\n")
     val crSum = (0 until m).map(s =>
       s"(${crTable(s).map(dlit).mkString("[", ", ", "]")})[cell * $ksub + code_$s + 1]")
       .mkString(" + ")
-    val rnSum = (0 until m).map(s =>
-      s"(${rn2(s).map(dlit).mkString("[", ", ", "]")})[code_$s + 1]")
-      .mkString(" + ")
     val cxn =
-      s"sqrt((${cn2cell.map(dlit).mkString("[", ", ", "]")})[cell + 1]" +
-        s" + 2.0 * ($crSum) + ($rnSum))"
-    val luts = (0 until m).map { s =>
-      val entries = (0 until ksub).map { j =>
-        foldSumSql(
-          s"list_transform(range(1, $dsub+1), t -> qv[${s * dsub}+t] * books[${s + 1}][${j + 1}][t])")
-      }.mkString("[", ",\n     ", "]")
-      s"  $entries AS lut_$s"
-    }.mkString(",\n")
-    val qcFold = foldSumSql(
-      "list_transform(range(1, len(qv)+1), j -> qv[j] * cents[cell + 1][j])")
-    val adot = (0 until m).map(s => s"lut_$s[code_$s + 1]").mkString(" + ")
-    val codeList = (0 until m).map(s => s"code_$s").mkString(", ")
-    s"""WITH ct AS (SELECT $centsLit AS cents),
-       |bk AS (SELECT $booksLit AS books),
+      s"sqrt((${cents.map(norm2).map(dlit).mkString("[", ", ", "]")})[cell + 1]" +
+        s" + 2.0 * ($crSum) + (${pq.codeSum(books.map(_.map(norm2)))}))"
+    s"""WITH ${centsCte(cents)},
+       |${pq.bkCte},
        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-       |n AS (SELECT vec_id, cv, sqrt($vnFold) AS vn FROM e),
-       |s AS (SELECT vec_id, cv, vn,
-       |$sims
-       |FROM n, ct),
-       |mm AS (SELECT *, $best AS best FROM s),
-       |a AS (SELECT vec_id, cv, vn,
-       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM mm),
+       |${cellCtes(cents, "e")},
        |rsd AS (SELECT vec_id, cell,
        |    list_transform(range(1, len(cv)+1),
        |      j -> cv[j] - cents[cell + 1][j]) AS rv
        |  FROM a, ct),
-       |sc AS (SELECT vec_id, cell,
-       |$scores
-       |FROM rsd, bk),
-       |bm AS (SELECT *,
-       |$bests
-       |FROM sc),
-       |cd AS (SELECT vec_id, cell,
-       |$codes
-       |FROM bm),
-       |enc AS (SELECT vec_id AS neighbor_id, cell,
-       |    $codeList, $cxn AS cxn
-       |  FROM cd),
-       |p0 AS (SELECT vec_id AS query_id, cv AS qv, vn AS qn,
-       |    unnest($probeStructs) AS pc
-       |  FROM mm WHERE vec_id < 10),
-       |pr AS (SELECT query_id, qv, qn, pc.cell AS cell,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY pc.s DESC, pc.cell) AS prk
-       |  FROM p0),
+       |${pq.codeCtes("rsd", "rv", "vec_id, cell")},
+       |${pq.encCte(", cell", cxn)},
+       |${probeCtes(kc, 4)},
        |ql AS (SELECT query_id, qn, cell,
-       |  $qcFold AS qc,
-       |$luts
-       |FROM pr, bk, ct WHERE prk <= 4),
+       |  ${listDotSql("qv", "cents[cell + 1]")} AS qc,
+       |${pq.luts}
+       |FROM pr, bk, ct),
        |j AS (SELECT query_id, neighbor_id,
-       |    CASE WHEN qn * cxn > 0
-       |         THEN ROUND((qc + $adot) / (qn * cxn), 6) ELSE 0.0 END AS cosine
+       |    ${cosSql(s"(qc + ${pq.adot})", "qn", "cxn")} AS cosine
        |  FROM ql JOIN enc ON ql.cell = enc.cell
        |  WHERE ql.query_id <> enc.neighbor_id)
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM j) t
-       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+       |${topKSql("j", k)}""".stripMargin
   }
 
   /** The IVFPQ query mirrored in SQL: the IVF oracle's cell
@@ -1362,99 +1336,22 @@ object ExtQueries {
   def simIvfPqSqlFor(cents: Array[Array[Double]],
                      books: Array[Array[Array[Double]]],
                      k: Int = 5): String = {
-    val kc = cents.length
-    val centsLit = cents.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n    ", "]")
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    def simExpr(i: Int): String =
-      if (cnorms(i) == 0) "CAST(0.0 AS DOUBLE)"
-      else {
-        val fold = foldSumSql(
-          s"list_transform(range(1, len(cv)+1), j -> cv[j] * cents[${i + 1}][j])")
-        s"(CASE WHEN vn > 0 THEN $fold / (vn * ${dlit(cnorms(i))}) ELSE 0.0 END)"
-      }
-    val sims = (0 until kc).map(i => s"  ${simExpr(i)} AS s_$i").mkString(",\n")
-    val best = s"greatest(${(0 until kc).map("s_" + _).mkString(", ")})"
-    val cellCase = (0 until kc - 1).map(i => s"WHEN s_$i = best THEN $i")
-      .mkString("\n    ") + s"\n    ELSE ${kc - 1}"
-    val probeStructs = (0 until kc).map(i => s"{'s': s_$i, 'cell': $i}")
-      .mkString("[", ", ", "]")
-    val vnFold = foldSumSql("list_transform(range(1, len(cv)+1), j -> cv[j] * cv[j])")
-    val m = books.length
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val booksLit = books.map(_.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n     ", "]")).mkString("[", ",\n    ", "]")
-    val half = books.map(_.map(c => c.map(x => x * x).sum / 2))
-    val cn2 = books.map(_.map(c => c.map(x => x * x).sum))
-    def scoreExpr(s: Int, j: Int): String = {
-      val fold = foldSumSql(
-        s"list_transform(range(1, $dsub+1), t -> cv[${s * dsub}+t] * books[${s + 1}][${j + 1}][t])")
-      s"($fold - ${dlit(half(s)(j))})"
-    }
-    val scores = (0 until m).flatMap(s => (0 until ksub).map(j =>
-      s"  ${scoreExpr(s, j)} AS p_${s}_$j")).mkString(",\n")
-    val bests = (0 until m).map(s =>
-      s"  greatest(${(0 until ksub).map(j => s"p_${s}_$j").mkString(", ")}) AS b_$s")
-      .mkString(",\n")
-    val codes = (0 until m).map { s =>
-      val cases = (0 until ksub - 1)
-        .map(j => s"WHEN p_${s}_$j = b_$s THEN $j").mkString(" ")
-      s"  CAST(CASE $cases ELSE ${ksub - 1} END AS INTEGER) AS code_$s"
-    }.mkString(",\n")
-    val cxn = (0 until m).map(s =>
-      s"(${cn2(s).map(dlit).mkString("[", ", ", "]")})[code_$s + 1]")
-      .mkString(" + ")
-    val luts = (0 until m).map { s =>
-      val entries = (0 until ksub).map { j =>
-        foldSumSql(
-          s"list_transform(range(1, $dsub+1), t -> qv[${s * dsub}+t] * books[${s + 1}][${j + 1}][t])")
-      }.mkString("[", ",\n     ", "]")
-      s"  $entries AS lut_$s"
-    }.mkString(",\n")
-    val adot = (0 until m).map(s => s"lut_$s[code_$s + 1]").mkString(" + ")
-    val codeList = (0 until m).map(s => s"code_$s").mkString(", ")
-    s"""WITH ct AS (SELECT $centsLit AS cents),
-       |bk AS (SELECT $booksLit AS books),
+    val pq = new PqSql(books)
+    s"""WITH ${centsCte(cents)},
+       |${pq.bkCte},
        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-       |n AS (SELECT vec_id, cv, sqrt($vnFold) AS vn FROM e),
-       |s AS (SELECT vec_id, cv, vn,
-       |$sims
-       |FROM n, ct),
-       |mm AS (SELECT *, $best AS best FROM s),
-       |a AS (SELECT vec_id, cv, vn,
-       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM mm),
-       |sc AS (SELECT vec_id, cv,
-       |$scores
-       |FROM e, bk),
-       |bm AS (SELECT *,
-       |$bests
-       |FROM sc),
-       |cd AS (SELECT vec_id, cv,
-       |$codes
-       |FROM bm),
-       |enc AS (SELECT cd.vec_id AS neighbor_id, a.cell,
-       |    $codeList, sqrt($cxn) AS cxn
-       |  FROM cd JOIN a ON cd.vec_id = a.vec_id),
-       |p0 AS (SELECT vec_id AS query_id, cv AS qv, vn AS qn,
-       |    unnest($probeStructs) AS pc
-       |  FROM mm WHERE vec_id < 10),
-       |pr AS (SELECT query_id, qv, qn, pc.cell AS cell,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY pc.s DESC, pc.cell) AS prk
-       |  FROM p0),
+       |${cellCtes(cents, "e")},
+       |${pq.codeCtes("a", "cv", "vec_id, cell")},
+       |${pq.encCte(", cell", pq.codeNorm)},
+       |${probeCtes(cents.length, 4)},
        |ql AS (SELECT query_id, qn, cell,
-       |$luts
-       |FROM pr, bk WHERE prk <= 4),
+       |${pq.luts}
+       |FROM pr, bk),
        |j AS (SELECT query_id, neighbor_id,
-       |    CASE WHEN qn * cxn > 0
-       |         THEN ROUND(($adot) / (qn * cxn), 6) ELSE 0.0 END AS cosine
+       |    ${cosSql(s"(${pq.adot})", "qn", "cxn")} AS cosine
        |  FROM ql JOIN enc ON ql.cell = enc.cell
        |  WHERE ql.query_id <> enc.neighbor_id)
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM j) t
-       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+       |${topKSql("j", k)}""".stripMargin
   }
 
   /** The two-stage refine shape on the quantized menu
@@ -1479,24 +1376,16 @@ object ExtQueries {
     * formulation over those pairs. */
   def simIvfPqRerankSqlFor(cents: Array[Array[Double]],
                            books: Array[Array[Array[Double]]]): String = {
-    val inner = simIvfPqSqlFor(cents, books, k = 25)
-    def cos(a: String, b: String) =
-      s"""ROUND(${foldSumSql(s"list_transform(range(1, len($a)+1), i -> $a[i] * $b[i])")} /
-         |  (sqrt(${foldSumSql(s"list_transform(range(1, len($a)+1), i -> $a[i] * $a[i])")}) *
-         |   sqrt(${foldSumSql(s"list_transform(range(1, len($b)+1), i -> $b[i] * $b[i])")})), 6)""".stripMargin
     s"""WITH sl AS (SELECT query_id, neighbor_id FROM (
-       |$inner
+       |${simIvfPqSqlFor(cents, books, k = 25)}
        |) s0),
        |e2 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |p AS (SELECT sl.query_id, sl.neighbor_id, q.v AS qv, c.v AS cv
        |  FROM sl JOIN e2 q ON sl.query_id = q.vec_id
        |    JOIN e2 c ON sl.neighbor_id = c.vec_id),
-       |s2 AS (SELECT query_id, neighbor_id, ${cos("qv", "cv")} AS cosine
+       |s2 AS (SELECT query_id, neighbor_id, ${listCosSql("qv", "cv")} AS cosine
        |  FROM p)
-       |SELECT query_id, neighbor_id, cosine, rank FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |    ORDER BY cosine DESC, neighbor_id) AS rank FROM s2) t
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |${topKSql("s2", 5)}""".stripMargin
   }
 
   /** Oracles only expressible AFTER their query has run in this
@@ -3749,38 +3638,15 @@ object ExtQueries {
     * min id; pick t = argmax of the running min distance
     * `1 − round(cosine, 6)` to picks 1..t−1, tie → min id. */
   def diverseSelectSqlFor(cents: Array[Array[Double]]): String = {
-    val k = cents.length
-    val centsLit = cents.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n    ", "]")
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    def simExpr(i: Int): String =
-      if (cnorms(i) == 0) "CAST(0.0 AS DOUBLE)"
-      else {
-        val fold = foldSumSql(
-          s"list_transform(range(1, len(cv)+1), j -> cv[j] * cents[${i + 1}][j])")
-        s"(CASE WHEN vn > 0 THEN $fold / (vn * ${dlit(cnorms(i))}) ELSE 0.0 END)"
-      }
-    val sims = (0 until k).map(i => s"  ${simExpr(i)} AS s_$i").mkString(",\n")
-    val best = s"greatest(${(0 until k).map("s_" + _).mkString(", ")})"
-    val cellCase = (0 until k - 1).map(i => s"WHEN s_$i = best THEN $i")
-      .mkString("\n    ") + s"\n    ELSE ${k - 1}"
     def distPair(xcv: String, xvn: String, ycv: String, yvn: String) = {
       val fold = foldSumSql(
         s"list_transform(range(1, len($xcv)+1), j -> $xcv[j] * $ycv[j])")
       s"""(1 - round(CASE WHEN $xvn > 0 AND $yvn > 0
          |    THEN $fold / ($xvn * $yvn) ELSE 0.0 END, 6))""".stripMargin
     }
-    s"""WITH ct AS (SELECT $centsLit AS cents),
+    s"""WITH ${centsCte(cents)},
        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-       |n AS (SELECT vec_id, cv,
-       |  sqrt(${foldSumSql("list_transform(range(1, len(cv)+1), j -> cv[j] * cv[j])")}) AS vn
-       |  FROM e),
-       |s AS (SELECT vec_id, cv, vn,
-       |$sims
-       |FROM n, ct),
-       |m AS (SELECT *, $best AS best FROM s),
-       |a AS (SELECT vec_id, cv, vn,
-       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM m),
+       |${cellCtes(cents, "e")},
        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY cell
        |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk FROM a),
        |c AS (SELECT cell, vec_id, cv, vn FROM r WHERE rk <= 40),
@@ -3809,40 +3675,16 @@ object ExtQueries {
     * assignment CTE of [[dedupSemanticSqlFor]] (same staged norms,
     * same first-max-wins argmax), then ROW_NUMBER over
     * `(md5(vec_id), vec_id)` per cell, capped at 10. */
-  def clusterBalanceSqlFor(cents: Array[Array[Double]]): String = {
-    val k = cents.length
-    val centsLit = cents.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n    ", "]")
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    def simExpr(i: Int): String =
-      if (cnorms(i) == 0) "CAST(0.0 AS DOUBLE)"
-      else {
-        val fold = foldSumSql(
-          s"list_transform(range(1, len(cv)+1), j -> cv[j] * cents[${i + 1}][j])")
-        s"(CASE WHEN vn > 0 THEN $fold / (vn * ${dlit(cnorms(i))}) ELSE 0.0 END)"
-      }
-    val sims = (0 until k).map(i => s"  ${simExpr(i)} AS s_$i").mkString(",\n")
-    val best = s"greatest(${(0 until k).map("s_" + _).mkString(", ")})"
-    val cellCase = (0 until k - 1).map(i => s"WHEN s_$i = best THEN $i")
-      .mkString("\n    ") + s"\n    ELSE ${k - 1}"
-    s"""WITH ct AS (SELECT $centsLit AS cents),
+  def clusterBalanceSqlFor(cents: Array[Array[Double]]): String =
+    s"""WITH ${centsCte(cents)},
        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-       |n AS (SELECT vec_id, cv,
-       |  sqrt(${foldSumSql("list_transform(range(1, len(cv)+1), j -> cv[j] * cv[j])")}) AS vn
-       |  FROM e),
-       |s AS (SELECT vec_id, cv, vn,
-       |$sims
-       |FROM n, ct),
-       |m AS (SELECT *, $best AS best FROM s),
-       |a AS (SELECT vec_id,
-       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM m),
+       |${cellCtes(cents, "e")},
        |r AS (SELECT vec_id, cell,
        |  CAST(ROW_NUMBER() OVER (PARTITION BY cell
        |    ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS INTEGER)
        |    AS cell_rank FROM a)
        |SELECT vec_id, cell, cell_rank FROM r
        |WHERE cell_rank <= 10 ORDER BY cell, cell_rank""".stripMargin
-  }
 
   /** C4 cleaning rules ([[TextStats.withC4Flags]], Raffel et al.
     * §2.2) over the corpus plus planted multi-line pages exercising
@@ -5507,7 +5349,8 @@ object ExtQueries {
        |qe AS (SELECT doc_id AS query_id, v AS qv FROM items WHERE doc_id < 5),
        |cscored AS (SELECT query_id, items.doc_id AS doc_id, v AS cv, qv
        |  FROM items, qe WHERE items.doc_id <> query_id),
-       |sims AS (SELECT query_id, doc_id, $cosineSql AS cosine FROM cscored),
+       |sims AS (SELECT query_id, doc_id, ${listCosSql("qv", "cv")} AS cosine
+       |  FROM cscored),
        |dense AS (SELECT query_id, doc_id, rank FROM (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |    ORDER BY cosine DESC, doc_id) AS rank FROM sims) r
@@ -5541,49 +5384,20 @@ object ExtQueries {
     * same staged sims and first-max-wins cell argmax as
     * [[simIvfSqlFor]], same planted copies, same rounded within-cell
     * cosine >= 0.99 drop rule, same anti-join keep set. */
-  def dedupSemanticSqlFor(cents: Array[Array[Double]]): String = {
-    val k = cents.length
-    val centsLit = cents.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n    ", "]")
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    def simExpr(i: Int): String =
-      if (cnorms(i) == 0) "CAST(0.0 AS DOUBLE)"
-      else {
-        val fold = foldSumSql(
-          s"list_transform(range(1, len(cv)+1), j -> cv[j] * cents[${i + 1}][j])")
-        s"(CASE WHEN vn > 0 THEN $fold / (vn * ${dlit(cnorms(i))}) ELSE 0.0 END)"
-      }
-    val sims = (0 until k).map(i => s"  ${simExpr(i)} AS s_$i").mkString(",\n")
-    val best = s"greatest(${(0 until k).map("s_" + _).mkString(", ")})"
-    val cellCase = (0 until k - 1).map(i => s"WHEN s_$i = best THEN $i")
-      .mkString("\n    ") + s"\n    ELSE ${k - 1}"
-    val pairFold = foldSumSql(
-      "list_transform(range(1, len(xv)+1), j -> xv[j] * yv[j])")
-    s"""WITH ct AS (SELECT $centsLit AS cents),
+  def dedupSemanticSqlFor(cents: Array[Array[Double]]): String =
+    s"""WITH ${centsCte(cents)},
        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
        |  UNION ALL
        |  SELECT vec_id + 900000, CAST(embedding AS DOUBLE[]) FROM embeddings
        |  WHERE vec_id < 10),
-       |n AS (SELECT vec_id, cv,
-       |  sqrt(${foldSumSql("list_transform(range(1, len(cv)+1), j -> cv[j] * cv[j])")}) AS vn
-       |  FROM e),
-       |s AS (SELECT vec_id, cv, vn,
-       |$sims
-       |FROM n, ct),
-       |m AS (SELECT *, $best AS best FROM s),
-       |a AS (SELECT vec_id, cv, vn,
-       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM m),
+       |${cellCtes(cents, "e")},
        |drops AS (SELECT DISTINCT y.vec_id AS vec_id
-       |  FROM (SELECT vec_id, cv AS xv, vn AS xn, cell FROM a) x
-       |  JOIN (SELECT vec_id, cv AS yv, vn AS yn, cell FROM a) y
-       |    USING (cell)
+       |  FROM a x JOIN a y USING (cell)
        |  WHERE x.vec_id < y.vec_id
-       |    AND (CASE WHEN x.xn * y.yn > 0
-       |         THEN ROUND($pairFold / (x.xn * y.yn), 6) ELSE 0.0 END) >= 0.99E0)
+       |    AND (${cosSql(listDotSql("x.cv", "y.cv"), "x.vn", "y.vn")}) >= 0.99E0)
        |SELECT a.vec_id, a.cell FROM a
        |LEFT JOIN drops d ON a.vec_id = d.vec_id
        |WHERE d.vec_id IS NULL ORDER BY a.vec_id""".stripMargin
-  }
 
   /** Streaming semantic near-dup gate ([[Dedup.semanticMatches]]) as
     * a REAL streaming run: arrivals = planted exact copies
@@ -7408,55 +7222,22 @@ object ExtQueries {
   /** [[streamSemanticQ]]'s oracle: both sides assigned via the same
     * literal-centroid first-max-wins argmax as [[dedupSemanticSqlFor]],
     * joined on cell, 6-dp cosine ≥ 0.99. */
-  def streamSemanticSqlFor(cents: Array[Array[Double]]): String = {
-    val k = cents.length
-    val centsLit = cents.map(_.map(dlit).mkString("[", ", ", "]"))
-      .mkString("[", ",\n    ", "]")
-    val cnorms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-    def simExpr(i: Int): String =
-      if (cnorms(i) == 0) "CAST(0.0 AS DOUBLE)"
-      else {
-        val fold = foldSumSql(
-          s"list_transform(range(1, len(cv)+1), j -> cv[j] * cents[${i + 1}][j])")
-        s"(CASE WHEN vn > 0 THEN $fold / (vn * ${dlit(cnorms(i))}) ELSE 0.0 END)"
-      }
-    val sims = (0 until k).map(i => s"  ${simExpr(i)} AS s_$i").mkString(",\n")
-    val best = s"greatest(${(0 until k).map("s_" + _).mkString(", ")})"
-    val cellCase = (0 until k - 1).map(i => s"WHEN s_$i = best THEN $i")
-      .mkString("\n    ") + s"\n    ELSE ${k - 1}"
-    val vnSql = "sqrt(" + foldSumSql(
-      "list_transform(range(1, len(cv)+1), j -> cv[j] * cv[j])") + ")"
-    val pairFold = foldSumSql(
-      "list_transform(range(1, len(xv)+1), j -> xv[j] * yv[j])")
-    s"""WITH ct AS (SELECT $centsLit AS cents),
-       |arr0 AS (SELECT vec_id + 900000 AS id, CAST(embedding AS DOUBLE[]) AS cv
+  def streamSemanticSqlFor(cents: Array[Array[Double]]): String =
+    s"""WITH ${centsCte(cents)},
+       |arr0 AS (SELECT vec_id + 900000 AS vec_id, CAST(embedding AS DOUBLE[]) AS cv
        |    FROM embeddings WHERE vec_id < 10
        |  UNION ALL
        |  SELECT vec_id + 800000, list_reverse(CAST(embedding AS DOUBLE[]))
        |    FROM embeddings WHERE vec_id >= 10 AND vec_id < 20),
-       |ref0 AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS cv
+       |ref0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv
        |  FROM embeddings),
-       |an AS (SELECT id, cv, $vnSql AS vn FROM arr0),
-       |asim AS (SELECT id, cv, vn,
-       |$sims
-       |FROM an, ct),
-       |am AS (SELECT *, $best AS best FROM asim),
-       |aa AS (SELECT id AS vec_id, cv AS xv, vn AS xn,
-       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM am),
-       |rn AS (SELECT id, cv, $vnSql AS vn FROM ref0),
-       |rsim AS (SELECT id, cv, vn,
-       |$sims
-       |FROM rn, ct),
-       |rm AS (SELECT *, $best AS best FROM rsim),
-       |ra AS (SELECT id AS neighbor_id, cv AS yv, vn AS yn,
-       |  CAST(CASE $cellCase END AS INTEGER) AS cell FROM rm),
-       |m AS (SELECT aa.vec_id, ra.neighbor_id,
-       |  (CASE WHEN aa.xn * ra.yn > 0
-       |   THEN ROUND($pairFold / (aa.xn * ra.yn), 6) ELSE 0.0 END) AS cosine
-       |  FROM aa JOIN ra USING (cell))
+       |${cellCtes(cents, "arr0", "arr_")},
+       |${cellCtes(cents, "ref0", "ref_")},
+       |m AS (SELECT x.vec_id, y.vec_id AS neighbor_id,
+       |  (${cosSql(listDotSql("x.cv", "y.cv"), "x.vn", "y.vn")}) AS cosine
+       |  FROM arr_a x JOIN ref_a y USING (cell))
        |SELECT vec_id, neighbor_id, cosine FROM m
        |WHERE cosine >= 0.99E0 ORDER BY vec_id, neighbor_id""".stripMargin
-  }
 
   /** SemDeDup past the centroid boundary: the LSH-bucket variant on
     * the same planted-copies fixture — sign buckets from the

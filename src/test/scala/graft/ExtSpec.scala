@@ -157,14 +157,15 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     val brute = Similarity.bruteTopK(queries, emb, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.ivfTopK(queries, emb, "vec_id", "embedding", 5,
-      nCells = 8, nprobe = 4)
+    val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding", 8)
+    val ivf = Similarity.ivfTopKWith(queries, emb, "vec_id", "embedding", 5,
+      cents, nprobe = 4)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute intersect ivf).size.toDouble / brute.size
     assert(recall >= 0.5, s"recall=$recall (|brute|=${brute.size}, |ivf|=${ivf.size})")
     // the stored-index builder assigns every vector a valid cell
-    val indexed = Similarity.ivfAssign(emb, "vec_id", "embedding", nCells = 8)
+    val indexed = Similarity.assignCells(emb, "embedding", cents)
     assert(indexed.where(col("cell") < 0 || col("cell") >= 8).count() == 0)
     assert(indexed.select("cell").distinct().count() > 1)
   }
@@ -1578,9 +1579,22 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       .select("doc_id", "dhash")))
     val cents = graft.ops.Artifacts.only[Array[Array[Double]]]("ivf_cents")
     assert(cents.isDefined)
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     assert(cents.get.map(_.toSeq).toSeq == Similarity.kmeansCentroids(
-      spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
-      16, iters = 1).map(_.toSeq).toSeq)
+      emb, "vec_id", "embedding", 16, iters = 1).map(_.toSeq).toSeq)
+    // the PQ and residual codebooks the PQ index builders consume
+    Seq("q_sim_pq", "q_sim_ivfpq_residual")
+      .foreach(q => graft.SparkEntry.queries(q)(spark, dir))
+    type Books = Array[Array[Array[Double]]]
+    def deep(b: Books) = b.map(_.map(_.toSeq).toSeq).toSeq
+    val books = graft.ops.Artifacts.only[Books]("pq_books")
+    assert(books.isDefined)
+    assert(deep(books.get) == deep(Similarity.pqCodebooks(emb, "vec_id",
+      "embedding", dim = 64, m = 4, ksub = 8, iters = 1)))
+    val rbooks = graft.ops.Artifacts.only[Books]("rpq_books")
+    assert(rbooks.isDefined)
+    assert(deep(rbooks.get) == deep(Similarity.pqResidualBooks(emb, "vec_id",
+      "embedding", cents.get, m = 4, ksub = 8, iters = 1)))
   }
 
   test("scratch-dir wipe deletes symlinks without following them") {
@@ -1650,7 +1664,8 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
       emb.select((col("vec_id") + r * 100000).as("vec_id"), col("embedding")))
       .reduce(_ union _)
     def sumSq(nBits: Int): Long = skewed
-      .select(Similarity.signBucket(col("embedding"), nBits, 64).as("b"))
+      .select(Similarity.signBucketNative(spark, col("embedding"), nBits, 64)
+        .as("b"))
       .groupBy("b").count()
       .agg(sum(col("count") * col("count"))).head().getLong(0)
     val s8 = sumSq(8)
@@ -2059,14 +2074,18 @@ class ExtSpec extends AnyFunSuite with SparkTestSession {
     assert(out(5L) == Seq(), out(5L).toString)
     // decode identity: markers back to spaces == whitespace-normalized
     // text, for EVERY input including unknown unicode
+    // a leading U+0001 and a trailing U+001F are not whitespace: they
+    // stay inside their tokens, as in tokensCol
     val messy = Seq((1L, "café  9züm\tnaïve"), (2L, " ab the th9 "),
-      (3L, "🎈 balloon"))
+      (3L, "🎈 balloon"), (4L, "\u0001ab the\u001F"),
+      (5L, " \u0001 ab\u001F "))
       .toDF("doc_id", "text")
     val dec = T.unigramApply(messy, "text", vocab)
       .select(col("doc_id"), T.unigramDecode(col("unigram_symbols")).as("d"),
         concat_ws(" ", graft.ml.Featurize.tokensCol(col("text"))).as("norm"))
       .collect()
     dec.foreach(r => assert(r.getString(1) == r.getString(2), r.toString))
+    assert(dec.length == 5)
     // invalid vocabularies fail loudly up front
     intercept[IllegalArgumentException] { T.unigramApply(df, "text", Nil) }
     intercept[IllegalArgumentException] {

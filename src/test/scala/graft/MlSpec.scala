@@ -222,6 +222,20 @@ class MlSpec extends AnyFunSuite with SparkTestSession {
     assert(loaded.predictLocal(texts) == model.predictLocal(texts))
   }
 
+  test("predictOne mirrors the batch transform in word mode") {
+    val model = Trainer.train(trainDf, "merchant", "narrative",
+      Trainer.Params(epoch = 3, wordNgrams = 2, numFeatures = 1 << 14))
+    // U+0001 and U+001F are not whitespace, so they stay glued to the
+    // first and last token in both paths: U+0001 "coffee" and "latte"
+    // U+001F are unseen words and only "fuel" speaks
+    val texts = Seq("\u0001coffee fuel latte\u001F", "\u0001starbucks london",
+      "coffee latte cd", "petrol station ref", "video stream 4711")
+    val batch = model.predictLocal(texts)
+    val one = texts.map(model.predictOne)
+    assert(batch == one, s"$batch vs $one")
+    assert(batch.head == "shell", batch.toString)
+  }
+
   test("parallel tuning runs trials, tracks them, and ranks by objective") {
     val tmp = java.nio.file.Files.createTempDirectory("tune").toString
     val tracking = new Tracking(tmp)
