@@ -1266,9 +1266,8 @@ object Dedup {
       .select(col(idCol), col("__asig"),
         posexplode(bandKeys(col("__asig"), bands, rows))
           .as(Seq("band_idx", "band_key")))
-    val probePfx = arr.select(
-        substring(col("band_key"), 1, prefixLen).as("pfx"))
-      .distinct().collect().map(_.getString(0)).sorted
+    val probePfx = PartitionedIndex.distinctKeys(arr.select(
+      substring(col("band_key"), 1, prefixLen).as("pfx")), BandIndex)
     // list + read ONLY the probed prefix dirs (PartitionedIndex.read):
     // a batch against a billion-document band index must not pay a
     // full-layout file listing to open bands × |batch| dirs
@@ -1306,16 +1305,26 @@ object Dedup {
   def updateBandIndex(indexDir: String, changes: DataFrame,
                       textCol: String, idCol: String,
                       seqCol: String = "seq",
-                      opCol: String = "op"): Array[String] = {
+                      opCol: String = "op"): Array[String] =
+    updateBandIndexWithEvidence(indexDir, changes, textCol, idCol, seqCol,
+      opCol)._1
+
+  /** [[updateBandIndex]] plus the layout's dir total (16^prefixChars,
+    * as a Long), both from the one marker read — what a maintenance
+    * sink logs per batch. */
+  private[graft] def updateBandIndexWithEvidence(
+      indexDir: String, changes: DataFrame, textCol: String, idCol: String,
+      seqCol: String, opCol: String): (Array[String], Long) = {
     val (numHashes, bands, prefixChars) =
       bandIndexLayout(indexDir, changes.sparkSession)
-    PartitionedIndex.update(indexDir, BandIndex, changes, idCol, seqCol,
-        opCol, 1L << (4 * prefixChars)) { upserts =>
+    val nDirs = 1L << (4 * prefixChars)
+    (PartitionedIndex.update(indexDir, BandIndex, changes, idCol, seqCol,
+        opCol, nDirs) { upserts =>
       bandIndexRowsFromSignatures(
         minhashSignatures(upserts.select(col(idCol), col(textCol)), textCol,
           idCol, numHashes),
         idCol, numHashes, bands, prefixChars)
-    }
+    }, nDirs)
   }
 
   /** Perceptual near-duplicate VIDEO pairs — temporal voting over
@@ -1723,9 +1732,9 @@ object Dedup {
     val bandBits = 64 / bands
     val mask = (1L << bandBits) - 1
     val arr = arrivalBandProbes(arrivals, idCol, hashCol, bands)
-    val probePfx = arr.select(pmod(xxhash64(col("__bi"), col("__bv")), lit(nPrefix))
-        .cast("int").as("pfx"))
-      .distinct().collect().map(_.getInt(0)).sorted // bounded by nPrefix
+    val probePfx = PartitionedIndex.distinctKeys(arr.select(
+      pmod(xxhash64(col("__bi"), col("__bv")), lit(nPrefix)).cast("int").as("pfx")),
+      HashIndex)
     // list + read ONLY the probed prefix dirs (PartitionedIndex.read)
     // — a batch against a billion-image index must not pay a full-
     // layout file listing to open ≤ 4·|batch| dirs
@@ -1773,12 +1782,20 @@ object Dedup {
   def updateHashIndex(indexDir: String, changes: DataFrame,
                       idCol: String, hashCol: String,
                       seqCol: String = "seq",
-                      opCol: String = "op"): Array[Int] = {
+                      opCol: String = "op"): Array[Int] =
+    updateHashIndexWithEvidence(indexDir, changes, idCol, hashCol, seqCol,
+      opCol)._1
+
+  /** [[updateHashIndex]] plus the layout's `nPrefix`, both from the one
+    * marker read — what a maintenance sink logs per batch. */
+  private[graft] def updateHashIndexWithEvidence(
+      indexDir: String, changes: DataFrame, idCol: String, hashCol: String,
+      seqCol: String, opCol: String): (Array[Int], Long) = {
     val (bands, nPrefix) = hashIndexLayout(indexDir, changes.sparkSession)
-    PartitionedIndex.update(indexDir, HashIndex, changes, idCol, seqCol,
+    (PartitionedIndex.update(indexDir, HashIndex, changes, idCol, seqCol,
         opCol, nPrefix.toLong) {
       hashIndexRows(_, idCol, hashCol, bands, nPrefix)
-    }
+    }, nPrefix.toLong)
   }
 
   /** Cross-document EXACT substring dedup — the Lee et al. 2021

@@ -1,11 +1,11 @@
 package graft.ext
 
-import scala.reflect.ClassTag
-
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StringType, StructType}
 
 /** The lifecycle of a stored index partitioned by each row's
   * precomputed HOME, written once for the three families that use it:
@@ -18,18 +18,20 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
   * A family supplies its rows, its [[Family]] (partition column and
   * type, marker name), its dir count and its marker body. This module
   * owns the rest: the layout marker, the one-file-per-dir write, the
-  * pinned one-level read, the CDC update (locate, rewrite) and the
-  * crash-safe swap. Every filesystem is resolved through `Path`, never
+  * pinned one-level read (its schema from a footer, no Spark job), the
+  * CDC update (merge once, locate, rewrite) and the crash-safe swap.
+  * Every filesystem is resolved through `Path`, never
   * `FileSystem.get(new URI(dir))`, which throws `URISyntaxException`
   * on unescaped paths (spaces, `%`) that every `read.parquet` call
   * handles fine. */
 private[graft] object PartitionedIndex {
 
-  /** A partition value type: the Spark type the column is pinned to
-    * and how a dir name's value parses. */
-  final case class Key[K](dataType: DataType, parse: String => Option[K])
-  val StringKey: Key[String] = Key(StringType, Some(_))
-  val IntKey: Key[Int] = Key(IntegerType, _.toIntOption)
+  /** A partition value type: the Spark type the column is pinned to,
+    * how a dir name's value parses and how a collect decodes it. */
+  final case class Key[K](dataType: DataType, parse: String => Option[K],
+                          encoder: Encoder[K])
+  val StringKey: Key[String] = Key(StringType, Some(_), Encoders.STRING)
+  val IntKey: Key[Int] = Key(IntegerType, _.toIntOption, Encoders.scalaInt)
 
   /** One index family. `name` spells the public entry points
     * (`"Band"` → `writeBandIndex` / `updateBandIndex`); `persists`
@@ -124,6 +126,36 @@ private[graft] object PartitionedIndex {
 
   // ---- read
 
+  /** The key Spark's parquet writer stores its row schema under in
+    * every file's footer. */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The data schema Spark's writer stored in `leaf`'s footer, read on
+    * the driver: `s.read.parquet(leaf).schema` would run a Spark job
+    * to read this one footer. Nullable throughout, as a parquet read
+    * reports it. A leaf that has no stored schema was not written by
+    * Spark, so not by `f.writer`. */
+  private def leafSchema(s: SparkSession, leaf: Path, f: Family[_]): StructType = {
+    val in = ParquetFileReader.open(
+      HadoopInputFile.fromPath(leaf, s.sparkContext.hadoopConfiguration))
+    val json = try Option(in.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(SparkRowMetadata))
+      finally in.close()
+    require(json.nonEmpty,
+      s"$leaf holds no Spark row schema — not a ${f.writer} layout; " +
+        s"rebuild it with ${f.writer} (indexes are rebuildable)")
+    nullable(DataType.fromJson(json.get)).asInstanceOf[StructType]
+  }
+
+  /** Spark's `asNullable`, which is not public. */
+  private def nullable(t: DataType): DataType = t match {
+    case st: StructType => StructType(st.fields.map(x =>
+      x.copy(dataType = nullable(x.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
+
   /** The layout's `partCol=` dirs whose value `keep` accepts, read
     * with ONE level of listing and a PINNED schema. A serve against a
     * billion-row index must not pay a full-layout leaf-file discovery
@@ -134,8 +166,9 @@ private[graft] object PartitionedIndex {
     * all-numeric subset of hex dirs infers INT ('07' → 7), and a union
     * with string-typed builder rows would then miss the real dir and
     * keep deleted rows live. So the data schema comes from ONE leaf's
-    * footer — a read dir's first, else any dir's (an interrupted swap
-    * can leave an empty dir) — and the partition column is appended as
+    * footer, read on the driver with no Spark job ([[leafSchema]]) —
+    * a read dir's first, else any dir's (an interrupted swap can leave
+    * an empty dir) — and the partition column is appended as
     * `f.key`'s type. When no accepted dir exists the result is an
     * empty frame of that schema. Callers keep their own `isin` filter;
     * the listing only narrows WHERE the read looks. */
@@ -152,16 +185,25 @@ private[graft] object PartitionedIndex {
     val leaf = (dirs.iterator ++ all.iterator.map(_._2)).flatMap { d =>
       fs.listStatus(new Path(d))
         .find(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
+        .map(_.getPath)
     }.nextOption()
     require(leaf.nonEmpty,
       s"$indexDir holds no ${f.partCol}= dir with a parquet file to take " +
         s"the ${f.writer} schema from")
-    val schema = s.read.parquet(leaf.get).schema
+    val schema = leafSchema(s, leaf.get, f)
       .add(f.partCol, f.key.dataType, nullable = true)
     if (dirs.isEmpty) s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else s.read.schema(schema).option("basePath", indexDir).parquet(dirs: _*)
   }
+
+  /** The distinct `f.partCol` values of `homes`, sorted: deduped
+    * within each partition, then on the driver, so the collect runs
+    * no exchange. Bounded by the partition count times the layout's
+    * dir count. */
+  def distinctKeys[K: Ordering](homes: DataFrame, f: Family[K]): Array[K] =
+    homes.select(f.partCol).as(f.key.encoder)
+      .mapPartitions(_.toSet.iterator)(f.key.encoder)
+      .collect().distinct.sorted
 
   // ---- CDC update
 
@@ -170,48 +212,55 @@ private[graft] object PartitionedIndex {
     * homes and new homes both count (an update whose payload moves
     * its home touches both). `rows` builds the family's index rows
     * from the batch's upserts (the latest-`seqCol` change per id,
-    * `opCol` not `d`). Steps:
+    * `opCol` not `d`). Each step's jobs carry an `f.updater` label:
     *
-    *  1. LOCATE: old homes (a column-pruned `(id, home)` scan against
-    *     the broadcast touched-id set) and new homes in ONE
-    *     distinct+collect — one driver round trip per micro-batch;
-    *  2. REWRITE: survivors (touched dirs minus touched ids, read
+    *  1. MERGE: the latest changes and their index rows are each
+    *     checkpointed locally, so the batch is merged and `rows` runs
+    *     ONCE for both steps below; the touched ids are collected to
+    *     the driver (bounded by the batch, as a broadcast of them
+    *     would be);
+    *  2. LOCATE: the homes of the index rows holding a touched id (a
+    *     column-pruned `(id, home)` scan) and of the new rows, in ONE
+    *     collect with no exchange ([[distinctKeys]]);
+    *  3. REWRITE: survivors (touched dirs minus touched ids, read
     *     pruned) plus the new rows land in a sibling temp layout that
     *     fully materializes before any live dir moves;
-    *  3. SWAP: [[swapPrefixDirs]]; a dir emptied by deletes stays
+    *  4. SWAP: [[swapPrefixDirs]]; a dir emptied by deletes stays
     *     deleted, untouched dirs' files are never opened for write.
     *
     * Returns the touched partition values, sorted (bounded by the
     * layout's `nDirs`). */
-  def update[K: ClassTag: Ordering](indexDir: String, f: Family[K],
-                                    changes: DataFrame, idCol: String,
-                                    seqCol: String, opCol: String,
-                                    nDirs: Long)(
+  def update[K: Ordering](indexDir: String, f: Family[K],
+                          changes: DataFrame, idCol: String,
+                          seqCol: String, opCol: String, nDirs: Long)(
       rows: DataFrame => DataFrame): Array[K] = {
     val s = changes.sparkSession
     val pc = f.partCol
-    val latest = graft.etl.Merge.latestChanges(changes, idCol, seqCol)
-    val touchedIds = latest.select(col(idCol)).distinct()
-    val newRows = rows(latest.where(col(opCol) =!= lit("d")))
+    val (ids, newRows) = JobLabel(s, s"${f.updater}: merge change batch") {
+      val latest = graft.etl.Merge.latestChanges(changes, idCol, seqCol)
+        .localCheckpoint(eager = false)
+      (latest.select(idCol).collect().map(_.get(0)),
+        rows(latest.where(col(opCol) =!= lit("d"))).localCheckpoint(eager = false))
+    }
+    // a null id (or a null in `ids`) leaves `hit` null: located
+    // nowhere and, through the coalesce, surviving — as in an equi-join
+    val hit = col(idCol).isin(ids.toIndexedSeq: _*)
     val touched = JobLabel(s, s"${f.updater}: locate touched ${f.dirNoun}") {
-      read(s, indexDir, f)
-        .select(col(idCol), col(pc))
-        .join(broadcast(touchedIds), Seq(idCol))
-        .select(pc)
-        .unionByName(newRows.select(pc))
-        .distinct().collect().map(_.getAs[K](0)).sorted
+      distinctKeys(read(s, indexDir, f).where(hit).select(pc)
+        .unionByName(newRows.select(pc)), f)
     }
-    if (touched.isEmpty) return touched
-    val survivors = read(s, indexDir, f, touched.toSet)
-      .where(col(pc).isin(touched.toIndexedSeq: _*))
-      .join(broadcast(touchedIds), Seq(idCol), "left_anti")
-    val tmpDir = s"$indexDir.upd-${java.util.UUID.randomUUID().toString.take(8)}"
-    JobLabel(s, s"${f.updater}: rewrite touched ${f.dirNoun}") {
-      writeLayout(survivors.unionByName(
-          newRows.select(survivors.columns.toIndexedSeq.map(col): _*)),
-        f, tmpDir, nDirs)
+    if (touched.nonEmpty) {
+      val survivors = read(s, indexDir, f, touched.toSet)
+        .where(col(pc).isin(touched.toIndexedSeq: _*))
+        .where(!coalesce(hit, lit(false)))
+      val tmpDir = s"$indexDir.upd-${java.util.UUID.randomUUID().toString.take(8)}"
+      JobLabel(s, s"${f.updater}: rewrite touched ${f.dirNoun}") {
+        writeLayout(survivors.unionByName(
+            newRows.select(survivors.columns.toIndexedSeq.map(col): _*)),
+          f, tmpDir, nDirs)
+      }
+      swapPrefixDirs(s, indexDir, tmpDir, touched.toIndexedSeq.map(v => s"$pc=$v"))
     }
-    swapPrefixDirs(s, indexDir, tmpDir, touched.toIndexedSeq.map(v => s"$pc=$v"))
     touched
   }
 

@@ -646,9 +646,8 @@ object Similarity {
     * query batch will actually read. */
   def probeCellSet(queries: DataFrame, vecCol: String,
                    cents: Array[Array[Double]], nprobe: Int): Array[Int] =
-    withProbeCells(queries.select(col(vecCol).as("__pv")), "__pv",
-      cents, nprobe)
-      .select("cell").distinct().collect().map(_.getInt(0)).sorted
+    PartitionedIndex.distinctKeys(withProbeCells(
+      queries.select(col(vecCol).as("__pv")), "__pv", cents, nprobe), IvfIndex)
 
   /** Serve top-k from a [[writeIvfIndex]] layout: probe cells are
     * collected once (bounded — at most `nCells` ints, the same driver
@@ -674,8 +673,7 @@ object Similarity {
       vecCol: String, k: Int, cents: Array[Array[Double]],
       nprobe: Int): (DataFrame, Array[Int], Int) = {
     val probed = probe(queries, idCol, vecCol, cents, nprobe)
-    val cellSet = probed.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
+    val cellSet = PartitionedIndex.distinctKeys(probed, IvfIndex)
     // list + read ONLY the probed cell dirs (PartitionedIndex.read): a
     // query batch against a billion-row layout must not pay a
     // full-layout file listing to open nprobe cells
@@ -717,12 +715,29 @@ object Similarity {
       s"caller centroids differ from the ${IvfIndex.marker} marker at " +
         s"$indexDir — maintain with ivfIndexCentroids(indexDir) or " +
         "rebuild the index")
+    updateIvfCells(indexDir, changes, idCol, vecCol, cents, seqCol, opCol)
+  }
+
+  /** [[updateIvfIndex]] under the marker's own centroids, plus the
+    * layout's cell count, both from the one marker read — what a
+    * maintenance sink logs per batch. */
+  private[graft] def updateIvfIndexWithEvidence(
+      indexDir: String, changes: DataFrame, idCol: String, vecCol: String,
+      seqCol: String, opCol: String): (Array[Int], Long) = {
+    val cents = ivfIndexCentroids(indexDir, changes.sparkSession)
+    (updateIvfCells(indexDir, changes, idCol, vecCol, cents, seqCol, opCol),
+      cents.length.toLong)
+  }
+
+  private def updateIvfCells(indexDir: String, changes: DataFrame,
+                             idCol: String, vecCol: String,
+                             cents: Array[Array[Double]], seqCol: String,
+                             opCol: String): Array[Int] =
     PartitionedIndex.update(indexDir, IvfIndex, changes, idCol, seqCol,
         opCol, cents.length.toLong) { upserts =>
       assignCells(upserts.select(col(idCol), col(vecCol)), vecCol, cents)
         .select(col(idCol), col(vecCol), col("cell"))
     }
-  }
 
   /** Exact re-rank (refine) of a quantized shortlist — the second
     * stage of the standard two-stage production ANN shape (FAISS's

@@ -779,7 +779,7 @@ object ExtQueries {
     // output instead of paying a full second layout write + read
     // that asserted nothing extra about the artifact under test.
     val updated = graft.etl.Merge.applyCdc(emb, changes, "vec_id")
-    val maintained = s.read.parquet(idir)
+    val maintained = PartitionedIndex.read(s, idir, Similarity.IvfIndex)
     val rebuilt = Similarity.assignCells(updated, "embedding", cents)
       .select(maintained.columns.map(col).toIndexedSeq: _*)
     requireSameRows(maintained, rebuilt,
@@ -6169,7 +6169,7 @@ object ExtQueries {
     // maintained ARTIFACT still reads from disk, so the gate checks
     // it against pristine builder output instead of paying a full
     // second 1024-dir write + read.
-    val maintained = s.read.parquet(idir)
+    val maintained = PartitionedIndex.read(s, idir, Dedup.HashIndex)
     val rebuilt = Dedup.hashIndexRows(postHashes, "doc_id", "dhash",
         bands = 4, nPrefix = 1024)
       .select(maintained.columns.map(col).toIndexedSeq: _*)

@@ -562,7 +562,7 @@ object ScoreStream {
     * layout: upsert rows rewrite identically and deletes of absent
     * ids are no-ops, so the maintained index is exactly-once in
     * effect. The layout constants come from the index's OWN marker
-    * (here `_graft_band_layout`, read per batch by `updateBandIndex`)
+    * (here `_graft_band_layout`, read once per batch by `updateBandIndex`)
     * — a sink cannot band or assign new rows differently than the
     * stored rows. The per-batch narrowing evidence goes to the
     * `_maint` batch log under `logDir` ([[writeBatchLog]]) so callers
@@ -572,12 +572,9 @@ object ScoreStream {
                             logDir: String, checkpoint: String,
                             seqCol: String = "seq",
                             opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
-    indexMaintainSink(changes, logDir, checkpoint) { batch =>
-      val touched = graft.ext.Dedup.updateBandIndex(
-        indexDir, batch, textCol, idCol, seqCol, opCol)
-      val (_, _, prefixChars) = graft.ext.Dedup.bandIndexLayout(
-        indexDir, batch.sparkSession)
-      (touched.length, 1L << (4 * prefixChars)) // 16^prefixChars, Int-overflow-proof
+    indexMaintainSink(changes, logDir, checkpoint) {
+      graft.ext.Dedup.updateBandIndexWithEvidence(
+        indexDir, _, textCol, idCol, seqCol, opCol)
     }
 
   /** Streaming MAINTENANCE of a stored [[graft.ext.Dedup
@@ -596,13 +593,9 @@ object ScoreStream {
                             seqCol: String = "seq",
                             opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
     indexMaintainSink(changes, logDir, checkpoint) { batch =>
-      val hashed = graft.ext.Multimodal.imageDHashes(batch, payloadCol)
-        .drop(payloadCol)
-      val touched = graft.ext.Dedup.updateHashIndex(
-        indexDir, hashed, idCol, "dhash", seqCol, opCol)
-      val (_, nPrefix) = graft.ext.Dedup.hashIndexLayout(
-        indexDir, batch.sparkSession)
-      (touched.length, nPrefix.toLong)
+      graft.ext.Dedup.updateHashIndexWithEvidence(indexDir,
+        graft.ext.Multimodal.imageDHashes(batch, payloadCol).drop(payloadCol),
+        idCol, "dhash", seqCol, opCol)
     }
 
   /** Streaming ANN serving from a STORED [[graft.ext.Similarity
@@ -658,27 +651,24 @@ object ScoreStream {
                            logDir: String, checkpoint: String,
                            seqCol: String = "seq",
                            opCol: String = "op"): org.apache.spark.sql.streaming.StreamingQuery =
-    indexMaintainSink(changes, logDir, checkpoint) { batch =>
-      val cents = graft.ext.Similarity.ivfIndexCentroids(
-        indexDir, batch.sparkSession)
-      val touched = graft.ext.Similarity.updateIvfIndex(
-        indexDir, batch, idCol, vecCol, cents, seqCol, opCol)
-      (touched.length, cents.length.toLong)
+    indexMaintainSink(changes, logDir, checkpoint) {
+      graft.ext.Similarity.updateIvfIndexWithEvidence(
+        indexDir, _, idCol, vecCol, seqCol, opCol)
     }
 
   /** The foreachBatch body the three maintain sinks share: `apply`
     * maintains the index from one micro-batch and returns its touched
-    * dir count and the layout's total, logged to the `_maint` batch
-    * log ([[writeBatchLog]]). */
+    * dirs and the layout's total, logged to the `_maint` batch log
+    * ([[writeBatchLog]]). */
   private def indexMaintainSink(changes: DataFrame, logDir: String,
                                 checkpoint: String)(
-      apply: DataFrame => (Int, Long)): org.apache.spark.sql.streaming.StreamingQuery =
+      apply: DataFrame => (Array[_], Long)): org.apache.spark.sql.streaming.StreamingQuery =
     changes.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val (touched, nDirs) = apply(batch)
         writeBatchLog(batch.sparkSession, logDir, "_maint", id,
-          s""""touched":$touched,"n_prefix":$nDirs""")
+          s""""touched":${touched.length},"n_prefix":$nDirs""")
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
