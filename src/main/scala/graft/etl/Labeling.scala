@@ -20,7 +20,4 @@ object Labeling {
   /** Inverse: strip the prefix, dashes back to spaces. */
   def decode(prediction: Column): Column =
     regexp_replace(regexp_replace(prediction, LabelPrefix, ""), "-", " ")
-
-  def decodeString(prediction: String): String =
-    prediction.replace(LabelPrefix, "").replace('-', ' ')
 }

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * upsert is the operation a production corpus actually needs.
   *
   * Scale shape: the CHANGES side (typically ≪ base) is the only side
-  * that shuffles — one partial-aggregatable `max_by` reduce resolves
-  * each key to its latest change, and the touched-key set is broadcast
-  * into a left-anti join so the base table streams through without an
+  * that shuffles — a fixed-width `max(seq)` aggregate per key plus one
+  * equi-join on `(key, seq)` resolves each key to its latest change
+  * ([[latestChanges]]), and the touched-key set is broadcast into a
+  * left-anti join so the base table streams through without an
   * exchange. The base is read once and never sorted, shuffled, or
   * collected.
   */
@@ -27,23 +28,18 @@ object Merge {
     * rows on both sides of its shuffle, because the struct buffer is
     * var-length), then one equi-join on `(key, seq)` fetches the
     * winning payload. The payload rows shuffle exactly once, unsorted
-    * pre-aggregation. */
+    * pre-aggregation.
+    *
+    * Ties are not broken: every change at a key's max `seq` wins, so a
+    * key with two changes at that `seq` (two payloads, or one change
+    * delivered twice) comes back twice, and [[applyCdc]] upserts both.
+    * [[graft.ext.PartitionedIndex.update]] raises on such a batch,
+    * naming the tied keys, before it writes anything. */
   def latestChanges(changes: DataFrame, key: String, seqCol: String): DataFrame = {
     val winners = changes.groupBy(col(key)).agg(max(col(seqCol)).as(seqCol))
     changes.join(winners, Seq(key, seqCol))
   }
 
-  /** Apply a CDC change set to a base table. Per key the highest-`seqCol`
-    * change wins; a winning `opCol == "d"` deletes the key; any other
-    * winning op upserts the change's payload (update if the key exists
-    * in base, insert if not). Base rows with no change pass through
-    * untouched. `changes` must carry every base column plus `seqCol`
-    * and `opCol`; the result has exactly the base schema.
-    *
-    * `broadcastChanges = false` opts out of the broadcast anti join for
-    * the rare change set too large to broadcast — Spark then plans a
-    * shuffled anti join on the key.
-    */
   /** Snapshot diff: classify every key across two corpus versions as
     * `added` / `removed` / `changed` / `same` by content hash — the
     * audit between published versions (what did this refresh actually
@@ -66,6 +62,18 @@ object Merge {
           .otherwise("changed").as("status"))
   }
 
+  /** Apply a CDC change set to a base table. Per key the highest-`seqCol`
+    * change wins ([[latestChanges]], ties included); a winning
+    * `opCol == "d"` deletes the key; any other winning op upserts the
+    * change's payload (update if the key exists in base, insert if
+    * not). Base rows with no change pass through
+    * untouched. `changes` must carry every base column plus `seqCol`
+    * and `opCol`; the result has exactly the base schema.
+    *
+    * `broadcastChanges = false` opts out of the broadcast anti join for
+    * the rare change set too large to broadcast — Spark then plans a
+    * shuffled anti join on the key.
+    */
   def applyCdc(base: DataFrame, changes: DataFrame, key: String,
                seqCol: String = "seq", opCol: String = "op",
                broadcastChanges: Boolean = true): DataFrame = {

@@ -285,16 +285,4 @@ object Sampling {
       .where(col("__cap_rank") <= cap)
       .drop("__cap_rank")
   }
-
-  /** Deterministic variant of the floored/overshoot training-file
-    * sampler (`utils/fasttext_utils.py:44-56`). */
-  def sampleForTrainingFile(df: DataFrame, labelCol: String, keyCol: String,
-                            sampleRate: Double, minCount: Long,
-                            modulus: Int = 1 << 20): DataFrame = {
-    val rates = flooredRates(df, labelCol, sampleRate, minCount)
-      .select(labelCol, "sample_rate")
-    df.join(broadcast(rates), Seq(labelCol))
-      .where(membershipBucket(col(keyCol), modulus) < col("sample_rate") * modulus)
-      .drop("sample_rate")
-  }
 }

@@ -56,19 +56,6 @@ object Multimodal {
         sha2(encode(col(textCol), "UTF-8"), 256).as("sha256"),
         lit("application/octet-stream").as("mime")))
 
-  /** Pure-column metadata over a binary payload (no decode). */
-  def payloadMeta(payload: Column): Column = struct(
-    length(payload).as("n_bytes"),
-    sha2(payload, 256).as("sha256"))
-
-  /** "Frame sample": every `stride`-th byte of the payload — the shape
-    * of video frame-sampling (indexed subranges of the binary), pure
-    * Catalyst. */
-  def sampleBytes(payload: Column, stride: Int, maxFrames: Int): Column =
-    transform(
-      sequence(lit(1), least(floor(length(payload) / stride).cast("int"), lit(maxFrames))),
-      i => substring(payload, (i - 1) * stride + 1, lit(1)))
-
   case class MediaRow(id: Long, payload: Array[Byte])
   case class MediaFeatures(id: Long, width: Int, height: Int,
                            features: Array[Float])

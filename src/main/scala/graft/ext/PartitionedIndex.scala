@@ -218,7 +218,8 @@ private[graft] object PartitionedIndex {
     *     checkpointed locally, so the batch is merged and `rows` runs
     *     ONCE for both steps below; the touched ids are collected to
     *     the driver (bounded by the batch, as a broadcast of them
-    *     would be);
+    *     would be). An id whose latest `seqCol` holds two changes
+    *     raises here, naming the id, before anything is written;
     *  2. LOCATE: the homes of the index rows holding a touched id (a
     *     column-pruned `(id, home)` scan) and of the new rows, in ONE
     *     collect with no exchange ([[distinctKeys]]);
@@ -242,6 +243,14 @@ private[graft] object PartitionedIndex {
       (latest.select(idCol).collect().map(_.get(0)),
         rows(latest.where(col(opCol) =!= lit("d"))).localCheckpoint(eager = false))
     }
+    // the merge keeps every change tied at an id's latest seq; each
+    // would land in the index as a row of its own
+    val tied = ids.groupBy(identity).collect {
+      case (id, n) if n.length > 1 => String.valueOf(id)
+    }.toSeq.sorted
+    require(tied.isEmpty,
+      s"${f.updater}: ${tied.size} id(s) have more than one change at " +
+        s"their latest $seqCol: ${tied.take(10).mkString(", ")}")
     // a null id (or a null in `ids`) leaves `hit` null: located
     // nowhere and, through the coalesce, surviving — as in an equi-join
     val hit = col(idCol).isin(ids.toIndexedSeq: _*)

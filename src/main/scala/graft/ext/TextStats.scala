@@ -215,11 +215,6 @@ object TextStats extends Serializable {
         size(lowerToks).cast("double"))
       .otherwise(0.0)
 
-  /** Ratio of tokens that are (English) stopwords (one-shot form —
-    * tokenizes per reference; prefer [[stopwordRatioOfTokens]]). */
-  def stopwordRatio(text: Column): Column =
-    stopwordRatioOfTokens(Featurize.tokensCol(lower(text)))
-
   /** Mean token length over a pre-staged token array (referenced three
     * times — pass an attribute). */
   def meanTokenLengthOfTokens(tokens: Column): Column =
@@ -227,10 +222,6 @@ object TextStats extends Serializable {
       aggregate(tokens, lit(0L), (acc, t) => acc + length(t)).cast("double") /
         size(tokens).cast("double"))
       .otherwise(0.0)
-
-  /** Mean token length (one-shot form). */
-  def meanTokenLength(text: Column): Column =
-    meanTokenLengthOfTokens(Featurize.tokensCol(text))
 
   /** Composite quality score from PRE-STAGED components (token count,
     * punct ratio, stopword ratio already computed under their own
@@ -245,11 +236,6 @@ object TextStats extends Serializable {
     val stopScore = least(stop * 5.0, lit(1.0))
     round(lenScore * 0.4 + punctPenalty * 0.4 + stopScore * 0.2, 6)
   }
-
-  /** One-shot column form of [[qualityScoreFrom]] — convenient, but
-    * evaluates the tokenizer per component. */
-  def qualityScore(text: Column): Column =
-    qualityScoreFrom(tokenCount(text), punctRatio(text), stopwordRatio(text))
 
   /** The Gopher rule-filter stopword list (Rae et al.,
     * arXiv:2112.11446 §A1.1: "contains at least 2 of the following
@@ -798,17 +784,11 @@ object TextStats extends Serializable {
   def bagFingerprintOfTokens(tokens: Column): Column =
     md5(array_join(array_sort(tokens), " "))
 
-  def bagFingerprint(text: Column): Column =
-    bagFingerprintOfTokens(Featurize.tokensCol(text))
-
   /** Polynomial rolling hash over token lengths mod a prime — a cheap
     * sequence-sensitive fingerprint (portable: integer arithmetic only). */
   def rollingFingerprintOfTokens(tokens: Column): Column =
     aggregate(tokens, lit(0L),
       (acc, t) => pmod(acc * 31 + length(t), lit(1000003L)))
-
-  def rollingFingerprint(text: Column): Column =
-    rollingFingerprintOfTokens(Featurize.tokensCol(text))
 
   /** Latin-1/Latin-Extended accent fold table (covers the diacritics a
     * western-web crawl actually carries; a full-ICU pass would be a

@@ -153,7 +153,7 @@ private[ml] object SoftmaxFit {
     private val K = numClasses
     private val linear = numClasses * numFeatures
 
-    def calculate(coef: BDV[Double]): (Double, BDV[Double]) = {
+    override def calculate(coef: BDV[Double]): (Double, BDV[Double]) = {
       val w = coef.toArray
       val grad = new Array[Double](w.length)
       // margin of an all-zero row: b_k − Σ_j w_kj μ_j/σ_j

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ext.{Dedup, Multimodal, PartitionedIndex, Selection, Similarity, TextStats, Tokenizer, UnicodeFixture}
 import graft.ml.Featurize
+import graft.streaming.ScoreStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import Tables._
 
 /** LLM-training-data-pipeline operators (dedup / similarity / text
@@ -187,14 +189,27 @@ object ExtQueries {
     * Bench clears it between passes, so every pass still pays one
     * real decode of the corpus. */
   private def baseImageHashes(s: SparkSession, dir: String): DataFrame =
-    Artifacts.get("base_image_hashes", s, dir)(
-      Multimodal.imageDHashes(
-        Multimodal.ImageFixture.withPayloads(
-          documents(s, dir).select(col("doc_id"),
-            col("doc_id").as("__seed"), lit(false).as("__pert")),
-          "__seed", "__pert").select("doc_id", "payload"), "payload")
-        .select("doc_id", "dhash")
-        .localCheckpoint())
+    Artifacts.get("base_image_hashes", s, dir)(imageHashes(imagesOf(
+      documents(s, dir).select("doc_id"), 0L, 0L, pert = false))
+      .localCheckpoint())
+
+  /** Fixture seed rows `(doc_id, __seed, __pert)`: per `doc_id` of
+    * `ids`, seed `doc_id + seedOff`, perturbed or not, under id
+    * `doc_id + idOff`. */
+  private def seeds(ids: DataFrame, idOff: Long, seedOff: Long,
+                    pert: Boolean): DataFrame =
+    ids.select((col("doc_id") + idOff).as("doc_id"),
+      (col("doc_id") + seedOff).as("__seed"), lit(pert).as("__pert"))
+
+  /** The fixture PNG payloads `(doc_id, payload)` of [[seeds]]. */
+  private def imagesOf(ids: DataFrame, idOff: Long, seedOff: Long,
+                       pert: Boolean): DataFrame =
+    Multimodal.ImageFixture.withPayloads(seeds(ids, idOff, seedOff, pert),
+      "__seed", "__pert").select("doc_id", "payload")
+
+  /** The `(doc_id, dhash)` of an image payload frame. */
+  private def imageHashes(payloads: DataFrame): DataFrame =
+    Multimodal.imageDHashes(payloads, "payload").select("doc_id", "dhash")
 
   /** The base-corpus MinHash signatures `(doc_id, m0..m3)` — every
     * document tokenized, 3-shingled and signed exactly once — one
@@ -212,10 +227,56 @@ object ExtQueries {
       Dedup.minhashSignatures(documents(s, dir).select("doc_id", "text"),
         "text", "doc_id", 4).localCheckpoint())
 
-  /** [[docSignatures]] keyed the way the reference side of
-    * [[Dedup.minhashMatchesWithRefSignatures]] expects. */
-  private def docRefSignatures(s: SparkSession, dir: String): DataFrame =
-    docSignatures(s, dir).withColumnRenamed("doc_id", "neighbor_id")
+  /** The planted text arrivals of the streamed near-dup queries:
+    * exact copies of docs 0–9 (id + `copyOff`), tail-mutated near-dups
+    * of 10–14 (id + `mutOff`) and reversed decoys of 15–19 (id +
+    * `revOff`). */
+  private def plantedTexts(docs: DataFrame, copyOff: Int, mutOff: Int,
+                           revOff: Int): DataFrame =
+    docs.where(col("doc_id") < 10)
+      .select((col("doc_id") + copyOff).as("doc_id"), col("text"))
+      .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
+        .select((col("doc_id") + mutOff).as("doc_id"),
+          concat(col("text"), lit(" extra appended words here")).as("text")))
+      .unionByName(docs.where(col("doc_id") >= 15 && col("doc_id") < 20)
+        .select((col("doc_id") + revOff).as("doc_id"),
+          reverse(col("text")).as("text")))
+
+  /** [[plantedTexts]] in SQL: the `WITH arr0 (id, text)` head of
+    * [[minhashPairsSql]] over `documents`. */
+  private def plantedTextsSql(copyOff: Int, mutOff: Int, revOff: Int): String =
+    s"""WITH arr0 AS (
+       |  SELECT doc_id + $copyOff AS id, text FROM documents WHERE doc_id < 10
+       |  UNION ALL
+       |  SELECT doc_id + $mutOff, text || ' extra appended words here'
+       |  FROM documents WHERE doc_id >= 10 AND doc_id < 15
+       |  UNION ALL
+       |  SELECT doc_id + $revOff, reverse(text)
+       |  FROM documents WHERE doc_id >= 15 AND doc_id < 20)""".stripMargin
+
+  /** The planted image arrivals of the streamed perceptual gates:
+    * perturbed re-encodes of docs 0–9 (id + `pertOff`; each MUST match
+    * its original within hamming 3) and unrelated decoys of docs 0–4
+    * (id and seed + `decoyOff`; they match only on genuine ≤3-bit
+    * collisions). */
+  private def plantedImages(docs: DataFrame, pertOff: Long,
+                            decoyOff: Long): DataFrame =
+    imagesOf(docs.where(col("doc_id") < 10), pertOff, 0L, pert = true)
+      .unionByName(imagesOf(docs.where(col("doc_id") < 5), decoyOff,
+        decoyOff, pert = false))
+
+  /** [[plantedImages]] in SQL (the audio gate plants the same seeds):
+    * the `WITH ref` (the corpus) and `arr` (the arrivals) head of
+    * [[bandedHammingSql]], each with columns (id, pid, pert). */
+  private def plantedImagesSql(pertOff: Long, decoyOff: Long): String =
+    s"""WITH ref AS (
+       |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
+       |arr AS (
+       |  SELECT doc_id + $pertOff AS id, doc_id AS pid, TRUE AS pert
+       |  FROM documents WHERE doc_id < 10
+       |  UNION ALL
+       |  SELECT doc_id + $decoyOff, doc_id + $decoyOff, FALSE FROM documents
+       |  WHERE doc_id < 5)""".stripMargin
 
   /** Multiset row-identity gate: raise unless `a` and `b` hold
     * exactly the same rows, multiplicity included — the same
@@ -324,13 +385,19 @@ object ExtQueries {
   val dedupNeardup: Q = (s, dir) =>
     plantedNearDupPairs(s, dir).orderBy("id_a", "id_b")
 
-  val dedupNeardupSql = {
-    val mins = (0 until 8).map { i =>
-      val h = if (i < 4) "md5(x)" else "md5('1|' || x)"
-      s"  list_min(list_transform(sh, x -> substr($h, ${(i % 4) * 8 + 1}, 8))) AS m$i"
-    }.mkString(",\n")
-    val bands = (0 until 4).map(b => s"md5(m${2 * b} || '|' || m${2 * b + 1})")
+  /** The eight MinHash lanes `m0..m7` of a shingle list `sh` (lanes
+    * 4–7 salt the md5 with `1|`) as the near-dup oracles compute
+    * them, and the four band keys over lane pairs. */
+  private def nearDupLanesSql: String = (0 until 8).map { i =>
+    val h = if (i < 4) "md5(x)" else "md5('1|' || x)"
+    s"  list_min(list_transform(sh, x -> substr($h, ${(i % 4) * 8 + 1}, 8))) AS m$i"
+  }.mkString(",\n")
+
+  private def nearDupBandsSql: String =
+    (0 until 4).map(b => s"md5(m${2 * b} || '|' || m${2 * b + 1})")
       .mkString("[", ", ", "]")
+
+  val dedupNeardupSql = {
     s"""WITH aug AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
@@ -339,9 +406,9 @@ object ExtQueries {
        |t AS (SELECT doc_id, $toksSql AS toks FROM aug),
        |s AS (SELECT doc_id, $shinglesSql AS sh FROM t),
        |m AS (SELECT doc_id,
-       |$mins
+       |$nearDupLanesSql
        |FROM s),
-       |b AS (SELECT doc_id, unnest($bands) AS band FROM m),
+       |b AS (SELECT doc_id, unnest($nearDupBandsSql) AS band FROM m),
        |cand AS (SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
        |  FROM b l JOIN b r USING (band) WHERE l.doc_id < r.doc_id),
        |d AS (SELECT doc_id, list_distinct(sh) AS dsh FROM s)
@@ -371,12 +438,6 @@ object ExtQueries {
 
   val dedupComponentsSql = {
     // same signature/band/verify construction as dedupNeardupSql
-    val mins = (0 until 8).map { i =>
-      val h = if (i < 4) "md5(x)" else "md5('1|' || x)"
-      s"  list_min(list_transform(sh, x -> substr($h, ${(i % 4) * 8 + 1}, 8))) AS m$i"
-    }.mkString(",\n")
-    val bands = (0 until 4).map(b => s"md5(m${2 * b} || '|' || m${2 * b + 1})")
-      .mkString("[", ", ", "]")
     s"""WITH RECURSIVE aug AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
@@ -385,9 +446,9 @@ object ExtQueries {
        |t AS (SELECT doc_id, $toksSql AS toks FROM aug),
        |s AS (SELECT doc_id, $shinglesSql AS sh FROM t),
        |m AS (SELECT doc_id,
-       |$mins
+       |$nearDupLanesSql
        |FROM s),
-       |b AS (SELECT doc_id, unnest($bands) AS band FROM m),
+       |b AS (SELECT doc_id, unnest($nearDupBandsSql) AS band FROM m),
        |cand AS (SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
        |  FROM b l JOIN b r USING (band) WHERE l.doc_id < r.doc_id),
        |d AS (SELECT doc_id, list_distinct(sh) AS dsh FROM s),
@@ -431,12 +492,6 @@ object ExtQueries {
   }
 
   val dedupApplySql = {
-    val mins = (0 until 8).map { i =>
-      val h = if (i < 4) "md5(x)" else "md5('1|' || x)"
-      s"  list_min(list_transform(sh, x -> substr($h, ${(i % 4) * 8 + 1}, 8))) AS m$i"
-    }.mkString(",\n")
-    val bands = (0 until 4).map(b => s"md5(m${2 * b} || '|' || m${2 * b + 1})")
-      .mkString("[", ", ", "]")
     s"""WITH RECURSIVE aug AS (
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
@@ -445,9 +500,9 @@ object ExtQueries {
        |t AS (SELECT doc_id, $toksSql AS toks FROM aug),
        |s AS (SELECT doc_id, $shinglesSql AS sh FROM t),
        |m AS (SELECT doc_id,
-       |$mins
+       |$nearDupLanesSql
        |FROM s),
-       |b AS (SELECT doc_id, unnest($bands) AS band FROM m),
+       |b AS (SELECT doc_id, unnest($nearDupBandsSql) AS band FROM m),
        |cand AS (SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
        |  FROM b l JOIN b r USING (band) WHERE l.doc_id < r.doc_id),
        |d AS (SELECT doc_id, list_distinct(sh) AS dsh FROM s),
@@ -486,27 +541,21 @@ object ExtQueries {
   }
 
   val dedupIncrementalSql = {
-    val mins = (0 until 8).map { i =>
-      val h = if (i < 4) "md5(x)" else "md5('1|' || x)"
-      s"  list_min(list_transform(sh, x -> substr($h, ${(i % 4) * 8 + 1}, 8))) AS m$i"
-    }.mkString(",\n")
-    val bands = (0 until 4).map(b => s"md5(m${2 * b} || '|' || m${2 * b + 1})")
-      .mkString("[", ", ", "]")
     s"""WITH inc AS (
        |  SELECT doc_id + 200000 AS doc_id, text || ' qqq qqq qqq' AS text
        |  FROM documents WHERE doc_id < 10),
        |tn AS (SELECT doc_id, $toksSql AS toks FROM inc),
        |sn AS (SELECT doc_id, $shinglesSql AS sh FROM tn),
        |mn AS (SELECT doc_id,
-       |$mins
+       |$nearDupLanesSql
        |FROM sn),
-       |bn AS (SELECT doc_id, unnest($bands) AS band FROM mn),
+       |bn AS (SELECT doc_id, unnest($nearDupBandsSql) AS band FROM mn),
        |tc AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |sc AS (SELECT doc_id, $shinglesSql AS sh FROM tc),
        |mc AS (SELECT doc_id,
-       |$mins
+       |$nearDupLanesSql
        |FROM sc),
-       |bc AS (SELECT doc_id, unnest($bands) AS band FROM mc),
+       |bc AS (SELECT doc_id, unnest($nearDupBandsSql) AS band FROM mc),
        |cand AS (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM bn a JOIN bc b USING (band) WHERE a.doc_id <> b.doc_id
@@ -657,35 +706,28 @@ object ExtQueries {
     * [[simIvf]]; nprobe = 2 so the probed cell union stays a proper
     * subset. Oracle: the centroid-literal SQL at nprobe = 2. */
   val simIvfPartitionedQ: Q = (s, dir) => {
-    val emb = embeddings(s, dir)
-    val cents = ivfCents(s, dir)
+    val ivf = ivfFamily(s, dir, nDirs = 16)
     val idir = scratchDir("ivfidx", dir)
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, idir)
-    val total = s.read.parquet(idir)
+    ivf.build(ivf.artifact, idir)
+    val total = PartitionedIndex.read(s, idir, Similarity.IvfIndex)
       .select(input_file_name()).distinct().count()
-    val cells = Similarity.probeCellSet(
-      emb.where(col("vec_id") < 10), "embedding", cents, nprobe = 2)
-    val touched = s.read.parquet(idir)
+    val probes = ivf.rows.where(col("vec_id") < 10)
+    val cells = Similarity.probeCellSet(probes, "embedding", ivfCents(s, dir),
+      nprobe = 2)
+    val touched = PartitionedIndex.read(s, idir, Similarity.IvfIndex, cells.toSet)
       .where(col("cell").isin(cells.toIndexedSeq.map(_.asInstanceOf[Any]): _*))
       .select(input_file_name()).distinct().count()
     require(touched < total,
       s"IVF partition pruning read $touched/$total index files — " +
         s"probed cells ${cells.mkString(",")} pruned nothing")
-    Similarity.ivfPartitionedTopK(idir,
-        emb.where(col("vec_id") < 10), "vec_id", "embedding", 5, cents,
-        nprobe = 2)
-      .orderBy("query_id", "rank")
+    ivf.serve(idir, probes).orderBy("query_id", "rank")
   }
 
-  /** The deterministic CDC change set `q_sim_ivf_update` applies to
-    * the embeddings corpus, mirrored verbatim in its oracle SQL. A
-    * FIXED small id set (not a modulus) keeps the change batch the
-    * same size at every SF — so some cells stay untouched and the
-    * byte-identity gate is never vacuous, at sf0.01 AND on the 10x
-    * replica: vec_id 37/74/111 deleted; 41/82 updated to the REVERSED
-    * vector (pure element reorder — bit-exact in both engines, and
-    * reversal moves the vector to a different cell so the old-cell
-    * rewrite path is exercised); vec_id < 3 re-inserted under
+  /** The embeddings after [[ivfUpdateChanges]], the [[fixedChanges]]
+    * set of `q_sim_ivf_update` and `q_stream_ivf_cdc`: 41/82 updated
+    * to the REVERSED vector (pure element reorder — bit-exact in both
+    * engines, and reversal moves the vector to a different cell so the
+    * old-cell rewrite path is exercised); vec_id < 3 re-inserted under
     * vec_id + 700000 with reversed vectors. */
   private val ivfUpdateCorpusSql =
     """SELECT vec_id,
@@ -696,144 +738,45 @@ object ExtQueries {
       |  SELECT vec_id + 700000, list_reverse(CAST(embedding AS DOUBLE[]))
       |  FROM embeddings WHERE vec_id < 3""".stripMargin
 
-  private def ivfUpdateChanges(emb: DataFrame): DataFrame = {
-    val del = emb.where(col("vec_id").isin(37L, 74L, 111L))
-      .select(col("vec_id"), col("embedding"),
-        lit(1L).as("seq"), lit("d").as("op"))
-    val upd = emb.where(col("vec_id").isin(41L, 82L))
-      .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
-        lit(1L).as("seq"), lit("u").as("op"))
-    val ins = emb.where(col("vec_id") < 3)
-      .select((col("vec_id") + 700000).as("vec_id"),
-        reverse(col("embedding")).as("embedding"),
-        lit(1L).as("seq"), lit("u").as("op"))
-    del.unionByName(upd).unionByName(ins)
-  }
+  private def ivfUpdateChanges(emb: DataFrame): DataFrame = fixedChanges(
+    _.select(col("vec_id"), reverse(col("embedding")).as("embedding")),
+    _.select((col("vec_id") + 700000).as("vec_id"),
+      reverse(col("embedding")).as("embedding")))(emb)
 
   /** Incremental IVF maintenance under CDC
-    * ([[Similarity.updateIvfIndex]]): build the partitioned index,
-    * apply the deterministic change set, then THROW unless (a) some
-    * cells were untouched (the gate must not be vacuous) and (b) every
-    * untouched cell's files are md5-identical before and after — the
-    * "only touched cells rewrite" contract, checked on bytes, not
-    * plans. Serving the updated layout must then hash-match the
-    * oracle, which computes IVF top-k over the CDC-applied corpus
-    * directly — i.e. the full-rebuild answer. */
-  val simIvfUpdateQ: Q = (s, dir) => {
-    val emb = embeddings(s, dir).select("vec_id", "embedding")
-    val cents = ivfCents(s, dir)
-    val idir = scratchDir("ivfupd", dir)
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, idir)
-    requireUntouchedDirsSame(idir, "cell", "IVF update", "cell", "cells") {
-      Similarity.updateIvfIndex(
-        idir, ivfUpdateChanges(emb), "vec_id", "embedding", cents).toSeq
+    * ([[Similarity.updateIvfIndex]]): [[ivfUpdateChanges]] applied in
+    * place to the 16-cell layout ([[indexScenario]], batch CDC), then
+    * the post-CDC vec_id < 10 served. The oracle computes IVF top-k
+    * over the CDC-applied corpus directly — the full-rebuild answer. */
+  val simIvfUpdateQ: Q = (s, dir) =>
+    indexScenario(s, dir, "ivfupd", ivfFamily(s, dir, nDirs = 16),
+        BatchCdc(ivfUpdateChanges)) { (_, post) =>
+      post.where(col("vec_id") < 10)
     }
-    val updated = graft.etl.Merge.applyCdc(emb, ivfUpdateChanges(emb), "vec_id")
-    Similarity.ivfPartitionedTopK(idir,
-        updated.where(col("vec_id") < 10), "vec_id", "embedding", 5, cents,
-        nprobe = 2)
-      .orderBy("query_id", "rank")
-  }
 
   /** STREAMING maintenance of the stored IVF layout
     * ([[graft.streaming.ScoreStream.ivfIndexMaintainSink]]) — the
-    * vector twin of q_stream_band_cdc/q_stream_hash_cdc, closing the
-    * maintenance-sink family across all three stored indexes. The
-    * corpus builds the partitioned index once; the SAME deterministic
-    * change set as q_sim_ivf_update (disjoint id classes — any batch
-    * split yields the same final state) streams in three files, one
-    * per trigger, each micro-batch applying via
-    * [[Similarity.updateIvfIndex]]'s cell-local rewrite under
-    * centroids read from the index's OWN layout marker. In-query
-    * gates: (a) ≥ 2 maintenance batches ran; (b) every batch's
-    * `_maint` record rewrote a strict SLICE of the 16 cells, never
-    * the layout; (c) the maintained layout is row-identical to a
-    * from-scratch build of the CDC-applied corpus; (d) serving
-    * ([[Similarity.ivfPartitionedTopK]]) from the maintained layout
-    * is the result — oracled by the same centroid-literal SQL over
-    * the CDC-applied corpus as the batch update query. */
-  val streamIvfCdcQ: Q = (s, dir) => withStreamParts(s) {
-    val base = scratchDir("sivfcdc", dir)
-    val emb = embeddings(s, dir).select("vec_id", "embedding")
-    val cents = ivfCents(s, dir)
-    val idir = s"$base/idx"
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, idir)
-    val changes = ivfUpdateChanges(emb)
-    changes.repartition(3).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(changes.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val q = graft.streaming.ScoreStream.ivfIndexMaintainSink(
-      stream, idir, "vec_id", "embedding", s"$base/out", s"$base/chk")
-    q.awaitTermination()
-    // gates (a)+(b): multiple triggers, each rewriting a strict slice
-    requireNarrowed(s, s"$base/out", "_maint", "maintenance micro-batches",
-        _ => strictSubsetOf(16)) { (_, touched, np) =>
-      s"rewrote $touched of $np cells — no narrowing"
+    * vector twin of q_stream_band_cdc/q_stream_hash_cdc: the change
+    * set, probes and oracle of q_sim_ivf_update, streamed (disjoint id
+    * classes, so any batch split yields the same final state); the
+    * sink assigns under the centroids of the index's OWN marker. */
+  val streamIvfCdcQ: Q = (s, dir) =>
+    indexScenario(s, dir, "sivfcdc", ivfFamily(s, dir, nDirs = 16),
+        StreamCdc(ivfUpdateChanges)) { (_, post) =>
+      post.where(col("vec_id") < 10)
     }
-    // gate (c): maintained layout == from-scratch rebuild of the
-    // CDC-applied corpus, row for row (distributed one-pass multiset
-    // diff — no collect, scale-safe). The rebuild rows are computed
-    // IN-FLIGHT by the same assigner a fresh writeIvfIndex writes
-    // (cell column included): the maintained ARTIFACT still reads
-    // from disk, so the gate checks it against pristine builder
-    // output instead of paying a full second layout write + read
-    // that asserted nothing extra about the artifact under test.
-    val updated = graft.etl.Merge.applyCdc(emb, changes, "vec_id")
-    val maintained = PartitionedIndex.read(s, idir, Similarity.IvfIndex)
-    val rebuilt = Similarity.assignCells(updated, "embedding", cents)
-      .select(maintained.columns.map(col).toIndexedSeq: _*)
-    requireSameRows(maintained, rebuilt,
-      "stream-maintained IVF layout diverged from a from-scratch " +
-        "rebuild of the CDC-applied corpus")
-    // gate (d) + result: serve from the maintained layout
-    Similarity.ivfPartitionedTopK(idir,
-        updated.where(col("vec_id") < 10), "vec_id", "embedding", 5,
-        cents, nprobe = 2)
-      .orderBy("query_id", "rank")
-  }
 
   /** Streaming ANN serving from the stored IVF layout
     * ([[graft.streaming.ScoreStream.indexedIvfGateSink]]) — the
-    * vector twin of q_stream_band_indexed/q_stream_hash_indexed,
-    * completing the indexed streaming-serving family across all
-    * three stored indexes. Query vectors stream in two files, one
-    * per trigger; each micro-batch collects its probe-cell union in
-    * foreachBatch and serves partition-pruned exact top-k within the
-    * probed cells under the index's OWN centroid marker. In-query
-    * gates: (a) ≥ 2 serving batches ran; (b) every batch's `_probe`
-    * record opened a strict SUBSET of the 16 cell dirs — the
-    * narrowing is per-trigger real, not planned; (c) the union of
-    * per-batch outputs is EXACTLY the one-shot batch
-    * [[Similarity.ivfPartitionedTopK]] over the same queries. Oracle:
-    * the centroid-literal IVF SQL at nprobe = 2. */
-  val streamIvfIndexedQ: Q = (s, dir) => withStreamParts(s) {
-    val base = scratchDir("sivfidx", dir)
-    val emb = embeddings(s, dir).select("vec_id", "embedding")
-    val cents = ivfCents(s, dir)
-    val idir = s"$base/idx"
-    Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents, idir)
-    val queries = emb.where(col("vec_id") < 10)
-    queries.repartition(2).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val q = graft.streaming.ScoreStream.indexedIvfGateSink(
-      stream, idir, "vec_id", "embedding", 5, s"$base/out", s"$base/chk",
-      nprobe = 2)
-    q.awaitTermination()
-    // gates (a)+(b): multiple triggers, each opening a strict subset
-    requireNarrowed(s, s"$base/out", "_probe", "serving micro-batches",
-        _ => strictSubsetOf(16)) { (_, probed, np) =>
-      s"probed $probed of $np cells — no narrowing"
+    * vector twin of q_stream_band_indexed/q_stream_hash_indexed: the
+    * query vectors vec_id < 10 streamed, served under the index's OWN
+    * centroid marker. Oracle: the centroid-literal IVF SQL at
+    * nprobe = 2. */
+  val streamIvfIndexedQ: Q = (s, dir) =>
+    indexScenario(s, dir, "sivfidx", ivfFamily(s, dir, nDirs = 16),
+        StreamServe) { (emb, _) =>
+      emb.where(col("vec_id") < 10)
     }
-    val served = s.read.parquet(s"$base/out")
-      .select("query_id", "neighbor_id", "cosine", "rank")
-    // gate (c): stream == one-shot batch serve, pinned in-query
-    val fresh = Similarity.ivfPartitionedTopK(idir, queries,
-      "vec_id", "embedding", 5, cents, nprobe = 2)
-    requireSameRows(served, fresh,
-      "streaming indexed IVF serving diverged from the batch serve")
-    served.orderBy("query_id", "rank")
-  }
 
   /** Waits for every future, then rethrows the first failure (in `fs`
     * order) with the other failures added as suppressed: when one
@@ -872,68 +815,40 @@ object ExtQueries {
   val streamAllIndexedQ: Q = (s, dir) => withStreamParts(s) {
     val base = scratchDir("sallidx", dir)
     val docs = documents(s, dir).select("doc_id", "text")
-    val emb = embeddings(s, dir).select("vec_id", "embedding")
-    // the three stored indexes, each with its own layout marker
-    val bdir = s"$base/bandidx"
-    val hdir = s"$base/hashidx"
+    val band = bandFamily(s, dir, nDirs = 256)
+    val hash = hashFamily(s, dir, nDirs = 256)
     // one shared id namespace: every index is keyed by the arrival
     // stream's id column (the serve functions resolve the index id
     // under the same name they probe with)
+    val ivf = ivfFamily(s, dir, nDirs = 16, id = "doc_id")
+    // the three stored indexes, each with its own layout marker
+    val bdir = s"$base/bandidx"
+    val hdir = s"$base/hashidx"
     val vdir = s"$base/ivfidx"
     // Build the three INDEPENDENT indexes concurrently (guide §2.6 —
     // actions are only sequential because driver code calls them
     // sequentially): same three writes, same bytes, same markers; a
     // small pool lets each file-count-bound write's straggler tail
     // backfill with the next build's tasks instead of idling the
-    // cores three times in turn. Each build pulls its own memoized
-    // ingest artifact (sign-once / decode-once / centroids), so the
-    // three ingest passes overlap too.
+    // cores three times in turn. The memoized ingest artifacts
+    // (sign-once / decode-once / centroids) are taken when the family
+    // records are made, before the pool starts.
     locally {
       import scala.concurrent.Future
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val builds = Seq(
-        Future {
-          // signatures from the shared memoized sign-once pass
-          Dedup.writeBandIndexFromSignatures(docSignatures(s, dir),
-            "doc_id", bdir, prefixChars = 2)
-        }(ec),
-        Future {
-          // ingest-time decode: exactly once (shared memoized corpus)
-          Dedup.writeHashIndex(baseImageHashes(s, dir), "doc_id",
-            "dhash", hdir, bands = 4, nPrefix = 256)
-        }(ec),
-        Future {
-          Similarity.writeIvfIndex(
-            emb.select(col("vec_id").as("doc_id"), col("embedding")),
-            "doc_id", "embedding", ivfCents(s, dir), vdir)
-        }(ec))
+        Future(band.build(band.artifact, bdir))(ec),
+        Future(hash.build(hash.artifact, hdir))(ec),
+        Future(ivf.build(ivf.artifact, vdir))(ec))
       try awaitAll(builds)
       finally { pool.shutdown(); () }
     }
-    val refHashes = baseImageHashes(s, dir)
-    val cents = ivfCents(s, dir)
     // the mixed arrival feed: the three single-family planted sets
-    val bandArr = docs.where(col("doc_id") < 10)
-      .select((col("doc_id") + 893000).as("doc_id"), col("text"))
-      .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-        .select((col("doc_id") + 896000).as("doc_id"),
-          concat(col("text"), lit(" extra appended words here")).as("text")))
-      .unionByName(docs.where(col("doc_id") >= 15 && col("doc_id") < 20)
-        .select((col("doc_id") + 899000).as("doc_id"),
-          reverse(col("text")).as("text")))
-    val hashArr = Multimodal.ImageFixture.withPayloads(
-      docs.where(col("doc_id") < 10)
-        .select((col("doc_id") + 940000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert"))
-      .unionByName(docs.where(col("doc_id") < 5)
-        .select((col("doc_id") + 950000L).as("doc_id"),
-          (col("doc_id") + 950000L).as("__seed"),
-          lit(false).as("__pert"))),
-      "__seed", "__pert").select("doc_id", "payload")
-    val ivfArr = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("doc_id"), col("embedding"))
-    val embType = emb.schema("embedding").dataType
+    val bandArr = plantedTexts(docs, 893000, 896000, 899000)
+    val hashArr = plantedImages(docs, 940000L, 950000L)
+    val ivfArr = ivf.rows.where(col("doc_id") < 10)
+    val embType = ivfArr.schema("embedding").dataType
     val binType = org.apache.spark.sql.types.BinaryType
     val arrivals = bandArr
       .select(col("doc_id"), col("text"),
@@ -945,13 +860,10 @@ object ExtQueries {
       .unionByName(ivfArr.select(col("doc_id"),
         lit(null).cast("string").as("text"),
         lit(null).cast(binType).as("payload"), col("embedding")))
-    arrivals.repartition(3).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(s.read.parquet(s"$base/src").schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val q = graft.streaming.ScoreStream.indexedAllGateSink(
-      stream, bdir, hdir, vdir, "doc_id", "text", "payload", "embedding",
-      k = 5, nprobe = 2, s"$base/out", s"$base/chk")
-    q.awaitTermination()
+    streamFiles(s, base, arrivals, parts = 3, perTrigger = true) {
+      graft.streaming.ScoreStream.indexedAllGateSink(_, bdir, hdir, vdir,
+        "doc_id", "text", "payload", "embedding", k = 5, nprobe = 2, _, _)
+    }
     // gates (a)+(b)+(c): multiple triggers; every family narrowed in
     // every batch it appeared in; all three families were served
     val seen = requireNarrowed(s, s"$base/out", "_probe",
@@ -964,17 +876,13 @@ object ExtQueries {
     val served = s.read.parquet(s"$base/out")
       .select("family", "doc_id", "neighbor_id", "metric")
     // gate (d): streamed == the three one-shot batch serves
-    val freshBand = Dedup.minhashMatchesWithRefSignatures(bandArr,
-      docRefSignatures(s, dir), "doc_id", "text")
+    val freshBand = band.fresh(bandArr, band.artifact)
       .select(lit("band").as("family"), col("doc_id"), col("neighbor_id"),
         col("est_jaccard").cast("double").as("metric"))
-    val arrH = Multimodal.imageDHashes(hashArr, "payload")
-      .select("doc_id", "dhash")
-    val freshHash = Dedup.hashMatches(arrH, refHashes, "doc_id", "dhash")
+    val freshHash = hash.fresh(hash.probe(hashArr), hash.artifact)
       .select(lit("hash").as("family"), col("doc_id"), col("neighbor_id"),
         col("hamming").cast("double").as("metric"))
-    val freshIvf = Similarity.ivfPartitionedTopK(vdir, ivfArr,
-        "doc_id", "embedding", 5, cents, nprobe = 2)
+    val freshIvf = ivf.serve(vdir, ivfArr)
       .select(lit("ivf").as("family"), col("query_id").as("doc_id"),
         col("neighbor_id"), col("cosine").as("metric"))
     val fresh = freshBand.unionByName(freshHash).unionByName(freshIvf)
@@ -2915,14 +2823,9 @@ object ExtQueries {
     * within 3 bits (both engines see the identical set). */
   val dedupImageQ: Q = (s, dir) => {
     val ids = documents(s, dir).select(col("doc_id"))
-    val base = ids.select(col("doc_id"), col("doc_id").as("__seed"),
-      lit(false).as("__pert"))
-    val variants = ids.where(col("doc_id") < 10)
-      .select((col("doc_id") + 950000).as("doc_id"),
-        col("doc_id").as("__seed"), lit(true).as("__pert"))
-    val corpus = Multimodal.ImageFixture.withPayloads(
-      base.unionAll(variants), "__seed", "__pert")
-      .select("doc_id", "payload")
+    val corpus = imagesOf(ids, 0L, 0L, pert = false)
+      .unionAll(imagesOf(ids.where(col("doc_id") < 10), 950000L, 0L,
+        pert = true))
     Dedup.imageNearDups(corpus, "doc_id", "payload",
         maxHamming = 3, bands = 4)
       .orderBy("id_a", "id_b")
@@ -2978,13 +2881,10 @@ object ExtQueries {
     * and popcount in SQL. */
   val dedupAudioQ: Q = (s, dir) => {
     val ids = documents(s, dir).select(col("doc_id"))
-    val base = ids.select(col("doc_id"), col("doc_id").as("__seed"),
-      lit(false).as("__pert"))
-    val variants = ids.where(col("doc_id") < 10)
-      .select((col("doc_id") + 960000).as("doc_id"),
-        col("doc_id").as("__seed"), lit(true).as("__pert"))
+    val variants = seeds(ids.where(col("doc_id") < 10), 960000L, 0L,
+      pert = true)
     val corpus = Multimodal.AudioFixture.withWavPayloads(
-      base.unionAll(variants), "__seed", "__pert")
+      seeds(ids, 0L, 0L, pert = false).unionAll(variants), "__seed", "__pert")
       .select("doc_id", "payload")
     Dedup.audioNearDups(corpus, "doc_id", "payload",
         maxHamming = 3, bands = 4)
@@ -3216,6 +3116,63 @@ object ExtQueries {
     f.getAbsolutePath
   }
 
+  /** The events fixture staged as a file-stream source dir: the file
+    * source wants a DIRECTORY of files, so a fresh `tag` scratch dir
+    * links the fixture by symlink (no data copy). */
+  private def eventsSource(dir: String, tag: String): String = {
+    val src = scratchDir(tag, dir)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
+    java.nio.file.Files.createSymbolicLink(
+      java.nio.file.Paths.get(src, "events.parquet"),
+      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    src
+  }
+
+  /** Runs the streaming `df` AvailableNow in output `mode` into a fresh
+    * memory table, checkpointed under a fresh `tag` scratch dir, and
+    * returns the table. */
+  private def runToMemory(s: SparkSession, dir: String, tag: String,
+                          mode: String)(
+      df: org.apache.spark.sql.Dataset[_]): DataFrame = {
+    val sink = s"${tag}_${sinkSeq.incrementAndGet()}"
+    df.writeStream.outputMode(mode).format("memory").queryName(sink)
+      .option("checkpointLocation", scratchDir(tag, dir))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    s.table(sink)
+  }
+
+  /** Runs `body` on the RocksDB state store, restoring the session's
+    * provider after. */
+  private def withRocksDb[A](s: SparkSession)(body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(p) => s.conf.set(key, p)
+      case None => s.conf.unset(key)
+    }
+  }
+
+  /** Stages `df` as the parquet files of `$base/src`, streams them
+    * through `sink(stream, out, chk)` into `$base/out` and waits for
+    * the run to end. `parts` pins the source file count: the fixture
+    * codecs upstream would otherwise fan a few-row arrival frame into
+    * ~32 near-empty files (a listing and an open per trigger for
+    * nothing). `perTrigger` streams one file per trigger, so the run
+    * spans several micro-batches. */
+  private def streamFiles(s: SparkSession, base: String, df: DataFrame,
+                          parts: Int = 0, perTrigger: Boolean = false)(
+      sink: (DataFrame, String, String) => StreamingQuery): Unit = {
+    (if (parts > 0) df.repartition(parts) else df)
+      .write.mode("overwrite").parquet(s"$base/src")
+    val reader = s.readStream.schema(df.schema)
+    val stream = (if (perTrigger) reader.option("maxFilesPerTrigger", 1)
+      else reader).parquet(s"$base/src")
+    sink(stream, s"$base/out", s"$base/chk").awaitTermination()
+  }
+
   /** §2.11+: the SAME gap sessionization through the Spark-4
     * `transformWithState` surface — EVENT-TIME timers, RocksDB state
     * store — executed as a REAL streaming query (AvailableNow over the
@@ -3231,34 +3188,13 @@ object ExtQueries {
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$dir/events.parquet")
-    // the file stream source wants a DIRECTORY of files — stage the
-    // fixture into one via symlink (no data copy)
-    val src = scratchDir("st_src", dir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    java.nio.file.Files.createSymbolicLink(
-      java.nio.file.Paths.get(src, "events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
     val stream = Tables.normalizeTs(
-        s.readStream.schema(raw.schema).parquet(src))
+        s.readStream.schema(raw.schema).parquet(eventsSource(dir, "st_src")))
       .select(col("user_id"), col("ts"), col("event_type"))
       .as[graft.streaming.ScoreStream.Event]
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val sink = s"sessionize_timers_${sinkSeq.incrementAndGet()}"
-    try {
-      val q = graft.streaming.ScoreStream
-        .sessionizeWithTimers(stream, gapSec = 14400)
-        .writeStream.outputMode("append").format("memory").queryName(sink)
-        .option("checkpointLocation", scratchDir("st_chk", dir))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-    s.table(sink).orderBy("user_id", "n_events", "duration_sec")
+    withRocksDb(s)(runToMemory(s, dir, "st_chk", "append")(
+        graft.streaming.ScoreStream.sessionizeWithTimers(stream, gapSec = 14400)))
+      .orderBy("user_id", "n_events", "duration_sec")
   }
 
   val sessionizeTimersSql =
@@ -3325,32 +3261,14 @@ object ExtQueries {
     import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val src = scratchDir("tot_src", dir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    java.nio.file.Files.createSymbolicLink(
-      java.nio.file.Paths.get(src, "events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val stream = s.readStream.schema(raw.schema).parquet(src)
+    val stream = s.readStream.schema(raw.schema)
+      .parquet(eventsSource(dir, "tot_src"))
       .select(col("user_id"), col("value"))
       .as[graft.streaming.ScoreStream.ValueEvent]
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val sink = s"stream_totals_${sinkSeq.incrementAndGet()}"
-    try {
-      val q = graft.streaming.ScoreStream.runningTotals(stream)
-        .writeStream.outputMode("update").format("memory").queryName(sink)
-        .option("checkpointLocation", scratchDir("tot_chk", dir))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
-    s.table(sink)
+    withRocksDb(s)(runToMemory(s, dir, "tot_chk", "update")(
+        graft.streaming.ScoreStream.runningTotals(stream)))
       .withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
       .orderBy("user_id")
   }
@@ -3373,24 +3291,14 @@ object ExtQueries {
   val streamJoinOuterQ: Q = (s, dir) => withStreamParts(s) {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$dir/events.parquet")
-    val src = scratchDir("sjo_src", dir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    java.nio.file.Files.createSymbolicLink(
-      java.nio.file.Paths.get(src, "events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
+    val src = eventsSource(dir, "sjo_src")
     def side(t: String) = Tables.normalizeTs(
         s.readStream.schema(raw.schema).parquet(src))
       .where(col("event_type") === t)
     val joined = graft.streaming.ScoreStream.clickPurchaseAttributionOuter(
       side("click"), side("purchase"))
-    val sink = s"stream_join_outer_${sinkSeq.incrementAndGet()}"
-    val q = joined
-      .writeStream.outputMode("append").format("memory").queryName(sink)
-      .option("checkpointLocation", scratchDir("sjo_chk", dir))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy("click_id", "purchase_id")
+    runToMemory(s, dir, "sjo_chk", "append")(joined)
+      .orderBy("click_id", "purchase_id")
   }
 
   val streamJoinOuterSql =
@@ -3425,27 +3333,17 @@ object ExtQueries {
     // static dimension: one row per event type with derived attributes
     val dim = raw.select("event_type").distinct()
       .withColumn("category", substring(col("event_type"), 1, 1))
-    val src = scratchDir("enr_src", dir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    java.nio.file.Files.createSymbolicLink(
-      java.nio.file.Paths.get(src, "events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val stream = s.readStream.schema(raw.schema).parquet(src)
+    val stream = s.readStream.schema(raw.schema)
+      .parquet(eventsSource(dir, "enr_src"))
       .select("event_type", "value")
     val enriched = graft.streaming.ScoreStream.enrichWithDim(
       stream, dim, Seq("event_type"))
-    val sink = s"stream_enrich_${sinkSeq.incrementAndGet()}"
-    val q = enriched
-      .groupBy("category")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double")
-          .as("total_value"))
-      .writeStream.outputMode("complete").format("memory").queryName(sink)
-      .option("checkpointLocation", scratchDir("enr_chk", dir))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(sink).orderBy("category")
+    runToMemory(s, dir, "enr_chk", "complete")(enriched
+        .groupBy("category")
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(DecimalType(18, 2))).cast("double")
+            .as("total_value")))
+      .orderBy("category")
   }
 
   val streamEnrichSql =
@@ -5415,13 +5313,11 @@ object ExtQueries {
       .unionByName(emb.where(col("vec_id") >= 10 && col("vec_id") < 20)
         .select((col("vec_id") + 800000).as("vec_id"),
           reverse(col("embedding")).as("embedding")))
-    arrivals.write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(arrivals.schema).parquet(s"$base/src")
-    val matches = Dedup.semanticMatches(stream, emb, "vec_id", "embedding",
-      ivfCents(s, dir), threshold = 0.99)
-    val q = graft.streaming.ScoreStream.idempotentParquetSink(
-      matches, s"$base/out", s"$base/chk")
-    q.awaitTermination()
+    streamFiles(s, base, arrivals) { (stream, out, chk) =>
+      graft.streaming.ScoreStream.idempotentParquetSink(
+        Dedup.semanticMatches(stream, emb, "vec_id", "embedding",
+          ivfCents(s, dir), threshold = 0.99), out, chk)
+    }
     s.read.parquet(s"$base/out")
       .select("vec_id", "neighbor_id", "cosine")
       .orderBy("vec_id", "neighbor_id")
@@ -5441,21 +5337,13 @@ object ExtQueries {
   val streamNeardupQ: Q = (s, dir) => withStreamParts(s) {
     val base = scratchDir("sndp", dir)
     val docs = documents(s, dir).select("doc_id", "text")
-    val arrivals = docs.where(col("doc_id") < 10)
-      .select((col("doc_id") + 700000).as("doc_id"), col("text"))
-      .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-        .select((col("doc_id") + 710000).as("doc_id"),
-          concat(col("text"), lit(" extra appended words here")).as("text")))
-      .unionByName(docs.where(col("doc_id") >= 15 && col("doc_id") < 20)
-        .select((col("doc_id") + 720000).as("doc_id"),
-          reverse(col("text")).as("text")))
-    arrivals.write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(arrivals.schema).parquet(s"$base/src")
-    val matches = Dedup.minhashMatchesWithRefSignatures(stream,
-      docRefSignatures(s, dir), "doc_id", "text")
-    val q = graft.streaming.ScoreStream.idempotentParquetSink(
-      matches, s"$base/out", s"$base/chk")
-    q.awaitTermination()
+    val arrivals = plantedTexts(docs, 700000, 710000, 720000)
+    streamFiles(s, base, arrivals) { (stream, out, chk) =>
+      graft.streaming.ScoreStream.idempotentParquetSink(
+        Dedup.minhashMatchesWithRefSignatures(stream,
+          docSignatures(s, dir).withColumnRenamed("doc_id", "neighbor_id"),
+          "doc_id", "text"), out, chk)
+    }
     s.read.parquet(s"$base/out")
       .select("doc_id", "neighbor_id", "est_jaccard")
       .orderBy("doc_id", "neighbor_id")
@@ -5539,77 +5427,241 @@ object ExtQueries {
   /** [[streamNeardupQ]]'s oracle: [[minhashPairsSql]] over the
     * planted arrivals against the whole corpus. */
   val streamNeardupSql = minhashPairsSql(
-    """WITH arr0 AS (
-      |  SELECT doc_id + 700000 AS id, text FROM documents WHERE doc_id < 10
-      |  UNION ALL
-      |  SELECT doc_id + 710000, text || ' extra appended words here'
-      |  FROM documents WHERE doc_id >= 10 AND doc_id < 15
-      |  UNION ALL
-      |  SELECT doc_id + 720000, reverse(text)
-      |  FROM documents WHERE doc_id >= 15 AND doc_id < 20)""".stripMargin,
-    "documents")
+    plantedTextsSql(700000, 710000, 720000), "documents")
 
-  private def bandUpdateChanges(docs: DataFrame): DataFrame = {
-    val del = docs.where(col("doc_id").isin(37L, 74L, 111L))
-      .select(col("doc_id"), col("text"),
-        lit(1L).as("seq"), lit("d").as("op"))
-    val upd = docs.where(col("doc_id").isin(41L, 82L))
-      .select(col("doc_id"),
-        concat(col("text"), lit(" revised edition")).as("text"),
-        lit(1L).as("seq"), lit("u").as("op"))
-    val ins = docs.where(col("doc_id") < 3)
-      .select((col("doc_id") + 840000).as("doc_id"),
-        concat(col("text"), lit(" brand new page")).as("text"),
-        lit(1L).as("seq"), lit("u").as("op"))
-    del.unionByName(upd).unionByName(ins)
+  // ---- the stored-index scenario: the nine index queries (band, hash
+  // and IVF; batch CDC, streamed CDC and streamed serve) run one flow
+  // and supply only their data
+
+  /** One stored-index family as [[indexScenario]] drives it. `rows` is
+    * the base corpus the change and probe sets are written over (for
+    * images, the document ids whose seeds the fixture draws);
+    * `artifact` the shared base artifact (signatures, decoded hashes,
+    * the vectors) that `build` writes the `nDirs`-dir layout from.
+    * `derive` turns upsert change rows into artifact rows (sign,
+    * decode, pass through) and `rebuild` artifact rows into index rows
+    * (home column included), as a fresh build would. `probe` turns a
+    * probe set into what `serve` (from the layout) and `fresh` (over an
+    * artifact, no index) take. `update`, `maintainSink` and `gateSink`
+    * are the family's batch update, streamed maintain and streamed
+    * serve; `limits` bounds a batch's reach ([[requireNarrowed]]) and
+    * `order` sorts the result. */
+  private final case class IndexFamily(
+      index: PartitionedIndex.Family[_], nDirs: Int, idCol: String,
+      limits: Long => (Long, Long), order: Seq[String],
+      rows: DataFrame, artifact: DataFrame,
+      build: (DataFrame, String) => Unit,
+      derive: DataFrame => DataFrame,
+      rebuild: DataFrame => DataFrame,
+      probe: DataFrame => DataFrame,
+      serve: (String, DataFrame) => DataFrame,
+      fresh: (DataFrame, DataFrame) => DataFrame,
+      update: (String, DataFrame) => Seq[Any],
+      maintainSink: (DataFrame, String, String, String) => StreamingQuery,
+      gateSink: (DataFrame, String, String, String) => StreamingQuery)
+
+  /** The MinHash band family over [[docSignatures]] (4 hashes, 2
+    * bands; `nDirs` = 16^prefixChars hex prefixes). */
+  private def bandFamily(s: SparkSession, dir: String, nDirs: Int): IndexFamily = {
+    val prefixChars = Integer.numberOfTrailingZeros(nDirs) / 4
+    require(1L << (4 * prefixChars) == nDirs, s"$nDirs is not a power of 16")
+    IndexFamily(Dedup.BandIndex, nDirs, "doc_id", quarterOf,
+      order = Seq("doc_id", "neighbor_id"),
+      rows = documents(s, dir).select("doc_id", "text"),
+      artifact = docSignatures(s, dir),
+      build = Dedup.writeBandIndexFromSignatures(_, "doc_id", _,
+        prefixChars = prefixChars),
+      derive = Dedup.minhashSignatures(_, "text", "doc_id", 4),
+      rebuild = Dedup.bandIndexRowsFromSignatures(_, "doc_id", 4, 2,
+        prefixChars),
+      probe = identity,
+      serve = Dedup.minhashMatchesIndexed(_, _, "doc_id", "text"),
+      fresh = (arr, sigs) => Dedup.minhashMatchesWithRefSignatures(arr,
+        sigs.withColumnRenamed("doc_id", "neighbor_id"), "doc_id", "text"),
+      update = Dedup.updateBandIndex(_, _, "text", "doc_id").toSeq,
+      maintainSink = ScoreStream.bandIndexMaintainSink(_, _, "text",
+        "doc_id", _, _),
+      gateSink = ScoreStream.indexedBandGateSink(_, _, "doc_id", "text",
+        _, _))
   }
+
+  /** The perceptual-hash family over [[baseImageHashes]] (4 bands,
+    * `nDirs` int prefixes). Change and probe rows carry fixture PNG
+    * payloads ([[imagesOf]]; a delete's is empty), decoded once. */
+  private def hashFamily(s: SparkSession, dir: String, nDirs: Int): IndexFamily =
+    IndexFamily(Dedup.HashIndex, nDirs, "doc_id", quarterOf,
+      order = Seq("doc_id", "neighbor_id"),
+      rows = documents(s, dir).select("doc_id"),
+      artifact = baseImageHashes(s, dir),
+      build = Dedup.writeHashIndex(_, "doc_id", "dhash", _, nPrefix = nDirs),
+      derive = imageHashes,
+      rebuild = Dedup.hashIndexRows(_, "doc_id", "dhash", 4, nDirs),
+      probe = imageHashes(_).localCheckpoint(), // served and fresh read it
+      serve = Dedup.hashMatchesIndexed(_, _, "doc_id", "dhash"),
+      fresh = Dedup.hashMatches(_, _, "doc_id", "dhash"),
+      update = (idir, changes) => Dedup.updateHashIndex(idir,
+        Multimodal.imageDHashes(changes, "payload").drop("payload"),
+        "doc_id", "dhash").toSeq,
+      maintainSink = ScoreStream.hashIndexMaintainSink(_, _, "doc_id",
+        "payload", _, _),
+      gateSink = (stream, idir, out, chk) => ScoreStream.indexedHashGateSink(
+        imageHashes(stream), idir, "doc_id", "dhash", out, chk))
+
+  /** The IVF family over the embeddings and the shared [[ivfCents]]
+    * (`nDirs` cells; top-5 at nprobe = 2), the vector id named `id`.
+    * The vectors are their own artifact. */
+  private def ivfFamily(s: SparkSession, dir: String, nDirs: Int,
+                        id: String = "vec_id"): IndexFamily = {
+    val cents = ivfCents(s, dir)
+    require(cents.length == nDirs, s"${cents.length} centroids, not $nDirs")
+    val emb = embeddings(s, dir).select(col("vec_id").as(id), col("embedding"))
+    IndexFamily(Similarity.IvfIndex, nDirs, id, strictSubsetOf,
+      order = Seq("query_id", "rank"), rows = emb, artifact = emb,
+      build = Similarity.writeIvfIndex(_, id, "embedding", cents, _),
+      derive = _.select(id, "embedding"),
+      rebuild = Similarity.assignCells(_, "embedding", cents),
+      probe = identity,
+      serve = Similarity.ivfPartitionedTopK(_, _, id, "embedding", 5,
+        cents, nprobe = 2),
+      fresh = Similarity.ivfTopKWith(_, _, id, "embedding", 5, cents,
+        nprobe = 2),
+      update = Similarity.updateIvfIndex(_, _, id, "embedding",
+        cents).toSeq,
+      maintainSink = ScoreStream.ivfIndexMaintainSink(_, _, id,
+        "embedding", _, _),
+      gateSink = ScoreStream.indexedIvfGateSink(_, _, id, "embedding",
+        5, _, _, nprobe = 2))
+  }
+
+  /** How [[indexScenario]] changes or serves the layout: a change set
+    * (`(id, payload, seq, op)` rows written over the family's `rows`)
+    * applied in one `update*Index` call or streamed through the
+    * maintain sink, or the probe set streamed through the serve sink. */
+  private sealed trait IndexMode
+  private final case class BatchCdc(changes: DataFrame => DataFrame) extends IndexMode
+  private final case class StreamCdc(changes: DataFrame => DataFrame) extends IndexMode
+  private case object StreamServe extends IndexMode
+
+  /** The one flow of the nine stored-index queries, an index kept
+    * current from a change log (the object of EDBT'20's incremental
+    * top-k). It builds `fam`'s layout from the base artifact under a
+    * fresh `tag` scratch dir, then by `mode`:
+    *  - [[BatchCdc]]: one `update*Index` call, gated by
+    *    [[requireUntouchedDirsSame]] (some dirs untouched, and those
+    *    md5-identical before and after);
+    *  - [[StreamCdc]]: the change set in three files streamed one per
+    *    trigger through the maintain sink, gated by [[requireNarrowed]]
+    *    on the `_maint` log (≥ 2 batches, each a slice of the layout);
+    *  - [[StreamServe]]: the probe set streamed the same way through the
+    *    serve sink, gated on the `_probe` log, then served (the union
+    *    of the batch outputs) == fresh over the base artifact.
+    * A CDC mode then takes the post-CDC corpus once: rows by
+    * `Merge.applyCdc`, the artifact as the base artifact minus the
+    * changed ids plus `derive` over the latest upserts (so only the
+    * changed rows sign or decode). Two [[requireSameRows]] gates
+    * follow: the maintained layout (a pinned `PartitionedIndex.read`)
+    * equals `rebuild` of the post artifact, and the layout's serve of
+    * `probes(rows, postRows)` equals `fresh` over the post artifact.
+    * The serve is the result, sorted by `fam.order`. */
+  private def indexScenario(s: SparkSession, dir: String, tag: String,
+                            fam: IndexFamily, mode: IndexMode)(
+      probes: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val base = scratchDir(tag, dir)
+    val idir = s"$base/idx"
+    val dirs = s"${fam.index.partCol} dirs"
+    fam.build(fam.artifact, idir)
+    def streamed(df: DataFrame, sink: (DataFrame, String, String, String) =>
+        StreamingQuery, kind: String, batches: String, verb: String): Unit = {
+      streamFiles(s, base, df, parts = 3, perTrigger = true)(sink(_, idir, _, _))
+      requireNarrowed(s, s"$base/out", kind, s"$batches micro-batches",
+          _ => fam.limits(fam.nDirs)) { (_, n, total) =>
+        s"$verb $n of $total $dirs — no narrowing"
+      }
+    }
+    def afterCdc(changes: DataFrame): DataFrame = {
+      val latest = graft.etl.Merge.latestChanges(changes, fam.idCol, "seq")
+      val postArtifact = fam.artifact
+        .join(broadcast(latest.select(fam.idCol)), Seq(fam.idCol), "left_anti")
+        .unionByName(fam.derive(latest.where(col("op") =!= lit("d"))))
+        .localCheckpoint() // read by the rebuild and the fresh gate
+      val maintained = PartitionedIndex.read(s, idir, fam.index)
+      requireSameRows(maintained, fam.rebuild(postArtifact)
+          .select(maintained.columns.toIndexedSeq.map(col): _*),
+        s"maintained ${fam.index.name} index diverged from a from-scratch " +
+          "rebuild of the post-CDC corpus")
+      val arrivals = fam.probe(probes(fam.rows,
+        graft.etl.Merge.applyCdc(fam.rows, changes, fam.idCol)))
+      val served = fam.serve(idir, arrivals)
+      requireSameRows(served, fam.fresh(arrivals, postArtifact),
+        s"serving from the maintained ${fam.index.name} index diverged " +
+          "from a fresh serve over the post-CDC corpus")
+      served.orderBy(fam.order.map(col): _*)
+    }
+    mode match {
+      case BatchCdc(changesOf) =>
+        val changes = changesOf(fam.rows)
+        requireUntouchedDirsSame(idir, fam.index.partCol,
+            s"${fam.index.name} update", s"${fam.index.partCol} dir", dirs) {
+          fam.update(idir, changes)
+        }
+        afterCdc(changes)
+      case StreamCdc(changesOf) => withStreamParts(s) {
+        val changes = changesOf(fam.rows)
+        streamed(changes, fam.maintainSink, "_maint", "maintenance", "rewrote")
+        afterCdc(changes)
+      }
+      case StreamServe => withStreamParts(s) {
+        val arrivals = probes(fam.rows, fam.rows)
+        streamed(arrivals, fam.gateSink, "_probe", "serving", "probed")
+        val fresh = fam.fresh(fam.probe(arrivals), fam.artifact)
+        val served = s.read.parquet(s"$base/out")
+          .select(fresh.columns.toIndexedSeq.map(col): _*)
+        requireSameRows(served, fresh,
+          s"streamed ${fam.index.name} serve diverged from the batch serve")
+        served.orderBy(fam.order.map(col): _*)
+      }
+    }
+  }
+
+  /** The change set of the three batch-CDC queries, mirrored in their
+    * oracles, over `rows` keyed by their first column: ids 37/74/111
+    * deleted, 41/82 updated to `upd` of their rows, ids < 3 inserted
+    * as `ins` of their rows (at a fresh id), all at seq 1. A FIXED
+    * small id set (not a modulus) keeps the batch the same size at
+    * every SF, so some dirs stay untouched and the byte-identity gate
+    * is never vacuous, at sf0.01 AND on the 10x replica. A delete
+    * carries its row as it is, or no payload where `rows` has none. */
+  private def fixedChanges(upd: DataFrame => DataFrame,
+                           ins: DataFrame => DataFrame)(rows: DataFrame): DataFrame = {
+    val id = col(rows.columns.head)
+    def change(df: DataFrame, op: String) =
+      df.select(col("*"), lit(1L).as("seq"), lit(op).as("op"))
+    change(rows.where(id.isin(37L, 74L, 111L)), "d")
+      .unionByName(change(upd(rows.where(id.isin(41L, 82L))), "u"),
+        allowMissingColumns = true)
+      .unionByName(change(ins(rows.where(id < 3)), "u"),
+        allowMissingColumns = true)
+  }
+
+  private def bandUpdateChanges(docs: DataFrame): DataFrame = fixedChanges(
+    _.select(col("doc_id"),
+      concat(col("text"), lit(" revised edition")).as("text")),
+    _.select((col("doc_id") + 840000).as("doc_id"),
+      concat(col("text"), lit(" brand new page")).as("text")))(docs)
 
   /** Incremental MinHash band-index maintenance under CDC
-    * ([[Dedup.writeBandIndex]]/[[Dedup.updateBandIndex]] — the text
-    * twin of q_sim_ivf_update): build the index, apply a
-    * delete/update/insert batch IN PLACE, then gate (a) untouched
-    * prefix dirs byte-identical (md5 per file), (b) the updated index
-    * serves EXACTLY what a from-scratch [[Dedup.minhashMatches]] over
-    * the post-CDC corpus computes. Output: matches of planted exact
+    * ([[Dedup.updateBandIndex]] — the text twin of q_sim_ivf_update):
+    * [[bandUpdateChanges]] applied IN PLACE to a 16-prefix layout
+    * ([[indexScenario]], batch CDC). Output: matches of planted exact
     * copies (originals, updated docs, inserts) against the updated
     * index, oracled statically over the post-CDC corpus. */
-  val dedupIndexUpdateQ: Q = (s, dir) => {
-    val docs = documents(s, dir).select("doc_id", "text")
-    val idir = scratchDir("bandidx", dir)
-    // signatures from the shared memoized sign-once pass
-    Dedup.writeBandIndexFromSignatures(docSignatures(s, dir), "doc_id", idir)
-    requireUntouchedDirsSame(idir, "pfx", "band update", "prefix",
-        "prefixes") {
-      Dedup.updateBandIndex(idir, bandUpdateChanges(docs), "text", "doc_id")
-        .toSeq
+  val dedupIndexUpdateQ: Q = (s, dir) =>
+    indexScenario(s, dir, "bandidx", bandFamily(s, dir, nDirs = 16),
+        BatchCdc(bandUpdateChanges)) { (_, post) =>
+      post.where(col("doc_id").isin(0L, 1L, 2L, 3L, 4L, 41L, 82L,
+          840000L, 840001L, 840002L))
+        .select((col("doc_id") + 850000).as("doc_id"), col("text"))
     }
-    val post = graft.etl.Merge.applyCdc(docs, bandUpdateChanges(docs),
-      "doc_id")
-    val probeIds = Seq(0L, 1L, 2L, 3L, 4L, 41L, 82L,
-      840000L, 840001L, 840002L)
-    val arrivals = post.where(col("doc_id").isin(probeIds: _*))
-      .select((col("doc_id") + 850000).as("doc_id"), col("text"))
-    val served = Dedup.minhashMatchesIndexed(idir, arrivals,
-      "doc_id", "text")
-    // The fresh-gate reference signatures COMPOSE the same way the
-    // CDC applied: sig(docs minus touched ids) ⊎ sig(upserted rows)
-    // is sig(applyCdc(docs, changes)) as a multiset — signing is
-    // per-row deterministic, and the semi/anti joins mirror
-    // applyCdc's id semantics at any scale. Only the ~5 upserted
-    // rows sign fresh instead of re-shingling the whole corpus.
-    val changeIds = bandUpdateChanges(docs).select("doc_id").distinct()
-    val postRefSigs = docSignatures(s, dir)
-      .join(broadcast(changeIds), Seq("doc_id"), "left_anti")
-      .unionByName(Dedup.minhashSignatures(
-        post.join(broadcast(changeIds), Seq("doc_id"), "left_semi"),
-        "text", "doc_id", 4))
-      .withColumnRenamed("doc_id", "neighbor_id")
-    val fresh = Dedup.minhashMatchesWithRefSignatures(arrivals,
-      postRefSigs, "doc_id", "text")
-    requireSameRows(served, fresh,
-      "updated index diverged from a from-scratch rebuild")
-    served.orderBy("doc_id", "neighbor_id")
-  }
 
   val dedupIndexUpdateSql = minhashPairsSql(
     """WITH post AS (
@@ -5677,72 +5729,28 @@ object ExtQueries {
        |ORDER BY doc_id, neighbor_id""".stripMargin
 
   /** Stored PERCEPTUAL hash index under CDC
-    * ([[Dedup.writeHashIndex]]/[[Dedup.updateHashIndex]]/
-    * [[Dedup.hashMatchesIndexed]] — the media twin of
-    * q_dedup_index_update): every document becomes a real fixture PNG,
-    * decoded ONCE into 64-bit dHashes; the banded index materializes
-    * to parquet; a CDC batch (two re-encoded images whose hashes move
-    * ≤3 bits, three deletes, three brand-new images) rewrites ONLY its
-    * touched prefix dirs — decode of the history never re-runs. Gates:
-    * (a) untouched prefix dirs byte-identical (md5 per file), (b) the
-    * updated index serves EXACTLY what a from-scratch
-    * [[Dedup.hashMatches]] over the post-CDC hash corpus computes.
+    * ([[Dedup.updateHashIndex]] — the media twin of
+    * q_dedup_index_update): the [[fixedChanges]] batch (two re-encoded
+    * images whose hashes move ≤3 bits, three deletes, three brand-new
+    * images) rewrites ONLY its touched prefix dirs ([[indexScenario]],
+    * batch CDC). 64 prefix dirs: the batch's ~50 band rows must leave
+    * most dirs untouched or the byte-identity gate proves nothing.
     * Output: matches of perturbed probes (originals, updated docs, a
     * deleted doc, the inserts) against the updated index, oracled by
     * replaying the pixel formula, dHash packing, banding, and popcount
     * over the post-CDC corpus in SQL. */
-  val dedupHashIndexQ: Q = (s, dir) => {
-    val docs = documents(s, dir).select("doc_id")
-    def hashesOf(idSeedPert: DataFrame): DataFrame =
-      Multimodal.imageDHashes(
-        Multimodal.ImageFixture.withPayloads(idSeedPert, "__seed", "__pert")
-          .select("doc_id", "payload"), "payload")
-        .select("doc_id", "dhash")
-    // ingest-time decode: exactly once (shared memoized base corpus)
-    val baseHashes = baseImageHashes(s, dir)
-    val idir = scratchDir("hashidx", dir)
-    // 64 prefix dirs: the CDC batch's ~50 band rows must leave most
-    // dirs untouched or the byte-identity gate proves nothing
-    Dedup.writeHashIndex(baseHashes, "doc_id", "dhash", idir, nPrefix = 64)
-    val updHashes = hashesOf(docs.where(col("doc_id").isin(41L, 82L))
-      .select(col("doc_id"), col("doc_id").as("__seed"),
-        lit(true).as("__pert")))
-    val insHashes = hashesOf(s.range(3)
-      .select((col("id") + 860000L).as("doc_id"),
-        (col("id") + 860000L).as("__seed"), lit(false).as("__pert")))
-    val changes = docs.where(col("doc_id").isin(37L, 74L, 111L))
-      .select(col("doc_id"), lit(null).cast("long").as("dhash"),
-        lit(1L).as("seq"), lit("d").as("op"))
-      .unionByName(updHashes.select(col("doc_id"), col("dhash"),
-        lit(1L).as("seq"), lit("u").as("op")))
-      .unionByName(insHashes.select(col("doc_id"), col("dhash"),
-        lit(1L).as("seq"), lit("u").as("op")))
-      .localCheckpoint() // consumed by the update AND the CDC replay
-    requireUntouchedDirsSame(idir, "pfx", "hash index update", "prefix",
-        "prefixes") {
-      Dedup.updateHashIndex(idir, changes, "doc_id", "dhash").toSeq
+  val dedupHashIndexQ: Q = (s, dir) =>
+    indexScenario(s, dir, "hashidx", hashFamily(s, dir, nDirs = 64),
+        BatchCdc(fixedChanges(imagesOf(_, 0L, 0L, pert = true),
+          imagesOf(_, 860000L, 860000L, pert = false)))) { (docs, _) =>
+      imagesOf(docs.where(col("doc_id") < 5), 870000L, 0L, pert = true)
+        .unionByName(imagesOf(docs.where(col("doc_id").isin(41L, 82L)),
+          880000L, 0L, pert = false))
+        .unionByName(imagesOf(docs.where(col("doc_id") === 37L),
+          890000L, 0L, pert = true))
+        .unionByName(imagesOf(docs.where(col("doc_id") < 3),
+          895000L, 860000L, pert = true))
     }
-    val postHashes = graft.etl.Merge.applyCdc(baseHashes, changes, "doc_id")
-    val arrivals = hashesOf(
-      docs.where(col("doc_id") < 5)
-        .select((col("doc_id") + 870000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert"))
-      .unionByName(docs.where(col("doc_id").isin(41L, 82L))
-        .select((col("doc_id") + 880000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(false).as("__pert")))
-      .unionByName(docs.where(col("doc_id") === 37L)
-        .select((col("doc_id") + 890000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert")))
-      .unionByName(s.range(3)
-        .select((col("id") + 895000L).as("doc_id"),
-          (col("id") + 860000L).as("__seed"), lit(true).as("__pert"))))
-      .localCheckpoint() // probed twice: served AND rebuild gate
-    val served = Dedup.hashMatchesIndexed(idir, arrivals, "doc_id", "dhash")
-    val fresh = Dedup.hashMatches(arrivals, postHashes, "doc_id", "dhash")
-    requireSameRows(served, fresh,
-      "updated hash index diverged from a from-scratch rebuild")
-    served.orderBy("doc_id", "neighbor_id")
-  }
 
   val dedupHashIndexSql = bandedHammingSql(
     """WITH post AS (
@@ -5783,285 +5791,84 @@ object ExtQueries {
     val docs = documents(s, dir).select("doc_id")
     // ingest-time decode: exactly once (shared memoized base corpus)
     val refHashes = baseImageHashes(s, dir)
-    val arrivals = Multimodal.ImageFixture.withPayloads(
-      docs.where(col("doc_id") < 10)
-        .select((col("doc_id") + 970000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert"))
-      .unionByName(docs.where(col("doc_id") < 5)
-        .select((col("doc_id") + 980000L).as("doc_id"),
-          (col("doc_id") + 980000L).as("__seed"),
-          lit(false).as("__pert"))),
-      "__seed", "__pert").select("doc_id", "payload")
-    // pin the stream-source file count: the fixture codec spread
-    // upstream would otherwise fan this 15-row arrival frame into
-    // ~32 near-empty source files (listing + per-file open per
-    // trigger for nothing)
-    arrivals.repartition(2).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(arrivals.schema).parquet(s"$base/src")
-    val streamHashes = Multimodal.imageDHashes(stream, "payload")
-      .select("doc_id", "dhash")
-    val matches = Dedup.hashMatches(streamHashes, refHashes,
-      "doc_id", "dhash")
-    val q = graft.streaming.ScoreStream.idempotentParquetSink(
-      matches, s"$base/out", s"$base/chk")
-    q.awaitTermination()
+    val arrivals = plantedImages(docs, 970000L, 980000L)
+    streamFiles(s, base, arrivals, parts = 2) { (stream, out, chk) =>
+      graft.streaming.ScoreStream.idempotentParquetSink(
+        Dedup.hashMatches(imageHashes(stream), refHashes, "doc_id", "dhash"),
+        out, chk)
+    }
     s.read.parquet(s"$base/out")
       .select("doc_id", "neighbor_id", "hamming")
       .orderBy("doc_id", "neighbor_id")
   }
 
   val streamImageGateSql = bandedHammingSql(
-    """WITH ref AS (
-      |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
-      |arr AS (
-      |  SELECT doc_id + 970000 AS id, doc_id AS pid, TRUE AS pert
-      |  FROM documents WHERE doc_id < 10
-      |  UNION ALL
-      |  SELECT doc_id + 980000, doc_id + 980000, FALSE FROM documents
-      |  WHERE doc_id < 5)""".stripMargin,
-    "ref")
+    plantedImagesSql(970000L, 980000L), "ref")
 
   /** Streaming perceptual gate served from the STORED hash index
-    * ([[graft.streaming.ScoreStream.indexedHashGateSink]]): the same
-    * arrival/decoy discipline as q_stream_image_gate, but each
-    * micro-batch prunes the index SCAN to the prefix dirs its own
-    * band probes can touch (the driver-side prefix collect that a
-    * continuous streaming plan cannot run lives in foreachBatch).
-    * The source is split into three files streamed one per trigger,
-    * so the narrowing is proven PER BATCH, not just once: in-query
-    * gates require (a) at least two micro-batches ran, (b) every
-    * batch's recorded probe count stays under a quarter of the
-    * layout's 256 prefixes (15 arrivals × 4 bands = at most 60), and
-    * (c) the union of per-batch outputs is EXACTLY what the batch
-    * [[Dedup.hashMatches]] computes over the same arrivals — served
-    * == from-scratch, streamed. */
-  val streamHashIndexedQ: Q = (s, dir) => withStreamParts(s) {
-    val base = scratchDir("shidx", dir)
-    val docs = documents(s, dir).select("doc_id")
-    // ingest-time decode: exactly once (shared memoized base corpus)
-    val refHashes = baseImageHashes(s, dir)
-    val idir = s"$base/idx"
-    Dedup.writeHashIndex(refHashes, "doc_id", "dhash", idir,
-      bands = 4, nPrefix = 256)
-    val arrivals = Multimodal.ImageFixture.withPayloads(
-      docs.where(col("doc_id") < 10)
-        .select((col("doc_id") + 940000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert"))
-      .unionByName(docs.where(col("doc_id") < 5)
-        .select((col("doc_id") + 950000L).as("doc_id"),
-          (col("doc_id") + 950000L).as("__seed"),
-          lit(false).as("__pert"))),
-      "__seed", "__pert").select("doc_id", "payload")
-    arrivals.repartition(3).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val streamHashes = Multimodal.imageDHashes(stream, "payload")
-      .select("doc_id", "dhash")
-    val q = graft.streaming.ScoreStream.indexedHashGateSink(
-      streamHashes, idir, "doc_id", "dhash", s"$base/out", s"$base/chk")
-    q.awaitTermination()
-    // gate (a)+(b): every trigger narrowed its scan, and there were
-    // enough triggers for "per batch" to mean something
-    requireNarrowed(s, s"$base/out", "_probe", "micro-batches",
-        _ => quarterOf(256)) { (_, probed, np) =>
-      s"scanned $probed of $np prefixes — no pruning"
+    * ([[graft.streaming.ScoreStream.indexedHashGateSink]]): the
+    * arrival/decoy discipline of q_stream_image_gate, but each
+    * micro-batch prunes the index SCAN to the prefix dirs its own band
+    * probes can touch ([[indexScenario]], streamed serve): at most 15
+    * arrivals × 4 bands = 60 of the layout's 256 prefixes. */
+  val streamHashIndexedQ: Q = (s, dir) =>
+    indexScenario(s, dir, "shidx", hashFamily(s, dir, nDirs = 256),
+        StreamServe) { (docs, _) =>
+      plantedImages(docs, 940000L, 950000L)
     }
-    val served = s.read.parquet(s"$base/out")
-      .select("doc_id", "neighbor_id", "hamming")
-    // gate (c): streamed+indexed == one-shot batch over the same hashes
-    val arrHashes = Multimodal.imageDHashes(arrivals, "payload")
-      .select("doc_id", "dhash")
-    val fresh = Dedup.hashMatches(arrHashes, refHashes, "doc_id", "dhash")
-    requireSameRows(served, fresh,
-      "indexed streaming gate diverged from the batch hashMatches")
-    served.orderBy("doc_id", "neighbor_id")
-  }
 
   val streamHashIndexedSql = bandedHammingSql(
-    """WITH ref AS (
-      |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
-      |arr AS (
-      |  SELECT doc_id + 940000 AS id, doc_id AS pid, TRUE AS pert
-      |  FROM documents WHERE doc_id < 10
-      |  UNION ALL
-      |  SELECT doc_id + 950000, doc_id + 950000, FALSE FROM documents
-      |  WHERE doc_id < 5)""".stripMargin,
-    "ref")
+    plantedImagesSql(940000L, 950000L), "ref")
 
   /** Streaming TEXT near-dup gate served from the STORED MinHash band
     * index ([[graft.streaming.ScoreStream.indexedBandGateSink]]) —
-    * the text twin of q_stream_hash_indexed: the same planted-arrival
-    * discipline as q_stream_neardup (exact copies, tail-mutated
-    * near-dups, reversed decoys), but each micro-batch prunes the
-    * index SCAN to the prefix dirs its own band keys can touch (the
-    * driver-side prefix collect a continuous streaming plan cannot
-    * run lives in foreachBatch). The source is split into three files
-    * streamed one per trigger, so the narrowing is proven PER BATCH:
-    * in-query gates require (a) at least two micro-batches ran,
-    * (b) every batch's recorded probe count stays under a quarter of
-    * the layout's 256 prefixes (at most 7 arrivals × 2 bands = 14),
-    * and (c) the union of per-batch outputs is EXACTLY what the batch
-    * [[Dedup.minhashMatches]] computes over the same arrivals —
-    * served == from-scratch, streamed. */
-  val streamBandIndexedQ: Q = (s, dir) => withStreamParts(s) {
-    val base = scratchDir("sbidx", dir)
-    val docs = documents(s, dir).select("doc_id", "text")
-    val idir = s"$base/idx"
-    // signatures from the shared memoized sign-once pass
-    Dedup.writeBandIndexFromSignatures(docSignatures(s, dir), "doc_id",
-      idir, prefixChars = 2)
-    val arrivals = docs.where(col("doc_id") < 10)
-      .select((col("doc_id") + 893000).as("doc_id"), col("text"))
-      .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-        .select((col("doc_id") + 896000).as("doc_id"),
-          concat(col("text"), lit(" extra appended words here")).as("text")))
-      .unionByName(docs.where(col("doc_id") >= 15 && col("doc_id") < 20)
-        .select((col("doc_id") + 899000).as("doc_id"),
-          reverse(col("text")).as("text")))
-    arrivals.repartition(3).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val q = graft.streaming.ScoreStream.indexedBandGateSink(
-      stream, idir, "doc_id", "text", s"$base/out", s"$base/chk")
-    q.awaitTermination()
-    // gate (a)+(b): every trigger narrowed its scan, and there were
-    // enough triggers for "per batch" to mean something
-    requireNarrowed(s, s"$base/out", "_probe", "micro-batches",
-        _ => quarterOf(256)) { (_, probed, np) =>
-      s"scanned $probed of $np prefixes — no pruning"
+    * the text twin of q_stream_hash_indexed: the planted arrivals of
+    * q_stream_neardup, each micro-batch pruning the index SCAN to the
+    * prefix dirs its own band keys can touch ([[indexScenario]],
+    * streamed serve): at most 7 arrivals × 2 bands = 14 of the
+    * layout's 256 prefixes. */
+  val streamBandIndexedQ: Q = (s, dir) =>
+    indexScenario(s, dir, "sbidx", bandFamily(s, dir, nDirs = 256),
+        StreamServe) { (docs, _) =>
+      plantedTexts(docs, 893000, 896000, 899000)
     }
-    val served = s.read.parquet(s"$base/out")
-      .select("doc_id", "neighbor_id", "est_jaccard")
-    // gate (c): streamed+indexed == one-shot batch over the same texts
-    val fresh = Dedup.minhashMatchesWithRefSignatures(arrivals,
-      docRefSignatures(s, dir), "doc_id", "text")
-    requireSameRows(served, fresh,
-      "indexed streaming band gate diverged from the batch minhashMatches")
-    served.orderBy("doc_id", "neighbor_id")
-  }
 
   /** [[streamBandIndexedQ]]'s oracle: [[minhashPairsSql]] over the
     * shifted arrival set — the stored index and
     * the per-batch pruning are value-invisible, so the replay is the
     * plain two-sided MinHash join. */
   val streamBandIndexedSql = minhashPairsSql(
-    """WITH arr0 AS (
-      |  SELECT doc_id + 893000 AS id, text FROM documents WHERE doc_id < 10
-      |  UNION ALL
-      |  SELECT doc_id + 896000, text || ' extra appended words here'
-      |  FROM documents WHERE doc_id >= 10 AND doc_id < 15
-      |  UNION ALL
-      |  SELECT doc_id + 899000, reverse(text)
-      |  FROM documents WHERE doc_id >= 15 AND doc_id < 20)""".stripMargin,
-    "documents")
+    plantedTextsSql(893000, 896000, 899000), "documents")
 
   /** Streaming MAINTENANCE of the stored MinHash band index
     * ([[graft.streaming.ScoreStream.bandIndexMaintainSink]]) — the
-    * missing half of q_stream_band_indexed: serving already streamed,
-    * now the index is KEPT CURRENT by a CDC change stream. The base
-    * corpus builds the index once; a change set with disjoint ids
-    * (updates re-texting docs 0–4, deletes of 5–9, five fresh
-    * inserts — disjoint so ANY batch split yields the same final
-    * state) streams in three files, one per trigger, each micro-batch
-    * applying via [[Dedup.updateBandIndex]]'s crash-safe
-    * touched-dirs-only rewrite. In-query gates: (a) ≥ 2 maintenance
-    * batches ran; (b) every batch's `_maint` record shows it rewrote
-    * ≤ a quarter of the 256 prefix dirs; (c) the maintained layout is
-    * row-identical to a FROM-SCRATCH build of the post-CDC corpus;
-    * (d) serving a probe set from the maintained index equals the
-    * batch [[Dedup.minhashMatches]] against the post-CDC corpus —
-    * deleted documents can no longer match, updated text matches at
-    * its new signature. The oracle replays the post-CDC corpus and
-    * the MinHash lane arithmetic in SQL. */
-  val streamBandCdcQ: Q = (s, dir) => withStreamParts(s) {
-    val base = scratchDir("sbcdc", dir)
-    val docs = documents(s, dir).select("doc_id", "text")
-    val idir = s"$base/idx"
-    // signatures from the shared memoized sign-once pass
-    Dedup.writeBandIndexFromSignatures(docSignatures(s, dir), "doc_id",
-      idir, prefixChars = 2)
-    val changes = docs.where(col("doc_id") < 5)
-      .select(col("doc_id"),
-        concat(col("text"), lit(" cdc updated text marker")).as("text"),
-        col("doc_id").as("seq"), lit("u").as("op"))
-      .unionByName(docs.where(col("doc_id") >= 5 && col("doc_id") < 10)
-        .select(col("doc_id"), lit("").as("text"),
-          col("doc_id").as("seq"), lit("d").as("op")))
-      .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-        .select((col("doc_id") + 705000).as("doc_id"),
-          concat(col("text"), lit(" freshly inserted document")).as("text"),
-          col("doc_id").as("seq"), lit("i").as("op")))
-    changes.repartition(3).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(changes.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val q = graft.streaming.ScoreStream.bandIndexMaintainSink(
-      stream, idir, "text", "doc_id", s"$base/out", s"$base/chk")
-    q.awaitTermination()
-    // gates (a)+(b): enough triggers to mean "per batch", each one
-    // rewriting a slice of the layout, never the layout
-    requireNarrowed(s, s"$base/out", "_maint", "maintenance micro-batches",
-        _ => quarterOf(256)) { (_, touched, np) =>
-      s"rewrote $touched of $np prefixes — no narrowing"
+    * missing half of q_stream_band_indexed: a CDC stream keeps the
+    * 256-prefix index current ([[indexScenario]], streamed CDC). The
+    * ids are disjoint (updates re-texting docs 0–4, deletes of 5–9,
+    * five fresh inserts), so ANY batch split yields the same final
+    * state. Probes: the updated and inserted texts, and the deleted
+    * docs' old texts, which can no longer match. The oracle replays
+    * the post-CDC corpus and the MinHash lane arithmetic in SQL. */
+  val streamBandCdcQ: Q = (s, dir) =>
+    indexScenario(s, dir, "sbcdc", bandFamily(s, dir, nDirs = 256),
+        StreamCdc { docs =>
+          docs.where(col("doc_id") < 5)
+            .select(col("doc_id"),
+              concat(col("text"), lit(" cdc updated text marker")).as("text"),
+              col("doc_id").as("seq"), lit("u").as("op"))
+            .unionByName(docs.where(col("doc_id") >= 5 && col("doc_id") < 10)
+              .select(col("doc_id"), lit("").as("text"),
+                col("doc_id").as("seq"), lit("d").as("op")))
+            .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
+              .select((col("doc_id") + 705000).as("doc_id"),
+                concat(col("text"), lit(" freshly inserted document")).as("text"),
+                col("doc_id").as("seq"), lit("i").as("op")))
+        }) { (docs, post) =>
+      post.where(col("doc_id") < 5 || col("doc_id") >= 705000)
+        .select((col("doc_id") + 880000).as("doc_id"), col("text"))
+        .unionByName(docs.where(col("doc_id") >= 5 && col("doc_id") < 10)
+          .select((col("doc_id") + 883000).as("doc_id"), col("text")))
     }
-    // the corpus the CDC log implies
-    val post = docs.where(col("doc_id") >= 10)
-      .unionByName(docs.where(col("doc_id") < 5)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" cdc updated text marker")).as("text")))
-      .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-        .select((col("doc_id") + 705000).as("doc_id"),
-          concat(col("text"), lit(" freshly inserted document")).as("text")))
-    // gate (c): maintained layout == from-scratch rebuild, row for
-    // row (distributed one-pass multiset diff — no collect,
-    // scale-safe). Sign the post-CDC corpus ONCE (the rebuild gate
-    // and the fresh serve gate both consume the same signature
-    // frame); the rebuild rows are computed IN-FLIGHT by the same
-    // bander a fresh writeBandIndex writes (pfx included) — the
-    // maintained ARTIFACT still reads from disk, so the gate checks
-    // it against pristine builder output instead of paying a full
-    // second layout write + read.
-    // The post-corpus signatures COMPOSE from the shared ingest
-    // artifact plus the changed rows — sig(docs >= 10) ⊎ sig(updated
-    // ∪ inserted) is sig(post) as a multiset, branch for branch,
-    // because signing is per-row deterministic column arithmetic.
-    // Re-signing the WHOLE corpus per CDC gate is the 100 TB
-    // anti-pattern the signature artifact exists to avoid; only the
-    // ~10 changed rows sign fresh.
-    val changedRows = docs.where(col("doc_id") < 5)
-      .select(col("doc_id"),
-        concat(col("text"), lit(" cdc updated text marker")).as("text"))
-      .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-        .select((col("doc_id") + 705000).as("doc_id"),
-          concat(col("text"), lit(" freshly inserted document")).as("text")))
-    val postSigs = docSignatures(s, dir).where(col("doc_id") >= 10)
-      .unionByName(Dedup.minhashSignatures(changedRows, "text", "doc_id", 4))
-      .localCheckpoint()
-    // pinned-string read (PartitionedIndex.read): an all-numeric hex
-    // dir set would infer an INT pfx here and the gate's diff against
-    // the string-typed builder rows would misreport
-    val maintained = PartitionedIndex.read(s, idir, Dedup.BandIndex)
-    val rebuilt = Dedup.bandIndexRowsFromSignatures(postSigs, "doc_id",
-        numHashes = 4, bands = 2, prefixChars = 2)
-      .select(maintained.columns.map(col).toIndexedSeq: _*)
-    requireSameRows(maintained, rebuilt,
-      "maintained band index diverged from a from-scratch rebuild " +
-        "of the post-CDC corpus")
-    // gate (d) + result: serve probes from the maintained index
-    val arrivals = post
-      .where(col("doc_id") < 5 || col("doc_id") >= 705000)
-      .select((col("doc_id") + 880000).as("doc_id"), col("text"))
-      .unionByName(docs.where(col("doc_id") >= 5 && col("doc_id") < 10)
-        .select((col("doc_id") + 883000).as("doc_id"), col("text")))
-    val served = Dedup.minhashMatchesIndexed(idir, arrivals,
-      "doc_id", "text")
-    val fresh = Dedup.minhashMatchesWithRefSignatures(arrivals,
-      postSigs.withColumnRenamed("doc_id", "neighbor_id"),
-      "doc_id", "text")
-    requireSameRows(served, fresh,
-      "serving from the maintained index diverged from the batch " +
-        "minhashMatches over the post-CDC corpus")
-    served.orderBy("doc_id", "neighbor_id")
-  }
 
   /** [[streamBandCdcQ]]'s oracle: the CDC log replayed into the
     * post-corpus CTE, then the [[minhashPairsSql]] lane
@@ -6086,116 +5893,36 @@ object ExtQueries {
 
   /** Streaming MAINTENANCE of the stored PERCEPTUAL hash index
     * ([[graft.streaming.ScoreStream.hashIndexMaintainSink]]) — the
-    * media twin of q_stream_band_cdc, with the decode discipline
-    * layered on: the CDC stream carries image PAYLOADS, each
-    * micro-batch decodes its own payloads exactly once
-    * ([[Multimodal.imageDHashes]] in-batch; delete rows carry empty
-    * payloads that hash to null, which the upsert path ignores), and
-    * [[Dedup.updateHashIndex]] rewrites only the touched prefix dirs
-    * under the index's own layout marker — history is never
-    * re-DECODED. Change set ids are disjoint (updates re-imaging
-    * docs 0–4 from new seeds, deletes of 5–9, five fresh inserts),
-    * so any batch split yields the same final state. Gates mirror
-    * the band twin: ≥ 2 triggers; each batch ≤ nPrefix/4 dirs;
-    * maintained layout row-identical to a from-scratch rebuild of
-    * the post-CDC hash corpus; serving perturbed re-encodes from the
-    * maintained index == batch [[Dedup.hashMatches]] — re-encodes of
-    * DELETED images no longer match, re-encodes of updates match
-    * their new hashes. Oracle: the pixel-formula replay over the
-    * post-CDC seed set. */
-  val streamHashCdcQ: Q = (s, dir) => withStreamParts(s) {
-    val base = scratchDir("shcdc", dir)
-    val docs = documents(s, dir).select("doc_id")
-    def payloadsOf(idSeedPert: DataFrame): DataFrame =
-      Multimodal.ImageFixture.withPayloads(idSeedPert, "__seed", "__pert")
-        .select("doc_id", "payload")
-    def hashesOf(payloads: DataFrame): DataFrame =
-      Multimodal.imageDHashes(payloads, "payload").select("doc_id", "dhash")
-    // ingest-time decode: exactly once (shared memoized base corpus)
-    val baseHashes = baseImageHashes(s, dir)
-    val idir = s"$base/idx"
-    // 1024 prefixes (vs the band twin's 256): 4 bands × 2 homes per
-    // changed hash means a worst-case all-in-one-batch split draws
-    // 120 prefixes — the ≤ nPrefix/4 narrowing gate needs headroom
-    // that 256 would not give
-    Dedup.writeHashIndex(baseHashes, "doc_id", "dhash", idir,
-      nPrefix = 1024)
-    val changes = payloadsOf(docs.where(col("doc_id") < 5)
-        .select(col("doc_id"), (col("doc_id") + 650000L).as("__seed"),
-          lit(false).as("__pert")))
-      .select(col("doc_id"), col("payload"),
-        col("doc_id").as("seq"), lit("u").as("op"))
-      .unionByName(docs.where(col("doc_id") >= 5 && col("doc_id") < 10)
-        .select(col("doc_id"), lit(Array.empty[Byte]).as("payload"),
-          col("doc_id").as("seq"), lit("d").as("op")))
-      .unionByName(payloadsOf(
-          docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-            .select((col("doc_id") + 707000L).as("doc_id"),
-              (col("doc_id") + 707000L).as("__seed"),
-              lit(false).as("__pert")))
-        .select(col("doc_id"), col("payload"),
-          col("doc_id").as("seq"), lit("i").as("op")))
-    changes.repartition(3).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(changes.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val q = graft.streaming.ScoreStream.hashIndexMaintainSink(
-      stream, idir, "doc_id", "payload", s"$base/out", s"$base/chk")
-    q.awaitTermination()
-    requireNarrowed(s, s"$base/out", "_maint", "maintenance micro-batches",
-        _ => quarterOf(1024)) { (_, touched, np) =>
-      s"rewrote $touched of $np prefixes — no narrowing"
+    * media twin of q_stream_band_cdc: the CDC stream carries image
+    * PAYLOADS (a delete's is empty and hashes to null), each
+    * micro-batch decodes its own exactly once, and history is never
+    * re-DECODED. The ids are disjoint (updates re-imaging docs 0–4
+    * from new seeds, deletes of 5–9, five fresh inserts). 1024
+    * prefixes (vs the band twin's 256): 4 bands × 2 homes per changed
+    * hash means a worst-case all-in-one-batch split draws 120
+    * prefixes, and the ≤ nPrefix/4 narrowing gate needs headroom that
+    * 256 would not give. Probes: perturbed re-encodes — of DELETED
+    * images no longer match, of updates match their new hashes.
+    * Oracle: the pixel-formula replay over the post-CDC seed set. */
+  val streamHashCdcQ: Q = (s, dir) =>
+    indexScenario(s, dir, "shcdc", hashFamily(s, dir, nDirs = 1024),
+        StreamCdc { docs =>
+          imagesOf(docs.where(col("doc_id") < 5), 0L, 650000L, pert = false)
+            .withColumn("op", lit("u"))
+            .unionByName(docs.where(col("doc_id") >= 5 && col("doc_id") < 10)
+              .select(col("doc_id"), lit(Array.empty[Byte]).as("payload"),
+                lit("d").as("op")))
+            .unionByName(imagesOf(docs.where(col("doc_id") >= 10 &&
+                col("doc_id") < 15), 707000L, 707000L, pert = false)
+              .withColumn("op", lit("i")))
+            .withColumn("seq", col("doc_id"))
+        }) { (docs, _) =>
+      imagesOf(docs.where(col("doc_id") < 5), 885000L, 650000L, pert = true)
+        .unionByName(imagesOf(docs.where(col("doc_id") >= 5 &&
+          col("doc_id") < 10), 886000L, 0L, pert = true))
+        .unionByName(imagesOf(docs.where(col("doc_id") >= 10 &&
+          col("doc_id") < 15), 887000L, 707000L, pert = true))
     }
-    // the hash corpus the CDC log implies. The unchanged branch
-    // (docs >= 10 at their own seeds) IS the shared ingest artifact
-    // filtered — hash(docs >= 10) ⊎ hash(changed payloads) equals
-    // hashing the whole constructed post corpus, branch for branch,
-    // because the decode is per-row deterministic. Only the ~10
-    // changed payloads decode fresh; re-DECODING the unchanged
-    // history per CDC gate is the anti-pattern the decode-once
-    // ingest contract exists to avoid.
-    val postHashes = baseImageHashes(s, dir).where(col("doc_id") >= 10)
-      .unionByName(hashesOf(payloadsOf(
-        docs.where(col("doc_id") < 5)
-          .select(col("doc_id"), (col("doc_id") + 650000L).as("__seed"),
-            lit(false).as("__pert"))
-        .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-          .select((col("doc_id") + 707000L).as("doc_id"),
-            (col("doc_id") + 707000L).as("__seed"),
-            lit(false).as("__pert"))))))
-      .localCheckpoint() // read by the rebuild AND the serve gate
-    // gate (c): maintained layout == from-scratch rebuild, row for
-    // row. The rebuild rows are computed IN-FLIGHT by the same
-    // bander a fresh writeHashIndex writes (pfx included) — the
-    // maintained ARTIFACT still reads from disk, so the gate checks
-    // it against pristine builder output instead of paying a full
-    // second 1024-dir write + read.
-    val maintained = PartitionedIndex.read(s, idir, Dedup.HashIndex)
-    val rebuilt = Dedup.hashIndexRows(postHashes, "doc_id", "dhash",
-        bands = 4, nPrefix = 1024)
-      .select(maintained.columns.map(col).toIndexedSeq: _*)
-    requireSameRows(maintained, rebuilt,
-      "maintained hash index diverged from a from-scratch rebuild " +
-        "of the post-CDC corpus")
-    val arrivals = hashesOf(payloadsOf(
-        docs.where(col("doc_id") < 5)
-          .select((col("doc_id") + 885000L).as("doc_id"),
-            (col("doc_id") + 650000L).as("__seed"), lit(true).as("__pert"))
-        .unionByName(docs.where(col("doc_id") >= 5 && col("doc_id") < 10)
-          .select((col("doc_id") + 886000L).as("doc_id"),
-            col("doc_id").as("__seed"), lit(true).as("__pert")))
-        .unionByName(docs.where(col("doc_id") >= 10 && col("doc_id") < 15)
-          .select((col("doc_id") + 887000L).as("doc_id"),
-            (col("doc_id") + 707000L).as("__seed"),
-            lit(true).as("__pert")))))
-      .localCheckpoint() // probed twice: served AND the fresh gate
-    val served = Dedup.hashMatchesIndexed(idir, arrivals,
-      "doc_id", "dhash")
-    val fresh = Dedup.hashMatches(arrivals, postHashes, "doc_id", "dhash")
-    requireSameRows(served, fresh,
-      "serving from the maintained hash index diverged from the " +
-        "batch hashMatches over the post-CDC corpus")
-    served.orderBy("doc_id", "neighbor_id")
-  }
 
   /** [[streamHashCdcQ]]'s oracle: the CDC log replayed into the
     * post-corpus seed set, then the pixel-formula dHash/band/popcount
@@ -6245,15 +5972,10 @@ object ExtQueries {
     val idir = s"$base/idx"
     Dedup.writeHashIndex(refHashes, "doc_id", "dhash", idir,
       bands = 4, nPrefix = 1024)
-    val arrivals = Multimodal.ImageFixture.withPayloads(
-      docs.where(col("doc_id") < 20)
-        .select((col("doc_id") + 993000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert"))
-      .unionByName(docs.where(col("doc_id") >= 20 && col("doc_id") < 40)
-        .select((col("doc_id") + 993000L).as("doc_id"),
-          (col("doc_id") + 993000L).as("__seed"),
-          lit(false).as("__pert"))),
-      "__seed", "__pert").select("doc_id", "payload")
+    val arrivals = imagesOf(docs.where(col("doc_id") < 20), 993000L, 0L,
+        pert = true)
+      .unionByName(imagesOf(docs.where(col("doc_id") >= 20 &&
+        col("doc_id") < 40), 993000L, 993000L, pert = false))
     val arrHashes = Multimodal.imageDHashes(arrivals, "payload")
       .select(col("doc_id"), col("dhash"),
         concat(lit("site"), pmod(col("doc_id"), lit(4))).as("domain"))
@@ -6432,12 +6154,10 @@ object ExtQueries {
   val mixedPipelineQ: Q = (s, dir) => {
     val docs = documents(s, dir).select("doc_id", "text", "source")
     // media door: even ids, ten perturbed re-uploads must drop
-    val mediaArr = docs.where(col("doc_id") % 2 === 0 && col("doc_id") < 200)
-      .select(col("doc_id"), col("doc_id").as("__seed"),
-        lit(false).as("__pert"))
-      .unionByName(docs.where(col("doc_id") % 2 === 0 && col("doc_id") < 20)
-        .select((col("doc_id") + 997000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert")))
+    val mediaArr = imagesOf(docs.where(col("doc_id") % 2 === 0 &&
+        col("doc_id") < 200), 0L, 0L, pert = false)
+      .unionByName(imagesOf(docs.where(col("doc_id") % 2 === 0 &&
+        col("doc_id") < 20), 997000L, 0L, pert = true))
     // planted junk: undecodable bytes and a constant-color PNG (a
     // REAL PNG through the real decoder — its dHash is genuinely 0)
     val junkBytes = "definitely not an image payload".getBytes("UTF-8")
@@ -6450,11 +6170,7 @@ object ExtQueries {
       .unionByName(docs.where(col("doc_id") % 2 === 0 && col("doc_id") < 20)
         .select((col("doc_id") + 996000L).as("doc_id"),
           lit(constPng).as("payload")))
-    val mediaHashes0 = Multimodal.imageDHashes(
-        Multimodal.ImageFixture.withPayloads(mediaArr, "__seed", "__pert")
-          .select("doc_id", "payload")
-          .unionByName(junkMedia), "payload")
-      .select("doc_id", "dhash")
+    val mediaHashes0 = imageHashes(mediaArr.unionByName(junkMedia))
       .localCheckpoint() // decode once: floor gate + pairing + survivors
     // the media quality floor: decode success + dHash entropy
     val mediaHashes = mediaHashes0.where(col("dhash").isNotNull &&
@@ -6585,33 +6301,20 @@ object ExtQueries {
     val docs = documents(s, dir).select("doc_id")
     val refHashes = Multimodal.audioEnergyHashes(
       Multimodal.AudioFixture.withWavPayloads(
-        docs.select(col("doc_id"), col("doc_id").as("__seed"),
-          lit(false).as("__pert")), "__seed", "__pert")
+        seeds(docs, 0L, 0L, pert = false), "__seed", "__pert")
         .select("doc_id", "payload"), "payload")
       .select("doc_id", "ahash")
       .localCheckpoint() // ingest-time decode: exactly once
     val arrivals = Multimodal.AudioFixture.withWavPayloads(
-      docs.where(col("doc_id") < 10)
-        .select((col("doc_id") + 910000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert"))
-      .unionByName(docs.where(col("doc_id") < 5)
-        .select((col("doc_id") + 915000L).as("doc_id"),
-          (col("doc_id") + 915000L).as("__seed"),
-          lit(false).as("__pert"))),
+      seeds(docs.where(col("doc_id") < 10), 910000L, 0L, pert = true)
+        .unionByName(seeds(docs.where(col("doc_id") < 5), 915000L, 915000L,
+          pert = false)),
       "__seed", "__pert").select("doc_id", "payload")
-    // pin the stream-source file count: the fixture codec spread
-    // upstream would otherwise fan this 15-row arrival frame into
-    // ~32 near-empty source files (listing + per-file open per
-    // trigger for nothing)
-    arrivals.repartition(2).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(arrivals.schema).parquet(s"$base/src")
-    val streamHashes = Multimodal.audioEnergyHashes(stream, "payload")
-      .select("doc_id", "ahash")
-    val matches = Dedup.hashMatches(streamHashes, refHashes,
-      "doc_id", "ahash")
-    val q = graft.streaming.ScoreStream.idempotentParquetSink(
-      matches, s"$base/out", s"$base/chk")
-    q.awaitTermination()
+    streamFiles(s, base, arrivals, parts = 2) { (stream, out, chk) =>
+      graft.streaming.ScoreStream.idempotentParquetSink(Dedup.hashMatches(
+        Multimodal.audioEnergyHashes(stream, "payload").select("doc_id", "ahash"),
+        refHashes, "doc_id", "ahash"), out, chk)
+    }
     val served = s.read.parquet(s"$base/out")
       .select("doc_id", "neighbor_id", "hamming")
     // stream == batch, pinned in-query
@@ -6625,15 +6328,7 @@ object ExtQueries {
   }
 
   val streamAudioGateSql = bandedHammingSql(
-    """WITH ref AS (
-      |  SELECT doc_id AS id, doc_id AS pid, FALSE AS pert FROM documents),
-      |arr AS (
-      |  SELECT doc_id + 910000 AS id, doc_id AS pid, TRUE AS pert
-      |  FROM documents WHERE doc_id < 10
-      |  UNION ALL
-      |  SELECT doc_id + 915000, doc_id + 915000, FALSE FROM documents
-      |  WHERE doc_id < 5)""".stripMargin,
-    "ref", energyBandSqlCtes, "ahash")
+    plantedImagesSql(910000L, 915000L), "ref", energyBandSqlCtes, "ahash")
 
   /** Streaming perceptual VIDEO gate ([[graft.streaming.ScoreStream
     * .videoGateSink]]): arriving GVID containers are parsed, stride-
@@ -6655,26 +6350,19 @@ object ExtQueries {
       .where(col("doc_id") < 100)
     val refFrames = Multimodal.videoFrameDHashes(
       Multimodal.VideoFixture.withPayloads(
-        docs.select(col("doc_id"), col("doc_id").as("__seed"),
-          lit(false).as("__pert")), "__seed", "__pert")
+        seeds(docs, 0L, 0L, pert = false), "__seed", "__pert")
         .select("doc_id", "payload"), "payload", stride = 2)
       .select("doc_id", "frame_idx", "dhash")
       .localCheckpoint() // ingest-time decode: exactly once
     val arrivals = Multimodal.VideoFixture.withPayloads(
-      docs.where(col("doc_id") < 10)
-        .select((col("doc_id") + 905000L).as("doc_id"),
-          col("doc_id").as("__seed"), lit(true).as("__pert"))
-      .unionByName(s.range(3)
-        .select((col("id") + 908000L).as("doc_id"),
-          (col("id") + 908000L).as("__seed"), lit(false).as("__pert"))),
+      seeds(docs.where(col("doc_id") < 10), 905000L, 0L, pert = true)
+        .unionByName(seeds(s.range(3).toDF("doc_id"), 908000L, 908000L,
+          pert = false)),
       "__seed", "__pert").select("doc_id", "payload")
-    arrivals.repartition(2).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val q = graft.streaming.ScoreStream.videoGateSink(
-      stream, refFrames, "doc_id", "payload",
-      s"$base/out", s"$base/chk", stride = 2, minMatches = 2)
-    q.awaitTermination()
+    streamFiles(s, base, arrivals, parts = 2, perTrigger = true) {
+      graft.streaming.ScoreStream.videoGateSink(_, refFrames, "doc_id",
+        "payload", _, _, stride = 2, minMatches = 2)
+    }
     val served = s.read.parquet(s"$base/out")
       .select("doc_id", "neighbor_id", "matched_frames")
     // stream == batch, pinned in-query
@@ -6756,10 +6444,9 @@ object ExtQueries {
   val dedupVideoDriftQ: Q = (s, dir) => {
     val docs = documents(s, dir).select("doc_id")
       .where(col("doc_id") < 100)
-    val base = docs.select(col("doc_id"), col("doc_id").as("__seed"),
-      lit(false).as("__pert"))
     val originals = Multimodal.VideoFixture.withPayloads(
-      base, "__seed", "__pert").select("doc_id", "payload")
+      seeds(docs, 0L, 0L, pert = false), "__seed", "__pert")
+      .select("doc_id", "payload")
     val drifted = Multimodal.VideoFixture.withDriftedPayloads(
       docs.where(col("doc_id") < 10)
         .select((col("doc_id") + 920000L).as("doc_id"),
@@ -6964,12 +6651,10 @@ object ExtQueries {
         s.range(3).select((col("id") + 913000L).as("doc_id"),
           (col("id") + 913000L).as("__seed")), "__seed"))
       .select("doc_id", "payload")
-    arrivals.repartition(2).write.mode("overwrite").parquet(s"$base/src")
-    val stream = s.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/src")
-    val q = graft.streaming.ScoreStream.timedVideoGateSink(
-      stream, refFrames, "doc_id", "payload", s"$base/out", s"$base/chk")
-    q.awaitTermination()
+    streamFiles(s, base, arrivals, parts = 2, perTrigger = true) {
+      graft.streaming.ScoreStream.timedVideoGateSink(_, refFrames, "doc_id",
+        "payload", _, _)
+    }
     val served = s.read.parquet(s"$base/out")
       .select("doc_id", "neighbor_id", "matched_frames")
     val fresh = Dedup.videoHashMatches(
@@ -7057,13 +6742,10 @@ object ExtQueries {
     * and the vote entirely in SQL. */
   val dedupVideoQ: Q = (s, dir) => {
     val ids = documents(s, dir).select(col("doc_id"))
-    val base = ids.select(col("doc_id"), col("doc_id").as("__seed"),
-      lit(false).as("__pert"))
-    val variants = ids.where(col("doc_id") < 10)
-      .select((col("doc_id") + 990000L).as("doc_id"),
-        col("doc_id").as("__seed"), lit(true).as("__pert"))
+    val variants = seeds(ids.where(col("doc_id") < 10), 990000L, 0L,
+      pert = true)
     val corpus = Multimodal.VideoFixture.withPayloads(
-      base.unionAll(variants), "__seed", "__pert")
+      seeds(ids, 0L, 0L, pert = false).unionAll(variants), "__seed", "__pert")
       .select("doc_id", "payload")
     Dedup.videoNearDups(corpus, "doc_id", "payload",
         stride = 2, maxHamming = 3, bands = 4, minMatches = 2)
