@@ -708,7 +708,7 @@ object ExtQueries {
   val simIvfPartitionedQ: Q = (s, dir) => {
     val ivf = ivfFamily(s, dir, nDirs = 16)
     val idir = scratchDir("ivfidx", dir)
-    ivf.build(ivf.artifact, idir)
+    ivf.build(ivf.artifact(), idir)
     val total = PartitionedIndex.read(s, idir, Similarity.IvfIndex)
       .select(input_file_name()).distinct().count()
     val probes = ivf.rows.where(col("vec_id") < 10)
@@ -830,17 +830,17 @@ object ExtQueries {
     // sequentially): same three writes, same bytes, same markers; a
     // small pool lets each file-count-bound write's straggler tail
     // backfill with the next build's tasks instead of idling the
-    // cores three times in turn. The memoized ingest artifacts
-    // (sign-once / decode-once / centroids) are taken when the family
-    // records are made, before the pool starts.
+    // cores three times in turn. Each build fetches its own memoized
+    // ingest artifact (sign-once / decode-once / centroids) inside its
+    // Future, so the three ingest passes overlap too.
     locally {
       import scala.concurrent.Future
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val builds = Seq(
-        Future(band.build(band.artifact, bdir))(ec),
-        Future(hash.build(hash.artifact, hdir))(ec),
-        Future(ivf.build(ivf.artifact, vdir))(ec))
+        Future(band.build(band.artifact(), bdir))(ec),
+        Future(hash.build(hash.artifact(), hdir))(ec),
+        Future(ivf.build(ivf.artifact(), vdir))(ec))
       try awaitAll(builds)
       finally { pool.shutdown(); () }
     }
@@ -876,10 +876,10 @@ object ExtQueries {
     val served = s.read.parquet(s"$base/out")
       .select("family", "doc_id", "neighbor_id", "metric")
     // gate (d): streamed == the three one-shot batch serves
-    val freshBand = band.fresh(bandArr, band.artifact)
+    val freshBand = band.fresh(bandArr, band.artifact())
       .select(lit("band").as("family"), col("doc_id"), col("neighbor_id"),
         col("est_jaccard").cast("double").as("metric"))
-    val freshHash = hash.fresh(hash.probe(hashArr), hash.artifact)
+    val freshHash = hash.fresh(hash.probe(hashArr), hash.artifact())
       .select(lit("hash").as("family"), col("doc_id"), col("neighbor_id"),
         col("hamming").cast("double").as("metric"))
     val freshIvf = ivf.serve(vdir, ivfArr)
@@ -5436,21 +5436,26 @@ object ExtQueries {
   /** One stored-index family as [[indexScenario]] drives it. `rows` is
     * the base corpus the change and probe sets are written over (for
     * images, the document ids whose seeds the fixture draws);
-    * `artifact` the shared base artifact (signatures, decoded hashes,
-    * the vectors) that `build` writes the `nDirs`-dir layout from.
-    * `derive` turns upsert change rows into artifact rows (sign,
-    * decode, pass through) and `rebuild` artifact rows into index rows
-    * (home column included), as a fresh build would. `probe` turns a
-    * probe set into what `serve` (from the layout) and `fresh` (over an
-    * artifact, no index) take. `update`, `maintainSink` and `gateSink`
+    * `artifact` fetches the shared base artifact (signatures, decoded
+    * hashes, the vectors) that `build` writes the `nDirs`-dir layout
+    * from; it is a thunk, so a record made before a concurrent build
+    * fetches (and on first use, computes) it on the build's thread.
+    * `pin` readies a change set for the update and the post-CDC replay
+    * (the hash family decodes its payloads once and checkpoints them).
+    * `derive` turns pinned upsert rows into artifact rows (sign, select
+    * the decoded hash, pass through) and `rebuild` artifact rows into
+    * index rows (home column included), as a fresh build would.
+    * `probe` turns a probe set into what `serve` (from the layout) and
+    * `fresh` (over an artifact, no index) take. `update`, `maintainSink` and `gateSink`
     * are the family's batch update, streamed maintain and streamed
     * serve; `limits` bounds a batch's reach ([[requireNarrowed]]) and
     * `order` sorts the result. */
   private final case class IndexFamily(
       index: PartitionedIndex.Family[_], nDirs: Int, idCol: String,
       limits: Long => (Long, Long), order: Seq[String],
-      rows: DataFrame, artifact: DataFrame,
+      rows: DataFrame, artifact: () => DataFrame,
       build: (DataFrame, String) => Unit,
+      pin: DataFrame => DataFrame,
       derive: DataFrame => DataFrame,
       rebuild: DataFrame => DataFrame,
       probe: DataFrame => DataFrame,
@@ -5468,9 +5473,10 @@ object ExtQueries {
     IndexFamily(Dedup.BandIndex, nDirs, "doc_id", quarterOf,
       order = Seq("doc_id", "neighbor_id"),
       rows = documents(s, dir).select("doc_id", "text"),
-      artifact = docSignatures(s, dir),
+      artifact = () => docSignatures(s, dir),
       build = Dedup.writeBandIndexFromSignatures(_, "doc_id", _,
         prefixChars = prefixChars),
+      pin = identity,
       derive = Dedup.minhashSignatures(_, "text", "doc_id", 4),
       rebuild = Dedup.bandIndexRowsFromSignatures(_, "doc_id", 4, 2,
         prefixChars),
@@ -5487,21 +5493,22 @@ object ExtQueries {
 
   /** The perceptual-hash family over [[baseImageHashes]] (4 bands,
     * `nDirs` int prefixes). Change and probe rows carry fixture PNG
-    * payloads ([[imagesOf]]; a delete's is empty), decoded once. */
+    * payloads ([[imagesOf]]; a delete's is empty), decoded once: a
+    * change set is pinned with its `dhash` beside the payload. */
   private def hashFamily(s: SparkSession, dir: String, nDirs: Int): IndexFamily =
     IndexFamily(Dedup.HashIndex, nDirs, "doc_id", quarterOf,
       order = Seq("doc_id", "neighbor_id"),
       rows = documents(s, dir).select("doc_id"),
-      artifact = baseImageHashes(s, dir),
+      artifact = () => baseImageHashes(s, dir),
       build = Dedup.writeHashIndex(_, "doc_id", "dhash", _, nPrefix = nDirs),
-      derive = imageHashes,
+      pin = Multimodal.imageDHashes(_, "payload").localCheckpoint(),
+      derive = _.select("doc_id", "dhash"),
       rebuild = Dedup.hashIndexRows(_, "doc_id", "dhash", 4, nDirs),
       probe = imageHashes(_).localCheckpoint(), // served and fresh read it
       serve = Dedup.hashMatchesIndexed(_, _, "doc_id", "dhash"),
       fresh = Dedup.hashMatches(_, _, "doc_id", "dhash"),
       update = (idir, changes) => Dedup.updateHashIndex(idir,
-        Multimodal.imageDHashes(changes, "payload").drop("payload"),
-        "doc_id", "dhash").toSeq,
+        changes.drop("payload"), "doc_id", "dhash").toSeq,
       maintainSink = ScoreStream.hashIndexMaintainSink(_, _, "doc_id",
         "payload", _, _),
       gateSink = (stream, idir, out, chk) => ScoreStream.indexedHashGateSink(
@@ -5509,15 +5516,20 @@ object ExtQueries {
 
   /** The IVF family over the embeddings and the shared [[ivfCents]]
     * (`nDirs` cells; top-5 at nprobe = 2), the vector id named `id`.
-    * The vectors are their own artifact. */
+    * The vectors are their own artifact; the centroids are taken at
+    * first use, like the other families' artifacts. */
   private def ivfFamily(s: SparkSession, dir: String, nDirs: Int,
                         id: String = "vec_id"): IndexFamily = {
-    val cents = ivfCents(s, dir)
-    require(cents.length == nDirs, s"${cents.length} centroids, not $nDirs")
+    lazy val cents = {
+      val c = ivfCents(s, dir)
+      require(c.length == nDirs, s"${c.length} centroids, not $nDirs")
+      c
+    }
     val emb = embeddings(s, dir).select(col("vec_id").as(id), col("embedding"))
     IndexFamily(Similarity.IvfIndex, nDirs, id, strictSubsetOf,
-      order = Seq("query_id", "rank"), rows = emb, artifact = emb,
+      order = Seq("query_id", "rank"), rows = emb, artifact = () => emb,
       build = Similarity.writeIvfIndex(_, id, "embedding", cents, _),
+      pin = identity,
       derive = _.select(id, "embedding"),
       rebuild = Similarity.assignCells(_, "embedding", cents),
       probe = identity,
@@ -5557,8 +5569,8 @@ object ExtQueries {
     *    of the batch outputs) == fresh over the base artifact.
     * A CDC mode then takes the post-CDC corpus once: rows by
     * `Merge.applyCdc`, the artifact as the base artifact minus the
-    * changed ids plus `derive` over the latest upserts (so only the
-    * changed rows sign or decode). Two [[requireSameRows]] gates
+    * changed ids plus `derive` over the latest upserts of the pinned
+    * change set (so only the changed rows sign or decode, once). Two [[requireSameRows]] gates
     * follow: the maintained layout (a pinned `PartitionedIndex.read`)
     * equals `rebuild` of the post artifact, and the layout's serve of
     * `probes(rows, postRows)` equals `fresh` over the post artifact.
@@ -5569,7 +5581,7 @@ object ExtQueries {
     val base = scratchDir(tag, dir)
     val idir = s"$base/idx"
     val dirs = s"${fam.index.partCol} dirs"
-    fam.build(fam.artifact, idir)
+    fam.build(fam.artifact(), idir)
     def streamed(df: DataFrame, sink: (DataFrame, String, String, String) =>
         StreamingQuery, kind: String, batches: String, verb: String): Unit = {
       streamFiles(s, base, df, parts = 3, perTrigger = true)(sink(_, idir, _, _))
@@ -5580,7 +5592,7 @@ object ExtQueries {
     }
     def afterCdc(changes: DataFrame): DataFrame = {
       val latest = graft.etl.Merge.latestChanges(changes, fam.idCol, "seq")
-      val postArtifact = fam.artifact
+      val postArtifact = fam.artifact()
         .join(broadcast(latest.select(fam.idCol)), Seq(fam.idCol), "left_anti")
         .unionByName(fam.derive(latest.where(col("op") =!= lit("d"))))
         .localCheckpoint() // read by the rebuild and the fresh gate
@@ -5599,7 +5611,7 @@ object ExtQueries {
     }
     mode match {
       case BatchCdc(changesOf) =>
-        val changes = changesOf(fam.rows)
+        val changes = fam.pin(changesOf(fam.rows))
         requireUntouchedDirsSame(idir, fam.index.partCol,
             s"${fam.index.name} update", s"${fam.index.partCol} dir", dirs) {
           fam.update(idir, changes)
@@ -5608,12 +5620,12 @@ object ExtQueries {
       case StreamCdc(changesOf) => withStreamParts(s) {
         val changes = changesOf(fam.rows)
         streamed(changes, fam.maintainSink, "_maint", "maintenance", "rewrote")
-        afterCdc(changes)
+        afterCdc(fam.pin(changes))
       }
       case StreamServe => withStreamParts(s) {
         val arrivals = probes(fam.rows, fam.rows)
         streamed(arrivals, fam.gateSink, "_probe", "serving", "probed")
-        val fresh = fam.fresh(fam.probe(arrivals), fam.artifact)
+        val fresh = fam.fresh(fam.probe(arrivals), fam.artifact())
         val served = s.read.parquet(s"$base/out")
           .select(fresh.columns.toIndexedSeq.map(col): _*)
         requireSameRows(served, fresh,

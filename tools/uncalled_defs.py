@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """List the definitions in src/main/scala that nothing calls.
 
-Usage: python3 tools/uncalled_defs.py [--allow FILE] [--root DIR]
+Usage: python3 tools/uncalled_defs.py
 
 A `def` or `val` declared in src/main/scala is reported when its name
 has no word-boundary occurrence in src/main/scala or perfbench/src
@@ -9,7 +9,7 @@ other than at its own declaration. Comments are stripped first, so a
 name that only a scaladoc mentions counts as uncalled. `override`
 members and `main` are skipped: Spark and the JVM call those.
 
-The allowlist (default tools/uncalled_allow.txt) names the test-only
+The allowlist, tools/uncalled_allow.txt, names the test-only
 reference entries: one `Owner.name  SpecName` per line, `#` comments.
 An entry is accepted only if src/test/scala/**/SpecName.scala mentions
 the name; a stale entry (the spec no longer calls it, or the name is
@@ -18,7 +18,6 @@ now called from src/main) is reported too.
 Exit status 1 when anything is reported, 0 otherwise. Python stdlib
 only.
 """
-import argparse
 import os
 import re
 import sys
@@ -68,16 +67,14 @@ def scala_files(root):
                 yield os.path.join(d, f)
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ALLOW = os.path.join(ROOT, "tools", "uncalled_allow.txt")
+
+
 def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--root", default=os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    ap.add_argument("--allow", default=None)
-    a = ap.parse_args()
-    main_dir = os.path.join(a.root, "src", "main", "scala")
-    bench_dir = os.path.join(a.root, "perfbench", "src")
-    test_dir = os.path.join(a.root, "src", "test", "scala")
-    allow_path = a.allow or os.path.join(a.root, "tools", "uncalled_allow.txt")
+    main_dir = os.path.join(ROOT, "src", "main", "scala")
+    bench_dir = os.path.join(ROOT, "perfbench", "src")
+    test_dir = os.path.join(ROOT, "src", "test", "scala")
 
     words = Counter()
     decls = []  # (owner.name, name, path, line)
@@ -101,15 +98,15 @@ def main():
                     continue
                 owner = owners[-1][1] if owners else "?"
                 decls.append((f"{owner}.{m.group('name')}", m.group("name"),
-                              os.path.relpath(p, a.root), ln))
+                              os.path.relpath(p, ROOT), ln))
 
     # a name declared k times needs more than k occurrences to be called
     declared = Counter(n for _, n, _, _ in decls)
     uncalled = [(q, n, p, ln) for q, n, p, ln in decls if words[n] <= declared[n]]
 
     allow = {}
-    if os.path.exists(allow_path):
-        for raw in open(allow_path, encoding="utf-8"):
+    if os.path.exists(ALLOW):
+        for raw in open(ALLOW, encoding="utf-8"):
             line = raw.split("#", 1)[0].strip()
             if line:
                 qual, spec = line.split()[:2]
