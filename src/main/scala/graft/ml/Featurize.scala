@@ -3,17 +3,26 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.feature.HashingTF
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import java.nio.charset.StandardCharsets
+import scala.collection.mutable
 
 /** Text featurization mirroring fastText's input representation
   * (`02_merchcat_ml.py:64-83`): whitespace tokens plus word n-grams up
   * to `wordNgrams`, hashed into a fixed bucket space
   * (fastText `bucket=2,000,000` → `numFeatures`).
   *
-  * The n-gram expansion is pure Catalyst (`transform`/`slice`/
-  * `array_join` over the token array) so the whole featurization stays
-  * in whole-stage codegen; only the final term-frequency hash uses the
-  * Spark ML `HashingTF` transformer. No shuffle anywhere — featurize is
-  * a narrow map over the scan.
+  * Two equal forms. The Catalyst columns ([[tokensCol]],
+  * [[allGramsCol]], [[charPrepCol]], [[charGramsCol]]) define the grams
+  * as strings, and [[addFeatures]] hashes them with Spark ML's
+  * `HashingTF`: the reference. The model runs the hashing kernel
+  * [[hashedGrams]] instead: it reads the text (word mode) or its
+  * Catalyst [[charPrepCol]] form (char mode) and hashes each gram's
+  * bytes in place to the same sorted indices and counts, with no gram
+  * strings, arrays or per-row `Vector` conversions. No shuffle
+  * anywhere — featurize is a narrow map over the scan.
   */
 object Featurize {
 
@@ -33,7 +42,10 @@ object Featurize {
     * no tokens. */
   private[graft] def tokensLocal(text: String): Array[String] =
     if (text == null) Array.empty
-    else text.split("\\s+").filter(_.nonEmpty)
+    else Whitespace.split(text).filter(_.nonEmpty)
+
+  /** `\s+`, compiled once (`String.split` compiles it per call). */
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
 
   /** All word n-grams of a fixed n (n >= 2) as space-joined strings.
     * Built by zipping the token array with its own shifted slices:
@@ -145,8 +157,131 @@ object Featurize {
     tf.transform(withGrams).drop(t, g)
   }
 
-  /** Featurize per the model's params: char-gram mode when
-    * `charNgrams` is set, else the word-gram fastText shape. */
+  /** The text the hashing kernel ([[hashedGrams]]) reads: the text
+    * itself for word grams, its [[charPrepCol]] canonical form for char
+    * grams. */
+  def kernelInputCol(text: Column, params: Trainer.Params): Column =
+    if (params.charNgrams.nonEmpty) charPrepCol(text, params.charPrefixLen)
+    else text
+
+  /** [[kernelInputCol]] for one driver-side string ([[charPrepLocal]]). */
+  def kernelInputLocal(text: String, params: Trainer.Params): String =
+    if (params.charNgrams.nonEmpty) charPrepLocal(text, params.charPrefixLen)
+    else text
+
+  /** The term-frequency vector of `text` ([[hashedVector]] over
+    * [[kernelInputCol]]) as a column. */
+  def featuresCol(text: Column, params: Trainer.Params): Column = {
+    val p = params
+    udf((s: String) => hashedVector(s, p)).apply(kernelInputCol(text, p))
+  }
+
+  /** The hashing kernel: the sorted distinct bucket indices and counts
+    * `HashingTF` gives for the grams of one [[kernelInputCol]] value —
+    * [[allGramsCol]] over [[tokensCol]] in word mode, [[charGramsCol]]
+    * in char mode — without materializing gram strings. Each gram's
+    * UTF-8 bytes (tokens joined by one space; a window of code points)
+    * are hashed in place with the murmur3 `HashingTF` applies to a
+    * string term, so the buckets are HashingTF's for valid UTF-8. */
+  def hashedGrams(input: String, params: Trainer.Params): (Array[Int], Array[Double]) = {
+    val buckets =
+      if (params.charNgrams.nonEmpty)
+        charBuckets(utf8(if (input == null) "" else input), params.charNgrams,
+          params.numFeatures)
+      else wordBuckets(tokensLocal(input).map(utf8), params.wordNgrams,
+        params.numFeatures)
+    java.util.Arrays.sort(buckets)
+    val indices = mutable.ArrayBuilder.make[Int]
+    val counts = mutable.ArrayBuilder.make[Double]
+    var i = 0
+    while (i < buckets.length) {
+      var j = i + 1
+      while (j < buckets.length && buckets(j) == buckets(i)) j += 1
+      indices += buckets(i)
+      counts += (j - i).toDouble
+      i = j
+    }
+    (indices.result(), counts.result())
+  }
+
+  /** [[hashedGrams]] as the sparse term-frequency vector HashingTF
+    * gives. */
+  def hashedVector(input: String, params: Trainer.Params): Vector = {
+    val (indices, counts) = hashedGrams(input, params)
+    Vectors.sparse(params.numFeatures, indices, counts)
+  }
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+
+  /** The seed of Spark's `FeatureHasher.murmur3Hash`, which HashingTF uses. */
+  private val HashSeed = 42
+
+  /** HashingTF's bucket of the term whose UTF-8 bytes are
+    * `bytes[from, from + len)`. */
+  private def bucket(bytes: Array[Byte], from: Int, len: Int, numFeatures: Int): Int = {
+    val h = Murmur3_x86_32.hashUnsafeBytes2(bytes, Platform.BYTE_ARRAY_OFFSET + from,
+      len, HashSeed) % numFeatures
+    if (h < 0) h + numFeatures else h
+  }
+
+  /** Buckets of every 1..maxN-gram of `toks`, each gram built in one
+    * buffer by appending a space and the next token to the gram before
+    * it. */
+  private def wordBuckets(toks: Array[Array[Byte]], maxN: Int,
+                          numFeatures: Int): Array[Int] = {
+    val n = math.max(maxN, 1)
+    val out = new Array[Int]((1 to n).map(k => math.max(toks.length - k + 1, 0)).sum)
+    val buf = new Array[Byte](toks.map(_.length + 1).sum)
+    var o = 0
+    var start = 0
+    while (start < toks.length) {
+      var len = 0
+      var k = 0
+      while (k < n && start + k < toks.length) {
+        if (k > 0) { buf(len) = ' '; len += 1 }
+        val t = toks(start + k)
+        System.arraycopy(t, 0, buf, len, t.length)
+        len += t.length
+        out(o) = bucket(buf, 0, len, numFeatures)
+        o += 1
+        k += 1
+      }
+      start += 1
+    }
+    out
+  }
+
+  /** Buckets of every window of n code points of `text`, for each n in
+    * `ns`; a code point starts at every byte that is not a UTF-8
+    * continuation byte. */
+  private def charBuckets(text: Array[Byte], ns: Seq[Int],
+                          numFeatures: Int): Array[Int] = {
+    require(ns.forall(_ >= 1), s"char n-gram sizes: $ns")
+    val starts = new Array[Int](text.length + 1)
+    var chars = 0
+    var b = 0
+    while (b < text.length) {
+      if ((text(b) & 0xC0) != 0x80) { starts(chars) = b; chars += 1 }
+      b += 1
+    }
+    starts(chars) = text.length
+    val out = new Array[Int](ns.map(n => math.max(chars - n + 1, 0)).sum)
+    var o = 0
+    ns.foreach { n =>
+      var i = 0
+      while (i + n <= chars) {
+        out(o) = bucket(text, starts(i), starts(i + n) - starts(i), numFeatures)
+        o += 1
+        i += 1
+      }
+    }
+    out
+  }
+
+  /** Featurize per the model's params with Spark ML's `HashingTF` over
+    * the Catalyst grams: char-gram mode when `charNgrams` is set, else
+    * the word-gram fastText shape. The reference the hashing kernel is
+    * checked against (MlSpec, MlKernelSpec); the model never runs it. */
   def addFeatures(df: DataFrame, textCol: String, featuresCol: String,
                   params: Trainer.Params): DataFrame =
     if (params.charNgrams.nonEmpty)

@@ -13,16 +13,17 @@ import org.apache.spark.sql.functions._
   * linear model).
   *
   * Built entirely on [[Trainer]]'s LR with `Params.charNgrams` set, so
-  * the whole surface is reused: scoring is the same pure distributed
-  * transform (featurize → vector math → label decode, no UDF workers),
-  * models save/load through the same artifact layout, and the
-  * registered-UDF / predictOne paths work unchanged.
+  * the whole surface is reused: scoring is the same one projection
+  * (Catalyst canonical form → hashing kernel → Spark's margins →
+  * argmax label, no Python workers), models save/load through the same
+  * artifact layout, and the registered-UDF / predictOne paths work
+  * unchanged.
   *
   * Scale shape: training sees only the (bounded) labeled sample;
   * scoring is one narrow codegen pass over the corpus with the model
-  * riding in the plan. The char-gram canonicalization caps at
-  * `charPrefixLen` characters per document, so featurization cost per
-  * row is bounded whatever the document length. */
+  * broadcast once per scoring call. The char-gram canonicalization
+  * caps at `charPrefixLen` characters per document, so featurization
+  * cost per row is bounded whatever the document length. */
 object LangId {
 
   /** Char 1–3 grams over a 400-char prefix, 2^15 hash buckets — the

@@ -3,6 +3,9 @@ package graft.ml
 import breeze.linalg.{DenseVector => BDV}
 import breeze.optimize.{CachedDiffFunction, DiffFunction, LBFGS}
 import org.apache.spark.ml.linalg.{DenseMatrix, Matrix, SparseMatrix, Vector, Vectors}
+import java.util.concurrent.{ExecutionException, ExecutorService, Executors,
+  ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
 
 /** The multinomial softmax fit behind [[Trainer]], run inside ONE task
@@ -12,7 +15,7 @@ import scala.collection.mutable
   * the fitted model is Spark's to rounding. Only the evaluation
   * differs: Spark runs one job per loss/gradient evaluation, broadcasts
   * the coefficients and tree-aggregates a dense classes × features
-  * gradient; here one thread walks CSR arrays in memory.
+  * gradient; here the task walks CSR arrays in memory.
   *
   * Spark's formulation, term by term:
   *  - labels in StringIndexer order: frequency descending, ties by
@@ -30,28 +33,52 @@ import scala.collection.mutable
   * regParam = 0; starting from w = 0 every gradient sums to zero over
   * the classes, so they are centered already.
   *
+  * Threads: each evaluation walks the rows in fixed blocks of
+  * [[BlockRows]]. Within a block, `threads` workers (the task thread
+  * plus a daemon pool, shut down when the fit ends; [[Trainer]] passes
+  * the session's local core count, 1 off a `local[...]` master) first
+  * compute the rows' margins, softmax and multipliers, split by rows;
+  * then they add the block into the gradient, split by classes, each
+  * gradient element and each multiplier sum taking its rows in
+  * ascending order. The loss is summed in row order. Every double therefore sees the additions of
+  * the serial loop in the serial order, and the fit is bit-identical at
+  * any thread count; scratch memory is one block × classes. Using more
+  * cores than the task's one slot is acceptable because the fit runs
+  * alone in a one-partition stage that nothing else waits on; trials
+  * that [[Tuning]] runs concurrently share the cores, which changes
+  * their timing and no result.
+  *
   * Parameters live column-major as in Spark: w_kj at j·K + k, the K
   * intercepts last. */
-private[ml] object SoftmaxFit {
+private[graft] object SoftmaxFit {
 
   /** What leaves the fit task: O(classes × features), never rows. */
   final case class Result(labels: Array[String], coefficients: Matrix,
                           intercepts: Vector, objectiveHistory: Array[Double])
 
-  /** Fit over (label, term-frequency vector) rows; None when no row
-    * has a label. */
-  def fit(rows: Iterator[(String, Vector)], numFeatures: Int, maxIter: Int,
-          regParam: Double, tol: Double): Option[Result] = {
+  /** Rows per block of a loss/gradient evaluation. */
+  private val BlockRows = 2048
+
+  /** Name prefix of the fit's worker threads. */
+  private[graft] val ThreadPrefix = "graft-softmax-fit-"
+
+  /** Fit over (label, (sorted feature indices, values)) rows on
+    * `threads` threads; None when no row has a label. */
+  def fit(rows: Iterator[(String, (Array[Int], Array[Double]))], numFeatures: Int,
+          maxIter: Int, regParam: Double, tol: Double, threads: Int): Option[Result] = {
     val rowLabels = mutable.ArrayBuffer.empty[String]
     val indptr = mutable.ArrayBuilder.make[Int]
     val indices = mutable.ArrayBuilder.make[Int]
     val values = mutable.ArrayBuilder.make[Double]
     indptr += 0
-    rows.foreach { case (label, features) =>
+    var nnz = 0
+    rows.foreach { case (label, (idx, vals)) =>
       if (label != null) {
         rowLabels += label
-        features.foreachActive { (j, v) => indices += j; values += v }
-        indptr += indices.length
+        indices ++= idx
+        values ++= vals
+        nnz += idx.length
+        indptr += nnz
       }
     }
     if (rowLabels.isEmpty) return None
@@ -82,15 +109,18 @@ private[ml] object SoftmaxFit {
       init(numClasses * numFeatures + k) = rawIntercepts(k) - rawMean
     }
 
-    val loss = new Loss(csr.scaled(std), y, numClasses, numFeatures, std,
-      scaledMean, regParam)
     val lbfgs = new LBFGS[BDV[Double]](maxIter, 10, tol)
     val history = mutable.ArrayBuilder.make[Double]
     var state: lbfgs.State = null
-    lbfgs.iterations(new CachedDiffFunction(loss), BDV(init)).foreach { s =>
-      state = s
-      history += s.adjustedValue
-    }
+    val workers = new Workers(threads)
+    try {
+      val loss = new Loss(csr.scaled(std), y, numClasses, numFeatures, std,
+        scaledMean, regParam, workers)
+      lbfgs.iterations(new CachedDiffFunction(loss), BDV(init)).foreach { s =>
+        state = s
+        history += s.adjustedValue
+      }
+    } finally workers.close()
     val (coefficients, intercepts) = backTransform(state.x.toArray, numClasses,
       numFeatures, std, scaledMean)
     Some(Result(labels, coefficients, intercepts, history.result()))
@@ -143,15 +173,55 @@ private[ml] object SoftmaxFit {
     (std, scaledMean)
   }
 
-  /** Mean softmax cross-entropy plus L2 over scaled rows: one
-    * single-threaded pass per evaluation, margins and gradient updated
-    * only at each row's non-zeros. */
+  /** The task thread plus a pool of `threads − 1` daemon threads. */
+  private final class Workers(threads: Int) {
+    require(threads >= 1, s"fit threads: $threads")
+    private val pool: ExecutorService =
+      if (threads <= 1) null
+      else Executors.newFixedThreadPool(threads - 1, new ThreadFactory {
+        private val made = new AtomicInteger
+        override def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, ThreadPrefix + made.incrementAndGet())
+          t.setDaemon(true)
+          t
+        }
+      })
+
+    /** Run `f(from, until)` over `parts` contiguous ranges of [0, n),
+      * parts = min(threads, n / grain) but at least one, the first on the
+      * calling thread; returns when all have. */
+    def split(n: Int, grain: Int)(f: (Int, Int) => Unit): Unit = {
+      val parts = math.min(threads, math.max(1, n / grain))
+      val rest = (1 until parts).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = f(t * n / parts, (t + 1) * n / parts)
+        })
+      }
+      f(0, n / parts)
+      rest.foreach { r =>
+        try r.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+    }
+
+    def close(): Unit = if (pool != null) {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
+  }
+
+  /** Mean softmax cross-entropy plus L2 over scaled rows: margins and
+    * gradient updated only at each row's non-zeros, block by block on
+    * `workers` (see the object's doc for the summation order). */
   private final class Loss(x: Csr, y: Array[Int], numClasses: Int,
                            numFeatures: Int, std: Array[Double],
-                           scaledMean: Array[Double], regParam: Double)
+                           scaledMean: Array[Double], regParam: Double,
+                           workers: Workers)
       extends DiffFunction[BDV[Double]] {
     private val K = numClasses
     private val linear = numClasses * numFeatures
+    // one block's rows: multipliers (softmax − one-hot) and losses
+    private val mult = new Array[Double](BlockRows * K)
+    private val rowLoss = new Array[Double](BlockRows)
 
     override def calculate(coef: BDV[Double]): (Double, BDV[Double]) = {
       val w = coef.toArray
@@ -162,47 +232,21 @@ private[ml] object SoftmaxFit {
         var k = 0
         while (k < K) { offset(k) -= w(base + k) * s; k += 1 }
       }
-      val m = new Array[Double](K)
       val multiplierSum = new Array[Double](K)
       var lossSum = 0.0
-      var i = 0
-      while (i < y.length) {
-        System.arraycopy(offset, 0, m, 0, K)
-        val start = x.indptr(i)
-        val end = x.indptr(i + 1)
-        var p = start
-        while (p < end) {
-          val v = x.values(p)
-          val base = x.indices(p) * K
-          var k = 0
-          while (k < K) { m(k) += v * w(base + k); k += 1 }
-          p += 1
+      var from = 0
+      while (from < y.length) {
+        val until = math.min(from + BlockRows, y.length)
+        workers.split(until - from, 64) { (lo, hi) =>
+          var r = lo
+          while (r < hi) { multipliers(w, offset, from + r, r); r += 1 }
         }
-        var max = m(0)
-        var k = 1
-        while (k < K) { if (m(k) > max) max = m(k); k += 1 }
-        val label = y(i)
-        val labelMargin = m(label) - max
-        var sum = 0.0
-        k = 0
-        while (k < K) { m(k) = math.exp(m(k) - max); sum += m(k); k += 1 }
-        lossSum += math.log(sum) - labelMargin
-        // m becomes the multiplier: softmax − one-hot(label)
-        k = 0
-        while (k < K) {
-          m(k) = m(k) / sum - (if (k == label) 1.0 else 0.0)
-          multiplierSum(k) += m(k)
-          k += 1
+        var r = 0
+        while (r < until - from) { lossSum += rowLoss(r); r += 1 }
+        workers.split(K, 8) { (k0, k1) =>
+          addBlock(grad, multiplierSum, from, until, k0, k1)
         }
-        p = start
-        while (p < end) {
-          val v = x.values(p)
-          val base = x.indices(p) * K
-          k = 0
-          while (k < K) { grad(base + k) += m(k) * v; k += 1 }
-          p += 1
-        }
-        i += 1
+        from = until
       }
       // the centering the sparse pass left out, and the intercepts
       forEachCentered { (base, s) =>
@@ -228,6 +272,61 @@ private[ml] object SoftmaxFit {
         }
       }
       (lossSum / n + 0.5 * regSum * regParam, BDV(grad))
+    }
+
+    /** Row i's multipliers into block slot r of `mult`, its loss into
+      * `rowLoss(r)`. */
+    private def multipliers(w: Array[Double], offset: Array[Double], i: Int,
+                            r: Int): Unit = {
+      val at = r * K
+      System.arraycopy(offset, 0, mult, at, K)
+      var p = x.indptr(i)
+      while (p < x.indptr(i + 1)) {
+        val v = x.values(p)
+        val base = x.indices(p) * K
+        var k = 0
+        while (k < K) { mult(at + k) += v * w(base + k); k += 1 }
+        p += 1
+      }
+      var max = mult(at)
+      var k = 1
+      while (k < K) { if (mult(at + k) > max) max = mult(at + k); k += 1 }
+      val label = y(i)
+      val labelMargin = mult(at + label) - max
+      var sum = 0.0
+      k = 0
+      while (k < K) {
+        mult(at + k) = math.exp(mult(at + k) - max)
+        sum += mult(at + k)
+        k += 1
+      }
+      rowLoss(r) = math.log(sum) - labelMargin
+      k = 0
+      while (k < K) {
+        mult(at + k) = mult(at + k) / sum - (if (k == label) 1.0 else 0.0)
+        k += 1
+      }
+    }
+
+    /** Classes [k0, k1) of rows [from, until): multiplier sums and
+      * gradient, each element's rows in ascending order. */
+    private def addBlock(grad: Array[Double], multiplierSum: Array[Double],
+                         from: Int, until: Int, k0: Int, k1: Int): Unit = {
+      var i = from
+      while (i < until) {
+        val at = (i - from) * K
+        var k = k0
+        while (k < k1) { multiplierSum(k) += mult(at + k); k += 1 }
+        var p = x.indptr(i)
+        while (p < x.indptr(i + 1)) {
+          val v = x.values(p)
+          val base = x.indices(p) * K
+          k = k0
+          while (k < k1) { grad(base + k) += mult(at + k) * v; k += 1 }
+          p += 1
+        }
+        i += 1
+      }
     }
 
     private def forEachCentered(f: (Int, Double) => Unit): Unit = {

@@ -1,22 +1,25 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.classification.{GraftModelBridge, LogisticRegressionModel}
-import org.apache.spark.ml.feature.{IndexToString, StringIndexerModel}
+import org.apache.spark.ml.feature.StringIndexerModel
 import org.apache.spark.ml.linalg.Vector
+import scala.reflect.runtime.universe.TypeTag
 
 /** Supervised text classifier — the JVM replacement for the C++
   * fastText dependency (`utils/merchcat_utils.py:30-54`): word n-grams
   * hashed into a bucket space feeding a multinomial softmax. Like
   * fastText, which trains on one node from one flat file, the fit is
   * ONE Spark task over the (stratified, hence bounded) training sample:
-  * featurize, count labels and run L-BFGS in memory ([[SoftmaxFit]]),
-  * shipping back only the label order and the classes × features
-  * coefficients. Spark's distributed `LogisticRegression` minimizes the
-  * same objective but pays a job, a coefficient broadcast and a dense
-  * gradient round trip per L-BFGS step, which at these sample sizes
-  * costs far more than the arithmetic. The result is a regular
+  * hash each text's grams ([[Featurize.hashedGrams]]) straight into CSR
+  * arrays, count labels and run L-BFGS in memory ([[SoftmaxFit]], on the
+  * session's local cores), shipping back only the label order and the
+  * classes × features coefficients. Spark's distributed
+  * `LogisticRegression` minimizes the same objective but pays a job, a
+  * coefficient broadcast and a dense gradient round trip per L-BFGS
+  * step, which at these sample sizes costs far more than the
+  * arithmetic. The result is a regular
   * `LogisticRegressionModel` + `StringIndexerModel` pair, equal to
   * Spark's fit to rounding (MlSpec's parity spec). The task also runs
   * whatever narrow work the input frame still has after its last
@@ -30,14 +33,15 @@ object Trainer {
 
   /** Mirrors the reference's fastText params where they map onto
     * LR-over-hashed-ngrams; `bucket` → `numFeatures`, `epoch` →
-    * `maxIter`, `lr` kept as a step-size analog via elastic-net reg. */
+    * `maxIter`. `lr` has no counterpart in the L-BFGS fit, which never
+    * reads it: it is kept so that [[Tuning]]'s search space and its
+    * tracked runs carry the reference's learning-rate dimension. */
   case class Params(
       lr: Double = 0.1,           // 02_merchcat_ml.py:66
       epoch: Int = 5,             // 02_merchcat_ml.py:69
       wordNgrams: Int = 5,        // 02_merchcat_ml.py:76
       numFeatures: Int = 1 << 18, // fastText bucket=2e6, pow2 for hashing
       regParam: Double = 1e-6,
-      label: String = "__label__",
       // char-gram mode (language ID): non-empty switches featurization
       // from word n-grams to character n-grams of these sizes over the
       // canonical form capped at charPrefixLen chars
@@ -54,28 +58,38 @@ object Trainer {
 
   private val Tol = 1e-4
 
+  private val LocalMaster = """local\[(\*|\d+)(?:,\s*\d+)?\]""".r
+
+  /** The fit's threads: the local core count under a `local[...]`
+    * master, otherwise 1 (on a cluster the fit task holds one slot of a
+    * shared executor). */
+  private def fitThreads(spark: SparkSession): Int = spark.sparkContext.master match {
+    case LocalMaster("*") => Runtime.getRuntime.availableProcessors
+    case LocalMaster(n) => n.toInt
+    case _ => 1
+  }
+
   def train(trainIn: DataFrame, labelCol: String, textCol: String,
             params: Params = Params()): Model = {
     val numFeatures = params.numFeatures
     val maxIter = params.epoch * 2 // epochs → L-BFGS iterations budget
     val regParam = params.regParam
-    val fit = Featurize.addFeatures(
-        trainIn.select(col(labelCol).cast("string").as("__label"), col(textCol)),
-        textCol, "__features", params)
-      .select("__label", "__features")
+    val threads = fitThreads(trainIn.sparkSession)
+    val fit = trainIn
+      .select(col(labelCol).cast("string"), Featurize.kernelInputCol(col(textCol), params))
       .coalesce(1)
       .rdd
       .mapPartitions(rows => SoftmaxFit.fit(
-        rows.map(r => (r.getString(0), r.getAs[Vector](1))),
-        numFeatures, maxIter, regParam, Tol).iterator)
+        rows.map(r => (r.getString(0), Featurize.hashedGrams(r.getString(1), params))),
+        numFeatures, maxIter, regParam, Tol, threads).iterator)
       .collect().headOption.getOrElse(throw new IllegalArgumentException(
         s"no training rows with a non-null $labelCol"))
     val indexer = new StringIndexerModel(fit.labels)
       .setInputCol(labelCol).setOutputCol("__label_idx")
       .setHandleInvalid("skip")
     // the training summary's predictions: lazy, never computed here
-    val summaryFrame = Featurize.addFeatures(
-      indexer.transform(trainIn), textCol, "__features", params)
+    val summaryFrame = indexer.transform(trainIn)
+      .withColumn("__features", Featurize.featuresCol(col(textCol), params))
     val lrModel = GraftModelBridge.multinomialModel(fit.coefficients,
       fit.intercepts, fit.objectiveHistory, summaryFrame, "__features",
       "__label_idx", maxIter, regParam, Tol)
@@ -104,89 +118,60 @@ object Trainer {
   }
 }
 
-/** Trained classifier: scoring is a pure `transform` — featurize
-  * (narrow/codegen) → LR vector math → label decode — so batch scoring
-  * distributes with no Python workers or model re-broadcast gymnastics
-  * (replaces `mlflow.pyfunc.spark_udf`, `02_merchcat_ml.py:506-513`).
+/** Trained classifier. Every scoring surface runs one path: the
+  * hashing kernel's grams of the text ([[Featurize.hashedVector]]) →
+  * `lrModel.predictRaw` (Spark's own margins) → first-max argmax (the
+  * rule Spark's `raw2prediction` applies without thresholds) → label.
+  * A batch scoring call is one projection over its input with the model
+  * broadcast once for it, so scoring distributes with no Python workers
+  * and no per-row probability vectors (replaces
+  * `mlflow.pyfunc.spark_udf`, `02_merchcat_ml.py:506-513`).
+  * `lrModel` is Spark's own model: save/load, the training summary, and
+  * the reference the specs score against.
   */
 class Model(
     val lrModel: LogisticRegressionModel,
     val indexer: StringIndexerModel,
     val params: Trainer.Params) extends Serializable {
 
+  private def labels: Array[String] = indexer.labelsArray.head
+
   /** Score `textCol`, appending `outputCol` with the predicted label
     * string (the `pr_merchant` path, `02_merchcat_ml.py:512`). */
   def predict(df: DataFrame, textCol: String,
               outputCol: String = "pr_label"): DataFrame = {
-    val featurized = Featurize.addFeatures(df, textCol, "__features", params)
-    val scored = lrModel
-      .setFeaturesCol("__features")
-      .setPredictionCol("__prediction")
-      .transform(featurized)
-    val decode = new IndexToString()
-      .setInputCol("__prediction").setOutputCol(outputCol)
-      .setLabels(indexer.labelsArray.head)
-    decode.transform(scored)
-      .drop("__features", "__prediction", "rawPrediction", "probability")
+    val names = labels
+    df.withColumn(outputCol, Model.scored(this, df.sparkSession, col(textCol))(
+      (m, v) => Model.label(m, names, v)))
   }
 
   /** Score `textCol` with the model's CALIBRATED class probability for
     * one label value — the keep-probability surface a model-based
     * quality filter needs (a hard label loses the ranking a
-    * threshold/sampling stage works with). Same pure-transform shape
+    * threshold/sampling stage works with). Same one-projection shape
     * as [[predict]]; probabilities rounded to 6 dp so downstream
     * thresholds are reproducible within a trained model. */
   def predictProba(df: DataFrame, textCol: String, labelValue: String,
                    outputCol: String = "label_prob"): DataFrame = {
-    val idx = indexer.labelsArray.head.indexOf(labelValue)
+    val idx = labels.indexOf(labelValue)
     require(idx >= 0,
-      s"label '$labelValue' not in model labels " +
-        s"${indexer.labelsArray.head.mkString("[", ",", "]")}")
-    val featurized = Featurize.addFeatures(df, textCol, "__features", params)
-    val scored = lrModel
-      .setFeaturesCol("__features")
-      .setPredictionCol("__prediction")
-      .transform(featurized)
-    scored
-      .withColumn(outputCol, round(element_at(
-        org.apache.spark.ml.functions.vector_to_array(col("probability")),
-        idx + 1), 6))
-      .drop("__features", "__prediction", "rawPrediction", "probability")
+      s"label '$labelValue' not in model labels ${labels.mkString("[", ",", "]")}")
+    df.withColumn(outputCol, round(Model.scored(this, df.sparkSession, col(textCol))(
+      (m, v) => m.predictProbability(v)(idx)), 6))
   }
 
-  /** Single-row JVM-side scoring: featurize (same murmur3 hashing as
-    * HashingTF via `indexOf`) → LR predict → decoded label. Powers the
-    * registered-UDF path; the vectorized `predict` transform is the
-    * fast path. */
-  def predictOne(text: String): String = {
-    val toks = Featurize.tokensLocal(text).toSeq
-    val grams =
-      if (params.charNgrams.nonEmpty) {
-        val t = Featurize.charPrepLocal(text, params.charPrefixLen)
-        params.charNgrams.flatMap(n =>
-          if (t.length >= n) t.sliding(n).toSeq else Seq.empty)
-      } else toks ++ (2 to params.wordNgrams).flatMap(n => toks.sliding(n)
-        .filter(_.size == n).map(_.mkString(" ")))
-    val htf = new org.apache.spark.ml.feature.HashingTF()
-      .setNumFeatures(params.numFeatures)
-    val counts = scala.collection.mutable.HashMap.empty[Int, Double]
-    grams.foreach { g =>
-      val i = htf.indexOf(g)
-      counts(i) = counts.getOrElse(i, 0.0) + 1.0
-    }
-    val vec = org.apache.spark.ml.linalg.Vectors.sparse(
-      params.numFeatures, counts.toSeq.sortBy(_._1))
-    val idx = lrModel.predict(vec).toInt
-    indexer.labelsArray.head(idx)
-  }
+  /** Single-row driver-side scoring, the same path as [[predict]]. */
+  def predictOne(text: String): String = Model.labelOfText(lrModel, labels, params, text)
 
   /** U2 surface (`mlflow.pyfunc.spark_udf`, 02_merchcat_ml.py:506-513):
-    * register scoring as a SQL-callable UDF. The model ships to
-    * executors inside the UDF closure (it is Serializable) — no Python
-    * worker, no external model file resolution. */
+    * register [[predict]]'s scoring as a SQL-callable UDF of the raw
+    * text. The model ships to executors in one broadcast made here, not
+    * in the UDF closure — no Python worker, no external model file
+    * resolution. */
   def registerUdf(spark: SparkSession, name: String = "predict_label"): Unit = {
-    val self = this
-    spark.udf.register(name, (s: String) => self.predictOne(s))
+    val bc = spark.sparkContext.broadcast(GraftModelBridge.unsummarized(lrModel))
+    val (names, p) = (labels, params)
+    spark.udf.register(name, (s: String) => Model.labelOfText(bc.value, names, p, s))
   }
 
   /** Driver-local scoring of a small batch (M7, `02_merchcat_ml.py:493-496`). */
@@ -204,5 +189,30 @@ class Model(
     val p = java.nio.file.Paths.get(dir)
     java.nio.file.Files.createDirectories(p)
     java.nio.file.Files.writeString(p.resolve("params.json"), json)
+  }
+}
+
+private object Model {
+
+  /** The label of `v`'s first-max raw margin under `m`. */
+  def label(m: LogisticRegressionModel, labels: Array[String], v: Vector): String =
+    labels(m.predictRaw(v).argmax)
+
+  /** [[label]] of one raw text: its kernel input taken on the caller's
+    * side ([[Featurize.kernelInputLocal]]). */
+  def labelOfText(m: LogisticRegressionModel, labels: Array[String],
+                  params: Trainer.Params, text: String): String =
+    label(m, labels, Featurize.hashedVector(Featurize.kernelInputLocal(text, params), params))
+
+  /** `f(model, term-frequency vector of text)` as a column: the kernel
+    * reads [[Featurize.kernelInputCol]], and the model (without its
+    * training summary) reaches the executors in one broadcast made
+    * here. */
+  def scored[T: TypeTag](model: Model, spark: SparkSession, text: Column)(
+      f: (LogisticRegressionModel, Vector) => T): Column = {
+    val bc = spark.sparkContext.broadcast(GraftModelBridge.unsummarized(model.lrModel))
+    val p = model.params
+    udf((s: String) => f(bc.value, Featurize.hashedVector(s, p)))
+      .apply(Featurize.kernelInputCol(text, p))
   }
 }

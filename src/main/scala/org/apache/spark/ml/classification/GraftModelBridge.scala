@@ -1,6 +1,7 @@
 package org.apache.spark.ml.classification
 
 import org.apache.spark.ml.linalg.{Matrix, Vector}
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.DataFrame
 
@@ -30,5 +31,13 @@ object GraftModelBridge {
       else new LogisticRegressionTrainingSummaryImpl(
         predictions, probabilityCol, predictionCol, labelCol, featuresCol,
         "weightCol", objectiveHistory)))
+  }
+
+  /** `model` without its training summary, whose predictions frame
+    * scoring has no use for: what a scoring broadcast carries. */
+  def unsummarized(model: LogisticRegressionModel): LogisticRegressionModel = {
+    val copy = model.copy(ParamMap.empty)
+    copy.setSummary(None)
+    copy
   }
 }

@@ -12,25 +12,8 @@ import graft.ml._
   * parallel tuning selects a best run. */
 class MlSpec extends AnyFunSuite with SparkTestSession {
 
-  /** Separable synthetic set: each class has a distinctive vocabulary
-    * (stand-in for merchant narratives: brand tokens + shared noise). */
-  def synth(n: Int): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val vocab = Map(
-      "starbucks" -> Seq("coffee", "latte", "espresso", "roast"),
-      "tesco" -> Seq("grocery", "store", "supermarket", "food"),
-      "shell" -> Seq("fuel", "petrol", "station", "diesel"),
-      "netflix" -> Seq("stream", "video", "subscription", "film"))
-    val noise = Seq("cd", "deb", "ref", "pos", "4711", "card")
-    val rng = new scala.util.Random(42)
-    val rows = (0 until n).map { i =>
-      val (label, words) = vocab.toSeq(rng.nextInt(vocab.size))
-      val text = (Seq.fill(3)(words(rng.nextInt(words.size))) ++
-        Seq.fill(2)(noise(rng.nextInt(noise.size)))).mkString(" ")
-      (i.toLong, label, text)
-    }
-    rows.toDF("id", "merchant", "narrative")
-  }
+  /** Separable synthetic set ([[MlSynth]]). */
+  def synth(n: Int): org.apache.spark.sql.DataFrame = MlSynth(spark, n)
 
   lazy val data = synth(400)
   lazy val trainDf = data.where(col("id") % 10 < 8)
